@@ -1,0 +1,114 @@
+#!/usr/bin/env python3
+"""Knob audit: every `spark.graft.*` key the library declares, and who
+touches it.
+
+Usage: python3 scripts/knobs.py [repoRoot]
+
+For each distinct "spark.graft.*" string literal under src/main (a key,
+or a key prefix ending in "." such as the run-note channels), prints the
+source files that READ it, the non-test files that SET it, and the specs
+that SET it. A key is referenced either as its literal or through a
+`val NameConf = "spark.graft..."` constant (or a local `val key =
+NameConf` alias of it); comment lines are ignored. A line counts as a
+set when it calls `.set(`, `.unset(` or `.config(`; every other
+reference outside the declaration is a read.
+
+The closing summary counts the keys, the keys no non-test file sets, and
+the keys nothing sets at all (candidates for a constant). Dev-only
+tooling — the shipped Scala library does not depend on this.
+"""
+import os
+import re
+import sys
+
+KEY = re.compile(r'"(spark\.graft\.[A-Za-z0-9_.]+)"')
+DECL = re.compile(r'val\s+(\w+)\s*(?::\s*String)?\s*=\s*"(spark\.graft\.[A-Za-z0-9_.]+)"')
+SET = re.compile(r'\.(?:set|unset|config)\s*\(')
+ALIAS = re.compile(r'\s*val\s+(\w+)\s*=\s*([\w.]+)\s*$')
+COMMENT = re.compile(r'^\s*(?://|\*|/\*)')
+
+
+def scala_files(root, sub):
+    base = os.path.join(root, sub)
+    for d, _, fs in os.walk(base):
+        for f in fs:
+            if f.endswith(".scala"):
+                yield os.path.join(d, f)
+
+
+def code_lines(path):
+    """Non-comment lines, with every constant declaration blanked out (a
+    declaration may wrap its literal onto the next line)."""
+    with open(path, encoding="utf-8") as fh:
+        text = fh.read()
+    text = DECL.sub(lambda m: re.sub(r"[^\n]", " ", m.group(0)), text)
+    for line in text.splitlines():
+        if not COMMENT.match(line):
+            yield line
+
+
+def declarations(path):
+    with open(path, encoding="utf-8") as fh:
+        return DECL.findall(fh.read())
+
+
+def main(root):
+    main_files = sorted(scala_files(root, "src/main"))
+    other_main = sorted(scala_files(root, "perfbench/src"))
+    test_files = sorted(scala_files(root, "src/test"))
+
+    keys, names = set(), {}
+    for p in main_files:
+        for name, key in declarations(p):
+            keys.add(key)
+            names.setdefault(key, set()).add(name)
+        for line in code_lines(p):
+            keys.update(KEY.findall(line))
+
+    # one pattern per key: its literal or any of its declared constants
+    pats = {}
+    for k in keys:
+        alts = [re.escape('"%s"' % k)] + [r"\b%s\b" % n for n in sorted(names.get(k, ()))]
+        pats[k] = re.compile("|".join(alts))
+
+    reads = {k: set() for k in keys}
+    sets_main = {k: set() for k in keys}
+    sets_test = {k: set() for k in keys}
+    for group, files in (("main", main_files + other_main), ("test", test_files)):
+        for p in files:
+            rel = os.path.relpath(p, root)
+            local = {}  # `val key = SomeConf` aliases bound in this file
+            for line in code_lines(p):
+                for k, pat in pats.items():
+                    alias = local.get(k)
+                    if not pat.search(line) and not (alias and alias.search(line)):
+                        continue
+                    m = ALIAS.match(line)
+                    if m and pat.search(m.group(2)):
+                        local[k] = re.compile(r"\b%s\b" % m.group(1))
+                        continue
+                    if SET.search(line):
+                        (sets_main if group == "main" else sets_test)[k].add(rel)
+                    else:
+                        reads[k].add(rel)
+
+    def short(paths):
+        return ", ".join(sorted(os.path.basename(p) for p in paths)) or "-"
+
+    for k in sorted(keys):
+        print(k)
+        print("  read by:      " + short(reads[k]))
+        print("  set (main):   " + short(sets_main[k]))
+        print("  set (specs):  " + short(sets_test[k]))
+    no_main = [k for k in keys if not sets_main[k]]
+    unset = [k for k in no_main if not sets_test[k]]
+    print()
+    print("keys: %d  set by no non-test file: %d  set by nothing: %d"
+          % (len(keys), len(no_main), len(unset)))
+    for k in sorted(unset):
+        print("  unset: " + k)
+
+
+if __name__ == "__main__":
+    main(sys.argv[1] if len(sys.argv) > 1 else
+         os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

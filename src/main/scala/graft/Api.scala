@@ -371,14 +371,14 @@ final class GraftApi(spark: SparkSession, sfDir: String,
   /** INGEST SCREENING — the nightly-ingest semantic-dedup check as one
     * call (ref `updater/extraction_checker.py:225-258`'s
     * check-new-against-indexed loop): a NEW batch `(idCol, vecCol)` is
-    * encoded with the persisted model (same coarse cells as the index's
-    * own codes — [[graft.engine.LopqSearcher.encode]] is deterministic)
-    * and swept against the indexed corpus within the cells the batch
-    * touches only ([[graft.ops.VectorQueries.semDedupPairsIncremental]]).
-    * Returns every (batch × corpus) and (batch × batch) same-cell pair at
-    * `simThreshold` — which new vectors near-duplicate something already
-    * present — WITHOUT re-sweeping corpus × corpus and without a
-    * per-probe ANN search.
+    * assigned to the index's coarse cells with its persisted model and
+    * swept against the indexed corpus within the cells the batch touches
+    * only — the same screen [[graft.ops.IngestOps.screenAndAppend]] and
+    * [[graft.streaming.ScreenedIngest]] run
+    * ([[graft.ops.IngestOps.screenPairs]]). Returns every (batch × corpus)
+    * and (batch × batch) same-cell pair at `simThreshold` — which new
+    * vectors near-duplicate something already present — WITHOUT
+    * re-sweeping corpus × corpus and without a per-probe ANN search.
     *
     * Work is O(|batch| · avg_cell · D): the corpus contributes one skinny
     * codes scan plus a map-side-filtered single pass of its vector table
@@ -389,26 +389,10 @@ final class GraftApi(spark: SparkSession, sfDir: String,
     * [[graft.engine.LopqIndexStore.appendUpdate]] the survivors. */
   def semDedupIncrement(batch: DataFrame, idCol: String, vecCol: String,
       simThreshold: Double = graft.ops.VectorQueries.NearDupSimThreshold)
-      : DataFrame = {
-    val h = EngineOps.index(spark, sfDir)
-    def toCell(c: DataFrame) = c.select(col("id"),
-      (col("coarse0").cast("long") * h.model.v + col("coarse1")).as("cell_id"))
-    val corpusCells = toCell(h.codes)
-    // conf-gated multi-probe: the batch side also checks its second
-    // cell (see [[graft.ops.VectorQueries.ScreenMultiProbeConf]])
-    val multi = graft.ops.VectorQueries.screenMultiProbe(spark)
-    val batchCells =
-      if (multi)
-        graft.engine.LopqIndexStore.assignCellsMulti(spark, h.dir, batch, idCol, vecCol)
-      else
-        toCell(graft.engine.LopqSearcher.encode(batch, idCol, vecCol, h.model))
-    val pairs = graft.ops.VectorQueries.semDedupPairsIncremental(
-      corpusCells, batchCells,
+      : DataFrame =
+    graft.ops.IngestOps.screenPairs(spark, EngineOps.index(spark, sfDir).dir,
       vectors.select(col("vec_id").as(idCol), col("embedding").as(vecCol)),
-      batch.select(idCol, vecCol),
-      idCol, vecCol, simThreshold)
-    if (multi) graft.ops.VectorQueries.dedupProbePairs(pairs) else pairs
-  }
+      batch.select(idCol, vecCol), idCol, vecCol, simThreshold)
 
   /** [[semDedupIncrement]] resolved to the rows a screened ingest would
     * KEEP: the batch minus everything the conservative-prefix rule drops

@@ -91,7 +91,7 @@ object ProbeAnnJoinStages {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       t("qside projections")(qside.count())
 
-      val pruned = index_pruned(spark, idx, unionCells)
+      val pruned = index_pruned(idx, unionCells)
       val slim = idx.slim
       val adcCol = graft.functions.VectorFunctions.adcProjectionDistance(
         col("px"), col("fine"), slim.flatSubquantizers, slim.m,
@@ -195,12 +195,9 @@ object ProbeAnnJoinStages {
     spark.stop()
   }
 
-  private def index_pruned(spark: SparkSession,
-      idx: graft.engine.LopqSlimIndex, unionCells: Array[Int]) = {
-    val maxPushed = spark.conf
-      .get(LopqSearcher.AnnJoinMaxPushedCellsConf,
-        LopqSearcher.DefaultAnnJoinMaxPushedCells.toString).toInt
-    if (unionCells.length <= maxPushed)
+  private def index_pruned(idx: graft.engine.LopqSlimIndex,
+      unionCells: Array[Int]) = {
+    if (unionCells.length <= LopqSearcher.AnnJoinMaxPushedCells)
       idx.codes.where(LopqIndexStore.cellFilter(
         scala.collection.immutable.ArraySeq.unsafeWrapArray(unionCells),
         idx.cellBuckets))

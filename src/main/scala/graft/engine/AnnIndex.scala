@@ -69,18 +69,12 @@ final class LopqSlimAnnIndex(index: LopqSlimIndex, vectors: DataFrame,
 /** Plugin registry (conf name → constructor), mirroring the reference's
   * `get_searcher` dispatch. */
 object AnnIndexes {
-  def brute(vectors: DataFrame, idCol: String, vecCol: String): AnnIndex = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
+  def brute(vectors: DataFrame, idCol: String, vecCol: String): AnnIndex =
     new BruteForceIndex(vectors, idCol, vecCol)
-  }
   def lopq(index: LopqIndex, vectors: DataFrame, idCol: String, vecCol: String,
-      quota: Int = 200, rerankK: Int = 50): AnnIndex = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
+      quota: Int = 200, rerankK: Int = 50): AnnIndex =
     new LopqAnnIndex(index, vectors, idCol, vecCol, quota, rerankK)
-  }
   def lopqSlim(index: LopqSlimIndex, vectors: DataFrame, idCol: String,
-      vecCol: String, quota: Int = 200, rerankK: Int = 50): AnnIndex = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
+      vecCol: String, quota: Int = 200, rerankK: Int = 50): AnnIndex =
     new LopqSlimAnnIndex(index, vectors, idCol, vecCol, quota, rerankK)
-  }
 }

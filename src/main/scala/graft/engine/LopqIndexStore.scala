@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.CellHistogram
+import graft.core.{CellHistogram, CellMath}
 
 /** One parquet row per model vector; `part` selects the component.
   * Top-level (not nested/private) so Spark's encoder codegen can reach the
@@ -133,18 +133,14 @@ final case class LopqSlimIndex(
   */
 object LopqIndexStore {
 
-  /** Per-(session, dir) model cache for the maintenance path: a continuous
-    * stream calls [[appendUpdate]] once per micro-batch, and re-collecting
-    * the model parquet to the driver (O(V·D²) — ~8 MB at release shape)
-    * per batch is pure overhead. Evicted by [[saveModel]] for in-JVM
-    * rebuilds and by [[evictModel]] for out-of-process ones (the API
-    * `refresh` flow: index dir superseded on disk, then refreshIndex —
-    * without the evict, appends would keep encoding with the stale model,
-    * landing codes in wrong cells). */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (LopqModel, Option[LopqPca])]
-
-  /** Slim twin of [[modelCache]] for the slim-encode append path. */
+  /** Per-(session, dir) slim-model cache for the maintenance path: a
+    * continuous stream calls [[appendUpdate]] (and the screen's
+    * [[assignCells]]) once per micro-batch, and re-collecting the model
+    * parquet to the driver per batch is pure overhead. Evicted by
+    * [[saveModel]] for in-JVM rebuilds and by [[evictModel]] for
+    * out-of-process ones (the API `refresh` flow: index dir superseded on
+    * disk, then refreshIndex — without the evict, appends would keep
+    * encoding with the stale model, landing codes in wrong cells). */
   private val slimModelCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (SlimLopqModel, Option[LopqPca])]
 
@@ -157,7 +153,6 @@ object LopqIndexStore {
     * MUST be called whenever the model under `dir` may have changed outside
     * [[saveModel]]'s JVM. */
   def evictModel(dir: String): Unit = {
-    modelCache.filterInPlace { case ((_, d), _) => d != dir }
     slimModelCache.filterInPlace { case ((_, d), _) => d != dir }
     sliceCaches.filterInPlace { case ((_, d), _) => d != dir }
   }
@@ -168,19 +163,13 @@ object LopqIndexStore {
     * pair. The liveness predicate is injectable for the unit test. */
   private[graft] def sweepStoppedSessions(isStopped: SparkSession => Boolean =
       s => s.sparkContext.isStopped): Unit = {
-    modelCache.filterInPlace { case ((s, _), _) => !isStopped(s) }
     slimModelCache.filterInPlace { case ((s, _), _) => !isStopped(s) }
     sliceCaches.filterInPlace { case ((s, _), _) => !isStopped(s) }
   }
 
-  /** Total live entries across the three session-keyed caches (spec hook). */
+  /** Total live entries across the session-keyed caches (spec hook). */
   private[graft] def sessionCacheEntries: Int =
-    modelCache.size + slimModelCache.size + sliceCaches.size
-
-  private def cachedModel(spark: SparkSession, dir: String): (LopqModel, Option[LopqPca]) = {
-    sweepStoppedSessions()
-    modelCache.getOrElseUpdate((spark, dir), loadModel(spark, dir))
-  }
+    slimModelCache.size + sliceCaches.size
 
   // ---------------------------------------------------------------- meta
 
@@ -869,6 +858,9 @@ object LopqIndexStore {
     * per-cell dedup on insert `lopq/lopq/search.py:340-364`,
     * skip-already-indexed per update `searcher_lopqhbase.py:600-617`), and
     * the cell histogram is merged incrementally instead of re-aggregated.
+    * The encode is [[slimEncode]] at every model width: the rotation
+    * tensor never reaches the driver or a broadcast, and the slim model is
+    * the session-cached one [[assignCells]] already loaded for the screen.
     *
     * CONTRACT: update ids must be lexicographically monotone (the
     * reference's ids are timestamp-prefixed, `searcher_lopqhbase.py:
@@ -880,32 +872,20 @@ object LopqIndexStore {
       idCol: String, vecCol: String, updateId: String): Boolean = {
     import spark.implicits._
     if (isApplied(spark, dir, updateId)) return false
-    val meta = readMeta(dir).getOrElse(sys.error(s"no meta.json under $dir"))
-    val slimThreshold = spark.conf
-      .get(SlimEncodeBytesConf, DefaultSlimEncodeBytes.toString).toLong
-    def projected(pca: Option[LopqPca]): DataFrame = pca match {
-      case None => batch0.dropDuplicates(idCol)
+    val (slim, pca) = cachedSlimModel(spark, dir)
+    val unique = batch0.dropDuplicates(idCol)
+    val input = pca match {
+      case None => unique
       case Some(px) =>
         val pcaB = spark.sparkContext.broadcast(px)
         val applyU = udf((v: Seq[Float]) => pcaB.value(v.toArray).toSeq)
-        batch0.dropDuplicates(idCol).withColumn(vecCol, applyU(col(vecCol)))
+        unique.withColumn(vecCol, applyU(col(vecCol)))
     }
-    // Past the threshold the tensor stays OUT of the driver and the
-    // broadcast: coarse codes from the slim model, fine codes from just the
-    // batch's touched clusters' slices (O(batch) model transfer).
-    val (encoded0, cleanup) =
-      if (rotBytesOf(meta) > slimThreshold) {
-        val (slim, pca) = cachedSlimModel(spark, dir)
-        slimEncode(spark, dir, projected(pca), idCol, vecCol, slim)
-      } else {
-        val (model, pca) = cachedModel(spark, dir)
-        (LopqSearcher.encode(projected(pca), idCol, vecCol, model), () => ())
-      }
+    val (encoded0, touched, cleanup) =
+      slimEncode(spark, dir, input, idCol, vecCol, slim)
     val encoded = encoded0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // the batch's touched cells: O(batch) distinct values, driver-bounded
-      val touched = encoded.select("cell_id").distinct().as[Int].collect().toSeq.sorted
       val deduped =
         if (hasCodes(spark, dir))
           encoded.join(indexedIdsInCells(spark, dir, touched), Seq("id"), "left_anti")
@@ -932,21 +912,6 @@ object LopqIndexStore {
       cleanup()
     }
   }
-
-  /** Rotation-tensor bytes implied by the meta alone — decides the append
-    * encode path without loading a single model row. */
-  private def rotBytesOf(meta: Map[String, String]): Long = {
-    val v = meta("v").toLong
-    val pcaDims = meta.getOrElse("pcaDims", "0").toInt
-    val dim = if (pcaDims > 0) pcaDims else meta("dim").toInt
-    val halfDim = dim / 2
-    2L * v * halfDim * halfDim * 4L
-  }
-
-  /** Models whose tensor exceeds this encode maintenance batches via
-    * [[slimEncode]] instead of a full-model broadcast. */
-  val SlimEncodeBytesConf = "spark.graft.append.slimEncodeBytes"
-  val DefaultSlimEncodeBytes: Long = 64L << 20
 
   /** Coarse-only CELL assignment of a batch with this dir's persisted
     * model — the ingest screen's candidate generator (the same quantizer
@@ -1025,13 +990,15 @@ object LopqIndexStore {
     * the bounded LRU (hot ingest clusters stay cached across micro-batches).
     * Bit-identical to [[LopqSearcher.encode]] (spec-pinned); a giant
     * backfill batch touching every cluster degrades to streaming the tensor
-    * once, which is what the classic broadcast does anyway.
+    * once, which is what the build's full-model encode broadcasts anyway.
     *
-    * Returns the codes frame plus a cleanup to drop the cached coarse stage
-    * AFTER the caller has materialized the codes. */
+    * Returns the codes frame, the batch's sorted touched cells, and a
+    * cleanup to drop the cached coarse stage AFTER the caller has
+    * materialized the codes. */
   private def slimEncode(spark: SparkSession, dir: String, input: DataFrame,
       idCol: String, vecCol: String,
-      slim: SlimLopqModel): (DataFrame, () => Unit) = {
+      slim: SlimLopqModel): (DataFrame, Seq[Int], () => Unit) = {
+    import spark.implicits._
     val slimB = spark.sparkContext.broadcast(slim)
     val coarseU = udf { (vec: Seq[Float]) =>
       val cc = slimB.value.predictCoarse(vec.toArray)
@@ -1042,9 +1009,15 @@ object LopqIndexStore {
       .select(col("id"), col("vec"),
         col("cc._1").as("coarse0"), col("cc._2").as("coarse1"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sets = coarse
-      .agg(collect_set(col("coarse0")), collect_set(col("coarse1"))).head()
-    val keys = sets.getSeq[Int](0).map((0, _)) ++ sets.getSeq[Int](1).map((1, _))
+    // the batch's touched cells (O(batch) distinct values, driver-bounded)
+    // name both the rotation slices the fine stage needs and the cell
+    // directories the append's dedup scan reads
+    val cellId = col("coarse0") * lit(slim.v) + col("coarse1")
+    val touched = coarse.select(cellId).distinct().as[Int].collect().toSeq.sorted
+    val keys = touched.flatMap { c =>
+      val (c0, c1) = CellMath.unpackCell(c, slim.v)
+      Seq((0, c0), (1, c1))
+    }.distinct
     val rotB = spark.sparkContext.broadcast(rotationSlices(spark, dir, keys))
     val fineU = udf { (vec: Seq[Float], c0: Int, c1: Int) =>
       slimB.value
@@ -1052,8 +1025,8 @@ object LopqIndexStore {
     }
     val codes = coarse
       .withColumn("fine", fineU(col("vec"), col("coarse0"), col("coarse1")))
-      .withColumn("cell_id", col("coarse0") * lit(slim.v) + col("coarse1"))
+      .withColumn("cell_id", cellId)
       .select("id", "coarse0", "coarse1", "fine", "cell_id")
-    (codes, () => { coarse.unpersist(); () })
+    (codes, touched, () => { coarse.unpersist(); () })
   }
 }

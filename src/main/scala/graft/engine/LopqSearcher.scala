@@ -285,14 +285,13 @@ object LopqSearcher {
     rerankExact(approx, vectors, idCol, vecCol, query, k, rerankShape)
   }
 
-  /** Conf: past this many distinct visited cells the batch join skips the
+  /** Past this many distinct visited cells the batch join skips the
     * pushed IN-list (a plan with millions of literals is itself the
     * bottleneck, and at that point the batch visits most of the index
     * anyway — a full codes scan is the right plan). */
-  val AnnJoinMaxPushedCellsConf = "spark.graft.annjoin.maxPushedCells"
-  val DefaultAnnJoinMaxPushedCells = 65536
+  val AnnJoinMaxPushedCells = 65536
 
-  /** Conf: the batch join's codes-scan cell IN-list is applied only when
+  /** The batch join's codes-scan cell IN-list is applied only when
     * it would DROP at least (1 − this) of the indexed rows — i.e. it is
     * skipped when the batch's visited-cell union keeps more than this
     * fraction. Both sides are exact driver-known quantities (histogram
@@ -301,8 +300,7 @@ object LopqSearcher {
     * is result-identical (the fan-out join's cell_id equi-key discards
     * non-visited cells). 0.75 keeps the filter where it still halves the
     * balanced shuffle (the v4 deployment shape keeps 56 %). */
-  val AnnJoinScanFilterMaxKeepFractionConf = "spark.graft.annjoin.scanFilterMaxKeepFraction"
-  val DefaultAnnJoinScanFilterMaxKeepFraction = 0.75
+  val AnnJoinScanFilterMaxKeepFraction = 0.75
 
   /** Conf: estimated bytes of materialized per-(query, visited cell) ADC
     * tables above which [[annJoin]] ships the cell-local query PROJECTION
@@ -520,7 +518,6 @@ object LopqSearcher {
       quota: Int, k: Int, rerankK: Int): DataFrame = {
     val spark = index.codes.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark) // graft_adc_proj; idempotent
     // model/histogram/PCA broadcasts live on the HANDLE — repeated annJoin
     // calls against one index reuse them (VERDICT r7 next-round #4)
     val slimB = index.slimBroadcast
@@ -556,8 +553,6 @@ object LopqSearcher {
     // (the batch working set does not fit the per-query 64 MB slice LRU)
     val rotB = index.sliceBroadcastFor(clusterKeys)
 
-    val maxPushed = spark.conf
-      .get(AnnJoinMaxPushedCellsConf, DefaultAnnJoinMaxPushedCells.toString).toInt
     // Selectivity gate (r18, guide §1/§2 "don't pay for work that buys
     // nothing"): the cell IN-list is a per-row set probe over EVERY codes
     // row, and its cost grows with the literal count (measured at the v3
@@ -582,11 +577,9 @@ object LopqSearcher {
     }
     val totalRows = index.cellCounts.total
     val keepFraction = if (totalRows > 0) rowsInUnion.toDouble / totalRows else 1.0
-    val maxKeep = spark.conf
-      .get(AnnJoinScanFilterMaxKeepFractionConf,
-        DefaultAnnJoinScanFilterMaxKeepFraction.toString).toDouble
-    val applyCellFilter = unionCells.length <= maxPushed && keepFraction <= maxKeep
-    if (applyCellFilter) ensureInPushdown(spark, math.min(unionCells.length, maxPushed))
+    val applyCellFilter = unionCells.length <= AnnJoinMaxPushedCells &&
+      keepFraction <= AnnJoinScanFilterMaxKeepFraction
+    if (applyCellFilter) ensureInPushdown(spark, unionCells.length)
     note(spark, "cellsPushed", applyCellFilter)
     note(spark, "scanKeepFraction", math.round(keepFraction * 1000.0) / 1000.0)
     val pruned =

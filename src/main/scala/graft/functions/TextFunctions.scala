@@ -2,17 +2,23 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftBridge
 
 /** Text-analysis primitives for large-scale training-data pipelines:
   * tokenization, shingling, MinHash signatures, SimHash, bottom-k
   * fingerprints, language-ID and quality heuristics.
   *
-  * All composed from Spark built-ins (codegen'd, no UDFs) and designed to be
-  * re-expressible in ANSI-ish SQL so every operator has a DuckDB oracle.
+  * All composed from Spark built-ins (codegen'd, no UDFs) or the fused
+  * native expressions in [[Expressions.scala]] (built directly through
+  * [[GraftBridge]], so they run on any session — registered or not), and
+  * designed to be re-expressible in ANSI-ish SQL so every operator has a
+  * DuckDB oracle.
   * Hashes are md5-based (hex string arithmetic) — deterministic and
   * portable across engines, unlike JVM `hashCode`/xxhash64.
   */
 object TextFunctions {
+  private def ex(c: Column) = GraftBridge.expression(c)
+
   /** Evaluate `arr` ONCE per row and let `f` consume it as a lambda
     * variable — the expression-level analogue of a `val` in generated code.
     *
@@ -79,31 +85,26 @@ object TextFunctions {
     * token array, a string per shingle through interpreted HOF lambdas,
     * and a 32-char hex string per shingle parsed back with `conv` —
     * measured ~300 µs/doc at sf0.1, the dominant per-document cost of
-    * q24/q25/q105 and every screened text batch. Requires the graft
-    * functions registered on the session ([[GraftFunctions.register]]). */
+    * q24/q25/q105 and every screened text batch. */
   def distinctShingleHashes(text: Column, n: Int): Column =
-    call_function("graft_shingle_hashes", text, lit(n))
+    GraftBridge.column(ShingleHashesExpr(ex(text), n))
 
   /** MinHash signature from pre-hashed shingles ([[shingleHashes]]):
     * sig_j = min over shingles of (a_j·h + b_j) mod P — the classic
     * universal-hash MinHash (Broder '97). One fused native pass
     * ([[graft.functions.MinhashExpr]]) — the HOF formulation it replaces
     * re-traversed the hash array once per permutation through interpreted
-    * lambdas. Requires the graft functions registered on the session
-    * ([[GraftFunctions.register]], done by `Tables.apply` for every
-    * catalog query). */
+    * lambdas. */
   def minhashFromHashes(hashCol: Column, numHashes: Int): Column =
-    call_function("graft_minhash", hashCol, lit(numHashes))
+    GraftBridge.column(MinhashExpr(ex(hashCol), numHashes))
 
   /** 64-bit-ish SimHash over tokens, restricted to `bits` ≤ 60 bits of the
     * md5-derived integer: bit b is 1 iff Σ_tokens (bit_b(md5(tok)) ? 1 : -1)
     * is positive. Returns BIGINT. One fused native pass
     * ([[graft.functions.SimhashExpr]]) — the HOF formulation it replaces
-    * re-traversed the hash array once per bit. Requires the graft
-    * functions registered on the session ([[GraftFunctions.register]],
-    * done by `Tables.apply` for every catalog query). */
+    * re-traversed the hash array once per bit. */
   def simhash(toksCol: Column, bits: Int = 32): Column =
-    call_function("graft_simhash", transform(toksCol, t => md5Long(t)), lit(bits))
+    GraftBridge.column(SimhashExpr(ex(transform(toksCol, t => md5Long(t))), bits))
 
   /** Hamming distance between two simhash BIGINTs. */
   def hammingDistance(a: Column, b: Column): Column =
@@ -136,10 +137,9 @@ object TextFunctions {
 
   /** [[qualityScore]] in ONE fused native pass
     * ([[graft.functions.QualityScoreExpr]]) — bit-identical (spec-pinned);
-    * the HOF chain below stays as the executable definition. Requires the
-    * graft functions registered ([[GraftFunctions.register]]). */
+    * the HOF chain below stays as the executable definition. */
   def qualityScoreNative(text: Column): Column =
-    call_function("graft_quality_score", text)
+    GraftBridge.column(QualityScoreExpr(ex(text)))
 
   /** Heuristic quality score in [0,1]: combines length band, mean token
     * length band, and alpha-ratio. Deterministic + SQL-expressible. */

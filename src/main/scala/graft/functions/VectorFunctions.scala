@@ -2,13 +2,16 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftBridge
 
 /** Vector math over `ARRAY<FLOAT|DOUBLE>` columns. The per-pair fold
-  * primitives (dot product, squared L2) go through the native codegen
-  * expressions in [[Expressions.scala]]; everything else composes Spark
-  * built-ins. All folds are sequential left-to-right in double precision —
-  * bit-compatible with the DuckDB oracle's list folds, and with the `Hof`
-  * variants kept below for the equivalence spec.
+  * primitives (dot product, squared L2) are the native codegen
+  * expressions in [[Expressions.scala]], built directly through
+  * [[GraftBridge]] so they run on any session — registered or not;
+  * everything else composes Spark built-ins. All folds are sequential
+  * left-to-right in double precision — bit-compatible with the DuckDB
+  * oracle's list folds, and with the `Hof` variants kept below for the
+  * equivalence spec.
   *
   * Reference semantics: exact L2 rerank distance
   * (`searcher/searcher_lopqhbase.py:887,998`), L2 normalize
@@ -16,12 +19,14 @@ import org.apache.spark.sql.functions._
   * (`lopq/lopq/search.py:166-177`, tables `lopq/lopq/model.py:673-704`).
   */
 object VectorFunctions {
-  /** Σ a_i * b_i in double precision (codegen'd loop — resolves against the
-    * `graft_dot` function registered by [[GraftFunctions.register]]). */
-  def dotProduct(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  private def ex(c: Column) = GraftBridge.expression(c)
+
+  /** Σ a_i * b_i in double precision (codegen'd loop, [[DotProductExpr]]). */
+  def dotProduct(a: Column, b: Column): Column =
+    GraftBridge.column(DotProductExpr(ex(a), ex(b)))
 
   /** Interpreted higher-order-function form of [[dotProduct]] — identical
-    * numerics, needs no function registration. */
+    * numerics. */
   def dotProductHof(a: Column, b: Column): Column =
     aggregate(
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
@@ -33,7 +38,8 @@ object VectorFunctions {
   def l2Norm(a: Column): Column = sqrt(l2NormSq(a))
 
   /** Exact squared L2 distance between two vectors (codegen'd loop). */
-  def l2DistanceSq(a: Column, b: Column): Column = call_function("graft_l2sq", a, b)
+  def l2DistanceSq(a: Column, b: Column): Column =
+    GraftBridge.column(L2DistSqExpr(ex(a), ex(b)))
 
   /** Interpreted higher-order-function form of [[l2DistanceSq]]. */
   def l2DistanceSqHof(a: Column, b: Column): Column =
@@ -83,5 +89,5 @@ object VectorFunctions {
     * ([[adcDistance]]) — see [[graft.functions.AdcProjectionExpr]]. */
   def adcProjectionDistance(px: Column, fine: Column, codebook: Array[Float],
       m: Int, subDim: Int): Column =
-    call_function("graft_adc_proj", px, fine, typedLit(codebook), lit(m), lit(subDim))
+    GraftBridge.column(AdcProjectionExpr(ex(px), ex(fine), codebook, m, subDim))
 }

@@ -12,10 +12,10 @@ import graft.engine.LopqIndexStore
   * `updater/extraction_checker.py:225-258` checks each new extraction
   * against what is indexed and marks it processed;
   * `searcher_lopqhbase.py:600-617` skips already-indexed updates): screen
-  * a new batch against the index's own cells
-  * ([[VectorQueries.semDedupPairsIncremental]]), drop flagged rows by the
-  * conservative-prefix rule ([[VectorQueries.screenSurvivors]]), append
-  * the survivors ([[LopqIndexStore.appendUpdate]]).
+  * a new batch against the index's own cells ([[screenPairs]]), drop
+  * flagged rows by the conservative-prefix rule
+  * ([[VectorQueries.screenSurvivors]]), append the survivors
+  * ([[LopqIndexStore.appendUpdate]]).
   *
   * Everything here is O(batch), never O(index): the screen's corpus scans
   * are pruned map-side behind broadcasts of batch-derived sides, the
@@ -46,20 +46,8 @@ object IngestOps {
     val b = batch.select(col(idCol), col(vecCol))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val corpusCells = indexedCells(spark, dir)
-      // conf-gated multi-probe (VERDICT r12 next-round #6): each batch row
-      // also checks its second-nearest cell, catching the near-dup whose
-      // jitter flipped the argmin across a cell boundary; pair rows then
-      // need the cross-cell dedup (a batch pair sharing both cells
-      // surfaces twice)
-      val multi = VectorQueries.screenMultiProbe(spark)
-      val batchCells =
-        if (multi) LopqIndexStore.assignCellsMulti(spark, dir, b, idCol, vecCol)
-        else LopqIndexStore.assignCells(spark, dir, b, idCol, vecCol)
-      val rawPairs = VectorQueries.semDedupPairsIncremental(
-        corpusCells, batchCells, corpusVectors, b, idCol, vecCol, simThreshold)
-      val pairs = (if (multi) VectorQueries.dedupProbePairs(rawPairs) else rawPairs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val pairs = screenPairs(spark, dir, corpusVectors, b, idCol, vecCol,
+        simThreshold).persist(StorageLevel.MEMORY_AND_DISK)
       try {
         val flagged = pairs.count()
         val survivors = VectorQueries.screenSurvivors(b, idCol, pairs)
@@ -74,10 +62,33 @@ object IngestOps {
     } finally { b.unpersist(); () }
   }
 
+  /** The screen stage of one ingest cycle, shared by [[screenAndAppend]],
+    * the streaming twin ([[graft.streaming.ScreenedIngest]]) and the API
+    * facade ([[graft.GraftApi.semDedupIncrement]]): the batch's cells from
+    * the dir's persisted model ([[LopqIndexStore.assignCells]], or its
+    * top-P cells under [[VectorQueries.ScreenMultiProbeConf]] — a
+    * near-dup whose jitter flipped the argmin across a cell boundary is
+    * then still caught), swept against the indexed cells
+    * ([[VectorQueries.semDedupPairsIncremental]]). Returns the flagged
+    * `(id_a < id_b, cell_id, cos_sim)` pairs; under multi-probe a batch
+    * pair sharing two probed cells is collapsed to one row
+    * ([[VectorQueries.dedupProbePairs]]). */
+  def screenPairs(spark: SparkSession, dir: String, corpusVectors: DataFrame,
+      batch: DataFrame, idCol: String, vecCol: String,
+      simThreshold: Double): DataFrame = {
+    val multi = VectorQueries.screenMultiProbe(spark)
+    val batchCells =
+      if (multi) LopqIndexStore.assignCellsMulti(spark, dir, batch, idCol, vecCol)
+      else LopqIndexStore.assignCells(spark, dir, batch, idCol, vecCol)
+    val pairs = VectorQueries.semDedupPairsIncremental(indexedCells(spark, dir),
+      batchCells, corpusVectors, batch, idCol, vecCol, simThreshold)
+    if (multi) VectorQueries.dedupProbePairs(pairs) else pairs
+  }
+
   /** `(id, cell_id)` of everything indexed — empty (not an error) for a
     * store no batch has reached yet, so the first-ever screened batch
     * still gets its WITHIN-batch dedup. */
-  private[graft] def indexedCells(spark: SparkSession, dir: String): DataFrame =
+  private def indexedCells(spark: SparkSession, dir: String): DataFrame =
     if (LopqIndexStore.hasCodes(spark, dir))
       LopqIndexStore.readCodes(spark, dir)
         .select(col("id"), col("cell_id").cast("long").as("cell_id"))

@@ -188,7 +188,7 @@ object VectorQueries {
     * chunk's self-join shuffle (members/nChunks × row width × both sides
     * with explode headroom, ×3) fits [[SemDedupChunkShuffleMaxBytesConf]],
     * AND one chunk's skinny broadcast stays under
-    * [[SemDedupBroadcastAsgMaxRowsConf]] rows. Both inputs are
+    * [[SemDedupBroadcastAsgMaxRows]] rows. Both inputs are
     * driver-known (`memberRows` from the skinny multi-cell count the
     * caller already pays, `dim` from the model/shape) — no plan-stats
     * guessing (the r9 byte-stats lesson). */
@@ -196,12 +196,10 @@ object VectorQueries {
       spark: org.apache.spark.sql.SparkSession): Int = {
     val maxBytes = spark.conf.get(SemDedupChunkShuffleMaxBytesConf,
       DefaultSemDedupChunkShuffleMaxBytes.toString).toLong
-    val maxAsgRows = spark.conf.get(SemDedupBroadcastAsgMaxRowsConf,
-      DefaultSemDedupBroadcastAsgMaxRows.toString).toLong
-    require(maxBytes > 0 && maxAsgRows > 0, "semdedup chunk bounds must be > 0")
+    require(maxBytes > 0, s"$SemDedupChunkShuffleMaxBytesConf must be > 0")
     val sliceBytes = graft.engine.LopqSearcher.satMul(memberRows, (4L * dim + 48L) * 3L)
     val byBytes = (sliceBytes + maxBytes - 1) / maxBytes
-    val byAsg = (memberRows + maxAsgRows - 1) / maxAsgRows
+    val byAsg = (memberRows + SemDedupBroadcastAsgMaxRows - 1) / SemDedupBroadcastAsgMaxRows
     math.max(1L, math.max(byBytes, byAsg)).min(1 << 20).toInt
   }
 
@@ -568,12 +566,11 @@ object VectorQueries {
   val SemDedupChunkShuffleMaxBytesConf = "spark.graft.semdedup.chunkShuffleMaxBytes"
   val DefaultSemDedupChunkShuffleMaxBytes: Long = 8L << 30
 
-  /** Conf: cap on the rows of one chunk's broadcast skinny assignment —
+  /** Cap on the rows of one chunk's broadcast skinny assignment —
     * matters at NARROW widths, where the byte bound alone would allow a
     * chunk whose member count (≈ bytes/width) is itself too many rows to
     * broadcast (26M at 64-d × 8 GB). */
-  val SemDedupBroadcastAsgMaxRowsConf = "spark.graft.semdedup.broadcastAsgMaxRows"
-  val DefaultSemDedupBroadcastAsgMaxRows: Long = 8L << 20
+  val SemDedupBroadcastAsgMaxRows: Long = 8L << 20
   private val NumTables = 4  // LSH: L hash tables ...
   private val BitsPerTable = 4 // ... of k sign bits each
 

@@ -11,9 +11,10 @@ import graft.ops.{IngestOps, VectorQueries}
   * what's indexed → store only the new content: `kafka_ingester.py`
   * feeding `extraction_checker.py:225-258`, whose survivors the updater
   * stores). Each micro-batch is screened against the index's CURRENT
-  * state — codes for candidate cells, the [[IngestOps.vectorStore]]
-  * side-store for the cosines — so a near-duplicate arriving hours after
-  * its original, in a different micro-batch, is still dropped.
+  * state by [[IngestOps.screenPairs]], the batch cycle's own screen —
+  * codes for candidate cells, the [[IngestOps.vectorStore]] side-store
+  * for the cosines — so a near-duplicate arriving hours after its
+  * original, in a different micro-batch, is still dropped.
   *
   * Idempotence is three-layered, all at-least-once safe:
   *   - the update id derives from the micro-batch id; a checkpoint replay
@@ -59,21 +60,9 @@ object ScreenedIngest {
           val b = df.select(col(idCol), col(vecCol))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            val corpusCells = IngestOps.indexedCells(spark, indexDir)
-            // conf-gated multi-probe: also screen each row's second cell
-            // (see [[VectorQueries.ScreenMultiProbeConf]])
-            val multi = VectorQueries.screenMultiProbe(spark)
-            val batchCells =
-              if (multi)
-                LopqIndexStore.assignCellsMulti(spark, indexDir, b, idCol, vecCol)
-              else
-                LopqIndexStore.assignCells(spark, indexDir, b, idCol, vecCol)
-            val rawPairs = VectorQueries.semDedupPairsIncremental(
-              corpusCells, batchCells,
+            val pairs = IngestOps.screenPairs(spark, indexDir,
               IngestOps.vectorStore(spark, indexDir, idCol, vecCol),
               b, idCol, vecCol, simThreshold)
-            val pairs =
-              if (multi) VectorQueries.dedupProbePairs(rawPairs) else rawPairs
             val survivors = VectorQueries.screenSurvivors(b, idCol, pairs)
             IngestOps.writeVectors(spark, indexDir, survivors, idCol, vecCol, uid)
             if (spark.conf.get(CrashAfterWriteVectorsConf, "false").toBoolean)

@@ -5,14 +5,15 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge. Spark 4 hides the classic conversion behind
-  * `private[sql]` ([[ExpressionUtils]]); the registered-function route
-  * ([[graft.functions.GraftFunctions]]) covers every expression whose
-  * non-column inputs are literals, but an expression carrying a runtime
+  * `private[sql]` ([[ExpressionUtils]]). The library's Scala helpers build
+  * every graft expression directly through it — so they need no function
+  * registration on the session, and an expression carrying a runtime
   * object a literal cannot express (a `Broadcast` handle — see
-  * [[graft.functions.BroadcastL2DistSqExpr]]) must be constructed
-  * directly. This shim is the single place the library reaches through
-  * the package-private seam, so a Spark upgrade that moves the conversion
-  * breaks one file. */
+  * [[graft.functions.BroadcastL2DistSqExpr]]) is built the same way. The
+  * registered-function route ([[graft.functions.GraftFunctions]]) remains
+  * for SQL-text callers. This shim is the single place the library reaches
+  * through the package-private seam, so a Spark upgrade that moves the
+  * conversion breaks one file. */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -60,6 +60,29 @@ class AnnJoinSpec extends SparkSpec {
     assert(joinResults(nQueries) === perQuery)
   }
 
+  test("the native helpers run on a session that never registered them") {
+    val slim = built
+    // newSession() starts from the builtin function registry: no graft_*
+    val fresh = spark.newSession()
+    assert(!fresh.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_l2sq")))
+    val qv = Tables(spark, sf, "embeddings").where(col("vec_id") === 3L)
+      .select("embedding").head().getSeq[Float](0).toArray
+    def hits(s: org.apache.spark.sql.SparkSession,
+        idx: graft.engine.LopqSlimIndex) =
+      LopqSearcher.searchSlim(idx, s.read.parquet(s"$sf/embeddings.parquet"),
+        "vec_id", "embedding", qv, Quota, TopK, RerankK).collect().toSeq
+    val viaFresh = hits(fresh, LopqIndexStore.loadSlim(fresh, dir).get)
+    assert(viaFresh.length === TopK && viaFresh.head.getLong(0) === 3L)
+    assert(viaFresh === hits(spark, slim))
+    import graft.functions.TextFunctions
+    val sigs = fresh.read.parquet(s"$sf/documents.parquet").limit(20)
+      .select(TextFunctions.minhashFromHashes(
+        TextFunctions.distinctShingleHashes(col("text"), 3), 16))
+      .collect()
+    assert(sigs.length === 20 && sigs.forall(_.getSeq[Long](0).length === 16))
+  }
+
   test("job count does not scale with the query count") {
     built
     def jobsFor(nQueries: Int, group: String): Int = {

@@ -653,16 +653,12 @@ class IngestSpec extends SparkSpec {
       .unionAll(seed.limit(1)
         .select((col("vec_id") + 70000000L).as("vec_id"), col("embedding")))
       .localCheckpoint()
-    def screenPairs(): Set[(Long, Long)] = {
-      val cells = LopqIndexStore.assignCells(spark, dir, batch,
-        "vec_id", "embedding")
-      graft.ops.VectorQueries.semDedupPairsIncremental(
-        IngestOps.indexedCells(spark, dir), cells,
+    def screenPairs(): Set[(Long, Long)] =
+      IngestOps.screenPairs(spark, dir,
         IngestOps.vectorStore(spark, dir, "vec_id", "embedding"), batch,
         "vec_id", "embedding", graft.ops.VectorQueries.NearDupSimThreshold)
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
     // rerank over EVERY committed candidate against the store's vector
     // side — the join through which an orphan row would have to surface
     def rerank(): Seq[Long] = {
@@ -711,6 +707,79 @@ class IngestSpec extends SparkSpec {
     assert(!rerank0.exists(_ >= 900000000L) &&
       !pairs0.exists(p => p._1 >= 900000000L || p._2 >= 900000000L))
     del(dir)
+  }
+
+  test("stream ≡ batch ≡ API: one screen keeps the same survivors with identical codes") {
+    // the three entry points of the screened-ingest cycle, one batch, one
+    // store: IngestOps.screenAndAppend and a ScreenedIngest micro-batch on
+    // clones of the catalog index seeded with its whole corpus, and
+    // GraftApi.screenBatch against the catalog index itself — single-cell
+    // and multi-probe screens alike
+    import graft.ops.VectorQueries
+    val h = EngineOps.index(spark, sf)
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val seedIds = e.select("vec_id").collect().map(_.getLong(0)).toSet
+    // batch: exact copies of corpus rows (must drop), midpoints of corpus
+    // pairs (screened organically), and a within-batch copy of the first
+    // midpoint under a larger id (must drop by the smaller-id rule)
+    val copies = e.where(col("vec_id") < 3)
+      .select((col("vec_id") + 70000000L).as("vec_id"), col("embedding"))
+    val mids = e.as("a").join(e.as("b"), col("b.vec_id") === col("a.vec_id") + 250)
+      .where(col("a.vec_id") < 20)
+      .select((col("a.vec_id") + 80000000L).as("vec_id"),
+        zip_with(col("a.embedding"), col("b.embedding"),
+          (x, y) => ((x + y) / 2).cast("float")).as("embedding"))
+    val twin = mids.where(col("vec_id") === 80000000L)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+    val batch = copies.unionByName(mids).unionByName(twin).localCheckpoint()
+    val uid = f"stream_${0L}%019d"
+    def newCodes(d: String) = LopqIndexStore.readCodes(spark, d)
+      .select("id", "coarse0", "coarse1", "fine", "cell_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
+        r.getSeq[Short](3).toSeq, r.getInt(4)))
+      .filterNot(r => seedIds(r._1)).sortBy(_._1).toSeq
+    for (multi <- Seq(false, true)) {
+      val dirA = s"$root/three_batch"; val dirB = s"$root/three_stream"
+      val staged = s"$root/three_src"; val ckpt = s"$root/three_ckpt"
+      Seq(dirA, dirB, staged, ckpt).foreach(del)
+      Seq(dirA, dirB).foreach { d =>
+        LopqIndexStore.cloneEmpty(spark, EngineOps.indexDir(sf), d)
+        IngestOps.writeVectors(spark, d, e, "vec_id", "embedding",
+          "seed_0000000000000000000")
+        assert(LopqIndexStore.appendUpdate(spark, d, e, "vec_id", "embedding",
+          "seed_0000000000000000000"))
+      }
+      spark.conf.set(VectorQueries.ScreenMultiProbeConf, multi.toString)
+      try {
+        val viaBatch = IngestOps.screenAndAppend(spark, dirA,
+          IngestOps.vectorStore(spark, dirA, "vec_id", "embedding"),
+          batch, "vec_id", "embedding", uid)
+        assert(viaBatch.applied)
+        batch.repartition(1).write.parquet(staged)
+        graft.streaming.ScreenedIngest
+          .maintain(spark, dirB, spark.readStream
+            .schema(spark.read.parquet(staged).schema).parquet(staged),
+            "vec_id", "embedding", ckpt)
+          .awaitTermination()
+        val viaApi = new GraftApi(spark, sf)
+          .screenBatch(batch, "vec_id", "embedding")
+          .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
+        val codesA = newCodes(dirA)
+        assert(codesA.map(_._1) === viaApi, s"batch ≠ API (multi=$multi)")
+        assert(newCodes(dirB) === codesA, s"stream ≠ batch (multi=$multi)")
+        assert(viaApi.nonEmpty && viaApi.length < batch.count() - 3,
+          "the batch must keep some rows and drop the planted copies")
+        // the survivors' codes are the build encoder's, bit for bit
+        val apiSurvivors = batch.where(col("vec_id").isin(viaApi: _*))
+        val encoded = LopqSearcher.encode(apiSurvivors, "vec_id", "embedding", h.model)
+          .select("id", "coarse0", "coarse1", "fine", "cell_id").collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
+            r.getSeq[Short](3).toSeq, r.getInt(4))).sortBy(_._1).toSeq
+        assert(codesA === encoded, s"appended codes ≠ the classic encode (multi=$multi)")
+      } finally spark.conf.unset(VectorQueries.ScreenMultiProbeConf)
+      Seq(dirA, dirB, staged, ckpt).foreach(del)
+    }
   }
 
   test("GraftApi.screenBatch keeps nothing from an all-copies batch") {

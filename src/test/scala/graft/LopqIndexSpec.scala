@@ -186,15 +186,10 @@ class LopqIndexSpec extends SparkSpec {
     deleteDir(sdir)
     LopqIndexStore.initEmpty(spark, sdir, h.model, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
-    // threshold 0 forces every model over it → the slim path runs at test
-    // shape; at real release shape the 268 MB tensor trips it naturally
-    spark.conf.set(LopqIndexStore.SlimEncodeBytesConf, "0")
-    try {
-      assert(LopqIndexStore.appendUpdate(spark, sdir,
-        e.where(col("vec_id") < 250), "vec_id", "embedding", "u000"))
-      assert(LopqIndexStore.appendUpdate(spark, sdir,
-        e.where(col("vec_id") >= 250), "vec_id", "embedding", "u001"))
-    } finally spark.conf.unset(LopqIndexStore.SlimEncodeBytesConf)
+    assert(LopqIndexStore.appendUpdate(spark, sdir,
+      e.where(col("vec_id") < 250), "vec_id", "embedding", "u000"))
+    assert(LopqIndexStore.appendUpdate(spark, sdir,
+      e.where(col("vec_id") >= 250), "vec_id", "embedding", "u001"))
     def snap(d: String) = LopqIndexStore.readCodes(spark, d)
       .select("id", "coarse0", "coarse1", "fine", "cell_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getSeq[Short](3).toSeq, r.getInt(4)))
