@@ -874,11 +874,11 @@ object LopqIndexStore {
     if (isApplied(spark, dir, updateId)) return false
     val (slim, pca) = cachedSlimModel(spark, dir)
     val unique = batch0.dropDuplicates(idCol)
-    val input = pca match {
+    val pcaB = pca.map(spark.sparkContext.broadcast(_))
+    val input = pcaB match {
       case None => unique
-      case Some(px) =>
-        val pcaB = spark.sparkContext.broadcast(px)
-        val applyU = udf((v: Seq[Float]) => pcaB.value(v.toArray).toSeq)
+      case Some(pb) =>
+        val applyU = udf((v: Seq[Float]) => pb.value(v.toArray).toSeq)
         unique.withColumn(vecCol, applyU(col(vecCol)))
     }
     val (encoded0, touched, cleanup) =
@@ -910,6 +910,9 @@ object LopqIndexStore {
     } finally {
       encoded.unpersist()
       cleanup()
+      // per-call broadcasts: released here, not left for a driver GC, so
+      // a streaming session does not accrete one set per micro-batch
+      pcaB.foreach(_.destroy())
     }
   }
 
@@ -993,8 +996,9 @@ object LopqIndexStore {
     * once, which is what the build's full-model encode broadcasts anyway.
     *
     * Returns the codes frame, the batch's sorted touched cells, and a
-    * cleanup to drop the cached coarse stage AFTER the caller has
-    * materialized the codes. */
+    * cleanup to drop the cached coarse stage and destroy the slim-model
+    * and rotation-slice broadcasts AFTER the caller has materialized the
+    * codes. */
   private def slimEncode(spark: SparkSession, dir: String, input: DataFrame,
       idCol: String, vecCol: String,
       slim: SlimLopqModel): (DataFrame, Seq[Int], () => Unit) = {
@@ -1027,6 +1031,6 @@ object LopqIndexStore {
       .withColumn("fine", fineU(col("vec"), col("coarse0"), col("coarse1")))
       .withColumn("cell_id", cellId)
       .select("id", "coarse0", "coarse1", "fine", "cell_id")
-    (codes, touched, () => { coarse.unpersist(); () })
+    (codes, touched, () => { coarse.unpersist(); slimB.destroy(); rotB.destroy() })
   }
 }

@@ -213,64 +213,55 @@ object VectorQueries {
     * without a per-probe ANN search (the quantizer's assignment is the
     * candidate generator, exactly as in the full sweep).
     *
-    * Scale shape — work is O(|batch| · avg_cell · D), independent of
-    * corpus size beyond one skinny scan:
+    * Scale shape — one map-side pass, O(|batch| · avg_cell · D) work,
+    * independent of corpus size beyond one skinny and one fat scan; no
+    * vector ever enters a shuffle (PlanSpec-pinned):
     *
-    *   - the touched-cell set is O(batch) and broadcasts into the
-    *     corpus-side ASSIGNMENT scan, so the corpus-sized skinny table is
-    *     pruned map-side (no shuffle to discover touched members);
-    *   - the surviving corpus slice — O(|batch| · avg_cell) skinny rows —
-    *     broadcasts into the corpus VECTOR scan, so the fat table (32 GB
-    *     at deployment width) is scanned once and filtered map-side,
-    *     never shuffle-written (the same trick as the chunked driver's
-    *     id-attach);
-    *   - the rectangular sweep blocks the combined B side per cell
-    *     (`⌈n/blockRows⌉` hash blocks) and fans each batch row over the
-    *     blocks of its own cell only, so a skewed cell bounds task memory
-    *     at one block of vectors, exactly like the triangular full sweep.
+    *   - the batch's cell ids broadcast into the corpus-side ASSIGNMENT
+    *     scan as a semi-join, so the corpus-sized skinny table is pruned
+    *     map-side to the touched members;
+    *   - that O(|batch| · avg_cell) skinny slice broadcasts into the corpus
+    *     VECTOR scan, so the fat table (32 GB at deployment width) is
+    *     scanned once and filtered map-side, and norms are computed on the
+    *     surviving slice only;
+    *   - the batch rows `(cell_id, id, vec, norm)` broadcast as the build
+    *     side of a hash join on `cell_id`; the corpus slice, with the
+    *     batch rows unioned in for the (batch × batch) pairs, streams
+    *     through it. Task memory is the broadcast batch, whatever a
+    *     skewed cell's size.
     *
     * Contract: batch ids are disjoint from corpus ids, and the batch is
-    * bounded (a micro-batch / nightly increment — its touched-member
-    * slice must broadcast; for corpus-scale "batches" run the full
-    * [[semDedupPairsChunked]] sweep instead). Pair rows match
-    * [[semDedupPairs]]' schema: `(id_a < id_b, cell_id, cos_sim)`. */
+    * bounded (a micro-batch / nightly increment): its vectors ride a
+    * broadcast of |batch| · P · D · 4 bytes (P = cells per batch row, 1
+    * unless multi-probe) — the reference's release batch, 2048 × 4096-d,
+    * is ~32 MB — and its touched-member slice broadcasts too. For
+    * corpus-scale "batches" run the full [[semDedupPairsChunked]] sweep
+    * instead. Pair rows match [[semDedupPairs]]' schema:
+    * `(id_a < id_b, cell_id, cos_sim)`; a batch pair sharing several of
+    * its rows' cells (multi-probe) surfaces once per shared cell, for
+    * [[dedupProbePairs]] to collapse. */
   def semDedupPairsIncremental(corpusCells: DataFrame, batchCells: DataFrame,
       corpusVectors: DataFrame, batchVectors: DataFrame,
       idCol: String, vecCol: String,
       simThreshold: Double = NearDupSimThreshold): DataFrame = {
-    val blockRows = cellBlockRows(corpusCells)
     val bAsg = batchCells.select(col("id"), col("cell_id"))
-    val cAsg = corpusCells.select(col("id"), col("cell_id"))
-    val touched = bAsg.groupBy("cell_id").agg(count(lit(1)).as("_nb"))
-    val cPruned = cAsg.join(broadcast(touched.select("cell_id")), "cell_id")
-    // B-side membership per touched cell = pruned corpus + batch; both
-    // inputs are O(touched members), so this agg never sees the corpus
-    val nblkOf = touched
-      .join(cPruned.groupBy("cell_id").agg(count(lit(1)).as("_nc")),
-        Seq("cell_id"), "left")
-      .select(col("cell_id"),
-        ((coalesce(col("_nc"), lit(0L)) + col("_nb") + (blockRows - 1)) /
-          blockRows).cast("int").as("_nblk"))
-    def vecs(v: DataFrame) = v.select(col(idCol).as("id"),
-      col(vecCol).as("_v"), l2Norm(col(vecCol)).as("_nrm"))
-    val batchM = vecs(batchVectors)
-      .join(broadcast(bAsg.join(nblkOf, "cell_id")), "id")
-    val corpusM = vecs(corpusVectors)
-      .join(broadcast(cPruned.join(nblkOf, "cell_id")), "id")
-    // rectangular sweep: A = batch rows fanned over their cell's blocks,
-    // B = (corpus ∪ batch) rows in their own hash block — a (batch,
-    // corpus) pair meets exactly once (ids disjoint), a (batch, batch)
+    val cPruned = corpusCells.select(col("id"), col("cell_id"))
+      .join(broadcast(bAsg.select("cell_id")), Seq("cell_id"), "left_semi")
+    def members(v: DataFrame, asg: DataFrame) =
+      v.select(col(idCol).as("id"), col(vecCol).as("_v"))
+        .join(broadcast(asg), "id")
+        .select(col("cell_id"), col("id"), col("_v"), l2Norm(col("_v")).as("_nrm"))
+    val batchM = members(batchVectors, bAsg)
+    val a = batchM.select(col("cell_id"), col("id").as("id_a"),
+      col("_v").as("va"), col("_nrm").as("na"))
+    // a (batch, corpus) pair meets once (ids disjoint), a (batch, batch)
     // pair twice mirrored, deduped by the id order below
-    val a = batchM.select(col("cell_id"),
-      explode(sequence(lit(0), col("_nblk") - 1)).as("_j"),
-      col("id").as("id_a"), col("_v").as("va"), col("_nrm").as("na"))
-    val b = corpusM.withColumn("_new", lit(false))
+    val b = members(corpusVectors, cPruned).withColumn("_new", lit(false))
       .unionByName(batchM.withColumn("_new", lit(true)))
-      .select(col("cell_id"), pmod(hash(col("id")), col("_nblk")).as("_j"),
-        col("id").as("id_b"), col("_v").as("vb"), col("_nrm").as("nb"),
-        col("_new"))
+      .select(col("cell_id"), col("id").as("id_b"), col("_v").as("vb"),
+        col("_nrm").as("nb"), col("_new"))
     val sim = dotProduct(col("va"), col("vb")) / (col("na") * col("nb"))
-    a.join(b, Seq("cell_id", "_j"))
+    b.join(broadcast(a), "cell_id")
       .where((!col("_new") || col("id_a") < col("id_b")) && sim >= simThreshold)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"),

@@ -147,46 +147,25 @@ class CatalogSpec extends SparkSpec {
     } finally spark.conf.unset(key)
   }
 
-  /** Same invariant for the incremental pass's RECTANGULAR blocking: at
-    * blockRows=1 every batch row fans over n single-row B blocks, so
-    * every (batch × corpus) and (batch × batch) pair crosses the block
-    * machinery — the pair set and cosines must not move. */
-  test("semDedupPairsIncremental blocked ≡ plain at a forced 1-row block size") {
-    val key = graft.ops.VectorQueries.SemDedupCellBlockRowsConf
-    val h = graft.ops.EngineOps.index(spark, sf)
-    val cells = h.codes.select(col("id"),
-      (col("coarse0").cast("long") * h.model.v + col("coarse1")).as("cell_id"))
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val isNew = pmod(col("id"), lit(2)) === 0
-    def run(): Set[(Long, Long, Long, Double)] =
-      graft.ops.VectorQueries.semDedupPairsIncremental(
-          cells.where(!isNew), cells.where(isNew),
-          emb.where(pmod(col("vec_id"), lit(2)) =!= 0),
-          emb.where(pmod(col("vec_id"), lit(2)) === 0),
-          "vec_id", "embedding")
-        .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
-          r.getAs[Long]("cell_id"), r.getAs[Double]("cos_sim"))).toSet
-    val plain = run()
-    spark.conf.set(key, "1")
-    try {
-      val blocked = run()
-      assert(blocked === plain)
-    } finally spark.conf.unset(key)
-  }
-
   /** Randomized brute-force model check for the whole semdedup family:
     * tiny random corpora with FEW cells (so multi-member cells and
     * within-cell collisions are dense), random thresholds, and a random
     * block size each trial — the full sweep must emit exactly the
     * same-cell pairs at or above the threshold, and the incremental pass
-    * exactly the subset with ≥ 1 batch endpoint. Deterministic seed, so
-    * a float-vs-double boundary flip cannot flake (and with gaussian
-    * data a sim landing within 1e-7 of the threshold has ~zero mass). */
+    * exactly the subset with ≥ 1 batch endpoint. In the multi-probe
+    * trials each batch row carries TWO distinct cells (the ingest screen's
+    * top-2 assignment), so the incremental pass's broadcast batch side
+    * repeats ids: the expected set is then the pairs sharing any probed
+    * cell, collapsed to one row each through `dedupProbePairs`.
+    * Deterministic seeds, so a float-vs-double boundary flip cannot flake
+    * (and with gaussian data a sim landing within 1e-7 of the threshold
+    * has ~zero mass). */
   test("semdedup family matches a brute-force model on random corpora") {
     graft.functions.GraftFunctions.register(spark)
     val key = graft.ops.VectorQueries.SemDedupCellBlockRowsConf
     val rnd = new scala.util.Random(4242L)
     import spark.implicits._
+    var multiTrials = 0
     try (1 to 5).foreach { trial =>
       val n = 40 + rnd.nextInt(60)
       val dim = 4 + rnd.nextInt(5)
@@ -226,15 +205,44 @@ class CatalogSpec extends SparkSpec {
         assert(math.abs(r.getAs[Double]("cos_sim") - cos(rows(a)._3, rows(b)._3)) < 1e-5)
       }
       val isBatch: Long => Boolean = _ % 3 == 0
-      val incr = graft.ops.VectorQueries.semDedupPairsIncremental(
-        cells.where(pmod(col("id"), lit(3)) =!= 0),
-        cells.where(pmod(col("id"), lit(3)) === 0),
-        vecs.where(pmod(col("vec_id"), lit(3)) =!= 0),
-        vecs.where(pmod(col("vec_id"), lit(3)) === 0),
-        "vec_id", "embedding", th)
+      def incremental(batchCells: org.apache.spark.sql.DataFrame) =
+        graft.ops.VectorQueries.semDedupPairsIncremental(
+          cells.where(pmod(col("id"), lit(3)) =!= 0), batchCells,
+          vecs.where(pmod(col("vec_id"), lit(3)) =!= 0),
+          vecs.where(pmod(col("vec_id"), lit(3)) === 0),
+          "vec_id", "embedding", th)
+      val incr = incremental(cells.where(pmod(col("id"), lit(3)) === 0))
       val bruteIncr = brute.filter { case (a, b) => isBatch(a) || isBatch(b) }
       assert(pairsOf(incr) === bruteIncr, s"incremental, trial $trial")
+      if (nCells >= 2) {
+        // multi-probe batch: a second, distinct cell per batch row (its
+        // own generator, so the trials' corpora stay those of `rnd`)
+        multiTrials += 1
+        val rndP = new scala.util.Random(trial.toLong)
+        val probed = rows.map { case (id, c, _) =>
+          id -> (if (isBatch(id)) Set(c, (c + 1 + rndP.nextInt(nCells - 1)) % nCells)
+                 else Set(c))
+        }.toMap
+        val batchCells = probed.toSeq.filter(p => isBatch(p._1))
+          .flatMap { case (id, cs) => cs.map(id -> _) }.toDF("id", "cell_id")
+        val multi = graft.ops.VectorQueries.dedupProbePairs(incremental(batchCells))
+          .collect()
+        val bruteMulti = (for {
+          (ia, _, va) <- rows; (ib, _, vb) <- rows
+          if ia < ib && (isBatch(ia) || isBatch(ib)) &&
+            (probed(ia) & probed(ib)).nonEmpty && cos(va, vb) >= th
+        } yield (ia, ib)).toSet
+        val got = multi.map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
+        assert(got.length === got.toSet.size, s"multi-probe collapse, trial $trial")
+        assert(got.toSet === bruteMulti, s"multi-probe incremental, trial $trial")
+        assert(bruteIncr.subsetOf(bruteMulti))
+        multi.foreach { r =>
+          val (a, b) = (r.getAs[Long]("id_a").toInt, r.getAs[Long]("id_b").toInt)
+          assert(math.abs(r.getAs[Double]("cos_sim") - cos(rows(a)._3, rows(b)._3)) < 1e-5)
+        }
+      }
     } finally spark.conf.unset(key)
+    assert(multiTrials > 0, "no trial exercised the multi-probe batch side")
   }
 
   /** q95's survivor set is exactly the corpus minus q94's non-canonical

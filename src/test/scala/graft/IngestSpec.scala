@@ -792,4 +792,34 @@ class IngestSpec extends SparkSpec {
     assert(kept.count() == 0,
       "every planted copy pairs its own source at cos=1 and must be dropped")
   }
+
+  /** Each append broadcasts the slim model, the batch's rotation slices and
+    * (PCA-fronted indexes) the PCA front; a streaming session appends once
+    * per micro-batch, so any of them left for the ContextCleaner accretes
+    * until a driver GC. Spark's own broadcasts (plan relations, Hadoop
+    * conf, the scheduler's serialized task binaries) are out of scope:
+    * the ContextCleaner owns those. */
+  test("back-to-back appendUpdates leave none of their broadcasts resident") {
+    import org.apache.spark.graft.TestBroadcastBlocks
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val dir = s"$root/bcast"
+    del(dir)
+    LopqIndexStore.cloneEmpty(spark, EngineOps.indexDir(sf), dir)
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val before = TestBroadcastBlocks.resident().keySet
+    try {
+      (0 until 3).foreach { i =>
+        assert(LopqIndexStore.appendUpdate(spark, dir,
+          e.where(col("vec_id") % 3 === i), "vec_id", "embedding", f"u$i%03d"))
+      }
+      eventually(timeout(20.seconds), interval(200.millis)) {
+        val leaked = TestBroadcastBlocks.resident().filter { case (id, cls) =>
+          !before(id) && !cls.startsWith("org.apache.spark.") && cls != "[B"
+        }
+        assert(leaked.isEmpty, s"appendUpdate left broadcasts resident: $leaked")
+      }
+    } finally del(dir)
+  }
 }

@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.ArrayType
 
 import graft.engine.LopqSearcher
 import graft.ops.EngineOps
@@ -299,30 +303,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q101 protoPrune shuffles only skinny rows (the vector column dies map-side)") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.types.ArrayType
     val df = SparkEntry.queries("q101_proto_prune")(spark, sf)
     df.collect() // finalize AQE
-    def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] = {
-      val here = plan match {
-        case s: ShuffleExchangeExec => Seq(s)
-        case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-        case q: QueryStageExec => shuffles(q.plan)
-        case _ => Seq.empty
-      }
-      here ++ plan.children.flatMap(shuffles)
-    }
     val ex = shuffles(df.queryExecution.executedPlan)
     assert(ex.nonEmpty, "the per-cell rank window must shuffle something")
     // at deployment width the vector column is 16 KB/row; the operator's
     // whole scale story is that it never enters an exchange
-    ex.foreach { e =>
-      val fat = e.child.output.filter(_.dataType.isInstanceOf[ArrayType])
-      assert(fat.isEmpty,
-        s"vector column leaked into a shuffle: ${fat.map(_.name).mkString(",")}")
-    }
+    assertNoVectorShuffled(ex)
   }
 
   test("q97 incremental semdedup = the batch-touching subset; corpus scans stay map-side") {
@@ -330,15 +317,40 @@ class PlanSpec extends SparkSpec {
     // sweep's pairs that touch the batch (even ids), no more, no less
     val one = SparkEntry.queries("q94_semdedup_cells")(spark, sf).collect()
       .filter(r => r.getLong(0) % 2 == 0 || r.getLong(1) % 2 == 0)
-    val df = SparkEntry.queries("q97_semdedup_incremental")(spark, sf)
-    val inc = df.collect()
-    assert(inc.toSeq == one.toSeq,
-      "incremental pairs must equal the one-shot sweep's batch-touching subset")
-    // plan: both corpus-side scans (skinny assignment, fat vectors) are
-    // pruned behind broadcasts of O(batch)-derived sides — the corpus
-    // never shuffles to learn which members the batch touches
-    val p = df.queryExecution.executedPlan.toString
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 2,
-      "touched-cell prune and vector attach must both broadcast")
+    // plan: with Catalyst's size-based broadcast off (the deployment-width
+    // case, where no side's estimate clears the threshold) only the
+    // operator's own hints broadcast — the touched-cell prune, the vector
+    // attaches and the batch build side — and no vector enters a shuffle
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    try {
+      val df = SparkEntry.queries("q97_semdedup_incremental")(spark, sf)
+      val inc = df.collect() // finalizes AQE
+      assert(inc.toSeq == one.toSeq,
+        "incremental pairs must equal the one-shot sweep's batch-touching subset")
+      val plan = df.queryExecution.executedPlan
+      assert("BroadcastHashJoin".r.findAllIn(plan.toString).size >= 3,
+        "touched-cell prune, vector attach and batch build side must broadcast")
+      assertNoVectorShuffled(shuffles(plan))
+    } finally spark.conf.unset(key)
   }
+
+  /** Every shuffle exchange of an executed plan, AQE query stages
+    * included. */
+  private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] = {
+    val here = plan match {
+      case s: ShuffleExchangeExec => Seq(s)
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case _ => Seq.empty
+    }
+    here ++ plan.children.flatMap(shuffles)
+  }
+
+  private def assertNoVectorShuffled(ex: Seq[ShuffleExchangeExec]): Unit =
+    ex.foreach { e =>
+      val fat = e.child.output.filter(_.dataType.isInstanceOf[ArrayType])
+      assert(fat.isEmpty,
+        s"vector column leaked into a shuffle: ${fat.map(_.name).mkString(",")}")
+    }
 }
