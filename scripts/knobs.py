@@ -13,9 +13,13 @@ NameConf` alias of it); comment lines are ignored. A line counts as a
 set when it calls `.set(`, `.unset(` or `.config(`; every other
 reference outside the declaration is a read.
 
-The closing summary counts the keys, the keys no non-test file sets, and
-the keys nothing sets at all (candidates for a constant). Dev-only
-tooling — the shipped Scala library does not depend on this.
+Run-note channels (keys with a `.last.` segment, e.g.
+`spark.graft.screen.last.bandJoin`) are OUTPUTS the engine writes after
+a call, not options: they are listed in their own section, and the
+closing summary counts the settable options, the options no non-test
+file sets, and the options nothing sets at all (candidates for a
+constant). Dev-only tooling — the shipped Scala library does not depend
+on this.
 """
 import os
 import re
@@ -95,16 +99,27 @@ def main(root):
     def short(paths):
         return ", ".join(sorted(os.path.basename(p) for p in paths)) or "-"
 
-    for k in sorted(keys):
+    notes = sorted(k for k in keys if ".last." in k)
+    options = sorted(k for k in keys if ".last." not in k)
+    for k in options:
         print(k)
         print("  read by:      " + short(reads[k]))
         print("  set (main):   " + short(sets_main[k]))
         print("  set (specs):  " + short(sets_test[k]))
-    no_main = [k for k in keys if not sets_main[k]]
+    print()
+    # a note is often written through a variable (`conf.set(note, …)`),
+    # so writers and readers are listed together
+    print("run-note channels (engine outputs, not options):")
+    for k in notes:
+        print(k)
+        print("  used by:      " + short(reads[k] | sets_main[k] | sets_test[k]))
+    no_main = [k for k in options if not sets_main[k]]
     unset = [k for k in no_main if not sets_test[k]]
     print()
-    print("keys: %d  set by no non-test file: %d  set by nothing: %d"
-          % (len(keys), len(no_main), len(unset)))
+    print("keys: %d = %d options + %d run-note channels"
+          % (len(keys), len(options), len(notes)))
+    print("options: %d  set by no non-test file: %d  set by nothing: %d"
+          % (len(options), len(no_main), len(unset)))
     for k in sorted(unset):
         print("  unset: " + k)
 

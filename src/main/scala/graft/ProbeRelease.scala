@@ -503,7 +503,7 @@ object ProbeRelease {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
-    spark.conf.set(graft.ops.IngestOps.CompactVectorsAtConf, compactAt.toString)
+    spark.conf.set(graft.ops.SideStoreFold.CompactAtConf, compactAt.toString)
     val srcDir = s.dir
     val cloneDir = srcDir + "_stream_probe"
     val stagedDir = srcDir + "_stream_probe_src"
@@ -572,12 +572,8 @@ object ProbeRelease {
     }
     println(f"[probe-release] stream staged $nBatches batch files in ${(System.nanoTime() - t0) / 1e9}%.1f s")
 
-    def sideDirs(): Int = {
-      val p = new org.apache.hadoop.fs.Path(s"$cloneDir/vectors")
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(st =>
-        st.isDirectory && !st.getPath.getName.startsWith("_"))
-    }
+    def sideDirs(): Int =
+      graft.core.UpdateLog.updateDirs(spark, s"$cloneDir/vectors").size
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       override def onQueryStarted(
           e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()

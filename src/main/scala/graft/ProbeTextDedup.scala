@@ -440,8 +440,7 @@ object ProbeTextDedup {
         // COMMITTED (tip-visible) deltas only — readers union exactly
         // these, so the roots line reports the real read-path list size
         // (an above-tip orphan dir is invisible; r17 review)
-        val deltas = graft.ops.TextSigStore
-          .committedDirs(spark, storeDir, root).size
+        val deltas = graft.core.UpdateLog.committed(spark, storeDir, root).size
         val roots = graft.ops.SideStoreFold.storedRoots(fs, root).size + deltas
         println(f"[probe-text]   $side%-8s base=$baseMb%8.1fMB  runs=[" +
           runs.map { case (n, b) => f"$n:${b / 1e6}%.1fMB" }.mkString(" ") +
@@ -485,8 +484,7 @@ object ProbeTextDedup {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val docsDf = spark.read.parquet(ensureCorpus(spark, nDocs, clique))
-    spark.conf.set(graft.ops.TextSigStore.CompactSigsAtConf,
-      compactAt.toString)
+    spark.conf.set(graft.ops.SideStoreFold.CompactAtConf, compactAt.toString)
     val ckpt = s"$storeDir/_probeckpt"
     fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
     stage("buildstore") {
@@ -518,7 +516,7 @@ object ProbeTextDedup {
             .option("maxFilesPerTrigger", 1).parquet(srcDir)
           graft.streaming.ScreenedTextIngest.maintain(spark, storeDir, src, ckpt)
             .awaitTermination()
-          require(graft.ops.TextSigStore
+          require(graft.core.UpdateLog
             .isApplied(spark, storeDir, f"stream_$k%019d"),
             s"stream batch $k must have applied")
           println(s"[probe-text]   batch $k drained via ScreenedTextIngest")
@@ -554,8 +552,7 @@ object ProbeTextDedup {
       require(onlySigs == 0 && onlyTexts == 0,
         "self-contained store sides must agree")
       val sides = Seq("sigs", "texts").map { s =>
-        val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$storeDir/$s"))
-          .map(_.getPath.getName).filterNot(_.startsWith("_"))
+        val dirs = graft.core.UpdateLog.updateDirs(spark, s"$storeDir/$s")
         s"$s unfoldedDeltas=${dirs.length}"
       }
       println(s"[probe-text]   ${sides.mkString("  ")}")

@@ -2,10 +2,11 @@ package graft.engine
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CellHistogram, CellMath}
+import graft.core.{CellHistogram, CellMath, UpdateLog}
 
 /** One parquet row per model vector; `part` selects the component.
   * Top-level (not nested/private) so Spark's encoder codegen can reach the
@@ -129,6 +130,7 @@ final case class LopqSlimIndex(
   *   codes/         parquet partitionBy(cell_id): (id, coarse0, coarse1, fine)
   *   cell_counts/   parquet (cell_id, cnt)
   *   manifest/      parquet (update_id, n_rows)
+  *   tip            the update-log watermark ([[graft.core.UpdateLog]])
   * }}}
   */
 object LopqIndexStore {
@@ -136,31 +138,55 @@ object LopqIndexStore {
   /** Per-(session, dir) slim-model cache for the maintenance path: a
     * continuous stream calls [[appendUpdate]] (and the screen's
     * [[assignCells]]) once per micro-batch, and re-collecting the model
-    * parquet to the driver per batch is pure overhead. Evicted by
+    * parquet to the driver per batch is pure overhead. The entry also
+    * holds the ONE broadcast pair (slim model, PCA front) every screen and
+    * append reads: the screen returns lazy frames, so a per-call
+    * broadcast had to outlive its call and accreted two blocks per
+    * micro-batch until a driver GC. Evicted — broadcasts destroyed — by
     * [[saveModel]] for in-JVM rebuilds and by [[evictModel]] for
     * out-of-process ones (the API `refresh` flow: index dir superseded on
     * disk, then refreshIndex — without the evict, appends would keep
     * encoding with the stale model, landing codes in wrong cells). */
-  private val slimModelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (SlimLopqModel, Option[LopqPca])]
-
-  private def cachedSlimModel(spark: SparkSession, dir: String): (SlimLopqModel, Option[LopqPca]) = {
-    sweepStoppedSessions()
-    slimModelCache.getOrElseUpdate((spark, dir), loadModelSlim(spark, dir))
+  private final case class CachedModel(slim: SlimLopqModel, pca: Option[LopqPca],
+      slimB: Broadcast[SlimLopqModel], pcaB: Broadcast[Option[LopqPca]]) {
+    def destroy(): Unit = { slimB.destroy(); pcaB.destroy() }
   }
 
-  /** Drop every session's cached model AND rotation-slice cache for `dir` —
-    * MUST be called whenever the model under `dir` may have changed outside
-    * [[saveModel]]'s JVM. */
+  private val slimModelCache =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), CachedModel]
+
+  private def cachedModel(spark: SparkSession, dir: String): CachedModel = {
+    sweepStoppedSessions()
+    // under the lock: a racing second load would broadcast a pair nothing
+    // ever destroys
+    slimModelCache.synchronized {
+      slimModelCache.getOrElseUpdate((spark, dir), {
+        val (slim, pca) = loadModelSlim(spark, dir)
+        val sc = spark.sparkContext
+        CachedModel(slim, pca, sc.broadcast(slim), sc.broadcast(pca))
+      })
+    }
+  }
+
+  /** Drop every session's cached model (destroying its broadcast pair)
+    * AND rotation-slice cache for `dir` — MUST be called whenever the
+    * model under `dir` may have changed outside [[saveModel]]'s JVM. */
   def evictModel(dir: String): Unit = {
-    slimModelCache.filterInPlace { case ((_, d), _) => d != dir }
+    slimModelCache.synchronized {
+      slimModelCache.filterInPlace { case ((_, d), m) =>
+        if (d == dir) m.destroy()
+        d != dir
+      }
+    }
     sliceCaches.filterInPlace { case ((_, d), _) => d != dir }
   }
 
   /** Evict cache entries keyed by a stopped SparkSession — run on every
     * insert path so a long-lived JVM cycling sessions can't accumulate a
     * model copy plus up to 64 MB of slice cache per dead (session, dir)
-    * pair. The liveness predicate is injectable for the unit test. */
+    * pair. A dead session's broadcasts died with its context, so they are
+    * dropped, not destroyed. The liveness predicate is injectable for the
+    * unit test. */
   private[graft] def sweepStoppedSessions(isStopped: SparkSession => Boolean =
       s => s.sparkContext.isStopped): Unit = {
     slimModelCache.filterInPlace { case ((s, _), _) => !isStopped(s) }
@@ -459,14 +485,11 @@ object LopqIndexStore {
     * r5 read + rewrote the FULL histogram through the driver per
     * micro-batch, O(populated cells) ≤ V², millions of rows at the
     * release V (VERDICT r5 minor #3). The log is compacted back to one
-    * base file once it exceeds [[CompactCountsAt]] files (a crash during
-    * compaction is caught by [[healedCounts]]'s sum check). The
-    * reference's in-memory histogram is likewise updated per insert,
-    * never rebuilt (`lopq/lopq/search.py:310-323`). */
-  private val CompactCountsAt = 64
-  /** Override for tests driving the compaction without 64 appends. */
-  val CompactCountsAtConf = "spark.graft.counts.compactAt"
-
+    * base file once it exceeds [[CompactDeltaAtConf]] files — the codes
+    * delta log's bound, since each [[appendUpdate]] adds one file to each
+    * log (a crash during compaction is caught by [[healedCounts]]'s sum
+    * check). The reference's in-memory histogram is likewise updated per
+    * insert, never rebuilt (`lopq/lopq/search.py:310-323`). */
   private def appendCountsDelta(spark: SparkSession, dir: String,
       batch: Seq[(Int, Long)]): Unit = {
     import spark.implicits._
@@ -476,9 +499,7 @@ object LopqIndexStore {
     val p = new org.apache.hadoop.fs.Path(s"$dir/cell_counts")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-    val compactAt = spark.conf
-      .get(CompactCountsAtConf, CompactCountsAt.toString).toInt
-    if (files > compactAt) {
+    if (files > compactDeltaAt(spark)) {
       // pure Spark aggregation job — the merged histogram (O(populated
       // cells), millions of rows at release V) never rides through the
       // driver (VERDICT r6 minor #3). Aggregate into a sidecar dir, then
@@ -523,7 +544,7 @@ object LopqIndexStore {
     writeCodes(dir, codes, cellBuckets, SaveMode.Overwrite)
     saveModel(spark, dir, model, pca)
     writeCounts(spark, dir)
-    writeTip(spark, dir, Some(initialUpdateId))
+    UpdateLog.advance(spark, dir, Some(initialUpdateId))
     Seq((initialUpdateId, n)).toDF("update_id", "n_rows")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/manifest")
     writeMeta(dir, metaFor(params, n, dim, pca, cellBuckets))
@@ -538,7 +559,7 @@ object LopqIndexStore {
       cellBuckets: Int = 0): Unit = {
     import spark.implicits._
     saveModel(spark, dir, model, pca)
-    writeTip(spark, dir, None)
+    UpdateLog.advance(spark, dir, None)
     Seq.empty[(String, Long)].toDF("update_id", "n_rows")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/manifest")
     writeMeta(dir, metaFor(params, 0L, dim, pca, cellBuckets))
@@ -566,7 +587,7 @@ object LopqIndexStore {
       ()
     }
     cp("model"); cp("meta.json"); cp("model.pb")
-    writeTip(spark, dstDir, None)
+    UpdateLog.advance(spark, dstDir, None)
     Seq.empty[(String, Long)].toDF("update_id", "n_rows")
       .write.mode(SaveMode.Overwrite).parquet(s"$dstDir/manifest")
   }
@@ -594,6 +615,9 @@ object LopqIndexStore {
     * deletes the dir. [[readCodes]] runs the recovery before serving. */
   val CompactDeltaAtConf = "spark.graft.codes.compactDeltaAt"
   val DefaultCompactDeltaAt = 64
+
+  private def compactDeltaAt(spark: SparkSession): Int =
+    spark.conf.get(CompactDeltaAtConf, DefaultCompactDeltaAt.toString).toInt
 
   private def deltaPath(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/codes_delta")
   private def compactingPath(dir: String) =
@@ -669,11 +693,9 @@ object LopqIndexStore {
     val fs = deltaPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     batch.repartition(1)
       .write.mode(SaveMode.Append).parquet(deltaPath(dir).toString)
-    val compactAt = spark.conf
-      .get(CompactDeltaAtConf, DefaultCompactDeltaAt.toString).toInt
     val files = fs.listStatus(deltaPath(dir))
       .count(_.getPath.getName.endsWith(".parquet"))
-    if (files > compactAt) {
+    if (files > compactDeltaAt(spark)) {
       // atomic stage: a crash at any later point is recovered by the
       // anti-join replay in recoverPromotion
       if (!fs.exists(compactingPath(dir))) {
@@ -744,84 +766,26 @@ object LopqIndexStore {
 
   /** Lexicographic high-watermark of applied updates (ref
     * `last_indexed_update`, `searcher_lopqhbase.py:632-653`): callers scan
-    * the updates table for ids strictly above this.
-    *
-    * Served from the `tip` sidecar — ONE small file, no manifest scan — so
-    * the per-append replay check stays O(1) forever (r5 collected the full
-    * manifest per micro-batch: O(updates-ever) driver work). A legacy dir
-    * without a tip migrates once via a manifest aggregation. */
+    * the updates table for ids strictly above this. Served from the
+    * [[UpdateLog]] tip — ONE small file, no manifest scan — so the
+    * per-append replay check stays O(1) forever (r5 collected the full
+    * manifest per micro-batch: O(updates-ever) driver work). */
   def watermark(spark: SparkSession, dir: String): Option[String] =
-    readTip(spark, dir)
+    UpdateLog.tip(spark, dir, migrateTip(spark, dir))
 
-  private def tipPath(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/tip")
-
-  /** Atomic (write-temp + overwrite-rename) so a reader never sees a torn
-    * OR missing tip: delete-then-rename had a window where a concurrent
-    * reader found no tip, re-ran the manifest migration (the manifest
-    * commits AFTER the tip in [[appendUpdate]]'s order, so it computes the
-    * PREVIOUS watermark), and clobbered the just-written newer tip with a
-    * stale value. `FileContext.rename(OVERWRITE)` replaces in one step. */
-  private def writeTip(spark: SparkSession, dir: String, wm: Option[String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = tipPath(dir).getFileSystem(conf)
-    val p = fs.makeQualified(tipPath(dir))
-    val tmp = fs.makeQualified(new org.apache.hadoop.fs.Path(s"$dir/.tip.tmp"))
-    val out = fs.create(tmp, true)
-    try out.write(wm.getOrElse("").getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    ()
+  /** One-time migration for an index persisted before the tip existed.
+    * The max is taken over NORMALIZED ids (a legacy manifest can mix %06d
+    * and %019d stream ids, where the raw lexicographic max is the wrong
+    * row); the RAW id of the winning row is what gets stored. */
+  private def migrateTip(spark: SparkSession, dir: String): Option[String] = {
+    val normU = udf(UpdateLog.normalizeUpdateId _)
+    val wm = spark.read.parquet(s"$dir/manifest")
+      .select(col("update_id"))
+      .orderBy(normU(col("update_id")).desc)
+      .limit(1).collect().headOption.map(_.getString(0))
+    UpdateLog.advance(spark, dir, wm)
+    wm
   }
-
-  /** Re-pads a trailing integer run to the 19 digits a `Long` needs, for
-    * WATERMARK COMPARISON only (stored ids stay verbatim). An index
-    * persisted before [[graft.streaming.IndexMaintenance]] moved from %06d
-    * to %019d stream ids holds a tip like `stream_000001`, which sorts
-    * lexicographically ABOVE every new-format id
-    * (`stream_0000000000000000002` < `stream_000001`) — without
-    * normalization the ≤-watermark check would refuse every future append
-    * on such an index as a duplicate: silent, permanent data loss.
-    * Zero-padding compares digit runs numerically, which is the order both
-    * formats mean; ids with no trailing digits (the reference's
-    * timestamp-prefixed ids, the build sentinel) pass through unchanged. */
-  private[graft] def normalizeUpdateId(id: String): String = {
-    var i = id.length
-    while (i > 0 && id.charAt(i - 1) >= '0' && id.charAt(i - 1) <= '9') i -= 1
-    val digits = id.length - i
-    if (digits == 0 || digits >= 19) id
-    else id.substring(0, i) + "0" * (19 - digits) + id.substring(i)
-  }
-
-  private def readTip(spark: SparkSession, dir: String): Option[String] = {
-    val p = tipPath(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      Option(s.trim).filter(_.nonEmpty)
-    } else {
-      // One-time migration for an index persisted before the tip existed.
-      // The max is taken over NORMALIZED ids (a legacy manifest can mix
-      // %06d and %019d stream ids, where the raw lexicographic max is the
-      // wrong row); the RAW id of the winning row is what gets stored.
-      val normU = udf(normalizeUpdateId _)
-      val wm = spark.read.parquet(s"$dir/manifest")
-        .select(col("update_id"))
-        .orderBy(normU(col("update_id")).desc)
-        .limit(1).collect().headOption.map(_.getString(0))
-      writeTip(spark, dir, wm)
-      wm
-    }
-  }
-
-  /** Reference semantics (`searcher_lopqhbase.py:600-617`): the updates
-    * scan resumes STRICTLY ABOVE `last_indexed_update`, so anything at or
-    * below the watermark is already applied (update ids are
-    * timestamp-prefixed, hence lexicographically monotone). Both sides are
-    * [[normalizeUpdateId]]-normalized so a pre-%019d tip keeps accepting
-    * new-format ids. */
-  private[graft] def isApplied(spark: SparkSession, dir: String, updateId: String): Boolean =
-    readTip(spark, dir).exists(t => normalizeUpdateId(updateId) <= normalizeUpdateId(t))
 
   /** The visited/touched-cell predicate in the layout the index uses:
     * directory pruning on `cell_id` itself, or on `cell_bucket` with the
@@ -859,8 +823,9 @@ object LopqIndexStore {
     * skip-already-indexed per update `searcher_lopqhbase.py:600-617`), and
     * the cell histogram is merged incrementally instead of re-aggregated.
     * The encode is [[slimEncode]] at every model width: the rotation
-    * tensor never reaches the driver or a broadcast, and the slim model is
-    * the session-cached one [[assignCells]] already loaded for the screen.
+    * tensor never reaches the driver or a broadcast, and the slim model
+    * (and its broadcast) is the session-cached one [[assignCells]] already
+    * loaded for the screen.
     *
     * CONTRACT: update ids must be lexicographically monotone (the
     * reference's ids are timestamp-prefixed, `searcher_lopqhbase.py:
@@ -871,18 +836,18 @@ object LopqIndexStore {
   def appendUpdate(spark: SparkSession, dir: String, batch0: DataFrame,
       idCol: String, vecCol: String, updateId: String): Boolean = {
     import spark.implicits._
-    if (isApplied(spark, dir, updateId)) return false
-    val (slim, pca) = cachedSlimModel(spark, dir)
+    if (UpdateLog.covers(watermark(spark, dir), updateId)) return false
+    val m = cachedModel(spark, dir)
     val unique = batch0.dropDuplicates(idCol)
-    val pcaB = pca.map(spark.sparkContext.broadcast(_))
-    val input = pcaB match {
-      case None => unique
-      case Some(pb) =>
-        val applyU = udf((v: Seq[Float]) => pb.value(v.toArray).toSeq)
+    val input =
+      if (m.pca.isEmpty) unique
+      else {
+        val pcaB = m.pcaB
+        val applyU = udf((v: Seq[Float]) => pcaB.value.get(v.toArray).toSeq)
         unique.withColumn(vecCol, applyU(col(vecCol)))
-    }
+      }
     val (encoded0, touched, cleanup) =
-      slimEncode(spark, dir, input, idCol, vecCol, slim)
+      slimEncode(spark, dir, input, idCol, vecCol, m)
     val encoded = encoded0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -903,16 +868,13 @@ object LopqIndexStore {
       // watermark are already consistent.
       appendCodesDelta(spark, dir, deduped)
       appendCountsDelta(spark, dir, batchCounts)
-      writeTip(spark, dir, Some(updateId))
+      UpdateLog.advance(spark, dir, Some(updateId))
       Seq((updateId, n)).toDF("update_id", "n_rows")
         .write.mode(SaveMode.Append).parquet(s"$dir/manifest")
       true
     } finally {
       encoded.unpersist()
       cleanup()
-      // per-call broadcasts: released here, not left for a driver GC, so
-      // a streaming session does not accrete one set per micro-batch
-      pcaB.foreach(_.destroy())
     }
   }
 
@@ -926,9 +888,8 @@ object LopqIndexStore {
     * the cells [[appendUpdate]] will store it under. */
   def assignCells(spark: SparkSession, dir: String, df: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    val (slim, pca) = cachedSlimModel(spark, dir)
-    val slimB = spark.sparkContext.broadcast(slim)
-    val pcaB = spark.sparkContext.broadcast(pca)
+    val cm = cachedModel(spark, dir)
+    val (slimB, pcaB) = (cm.slimB, cm.pcaB)
     val u = udf { (v: Seq[Float]) =>
       val x0 = v.toArray
       val x = pcaB.value.map(_(x0)).getOrElse(x0)
@@ -975,9 +936,8 @@ object LopqIndexStore {
       idCol: String, vecCol: String, probes: Int): DataFrame = {
     require(probes >= 2,
       s"multi-probe width must be >= 2 (use assignCells for 1), got $probes")
-    val (slim, pca) = cachedSlimModel(spark, dir)
-    val slimB = spark.sparkContext.broadcast(slim)
-    val pcaB = spark.sparkContext.broadcast(pca)
+    val cm = cachedModel(spark, dir)
+    val (slimB, pcaB) = (cm.slimB, cm.pcaB)
     val u = udf { (v: Seq[Float]) =>
       val x0 = v.toArray
       val x = pcaB.value.map(_(x0)).getOrElse(x0)
@@ -996,14 +956,15 @@ object LopqIndexStore {
     * once, which is what the build's full-model encode broadcasts anyway.
     *
     * Returns the codes frame, the batch's sorted touched cells, and a
-    * cleanup to drop the cached coarse stage and destroy the slim-model
-    * and rotation-slice broadcasts AFTER the caller has materialized the
-    * codes. */
+    * cleanup to drop the cached coarse stage and destroy the per-call
+    * rotation-slice broadcast AFTER the caller has materialized the codes
+    * (the slim model rides the dir's cached broadcast). */
   private def slimEncode(spark: SparkSession, dir: String, input: DataFrame,
       idCol: String, vecCol: String,
-      slim: SlimLopqModel): (DataFrame, Seq[Int], () => Unit) = {
+      m: CachedModel): (DataFrame, Seq[Int], () => Unit) = {
     import spark.implicits._
-    val slimB = spark.sparkContext.broadcast(slim)
+    val slim = m.slim
+    val slimB = m.slimB
     val coarseU = udf { (vec: Seq[Float]) =>
       val cc = slimB.value.predictCoarse(vec.toArray)
       (cc._1, cc._2)
@@ -1031,6 +992,6 @@ object LopqIndexStore {
       .withColumn("fine", fineU(col("vec"), col("coarse0"), col("coarse1")))
       .withColumn("cell_id", cellId)
       .select("id", "coarse0", "coarse1", "fine", "cell_id")
-    (codes, touched, () => { coarse.unpersist(); slimB.destroy(); rotB.destroy() })
+    (codes, touched, () => { coarse.unpersist(); rotB.destroy() })
   }
 }

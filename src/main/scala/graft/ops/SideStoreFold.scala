@@ -57,6 +57,14 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   */
 private[graft] object SideStoreFold {
 
+  /** The in-loop valve's bound: past this many un-folded update dirs a
+    * store's [[foldIfDue]] fires (every screen otherwise re-lists and
+    * re-opens O(updates-ever) parquet roots). One bound for every side
+    * store — the raw vectors ([[IngestOps]]) and the text store's
+    * sigs / texts / simsigs ([[TextSigStore]]). */
+  val CompactAtConf = "spark.graft.store.compactAt"
+  val DefaultCompactAt = 64
+
   /** Major-fold trigger: rewrite the base when the run ladder's total
     * bytes ≥ ratio × base bytes. 1.0 = HBase-style "tier rivals the
     * base"; 0.0 forces a major fold whenever any run exists (the spec's
@@ -75,9 +83,8 @@ private[graft] object SideStoreFold {
   /** Post-fold note (the screen's `last.bandJoin` discipline): every fold
     * op appends one line — `<side> <op> <secs>s <detail>` — so probes and
     * specs read what the valve actually did (which level, what it cost)
-    * instead of re-deriving it from directory listings. Callers
-    * ([[TextSigStore.maybeCompact]], [[IngestOps.maybeCompactVectors]])
-    * reset it per valve firing. */
+    * instead of re-deriving it from directory listings. [[foldIfDue]]
+    * resets it per firing. */
   val FoldNoteConf = "spark.graft.store.last.folds"
   def resetFoldNote(spark: SparkSession): Unit =
     spark.conf.set(FoldNoteConf, "")
@@ -276,8 +283,8 @@ private[graft] object SideStoreFold {
     * to it.
     *
     * CONTRACT: a valve that calls minorFold must follow with
-    * [[majorFoldIfDue]] in the same firing (both production valves do —
-    * [[TextSigStore.maybeCompact]], [[IngestOps.maybeCompactVectors]]).
+    * [[majorFoldIfDue]] in the same firing (the production valve,
+    * [[foldIfDue]], does).
     * On a base-less store the major is due by definition (baseBytes=0),
     * so the cascade is always skipped there; a caller that never majors
     * would accumulate one unmerged run per firing. */
@@ -332,7 +339,7 @@ private[graft] object SideStoreFold {
       // Contract tripwire (ADVICE r18 #3): a valve that calls minorFold
       // without the contractual majorFoldIfDue follow-up accumulates one
       // unmerged run per firing forever (on a base-less store majorDue is
-      // true by definition). Both production valves comply, so the ladder
+      // true by definition). The production valve complies, so the ladder
       // can only be a few runs deep when this skip fires; a deep ladder
       // here means a new caller broke the pairing — make it loud instead
       // of silently degrading read fan-in.
@@ -391,6 +398,28 @@ private[graft] object SideStoreFold {
     note(spark, root, f"major $sec%.1fs runs=${runs.size} " +
       f"${bytesOf(fs, basePath(root)) / 1e6}%.1fMB base")
   }
+
+  /** The in-loop LSM valve every side store runs after a batch commits:
+    * once `pending` (the store's un-folded update-dir count) reaches
+    * [[CompactAtConf]], each side's `(root, deltas)` MINOR-folds into one
+    * new run (O(recent), geometric ladder cascade) and then MAJOR-folds
+    * ladder → base only if the ladder's bytes rival the base's
+    * ([[MajorRatioConf]]) — so a long-lived store stops rewriting its
+    * whole history every `compactAt` batches (the r15 8-batch probe's
+    * 88-92 s fold spikes were exactly that base rewrite), and no minor
+    * fold approaches the base rewrite it replaced. `sides` is only listed
+    * when the valve fires; what the firing did is readable at
+    * [[FoldNoteConf]]. */
+  def foldIfDue(spark: SparkSession, pending: Int,
+      sides: => Seq[(String, Seq[Path])], key: String): Unit =
+    if (pending >= spark.conf.get(CompactAtConf, DefaultCompactAt.toString).toInt) {
+      resetFoldNote(spark)
+      sides.foreach { case (root, deltas) =>
+        val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        minorFold(spark, fs, root, deltas, key)
+        majorFoldIfDue(spark, fs, root, key)
+      }
+    }
 
   /** FULL fold — the explicit `compact()` contract the specs pin:
     * everything (`deltas ∪ ladder ∪ legacy tier ∪ base`) → one `_base`,

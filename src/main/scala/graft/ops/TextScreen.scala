@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.UpdateLog
 import graft.functions.TextFunctions
 
 /** INCREMENTAL / SCREENED TEXT DEDUP (VERDICT r14 "what's missing #1") —
@@ -42,8 +43,9 @@ object TextSigStore {
     *     `_tier`/`_tier_next` artifacts stay readable and are adopted
     *     into the ladder; [[compact]] is the explicit
     *     fold-everything-to-`_base` lever);
-    *   - `tip` — the lexicographic update-id high-watermark (atomic
-    *     write-temp + overwrite-rename, the codes store's discipline);
+    *   - `tip` — the update-log watermark ([[graft.core.UpdateLog]], the
+    *     one tip every ingest store commits through): a `<side>/<updateId>`
+    *     directory counts once the tip covers its id;
     *   - `meta` — the banding fingerprint (`numHashes`, `bands`) the
     *     store was built at: signatures are only comparable within one
     *     operating point, so a session screening at different LSH confs
@@ -54,8 +56,9 @@ object TextSigStore {
   private def simsigsDir(dir: String) = s"$dir/simsigs"
   private[graft] def textsUpdateDir(dir: String, updateId: String) =
     s"${textsDir(dir)}/$updateId"
-  private def tipPath(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/tip")
   private def metaPath(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/meta")
+
+  private def sideRoots(dir: String) = Seq(sigsDir(dir), textsDir(dir), simsigsDir(dir))
 
   private def fsOf(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
@@ -132,14 +135,9 @@ object TextSigStore {
     * content store a self-contained ([[build]] `storeTexts = true`)
     * store maintains. Same multi-root no-shuffle scan and same
     * visibility rule as [[sigs]]. */
-  def textStore(spark: SparkSession, dir: String): DataFrame = {
-    val fs = fsOf(spark, dir)
-    val roots = committedDirs(spark, dir, textsDir(dir)).map(_.toString) ++
-      baseToRead(fs, textsDir(dir))
-    require(roots.nonEmpty,
+  def textStore(spark: SparkSession, dir: String): DataFrame =
+    readSide(spark, dir, textsDir(dir),
       s"no text content store at $dir — build(storeTexts = true) first")
-    spark.read.parquet(roots: _*)
-  }
 
   /** Fail fast when the session's LSH confs disagree with the operating
     * point the store was built at — band keys from different constants
@@ -193,14 +191,9 @@ object TextSigStore {
 
   /** Every stored simhash row `(doc_id, sh)` — the tier's skinny index,
     * same multi-root tip-gated scan as [[sigs]]. */
-  def simsigs(spark: SparkSession, dir: String): DataFrame = {
-    val fs = fsOf(spark, dir)
-    val roots = committedDirs(spark, dir, simsigsDir(dir)).map(_.toString) ++
-      baseToRead(fs, simsigsDir(dir))
-    require(roots.nonEmpty,
+  def simsigs(spark: SparkSession, dir: String): DataFrame =
+    readSide(spark, dir, simsigsDir(dir),
       s"no simhash tier at $dir — build(simhashTier = true) first")
-    spark.read.parquet(roots: _*)
-  }
 
   /** Write one update's SURVIVOR simhashes under its id — idempotent
     * overwrite, always BEFORE [[appendSigs]] advances the tip (the
@@ -222,74 +215,16 @@ object TextSigStore {
     * batch would silently drop). A crash window mid-[[compact]] can only
     * leave bit-identical duplicate rows, which the next compaction's
     * dedup removes and the screen's band join tolerates. */
-  def sigs(spark: SparkSession, dir: String): DataFrame = {
-    val fs = fsOf(spark, dir)
-    val roots = committedDeltaDirs(spark, dir).map(_.toString) ++
-      baseToRead(fs, sigsDir(dir))
-    require(roots.nonEmpty, s"no text sig store at $dir — run build first")
+  def sigs(spark: SparkSession, dir: String): DataFrame =
+    readSide(spark, dir, sigsDir(dir), s"no text sig store at $dir — run build first")
+
+  /** One side's compacted roots plus its COMMITTED update dirs. */
+  private def readSide(spark: SparkSession, dir: String, root: String,
+      missing: => String): DataFrame = {
+    val roots = UpdateLog.committed(spark, dir, root).map(_.toString) ++
+      SideStoreFold.storedRoots(fsOf(spark, root), root)
+    require(roots.nonEmpty, missing)
     spark.read.parquet(roots: _*)
-  }
-
-  private def updateDirs(spark: SparkSession, root: String)
-      : Seq[org.apache.hadoop.fs.Path] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toIndexedSeq
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_"))
-      .map(_.getPath)
-  }
-
-  /** Update dirs under `root` whose id committed (≤ tip) — directory
-    * names ARE update ids, so the watermark decides visibility exactly
-    * (one tip read for the whole listing); shared by the sigs and texts
-    * sides, which commit through the same tip. */
-  private[graft] def committedDirs(spark: SparkSession, dir: String,
-      root: String): Seq[org.apache.hadoop.fs.Path] = {
-    val tip = readTip(spark, dir)
-      .map(graft.engine.LopqIndexStore.normalizeUpdateId)
-    updateDirs(spark, root).filter(p => tip.exists(t =>
-      graft.engine.LopqIndexStore.normalizeUpdateId(p.getName) <= t))
-  }
-
-  private def committedDeltaDirs(spark: SparkSession, dir: String)
-      : Seq[org.apache.hadoop.fs.Path] =
-    committedDirs(spark, dir, sigsDir(dir))
-
-  private def baseToRead(fs: org.apache.hadoop.fs.FileSystem, root: String)
-      : Seq[String] = SideStoreFold.storedRoots(fs, root)
-
-  /** Watermark check — same contract as the codes store: update ids are
-    * lexicographically monotone, anything at or below the tip is already
-    * applied ([[graft.engine.LopqIndexStore.normalizeUpdateId]] keeps
-    * mixed-width numeric suffixes comparable). */
-  def isApplied(spark: SparkSession, dir: String, updateId: String): Boolean =
-    readTip(spark, dir).exists(t =>
-      graft.engine.LopqIndexStore.normalizeUpdateId(updateId) <=
-        graft.engine.LopqIndexStore.normalizeUpdateId(t))
-
-  private def readTip(spark: SparkSession, dir: String): Option[String] = {
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(tipPath(dir))) None
-    else {
-      val in = fs.open(tipPath(dir))
-      val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      Option(s.trim).filter(_.nonEmpty)
-    }
-  }
-
-  /** Atomic write-temp + overwrite-rename (the codes store's tip
-    * discipline) so a reader never sees a torn or missing tip. */
-  private def writeTip(spark: SparkSession, dir: String, wm: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(spark, dir)
-    val p = fs.makeQualified(tipPath(dir))
-    val tmp = fs.makeQualified(new org.apache.hadoop.fs.Path(s"$dir/.tip.tmp"))
-    val out = fs.create(tmp, true)
-    try out.write(wm.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    ()
   }
 
   /** Append one update's signature rows under its id. Commit order:
@@ -300,10 +235,10 @@ object TextSigStore {
     * write) for an id at or below the watermark. */
   def appendSigs(spark: SparkSession, dir: String, sigRows: DataFrame,
       updateId: String): Boolean = {
-    if (isApplied(spark, dir, updateId)) return false
+    if (UpdateLog.isApplied(spark, dir, updateId)) return false
     sigRows.write.mode(SaveMode.Overwrite)
       .parquet(s"${sigsDir(dir)}/$updateId")
-    writeTip(spark, dir, updateId)
+    UpdateLog.advance(spark, dir, Some(updateId))
     true
   }
 
@@ -328,24 +263,14 @@ object TextSigStore {
     * already ran. */
   private[graft] def purgeOrphans(spark: SparkSession, dir: String,
       exceptId: String): Unit = {
-    val tip = readTip(spark, dir)
-      .map(graft.engine.LopqIndexStore.normalizeUpdateId)
-    val incoming = graft.engine.LopqIndexStore.normalizeUpdateId(exceptId)
+    val tip = UpdateLog.tip(spark, dir)
     val fs = fsOf(spark, dir)
-    for (root <- Seq(sigsDir(dir), textsDir(dir), simsigsDir(dir))
-         if fs.exists(new org.apache.hadoop.fs.Path(root));
-         p <- updateDirs(spark, root)) {
-      val n = graft.engine.LopqIndexStore.normalizeUpdateId(p.getName)
-      if (n < incoming && !tip.exists(n <= _)) { fs.delete(p, true); () }
+    for (root <- sideRoots(dir); p <- UpdateLog.updateDirs(spark, root)
+         if UpdateLog.order.lt(p.getName, exceptId) &&
+           !UpdateLog.covers(tip, p.getName)) {
+      fs.delete(p, true); ()
     }
   }
-
-  /** Past this many un-folded delta directories, [[TextScreen
-    * .screenAndAppend]] folds them into the base after the batch commits
-    * (the LSM pressure valve — every screen re-lists O(updates-ever)
-    * parquet roots otherwise). */
-  val CompactSigsAtConf = "spark.graft.text.sigs.compactAt"
-  val DefaultCompactSigsAt = 64
 
   /** FULL fold — every COMMITTED delta, the delta-tier, and the current
     * base collapse into one `_base` on BOTH sides the store maintains
@@ -359,42 +284,24 @@ object TextSigStore {
     * whose update never applied — its own replay overwrites it, or it
     * lingers harmlessly invisible to [[sigs]]/[[textStore]]. */
   def compact(spark: SparkSession, dir: String): Unit =
-    foreachSide(spark, dir) { (fs, root, deltas) =>
-      SideStoreFold.fullFold(spark, fs, root, deltas, "doc_id")
+    committedSides(spark, dir).foreach { case (root, deltas) =>
+      SideStoreFold.fullFold(spark, fsOf(spark, root), root, deltas, "doc_id")
     }
 
-  private def foreachSide(spark: SparkSession, dir: String)(
-      f: (org.apache.hadoop.fs.FileSystem, String,
-          Seq[org.apache.hadoop.fs.Path]) => Unit): Unit = {
-    val fs = fsOf(spark, dir)
-    for (root <- Seq(sigsDir(dir), textsDir(dir), simsigsDir(dir))
-         if fs.exists(new org.apache.hadoop.fs.Path(root)))
-      f(fs, root, committedDirs(spark, dir, root))
-  }
+  /** Each side the store maintains, with its committed update dirs. */
+  private def committedSides(spark: SparkSession, dir: String)
+      : Seq[(String, Seq[org.apache.hadoop.fs.Path])] =
+    sideRoots(dir).filter(r => fsOf(spark, r).exists(new org.apache.hadoop.fs.Path(r)))
+      .map(r => r -> UpdateLog.committed(spark, dir, r))
 
-  /** The in-loop LSM valve, TIERED (VERDICT r15 "what's missing #2";
-    * r17: size-tiered run ladder, r16 "what's missing #1"): when the
-    * committed un-folded delta count reaches the conf bound, run a MINOR
-    * fold (deltas → one new run, O(recent) — the geometric ladder cascade
-    * bounds both re-merge work and the reader's root count at O(log))
-    * and then a MAJOR fold ONLY if the ladder's bytes rival the base's
-    * ([[SideStoreFold.MajorRatioConf]]) — so a long-lived store stops
-    * rewriting its whole history every `compactAt` batches (the r15
-    * 8-batch probe's 88-92 s fold spikes were exactly that base rewrite),
-    * and no minor fold ever approaches the base rewrite it replaced (the
-    * r16 single-`_tier` design's pre-major tail). What each valve firing
-    * did is readable at [[SideStoreFold.FoldNoteConf]]. */
-  def maybeCompact(spark: SparkSession, dir: String): Unit = {
-    val at = spark.conf
-      .get(CompactSigsAtConf, DefaultCompactSigsAt.toString).toInt
-    if (committedDeltaDirs(spark, dir).size >= at) {
-      SideStoreFold.resetFoldNote(spark)
-      foreachSide(spark, dir) { (fs, root, deltas) =>
-        SideStoreFold.minorFold(spark, fs, root, deltas, "doc_id")
-        SideStoreFold.majorFoldIfDue(spark, fs, root, "doc_id")
-      }
-    }
-  }
+  /** The in-loop LSM valve ([[SideStoreFold.foldIfDue]], shared with the
+    * vector side-store), run after each applied update: the committed
+    * signature-delta count is the pending count, and every side folds
+    * its COMMITTED deltas only (see [[compact]]). */
+  def maybeCompact(spark: SparkSession, dir: String): Unit =
+    SideStoreFold.foldIfDue(spark,
+      UpdateLog.committed(spark, dir, sigsDir(dir)).size,
+      committedSides(spark, dir), "doc_id")
 }
 
 object TextScreen {
@@ -604,7 +511,7 @@ object TextScreen {
   def screenAndAppend(spark: SparkSession, dir: String, corpus: DataFrame,
       batch: DataFrame, updateId: String,
       storeTexts: Boolean = false): TextIngestReport = {
-    if (TextSigStore.isApplied(spark, dir, updateId))
+    if (UpdateLog.isApplied(spark, dir, updateId))
       return TextIngestReport(applied = false, 0L, 0L, 0L)
     val p = TextOps.lshParams(spark)
     TextSigStore.requireParams(spark, dir, p)
@@ -788,8 +695,8 @@ object TextScreen {
         drain(ckpt)
         // fresh checkpoint re-reads BOTH files; ids 0/1 ≤ watermark → no-op
         drain(ckpt + "_replay")
-        require(TextSigStore.isApplied(s, root, f"stream_${1L}%019d") &&
-          !TextSigStore.isApplied(s, root, f"stream_${2L}%019d"),
+        require(UpdateLog.isApplied(s, root, f"stream_${1L}%019d") &&
+          !UpdateLog.isApplied(s, root, f"stream_${2L}%019d"),
           "expected exactly two applied screened text stream updates")
         TextSigStore.sigs(s, root)
           .select(col("doc_id"), concat_ws(",", col("sig")).as("sig_str"))
@@ -885,7 +792,7 @@ object TextScreen {
           s"graft-text-store/fold_${new java.io.File(d).getName}")
         val (corpus, batch) = split(s, d)
         TextSigStore.build(s, root, corpus)
-        s.conf.set(TextSigStore.CompactSigsAtConf, "1")
+        s.conf.set(SideStoreFold.CompactAtConf, "1")
         s.conf.set(SideStoreFold.MajorRatioConf, "0.0")
         try {
           val r1 = screenAndAppend(s, root, corpus, batch, "u0001")
@@ -901,7 +808,7 @@ object TextScreen {
           require(!r2.applied,
             s"a fold must never un-apply an update (tip survives): $r2")
         } finally {
-          s.conf.unset(TextSigStore.CompactSigsAtConf)
+          s.conf.unset(SideStoreFold.CompactAtConf)
           s.conf.unset(SideStoreFold.MajorRatioConf)
         }
         TextSigStore.sigs(s, root)

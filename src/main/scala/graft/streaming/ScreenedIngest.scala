@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.core.UpdateLog
 import graft.engine.LopqIndexStore
 import graft.ops.{IngestOps, VectorQueries}
 
@@ -55,7 +56,7 @@ object ScreenedIngest {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         val uid = f"${updatePrefix}_$batchId%019d"
-        if (!LopqIndexStore.isApplied(spark, indexDir, uid)) {
+        if (!UpdateLog.covers(LopqIndexStore.watermark(spark, indexDir), uid)) {
           import org.apache.spark.sql.functions.col
           val b = df.select(col(idCol), col(vecCol))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

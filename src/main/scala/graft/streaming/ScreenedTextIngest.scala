@@ -44,19 +44,17 @@ object ScreenedTextIngest {
     source.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val uid = f"${updatePrefix}_$batchId%019d"
-        if (!TextSigStore.isApplied(spark, storeDir, uid)) {
-          import org.apache.spark.sql.functions.col
-          val b = df.select(col("doc_id"), col("text"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            TextScreen.screenAndAppend(spark, storeDir,
-              TextSigStore.textStore(spark, storeDir), b, uid,
-              storeTexts = true)
-            ()
-          } finally { b.unpersist(); () }
-        }
-        ()
+        import org.apache.spark.sql.functions.col
+        // a replayed id is refused by screenAndAppend's first statement,
+        // before any screen work
+        val b = df.select(col("doc_id"), col("text"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          TextScreen.screenAndAppend(spark, storeDir,
+            TextSigStore.textStore(spark, storeDir), b,
+            f"${updatePrefix}_$batchId%019d", storeTexts = true)
+          ()
+        } finally { b.unpersist(); () }
       }
       .trigger(trigger)
       .start()

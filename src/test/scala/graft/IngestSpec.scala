@@ -170,7 +170,7 @@ class IngestSpec extends SparkSpec {
     IngestOps.compactVectors(spark, dir)
     assert(entries() == Seq("_base"))
     val base0 = baseFiles()
-    spark.conf.set(IngestOps.CompactVectorsAtConf, "1")
+    spark.conf.set(graft.ops.SideStoreFold.CompactAtConf, "1")
     try {
       // two valve firings: each minor-folds into the tier, never the base
       IngestOps.writeVectors(spark, dir, e.where(col("vec_id") % 5 === 3),
@@ -197,14 +197,14 @@ class IngestSpec extends SparkSpec {
       assert(ids().sorted == want,
         "the major fold's dedup must heal the overlapping replay rows")
     } finally {
-      spark.conf.unset(IngestOps.CompactVectorsAtConf)
+      spark.conf.unset(graft.ops.SideStoreFold.CompactAtConf)
       spark.conf.unset(graft.ops.SideStoreFold.MajorRatioConf)
     }
     del(dir)
   }
 
   test("a screened stream screens later batches against the COMPACTED side-store") {
-    spark.conf.set(graft.ops.IngestOps.CompactVectorsAtConf, "1")
+    spark.conf.set(graft.ops.SideStoreFold.CompactAtConf, "1")
     try {
       val dir = s"$root/cmpstream"; val staged = s"$root/cmpstream_src"
       val ckpt = s"$root/cmpstream_ckpt"
@@ -239,7 +239,7 @@ class IngestSpec extends SparkSpec {
       assert(stored.distinct.sorted == stored.sorted)
       assert(after1.subsetOf(stored.toSet))
       del(dir); del(staged); del(ckpt)
-    } finally spark.conf.unset(graft.ops.IngestOps.CompactVectorsAtConf)
+    } finally spark.conf.unset(graft.ops.SideStoreFold.CompactAtConf)
   }
 
   /** Property check of the conservative-prefix rule itself, decoupled
@@ -686,9 +686,9 @@ class IngestSpec extends SparkSpec {
     assert(storedIds().exists(_ >= 900000000L),
       "the orphan rows must be READABLE in the side-store (harmless ≠ hidden)")
     // (b) the valve minor-folds the orphan delta into a ladder run
-    spark.conf.set(IngestOps.CompactVectorsAtConf, "1")
+    spark.conf.set(graft.ops.SideStoreFold.CompactAtConf, "1")
     try IngestOps.maybeCompactVectors(spark, dir)
-    finally spark.conf.unset(IngestOps.CompactVectorsAtConf)
+    finally spark.conf.unset(graft.ops.SideStoreFold.CompactAtConf)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/vectors/_runs")),
@@ -793,12 +793,13 @@ class IngestSpec extends SparkSpec {
       "every planted copy pairs its own source at cos=1 and must be dropped")
   }
 
-  /** Each append broadcasts the slim model, the batch's rotation slices and
-    * (PCA-fronted indexes) the PCA front; a streaming session appends once
-    * per micro-batch, so any of them left for the ContextCleaner accretes
-    * until a driver GC. Spark's own broadcasts (plan relations, Hadoop
-    * conf, the scheduler's serialized task binaries) are out of scope:
-    * the ContextCleaner owns those. */
+  /** Each append and each screen reads the slim model and the PCA front
+    * through the dir's ONE cached broadcast pair, and each append
+    * broadcasts the batch's rotation slices per call; a streaming session
+    * cycles once per micro-batch, so any per-call broadcast left for the
+    * ContextCleaner accretes until a driver GC. Spark's own broadcasts
+    * (plan relations, Hadoop conf, the scheduler's serialized task
+    * binaries) are out of scope: the ContextCleaner owns those. */
   test("back-to-back appendUpdates leave none of their broadcasts resident") {
     import org.apache.spark.graft.TestBroadcastBlocks
     import org.scalatest.concurrent.Eventually._
@@ -809,16 +810,38 @@ class IngestSpec extends SparkSpec {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select("vec_id", "embedding")
     val before = TestBroadcastBlocks.resident().keySet
-    try {
-      (0 until 3).foreach { i =>
-        assert(LopqIndexStore.appendUpdate(spark, dir,
-          e.where(col("vec_id") % 3 === i), "vec_id", "embedding", f"u$i%03d"))
+    def engineResident(): Map[Long, String] =
+      TestBroadcastBlocks.resident().filter { case (id, cls) =>
+        !before(id) && !cls.startsWith("org.apache.spark.") && cls != "[B"
       }
+    def cycle(i: Int): Unit = {
+      assert(LopqIndexStore.appendUpdate(spark, dir,
+        e.where(col("vec_id") % 3 === i), "vec_id", "embedding", f"u$i%03d"))
+      IngestOps.screenPairs(spark, dir,
+        IngestOps.vectorStore(spark, dir, "vec_id", "embedding"),
+        e.where(col("vec_id") % 7 === i).select((col("vec_id") + 50000000L)
+          .as("vec_id"), col("embedding")),
+        "vec_id", "embedding", graft.ops.VectorQueries.NearDupSimThreshold).count()
+    }
+    graft.functions.GraftFunctions.register(spark) // graft_dot in the pair gate
+    try {
+      cycle(0)
+      // the dir's cached pair: the slim model and the (absent) PCA front
+      val pair = eventually(timeout(20.seconds), interval(200.millis)) {
+        val r = engineResident()
+        assert(r.size == 2 && r.values.exists(_.endsWith("SlimLopqModel")),
+          s"expected only the cached model pair resident, got $r")
+        r.keySet
+      }
+      cycle(1); cycle(2)
       eventually(timeout(20.seconds), interval(200.millis)) {
-        val leaked = TestBroadcastBlocks.resident().filter { case (id, cls) =>
-          !before(id) && !cls.startsWith("org.apache.spark.") && cls != "[B"
-        }
-        assert(leaked.isEmpty, s"appendUpdate left broadcasts resident: $leaked")
+        val r = engineResident()
+        assert(r.keySet == pair, s"screen/append cycles accreted broadcasts: $r")
+      }
+      LopqIndexStore.evictModel(dir)
+      eventually(timeout(20.seconds), interval(200.millis)) {
+        val r = engineResident()
+        assert(r.isEmpty, s"evictModel left broadcasts resident: $r")
       }
     } finally del(dir)
   }

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.UpdateLog
 import graft.engine.{LopqIndexStore, LopqParams, LopqSearcher, LopqTrainer}
-import graft.ops.Tables
+import graft.ops.{Tables, TextScreen, TextSigStore}
 
 /** Durable-index semantics: model save/load round-trip, on-disk partition
   * pruning of the codes table, incremental append ≡ one-shot encode, and
@@ -291,7 +292,7 @@ class LopqIndexSpec extends SparkSpec {
       if (!fs.exists(cp)) 0
       else fs.listStatus(cp).count(_.getPath.getName.endsWith(".parquet"))
     }
-    spark.conf.set(LopqIndexStore.CompactCountsAtConf, "3")
+    spark.conf.set(LopqIndexStore.CompactDeltaAtConf, "3")
     try {
       for (i <- 0 until 3)
         assert(LopqIndexStore.appendUpdate(spark, cdir,
@@ -313,7 +314,7 @@ class LopqIndexSpec extends SparkSpec {
       val recount = loaded.codes.groupBy("cell_id").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       assert(loaded.cellCounts.toMap === recount)
-    } finally spark.conf.unset(LopqIndexStore.CompactCountsAtConf)
+    } finally spark.conf.unset(LopqIndexStore.CompactDeltaAtConf)
   }
 
   test("stream update ids order lexically across any batch-id magnitude") {
@@ -350,10 +351,34 @@ class LopqIndexSpec extends SparkSpec {
     assert(!LopqIndexStore.appendUpdate(spark, ldir,
       e.where(col("vec_id") < 100), "vec_id", "embedding", "stream_000002"))
     // ids without a trailing digit run pass through normalization verbatim
-    assert(LopqIndexStore.normalizeUpdateId("0000-00-00_full_build")
+    assert(UpdateLog.normalizeUpdateId("0000-00-00_full_build")
       === "0000-00-00_full_build")
-    assert(LopqIndexStore.normalizeUpdateId("stream_000001")
+    assert(UpdateLog.normalizeUpdateId("stream_000001")
       === f"stream_${1L}%019d")
+    // the text store commits through the same tip: a legacy-tipped store
+    // applies a new-format update, and its delta is visible in `sigs`
+    val tdir = incrDir + "_legacy_text"
+    deleteDir(tdir)
+    TextSigStore.build(spark, tdir, docs(0 until 20))
+    assert(TextScreen.screenAndAppend(spark, tdir, docs(0 until 20),
+      docs(20 until 25), "stream_000001").applied)
+    val next = f"stream_${2L}%019d"
+    assert(TextScreen.screenAndAppend(spark, tdir, docs(0 until 25),
+      docs(25 until 30), next).applied,
+      "a new-format id above the legacy text watermark must be applied")
+    assert(new java.io.File(s"$tdir/sigs/$next").isDirectory)
+    assert(TextSigStore.sigs(spark, tdir).select("doc_id").collect()
+      .map(_.getLong(0)).toSet === (0L until 30L).toSet)
+    assert(!TextScreen.screenAndAppend(spark, tdir, docs(0 until 30),
+      docs(30 until 35), "stream_000002").applied)
+  }
+
+  /** Synthetic documents sharing no shingle: every batch doc survives. */
+  private def docs(ids: Range): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    ids.map(i => (i.toLong, (0 until 12).map(j => s"d${i}w$j").mkString(" ")))
+      .toDF("doc_id", "text")
   }
 
   test("cache entries of a stopped SparkSession are swept on insert") {
@@ -383,10 +408,17 @@ class LopqIndexSpec extends SparkSpec {
     // r5 collected the FULL manifest per append (O(updates-ever) driver
     // work); the tip makes the replay check one sidecar-file read — pinned
     // by asserting the refusal path schedules no Spark job at all
+    // the text store's screened cycle refuses its replay the same way
+    val tdir = incrDir + "_tip_text"
+    deleteDir(tdir)
+    TextSigStore.build(spark, tdir, docs(0 until 20))
+    val (corpus, batch) = (docs(0 until 20), docs(20 until 25))
+    assert(TextScreen.screenAndAppend(spark, tdir, corpus, batch, "u000").applied)
     spark.sparkContext.setJobGroup("replay-refusal", "must stay empty")
     try {
       assert(!LopqIndexStore.appendUpdate(spark, incrDir + "_tip", e, "vec_id",
         "embedding", "u000"))
+      assert(!TextScreen.screenAndAppend(spark, tdir, corpus, batch, "u000").applied)
       val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup("replay-refusal")
       assert(jobs.isEmpty, s"refusal ran Spark jobs: ${jobs.toSeq}")
     } finally spark.sparkContext.clearJobGroup()

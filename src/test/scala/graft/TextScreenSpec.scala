@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{TextOps, TextScreen, TextSigStore}
+import graft.core.UpdateLog
+import graft.ops.{SideStoreFold, TextOps, TextScreen, TextSigStore}
 
 /** The incremental / screened TEXT dedup loop (VERDICT r14 next-round #1):
   * pair semantics pinned against the batch chain, the conservative-prefix
@@ -174,7 +175,7 @@ class TextScreenSpec extends SparkSpec {
     val p = TextOps.lshParams(spark)
     TextOps.minhashSigsOf(batch, p)
       .write.mode("overwrite").parquet(s"$dir/sigs/u0001")
-    assert(!TextSigStore.isApplied(spark, dir, "u0001"))
+    assert(!UpdateLog.isApplied(spark, dir, "u0001"))
     // the replay re-screens, overwrites the delta with the SURVIVOR rows,
     // and advances the tip — no duplicate rows, no double-append
     val r = TextScreen.screenAndAppend(spark, dir, corpus, batch, "u0001")
@@ -182,7 +183,7 @@ class TextScreenSpec extends SparkSpec {
     val stored = TextSigStore.sigs(spark, dir).groupBy("doc_id")
       .agg(count(lit(1)).as("n"))
     assert(stored.where(col("n") > 1).isEmpty, "no id may hold two sig rows")
-    assert(TextSigStore.isApplied(spark, dir, "u0001"))
+    assert(UpdateLog.isApplied(spark, dir, "u0001"))
   }
 
   test("compaction folds deltas into one base with identical content") {
@@ -229,7 +230,7 @@ class TextScreenSpec extends SparkSpec {
       .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
       .toSet
     val base0 = baseFiles()
-    spark.conf.set(TextSigStore.CompactSigsAtConf, "1")
+    spark.conf.set(SideStoreFold.CompactAtConf, "1")
     try {
       TextScreen.screenAndAppend(spark, dir, corpus, batch1, "u0001")
       assert(entries() === Seq("_base", "_runs"),
@@ -267,7 +268,7 @@ class TextScreenSpec extends SparkSpec {
       val c3 = content()
       assert(c3.map(_._1).contains(990001L) && c2.subsetOf(c3))
     } finally {
-      spark.conf.unset(TextSigStore.CompactSigsAtConf)
+      spark.conf.unset(SideStoreFold.CompactAtConf)
       spark.conf.unset(graft.ops.SideStoreFold.MajorRatioConf)
     }
   }
@@ -344,16 +345,16 @@ class TextScreenSpec extends SparkSpec {
     // the orphaned text dir is INVISIBLE (uid > tip): readers see the seed
     assert(TextSigStore.textStore(spark, dir)
       .select("doc_id").as[Long].collect().toSet === corpusIds)
-    assert(!TextSigStore.isApplied(spark, dir, "u0001"))
+    assert(!UpdateLog.isApplied(spark, dir, "u0001"))
     // replay heals: applied, both sides agree on the survivors — and with
     // compactAt=1 the fold fires INSIDE this very cycle, right after the
     // append: the report must already be materialized when the fold
     // deletes the update's text delta (the r15 multi-batch probe crashed
     // here with FILE_NOT_EXIST when the count was still a lazy plan)
-    spark.conf.set(TextSigStore.CompactSigsAtConf, "1")
+    spark.conf.set(SideStoreFold.CompactAtConf, "1")
     val r = try TextScreen.screenAndAppend(spark, dir,
         TextSigStore.textStore(spark, dir), batch, "u0001", storeTexts = true)
-      finally spark.conf.unset(TextSigStore.CompactSigsAtConf)
+      finally spark.conf.unset(SideStoreFold.CompactAtConf)
     assert(r.applied && r.appended > 0 && r.appended < r.batchRows)
     val sigIds = TextSigStore.sigs(spark, dir)
       .select("doc_id").as[Long].collect().toSet
@@ -618,8 +619,8 @@ class TextScreenSpec extends SparkSpec {
     // fresh checkpoint re-reads both files; the watermark refuses both
     drain(ckpt + "_replay")
     assert(ids(TextSigStore.sigs(spark, dirS)) === sIds)
-    assert(TextSigStore.isApplied(spark, dirS, f"stream_${1L}%019d") &&
-      !TextSigStore.isApplied(spark, dirS, f"stream_${2L}%019d"))
+    assert(UpdateLog.isApplied(spark, dirS, f"stream_${1L}%019d") &&
+      !UpdateLog.isApplied(spark, dirS, f"stream_${2L}%019d"))
   }
 
   test("an abandoned crashed update's orphan deltas are purged before a " +
