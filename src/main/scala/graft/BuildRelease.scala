@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.ReleaseShape
 
 /** Offline build of a release-scale proof index (the reference's train step,
@@ -14,37 +12,25 @@ import graft.engine.ReleaseShape
   * `v4` builds the release DEPLOYMENT magnitude — v3's model constants
   * over the 2M × raw-4096-d corpus with the ~32 GB lookup-layout feature
   * table (see [[ReleaseShape.ensureV4]]).
-  * Usage: runMain graft.BuildRelease [v1|v2|v3|v4|wide]
+  * Usage: runMain graft.BuildRelease [v1|v2|v3|v4|wide] [conf:key=value …]
   */
 object BuildRelease {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t0 = System.nanoTime()
-    if (args.headOption.contains("wide")) {
-      ReleaseShape.stageWide(spark)
-      println(f"[build-release] wide rerank table ready in ${(System.nanoTime() - t0) / 1e9}%.1f s at ${ReleaseShape.wideDir}")
-    } else if (args.headOption.contains("v4")) {
-      // the release DEPLOYMENT magnitude: 2M × raw 4096-d through v3's
-      // model constants + the 32 GB lookup-layout feature table
-      ReleaseShape.ensureV4(spark)
-      println(f"[build-release] v4 ready in ${(System.nanoTime() - t0) / 1e9}%.1f s at ${ReleaseShape.V4.dir}")
-    } else {
-      val s = args.headOption.getOrElse("v3") match {
-        case "v1" => ReleaseShape.V1
-        case "v2" => ReleaseShape.V2
-        case _ => ReleaseShape.V3
+    val spark = Probe.session()
+    try {
+      val which = Probe.confArgs(spark, args.toSeq, "build-release").headOption.getOrElse("v3")
+      val s = if (which == "wide") None else Some(Probe.shape(Some(which), ReleaseShape.V3))
+      Probe.timed("build-release", s"$which ready at ${s.fold(ReleaseShape.wideDir)(_.dir)} in") {
+        s match {
+          case None => ReleaseShape.stageWide(spark)
+          // the release DEPLOYMENT magnitude: 2M × raw 4096-d through v3's
+          // model constants + the 32 GB lookup-layout feature table
+          case Some(ReleaseShape.V4) => ReleaseShape.ensureV4(spark)
+          case Some(shape) =>
+            ReleaseShape.ensureFor(spark, shape)
+            ReleaseShape.stageVectorsFor(spark, shape, shape.dir, shape.n)
+        }
       }
-      ReleaseShape.ensureFor(spark, s)
-      ReleaseShape.stageVectorsFor(spark, s, s.dir, s.n)
-      println(f"[build-release] ${s.name} ready in ${(System.nanoTime() - t0) / 1e9}%.1f s at ${s.dir}")
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 }

@@ -1,9 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-import graft.engine.{LopqIndexStore, ReleaseShape}
+import graft.engine.{LopqIndexStore, ReleaseShape, ReleaseShapeDef}
 import graft.streaming.IndexMaintenance
 
 /** Maintenance-at-release-cadence probe (VERDICT r6 next-round #6): clone
@@ -15,28 +14,29 @@ import graft.streaming.IndexMaintenance
   * wall-clock from the streaming progress plus the slice-LRU hit rate, so
   * steady-state flatness is measurable at hundreds of batches.
   *
-  * Usage: runMain graft.MaintainRelease [v2|v3] [nBatches] [batchRows]
+  * Usage: runMain graft.MaintainRelease [v1..v4] [nBatches] [batchRows] [conf:key=value …]
   */
 object MaintainRelease {
   def main(args: Array[String]): Unit = {
-    val shape = args.headOption.getOrElse("v2") match {
-      case "v3" => ReleaseShape.V3
-      case _ => ReleaseShape.V2
-    }
-    val nBatches = args.drop(1).headOption.map(_.toInt).getOrElse(50)
-    val batchRows = args.drop(2).headOption.map(_.toInt).getOrElse(2048)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // recentProgress retains only this many entries (default ~100); at
-      // hundreds of batches the first-half/second-half flatness comparison
-      // would silently cover just the tail (ADVICE r7)
-      .config("spark.sql.streaming.numRecentProgressUpdates", (nBatches + 16).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the positional args size a builder-time conf, so they are read before
+    // the session; the `conf:` args are applied once it exists
+    val pos = args.filterNot(_.startsWith("conf:"))
+    val shape = Probe.shape(pos.headOption, ReleaseShape.V2)
+    val nBatches = pos.lift(1).map(_.toInt).getOrElse(50)
+    val batchRows = pos.lift(2).map(_.toInt).getOrElse(2048)
+    // recentProgress retains only this many entries (default ~100); at
+    // hundreds of batches the first-half/second-half flatness comparison
+    // would silently cover just the tail (ADVICE r7)
+    val spark = Probe.session(
+      "spark.sql.streaming.numRecentProgressUpdates" -> (nBatches + 16).toString)
+    try {
+      Probe.confArgs(spark, args.toSeq, "maintain")
+      run(spark, shape, nBatches, batchRows)
+    } finally spark.stop()
+  }
+
+  private def run(spark: SparkSession, shape: ReleaseShapeDef, nBatches: Int,
+      batchRows: Int): Unit = {
     import spark.implicits._
 
     require(LopqIndexStore.fingerprintOk(shape.dir, shape.p, shape.n, shape.pcaDims),
@@ -90,6 +90,5 @@ object MaintainRelease {
       f"in $wall%.1f s; codes=$n; slice-LRU hit rate ${hitRate * 100}%.1f%% " +
       f"(req=$req miss=$miss); median batch first-half ${med(perBatch.take(half).map(_._2))} ms " +
       f"second-half ${med(perBatch.drop(half).map(_._2))} ms")
-    spark.stop()
   }
 }

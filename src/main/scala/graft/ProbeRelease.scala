@@ -2,22 +2,22 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.CellMath
-import graft.engine.{LopqIndexStore, LopqSearcher, ReleaseShape}
+import graft.engine.{LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef}
 
-/** Dev tool: per-stage wall-clock of one slim release query (cell walk,
-  * slice fetch, ADC-table build, approx scan, rerank) — where does a
-  * release-shape query's latency actually go?
-  * Usage: runMain graft.ProbeRelease rerank [v4|wide|ann_v4] [passes]
-  *        runMain graft.ProbeRelease [v2|v3|histogram] [queryId]
-  *        runMain graft.ProbeRelease annjoin [v2|v3] [nQueries...]
-  *        runMain graft.ProbeRelease dedup [v2|v3|v4] [nProbes] [quota] [rerankK] [jitter[:eps]] [chunk[:rows]]
-  *        runMain graft.ProbeRelease semdedup [v2|v3|v4] [threshold] [sample:mod] [chunk[:n]] [incr:mod] [multi[:P]]
-  *        runMain graft.ProbeRelease ingest [v2|v3|v4] [batchRows] [sweep:t1,t2,...] [multi]
-  *        runMain graft.ProbeRelease stream [v2|v3|v4] [nBatches] [batchRows] [compactAt]
-  *        runMain graft.ProbeRelease curation [v1|v2|v3|v4] [quota] [keepFrac]
-  *        runMain graft.ProbeRelease curatepipe [v2|v3|v4] [threshold] [keepFrac] [chunk[:n]] [multi] [resume]
-  *        runMain graft.ProbeRelease cellmiss [v2|v3|v4] [nSample] [eps:e1,e2,...]
+/** Dev probes at the release shapes, one mode per question. Each mode runs
+  * on the [[Probe.session]] and accepts `conf:key=value` args
+  * ([[Probe.confArgs]]); shape names are `v1`–`v4` ([[Probe.shape]]).
+  * The per-stage split of one slim query is `runMain graft.Probe serve`.
+  * Usage: runMain graft.ProbeRelease histogram
+  *        runMain graft.ProbeRelease rerank [v4|wide|ann_v4] [passes]
+  *        runMain graft.ProbeRelease annjoin [v1..v4] [nQueries...]
+  *        runMain graft.ProbeRelease dedup [v1..v4] [nProbes] [quota] [rerankK] [jitter[:eps]] [chunk[:rows]] [passes:N]
+  *        runMain graft.ProbeRelease semdedup [v1..v4] [threshold] [sample:mod] [chunk[:n]] [incr:mod] [multi[:P]]
+  *        runMain graft.ProbeRelease ingest [v1..v4] [batchRows] [sweep:t1,t2,...] [multi]
+  *        runMain graft.ProbeRelease stream [v1..v4] [nBatches] [batchRows] [compactAt]
+  *        runMain graft.ProbeRelease curation [v1..v4] [quota] [keepFrac]
+  *        runMain graft.ProbeRelease curatepipe [v1..v4] [threshold] [keepFrac] [chunk[:n]] [multi] [resume]
+  *        runMain graft.ProbeRelease cellmiss [v1..v4] [nSample] [eps:e1,e2,...]
   *
   * `annjoin` mode times the SET-ORIENTED batch path at each given batch
   * size (default 250 1000 2000) against the chosen release index — the
@@ -55,35 +55,14 @@ object ProbeRelease {
   /** Batch-path flat-scaling probe: one annJoin per batch size, amortized
     * ms/query printed per pass (handle — and its hoisted broadcasts —
     * shared across passes like a resident bulk service). */
-  private def probeAnnJoin(shapeArg: Option[String], sizes: Seq[Int]): Unit = {
-    val s = shapeArg match {
-      case Some("v3") => ReleaseShape.V3
-      case Some("v4") => ReleaseShape.V4
-      case _ => ReleaseShape.V2
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    import scala.jdk.CollectionConverters._
-    System.getProperties.asScala.foreach { case (k, v) =>
-      if (k.startsWith("spark.graft.probe.conf.")) {
-        val key = k.stripPrefix("spark.graft.probe.conf.")
-        println(s"[probe-release] conf $key=$v")
-        spark.conf.set(key, v)
-      }
-    }
+  private def probeAnnJoin(spark: SparkSession, s: ReleaseShapeDef,
+      sizes: Seq[Int]): Unit = {
     val idx = LopqIndexStore.loadSlim(spark, s.dir).get
     sizes.foreach { n =>
       (1 to 3).foreach { pass =>
         val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
         val t0 = System.nanoTime()
-        ReleaseShape.annJoinFor(spark, s, idx, n)
-          .write.format("noop").mode("overwrite").save()
+        Probe.noop(ReleaseShape.annJoinFor(spark, s, idx, n))
         val sec = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.getPersistentRDDs
           .filterNot { case (id, _) => cachedBefore(id) }
@@ -92,12 +71,7 @@ object ProbeRelease {
           f"${sec}%7.2f s total  ${sec * 1000 / n}%7.2f ms/query")
       }
     }
-    spark.stop()
   }
-
-  /** Machine-level read-bytes counter — shared with the bench gate's
-    * per-pass attribution ([[graft.core.DiskStats]]). */
-  private def diskReadBytes(): Long = graft.core.DiskStats.readBytes()
 
   /** I/O-attributed probe of the big-table release rows (VERDICT r11
     * next-round #4): the rows that drifted r10→r11 (`release_rerank_v4`,
@@ -109,35 +83,26 @@ object ProbeRelease {
     * medians, the drift is PAGE-CACHE STATE, not a plan regression.
     * Runs the bench row's exact shape: 5 serial queries (qid = q·997),
     * each fully materialized through a noop write. */
-  private def probeRerank(which: String, passes: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+  private def probeRerank(spark: SparkSession, which: String, passes: Int): Unit = {
     val searchFor: Long => org.apache.spark.sql.DataFrame = which match {
       case "wide" => qid => ReleaseShape.rerankWide(spark, qid)
       case "ann_v4" =>
         val idx = LopqIndexStore.loadSlim(spark, ReleaseShape.V4.dir).get
         qid => ReleaseShape.searchSlim(spark, ReleaseShape.V4, idx, qid)
-      case _ => qid => ReleaseShape.rerankV4(spark, qid)
+      case "v4" => qid => ReleaseShape.rerankV4(spark, qid)
+      case other => throw new IllegalArgumentException(
+        s"unknown rerank table '$other' (want one of v4|wide|ann_v4)")
     }
     println(s"[probe-release] rerank $which passes=$passes (5 serial queries/pass)")
     (1 to passes).foreach { pass =>
-      val b0 = diskReadBytes()
+      val b0 = graft.core.DiskStats.readBytes()
       val t0 = System.nanoTime()
-      (0 until 5).foreach { q =>
-        searchFor(q.toLong * 997L).write.format("noop").mode("overwrite").save()
-      }
+      (0 until 5).foreach(q => Probe.noop(searchFor(q.toLong * 997L)))
       val sec = (System.nanoTime() - t0) / 1e9
-      val mb = (diskReadBytes() - b0) / 1e6
+      val mb = (graft.core.DiskStats.readBytes() - b0) / 1e6
       println(f"[probe-release] rerank $which pass $pass  ${sec}%6.2f s   " +
         f"disk-read ${mb}%8.1f MB")
     }
-    spark.stop()
   }
 
   /** Corpus-SELF-dedup probe at release magnitude (VERDICT r9 "What's
@@ -159,38 +124,12 @@ object ProbeRelease {
     * bounds is measured, not assumed: exact top-k neighbors of a sampled
     * probe set are brute-forced and the recall of the bounded batch
     * output against them is printed. */
-  private def probeDedup(shapeArg: Option[String], nProbesArg: Option[Int],
-      quota: Int, rerankK: Int, jitterEps: Option[Double],
-      chunkRows: Option[Long], passesArg: Option[Int] = None): Unit = {
+  private def probeDedup(spark: SparkSession, s: ReleaseShapeDef,
+      nProbesArg: Option[Int], quota: Int, rerankK: Int, jitterEps: Option[Double],
+      chunkRows: Option[Long], passesArg: Option[Int]): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val s = shapeArg match {
-      case Some("v3") => ReleaseShape.V3
-      case Some("v4") => ReleaseShape.V4
-      case _ => ReleaseShape.V2
-    }
     val k = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the broadcast-qvec exact stage collects the probe matrix
-      // (O(probes·D) — ~1.2 GB at the 600k × 512-d self-dedup) to the
-      // driver before broadcasting; the default 1g maxResultSize is sized
-      // for accidental collects, not this deliberate one
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    import scala.jdk.CollectionConverters._
-    System.getProperties.asScala.foreach { case (kk, v) =>
-      if (kk.startsWith("spark.graft.probe.conf.")) {
-        val key = kk.stripPrefix("spark.graft.probe.conf.")
-        println(s"[probe-release] conf $key=$v")
-        spark.conf.set(key, v)
-      }
-    }
     val idx = LopqIndexStore.loadSlim(spark, s.dir).get
     val vectors = ReleaseShape.vectors(spark, s.dir)
     val nProbes = nProbesArg.getOrElse(s.n.toInt)
@@ -235,7 +174,7 @@ object ProbeRelease {
     def runPass(write: Boolean): Unit = {
       def sinkOf(df: org.apache.spark.sql.DataFrame, c: Int): Unit =
         if (write) df.write.mode(if (c == 0) "overwrite" else "append").parquet(out)
-        else df.write.format("noop").mode("overwrite").save()
+        else Probe.noop(df)
       chunkRows match {
         case None =>
           sinkOf(LopqSearcher.annJoin(idx, probes, "q_id", "q_vec",
@@ -316,7 +255,6 @@ object ProbeRelease {
       f"$hit/$truePairs = ${hit.toDouble / truePairs}%.4f")
     println(f"[probe-release] dedup recall@1 (nearest-partner) : " +
       f"$hit1/$true1 = ${hit1.toDouble / true1}%.4f")
-    spark.stop()
   }
 
   /** SemDeDup at release magnitude: the q94 operator
@@ -364,23 +302,11 @@ object ProbeRelease {
     * isotropic release corpus crosses it) and half PURE-NOISE novels
     * (cos ≈ 0 vs everything — must survive), so flagged/appended have
     * expected values (≈nJit / =nNovel) the printout makes checkable. */
-  private def probeIngest(shapeArg: Option[String], nBatchArg: Option[Int],
-      sweepArg: Option[Seq[Double]] = None, multiProbe: Boolean = false): Unit = {
+  private def probeIngest(spark: SparkSession, s: ReleaseShapeDef,
+      nBatchArg: Option[Int], sweepArg: Option[Seq[Double]],
+      multiProbe: Boolean): Unit = {
     import org.apache.spark.sql.functions._
-    val s = shapeArg match {
-      case Some("v3") => ReleaseShape.V3
-      case Some("v4") => ReleaseShape.V4
-      case _ => ReleaseShape.V2
-    }
     val nBatch = nBatchArg.getOrElse(2000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     if (multiProbe)
       spark.conf.set(graft.ops.VectorQueries.ScreenMultiProbeConf, "true")
     val srcDir = s.dir
@@ -469,7 +395,6 @@ object ProbeRelease {
             f"${sec * 1000.0 / nBatch}%.2f ms/batch-row")
         }
     }
-    spark.stop()
   }
 
   /** Streaming screened-ingest CADENCE probe — [[graft.streaming.ScreenedIngest]]
@@ -483,26 +408,14 @@ object ProbeRelease {
     * near-copies of batch 0's survivors — is dropped against vectors that
     * by then live only in the compacted base (the hours-later-duplicate
     * case, ref `extraction_checker.py:225-258`, at magnitude).
-    * Usage: runMain graft.ProbeRelease stream [v2|v3|v4] [nBatches] [batchRows] [compactAt] */
-  private def probeStreamIngest(shapeArg: Option[String], nBatchesArg: Option[Int],
-      rowsArg: Option[Int], compactAtArg: Option[Int]): Unit = {
+    * Usage: runMain graft.ProbeRelease stream [v1..v4] [nBatches] [batchRows] [compactAt] */
+  private def probeStreamIngest(spark: SparkSession, s: ReleaseShapeDef,
+      nBatchesArg: Option[Int], rowsArg: Option[Int],
+      compactAtArg: Option[Int]): Unit = {
     import org.apache.spark.sql.functions._
-    val s = shapeArg match {
-      case Some("v3") => ReleaseShape.V3
-      case Some("v4") => ReleaseShape.V4
-      case _ => ReleaseShape.V2
-    }
     val nBatches = nBatchesArg.getOrElse(16)
     val batchRows = rowsArg.getOrElse(1000)
     val compactAt = compactAtArg.getOrElse(6)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     spark.conf.set(graft.ops.SideStoreFold.CompactAtConf, compactAt.toString)
     val srcDir = s.dir
     val cloneDir = srcDir + "_stream_probe"
@@ -626,38 +539,16 @@ object ProbeRelease {
     println(f"[probe-release] stream TOTAL $total%8.2f s for $nBatches batches " +
       f"(${total / nBatches}%.2f s/batch amortized)  finalSideDirs=${sideDirs()}  " +
       s"tip=${LopqIndexStore.watermark(spark, cloneDir).getOrElse("-")}")
-    spark.stop()
   }
 
-  private def probeSemDedup(shapeArg: Option[String], thresholdArg: Option[Double],
-      sampleMod: Option[Long], chunkArg: Option[Int],
-      incrMod: Option[Long], multiProbe: Boolean = false): Unit = {
+  private def probeSemDedup(spark: SparkSession, s: ReleaseShapeDef,
+      thresholdArg: Option[Double], sampleMod: Option[Long], chunkArg: Option[Int],
+      incrMod: Option[Long], multiProbe: Boolean): Unit = {
     import org.apache.spark.sql.functions._
-    val s = shapeArg match {
-      case Some("v3") => ReleaseShape.V3
-      case Some("v4") => ReleaseShape.V4
-      case _ => ReleaseShape.V2
-    }
     // release vectors are synthetic-isotropic (nothing crosses the
     // near-dup 0.4 default) — probe at a threshold the shape's cluster
     // siblings actually reach so the sweep emits real pairs
     val th = thresholdArg.getOrElse(0.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    import scala.jdk.CollectionConverters._
-    System.getProperties.asScala.foreach { case (kk, v) =>
-      if (kk.startsWith("spark.graft.probe.conf.")) {
-        val key = kk.stripPrefix("spark.graft.probe.conf.")
-        println(s"[probe-release] conf $key=$v")
-        spark.conf.set(key, v)
-      }
-    }
     val idx = LopqIndexStore.loadSlim(spark, s.dir).get
     val vectors = ReleaseShape.vectors(spark, s.dir)
     // `multi`: the q104 top-P assignment (P = MultiProbeCellsConf,
@@ -728,7 +619,6 @@ object ProbeRelease {
           }
       }
     }
-    spark.stop()
   }
 
   /** Curation-operator probe: cluster-balanced sampling + prototypicality
@@ -736,25 +626,11 @@ object ProbeRelease {
     * evidence for q100/q101 (per-cell quota over 1M+ learned strata;
     * slim-model scoring of the full corpus with the fat vectors never
     * shuffling). */
-  private def probeCuration(shapeArg: Option[String], quotaArg: Option[Int],
-      keepFracArg: Option[Double]): Unit = {
+  private def probeCuration(spark: SparkSession, s: ReleaseShapeDef,
+      quotaArg: Option[Int], keepFracArg: Option[Double]): Unit = {
     import org.apache.spark.sql.functions._
-    val s = shapeArg match {
-      case Some("v1") => ReleaseShape.V1
-      case Some("v3") => ReleaseShape.V3
-      case Some("v4") => ReleaseShape.V4
-      case _ => ReleaseShape.V2
-    }
     val quota = quotaArg.getOrElse(10)
     val keepFrac = keepFracArg.getOrElse(0.7)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val idx = LopqIndexStore.loadSlim(spark, s.dir).get
     val cells = idx.codes.select(
       org.apache.spark.sql.functions.col("id"),
@@ -775,13 +651,7 @@ object ProbeRelease {
       println(f"[probe-release] protoPrune pass $pass  " +
         f"${(System.nanoTime() - t0) / 1e9}%8.2f s  kept=${r.getLong(0)}/${r.getLong(1)}")
     }
-    spark.stop()
   }
-
-  /** Recursive byte size of the session's spark scratch dirs — the
-    * "scratch stays flat" witness for the chunked drivers (shared with
-    * [[graft.ProbeTextDedup]] via [[graft.core.DiskStats.scratchBytes]]). */
-  private def scratchBytes(): Long = graft.core.DiskStats.scratchBytes()
 
   /** The COMPOSED semantic-curation pipeline at release magnitude
     * (VERDICT r12 next-round #1 — the curateCorpus chain with the chunked
@@ -790,27 +660,13 @@ object ProbeRelease {
     * components → survivor anti-join → slim prototypicality keep-set →
     * cluster-tempered draw. Per-stage wall-clock, machine read-bytes and
     * scratch footprint printed after every stage.
-    * Usage: runMain graft.ProbeRelease curatepipe [v2|v3|v4] [threshold] [keepFrac] [chunk[:n]] */
-  private def probeCurationPipeline(shapeArg: Option[String],
+    * Usage: runMain graft.ProbeRelease curatepipe [v1..v4] [threshold] [keepFrac] [chunk[:n]] */
+  private def probeCurationPipeline(spark: SparkSession, s: ReleaseShapeDef,
       thresholdArg: Option[Double], keepFracArg: Option[Double],
-      chunkArg: Option[Int], resume: Boolean = false,
-      multiProbe: Boolean = false): Unit = {
+      chunkArg: Option[Int], resume: Boolean, multiProbe: Boolean): Unit = {
     import org.apache.spark.sql.functions._
-    val s = shapeArg match {
-      case Some("v3") => ReleaseShape.V3
-      case Some("v4") => ReleaseShape.V4
-      case _ => ReleaseShape.V2
-    }
     val th = thresholdArg.getOrElse(graft.ops.VectorQueries.NearDupSimThreshold)
     val keepFrac = keepFracArg.getOrElse(0.7)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val idx = LopqIndexStore.loadSlim(spark, s.dir).get
     val vectors = ReleaseShape.vectors(spark, s.dir)
     // `multi`: the composed pipeline over the TOP-2 probe assignment
@@ -832,15 +688,9 @@ object ProbeRelease {
     println(s"[probe-release] curatepipe ${s.name} threshold=$th keepFrac=$keepFrac " +
       s"nChunks=$n multiCellRows=$memberRows" +
       (if (multiProbe) " multiProbe=true" else ""))
-    def stage[A](label: String)(body: => A): A = {
-      val b0 = diskReadBytes(); val t0 = System.nanoTime()
-      val r = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      val gb = (diskReadBytes() - b0) / 1e9
-      println(f"[probe-release] curatepipe stage $label%-12s $sec%9.2f s  " +
-        f"read=$gb%7.2f GB  scratch=${scratchBytes() / 1e9}%6.2f GB")
-      r
-    }
+    def stage[A](label: String)(body: => A): A =
+      Probe.timed("probe-release", f"curatepipe stage $label%-12s",
+        f"  scratch=${graft.core.DiskStats.scratchBytes() / 1e9}%6.2f GB")(body)
     val t0 = System.nanoTime()
     // `resume`: a crashed post-sweep stage should not re-pay the chunked
     // sweep. Gate on an explicit drain-complete SENTINEL written after
@@ -862,7 +712,7 @@ object ProbeRelease {
         df.select("id_a", "id_b")
           .write.mode(if (c == 0) "overwrite" else "append").parquet(outDir)
         println(f"[probe-release] curatepipe   chunk $c%3d " +
-          f"${(System.nanoTime() - tc) / 1e9}%8.2f s  scratch=${scratchBytes() / 1e9}%6.2f GB")
+          f"${(System.nanoTime() - tc) / 1e9}%8.2f s  scratch=${graft.core.DiskStats.scratchBytes() / 1e9}%6.2f GB")
       }
       fs.create(drained, true).close()
     }
@@ -892,9 +742,8 @@ object ProbeRelease {
       println(s"[probe-release] curatepipe   manifest=${manifest.count()}")
     }
     println(f"[probe-release] curatepipe TOTAL ${(System.nanoTime() - t0) / 1e9}%9.2f s  " +
-      f"scratch=${scratchBytes() / 1e9}%6.2f GB")
+      f"scratch=${graft.core.DiskStats.scratchBytes() / 1e9}%6.2f GB")
     if (fs.exists(op)) fs.delete(op, true)
-    spark.stop()
   }
 
   /** SemDeDup cross-cell MISS-RATE probe (VERDICT r12 "What's missing
@@ -909,23 +758,11 @@ object ProbeRelease {
     * multi-probe screen); (c) the mean measured cosine, mapping ε onto
     * the near-dup-threshold axis a user actually tunes. All driver-side:
     * O(sample · V · D) flops, no Spark jobs after the model load.
-    * Usage: runMain graft.ProbeRelease cellmiss [v2|v3|v4] [nSample] [eps:e1,e2,...] */
-  private def probeCellMiss(shapeArg: Option[String], nArg: Option[Int],
-      epsArg: Option[Seq[Double]]): Unit = {
-    val s = shapeArg match {
-      case Some("v3") => ReleaseShape.V3
-      case Some("v4") => ReleaseShape.V4
-      case _ => ReleaseShape.V2
-    }
+    * Usage: runMain graft.ProbeRelease cellmiss [v1..v4] [nSample] [eps:e1,e2,...] */
+  private def probeCellMiss(spark: SparkSession, s: ReleaseShapeDef,
+      nArg: Option[Int], epsArg: Option[Seq[Double]]): Unit = {
     val nSample = nArg.getOrElse(2000)
     val epss = epsArg.getOrElse(Seq(0.05, 0.1, 0.2, 0.5, 1.0, 1.5))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val idx = LopqIndexStore.loadSlim(spark, s.dir).get
     val slim = idx.slim
     def cellOf(x: Array[Float]): Long = {
@@ -970,190 +807,113 @@ object ProbeRelease {
         f"${100.0 * same / nSample}%7.2f%%  ${100.0 * top2 / nSample}%7.2f%%  " +
         f"${100.0 * top3 / nSample}%7.2f%%  ${100.0 * top4 / nSample}%7.2f%%")
     }
-    spark.stop()
+  }
+
+  private val Modes = Seq("annjoin", "cellmiss", "curatepipe", "curation", "dedup",
+    "histogram", "ingest", "rerank", "semdedup", "stream")
+
+  /** `multi:P` of the semdedup mode: the top-P probe width, P ≥ 2. */
+  private def multiWidth(a: String): Int = {
+    val raw = a.stripPrefix("multi:")
+    val p = try raw.toInt catch {
+      case _: NumberFormatException =>
+        sys.error(s"multi:P — P must be an integer, got '$raw'")
+    }
+    require(p >= 2,
+      s"multi:P needs P >= 2 (omit 'multi' for the single-cell sweep), got $p")
+    p
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("histogram")) { probeHistogram(); return }
-    if (args.headOption.contains("curatepipe")) {
-      val rest = args.drop(1)
-      val (resumeArgs, rest0) = rest.partition(_ == "resume")
-      val (multiArgs, restM) = rest0.partition(_ == "multi")
-      val (chunkArgs, rest1) = restM.partition(_.startsWith("chunk"))
-      val (shapeArg, nums) = rest1.partition(a => a == "v2" || a == "v3" || a == "v4")
-      probeCurationPipeline(shapeArg.headOption,
-        nums.lift(0).map(_.toDouble), nums.lift(1).map(_.toDouble),
-        chunkArgs.headOption.map(a =>
-          if (a.startsWith("chunk:")) a.stripPrefix("chunk:").toInt else 0),
-        resume = resumeArgs.nonEmpty,
-        multiProbe = multiArgs.nonEmpty)
-      return
-    }
-    if (args.headOption.contains("cellmiss")) {
-      val rest = args.drop(1)
-      val (epsArgs, rest1) = rest.partition(_.startsWith("eps:"))
-      val (shapeArg, nums) = rest1.partition(a => a == "v2" || a == "v3" || a == "v4")
-      probeCellMiss(shapeArg.headOption, nums.headOption.map(_.toInt),
-        epsArgs.headOption.map(_.stripPrefix("eps:").split(",").toSeq.map(_.toDouble)))
-      return
-    }
-    if (args.headOption.contains("curation")) {
-      val rest = args.drop(1)
-      val (shapeArg, nums) = rest.partition(a =>
-        a == "v1" || a == "v2" || a == "v3" || a == "v4")
-      probeCuration(shapeArg.headOption,
-        nums.lift(0).map(_.toInt), nums.lift(1).map(_.toDouble))
-      return
-    }
-    if (args.headOption.contains("semdedup")) {
-      val rest = args.drop(1)
-      val (sampleArgs, rest1) = rest.partition(_.startsWith("sample:"))
-      val (chunkArgs, rest2) = rest1.partition(_.startsWith("chunk"))
-      val (incrArgs, rest3) = rest2.partition(_.startsWith("incr:"))
-      val (multiArgs, rest4) = rest3.partition(_.startsWith("multi"))
-      val (shapeArg, nums) = rest4.partition(a => a == "v2" || a == "v3" || a == "v4")
-      // `multi` = top-2 (the default width); `multi:P` sets the probe
-      // width conf before the assignment is built (q104 at top-P).
-      // Validated HERE (ADVICE r14): a bad P must fail before the Spark
-      // session and index load, not minutes later inside assignCellsMulti.
-      multiArgs.headOption.filter(_.startsWith("multi:")).foreach { a =>
-        val raw = a.stripPrefix("multi:")
-        val p = try raw.toInt catch {
-          case _: NumberFormatException =>
-            sys.error(s"multi:P — P must be an integer, got '$raw'")
-        }
-        require(p >= 2,
-          s"multi:P needs P >= 2 (omit 'multi' for the single-cell sweep), got $p")
-        System.setProperty(s"spark.graft.probe.conf.${LopqIndexStore.MultiProbeCellsConf}",
-          p.toString)
-      }
-      probeSemDedup(shapeArg.headOption, nums.headOption.map(_.toDouble),
-        sampleArgs.headOption.map(_.stripPrefix("sample:").toLong),
-        chunkArgs.headOption.map(a =>
-          if (a.startsWith("chunk:")) a.stripPrefix("chunk:").toInt else 0),
-        incrArgs.headOption.map(_.stripPrefix("incr:").toLong),
-        multiProbe = multiArgs.nonEmpty)
-      return
-    }
-    if (args.headOption.contains("ingest")) {
-      val rest = args.drop(1)
-      val (sweepArgs, rest1) = rest.partition(_.startsWith("sweep:"))
-      val (multiArgs, rest2) = rest1.partition(_ == "multi")
-      val (shapeArg, nums) = rest2.partition(a => a == "v2" || a == "v3" || a == "v4")
-      probeIngest(shapeArg.headOption, nums.headOption.map(_.toInt),
-        sweepArgs.headOption.map(_.stripPrefix("sweep:").split(",").toSeq.map(_.toDouble)),
-        multiProbe = multiArgs.nonEmpty)
-      return
-    }
-    if (args.headOption.contains("stream")) {
-      val rest = args.drop(1)
-      val (shapeArg, nums) = rest.partition(a => a == "v2" || a == "v3" || a == "v4")
-      val ints = nums.map(_.toInt)
-      probeStreamIngest(shapeArg.headOption, ints.lift(0), ints.lift(1), ints.lift(2))
-      return
-    }
-    if (args.headOption.contains("rerank")) {
-      val which = args.lift(1).getOrElse("v4")
-      val passes = args.lift(2).map(_.toInt).getOrElse(3)
-      probeRerank(which, passes)
-      return
-    }
-    if (args.headOption.contains("dedup")) {
-      val rest = args.drop(1)
-      val (confArgs, rest2) = rest.partition(_.startsWith("conf:"))
-      confArgs.foreach { a =>
-        a.stripPrefix("conf:").split("=", 2) match {
-          case Array(kk, v) => System.setProperty(s"spark.graft.probe.conf.$kk", v)
-          case _ => sys.error(s"bad conf arg (want conf:key=value): $a")
-        }
-      }
-      val (jitterArgs, rest3) = rest2.partition(_.startsWith("jitter"))
-      val jitterEps = jitterArgs.headOption.map {
-        case "jitter" => 0.1
-        case a => a.stripPrefix("jitter:").toDouble
-      }
-      val (chunkArgs, rest4) = rest3.partition(_.startsWith("chunk"))
-      val chunkRows = chunkArgs.headOption.map {
-        case "chunk" => 0L // auto-size from the broadcast-matrix bound
-        case a => a.stripPrefix("chunk:").toLong
-      }
-      val (passArgs, rest5) = rest4.partition(_.startsWith("passes:"))
-      val (shapeArg, numArgs) = rest5.partition(a => a == "v2" || a == "v3" || a == "v4")
-      val nums = numArgs.map(_.toInt)
-      probeDedup(shapeArg.headOption, nums.headOption,
-        quota = nums.lift(1).getOrElse(1000),
-        rerankK = nums.lift(2).getOrElse(32),
-        jitterEps = jitterEps,
-        chunkRows = chunkRows,
-        passesArg = passArgs.headOption.map(_.stripPrefix("passes:").toInt))
-      return
-    }
-    if (args.headOption.contains("annjoin")) {
-      val rest = args.drop(1)
-      // `conf:key=value` args become session confs (A/B-ing the join's
-      // size gates without a rebuild)
-      val (confArgs, rest2) = rest.partition(_.startsWith("conf:"))
-      confArgs.foreach { a =>
-        a.stripPrefix("conf:").split("=", 2) match {
-          case Array(k, v) => System.setProperty(s"spark.graft.probe.conf.$k", v)
-          case _ => sys.error(s"bad conf arg (want conf:key=value): $a")
-        }
-      }
-      val (shapeArg, sizeArgs) = rest2.partition(a => a == "v2" || a == "v3" || a == "v4")
-      val sizes = if (sizeArgs.nonEmpty) sizeArgs.toSeq.map(_.toInt)
-                  else Seq(250, 1000, 2000)
-      probeAnnJoin(shapeArg.headOption, sizes)
-      return
-    }
-    val s = args.headOption.getOrElse("v3") match {
-      case "v2" => ReleaseShape.V2
-      case "v4" => ReleaseShape.V4
-      case _ => ReleaseShape.V3
-    }
-    val qid = args.drop(1).headOption.map(_.toLong).getOrElse(997L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val mode = args.headOption.getOrElse("")
+    require(Modes.contains(mode), s"unknown ProbeRelease mode '$mode' " +
+      s"(want one of ${Modes.mkString("|")}; the per-stage split of one slim " +
+      "query is `runMain graft.Probe serve`)")
+    if (mode == "histogram") { probeHistogram(); return }
+    // a bad P must fail before the Spark session and index load (ADVICE
+    // r14), not minutes later inside assignCellsMulti
+    if (mode == "semdedup") args.filter(_.startsWith("multi:")).foreach(multiWidth)
+    // dedup's broadcast-qvec exact stage collects the probe matrix
+    // (O(probes·D) — ~1.2 GB at the 600k × 512-d self-dedup) to the
+    // driver before broadcasting; the default 1g maxResultSize is sized
+    // for accidental collects, not this deliberate one
+    val extra = if (mode == "dedup") Seq("spark.driver.maxResultSize" -> "4g") else Nil
+    val spark = Probe.session(extra: _*)
+    try run(spark, mode, Probe.confArgs(spark, args.toSeq.drop(1), "probe-release").toSeq)
+    finally spark.stop()
+  }
 
-    def t[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[probe-release] $label%-22s ${(System.nanoTime() - t0) / 1e6}%9.1f ms")
-      r
+  private def run(spark: SparkSession, mode: String, rest: Seq[String]): Unit = {
+    val (shapeArgs, other) = rest.partition(Probe.isShapeArg)
+    val s = Probe.shape(shapeArgs.headOption, ReleaseShape.V2)
+    mode match {
+      case "curatepipe" =>
+        val (resumeArgs, rest0) = other.partition(_ == "resume")
+        val (multiArgs, restM) = rest0.partition(_ == "multi")
+        val (chunkArgs, nums) = restM.partition(_.startsWith("chunk"))
+        probeCurationPipeline(spark, s,
+          nums.lift(0).map(_.toDouble), nums.lift(1).map(_.toDouble),
+          chunkArgs.headOption.map(a =>
+            if (a.startsWith("chunk:")) a.stripPrefix("chunk:").toInt else 0),
+          resume = resumeArgs.nonEmpty,
+          multiProbe = multiArgs.nonEmpty)
+      case "cellmiss" =>
+        val (epsArgs, nums) = other.partition(_.startsWith("eps:"))
+        probeCellMiss(spark, s, nums.headOption.map(_.toInt),
+          epsArgs.headOption.map(_.stripPrefix("eps:").split(",").toSeq.map(_.toDouble)))
+      case "curation" =>
+        probeCuration(spark, s, other.lift(0).map(_.toInt), other.lift(1).map(_.toDouble))
+      case "semdedup" =>
+        val (sampleArgs, rest1) = other.partition(_.startsWith("sample:"))
+        val (chunkArgs, rest2) = rest1.partition(_.startsWith("chunk"))
+        val (incrArgs, rest3) = rest2.partition(_.startsWith("incr:"))
+        val (multiArgs, nums) = rest3.partition(_.startsWith("multi"))
+        // `multi` = top-2 (the default width); `multi:P` sets the probe
+        // width conf before the assignment is built (q104 at top-P)
+        multiArgs.headOption.filter(_.startsWith("multi:")).foreach { a =>
+          spark.conf.set(LopqIndexStore.MultiProbeCellsConf, multiWidth(a).toString)
+        }
+        probeSemDedup(spark, s, nums.headOption.map(_.toDouble),
+          sampleArgs.headOption.map(_.stripPrefix("sample:").toLong),
+          chunkArgs.headOption.map(a =>
+            if (a.startsWith("chunk:")) a.stripPrefix("chunk:").toInt else 0),
+          incrArgs.headOption.map(_.stripPrefix("incr:").toLong),
+          multiProbe = multiArgs.nonEmpty)
+      case "ingest" =>
+        val (sweepArgs, rest1) = other.partition(_.startsWith("sweep:"))
+        val (multiArgs, nums) = rest1.partition(_ == "multi")
+        probeIngest(spark, s, nums.headOption.map(_.toInt),
+          sweepArgs.headOption.map(_.stripPrefix("sweep:").split(",").toSeq.map(_.toDouble)),
+          multiProbe = multiArgs.nonEmpty)
+      case "stream" =>
+        val ints = other.map(_.toInt)
+        probeStreamIngest(spark, s, ints.lift(0), ints.lift(1), ints.lift(2))
+      case "rerank" =>
+        probeRerank(spark, rest.headOption.getOrElse("v4"),
+          rest.lift(1).map(_.toInt).getOrElse(3))
+      case "dedup" =>
+        val (jitterArgs, rest1) = other.partition(_.startsWith("jitter"))
+        val jitterEps = jitterArgs.headOption.map {
+          case "jitter" => 0.1
+          case a => a.stripPrefix("jitter:").toDouble
+        }
+        val (chunkArgs, rest2) = rest1.partition(_.startsWith("chunk"))
+        val chunkRows = chunkArgs.headOption.map {
+          case "chunk" => 0L // auto-size from the broadcast-matrix bound
+          case a => a.stripPrefix("chunk:").toLong
+        }
+        val (passArgs, numArgs) = rest2.partition(_.startsWith("passes:"))
+        val nums = numArgs.map(_.toInt)
+        probeDedup(spark, s, nums.headOption,
+          quota = nums.lift(1).getOrElse(1000),
+          rerankK = nums.lift(2).getOrElse(32),
+          jitterEps = jitterEps,
+          chunkRows = chunkRows,
+          passesArg = passArgs.headOption.map(_.stripPrefix("passes:").toInt))
+      case "annjoin" =>
+        // `conf:key=value` args A/B the join's size gates without a rebuild
+        val sizes = if (other.nonEmpty) other.map(_.toInt) else Seq(250, 1000, 2000)
+        probeAnnJoin(spark, s, sizes)
     }
-
-    val idx = t("loadSlim")(LopqIndexStore.loadSlim(spark, s.dir).get)
-    val vectors = ReleaseShape.vectors(spark, s.dir)
-    (1 to 3).foreach { pass =>
-      println(s"--- pass $pass (query $qid) ---")
-      val query = ReleaseShape.rowVecFor(s, qid)
-      val aq = t("pca")(idx.pca.map(_.apply(query)).getOrElse(query))
-      val (d0, d1) = t("coarseDistances")(idx.slim.coarseDistances(aq))
-      val cells = t("selectCells")(
-        LopqSearcher.selectCellsFrom(idx.slim.v, d0, d1, ReleaseShape.Quota, idx.cellCounts))
-      val keys = cells.flatMap { c =>
-        val (c0, c1) = CellMath.unpackCell(c, idx.slim.v); Seq((0, c0), (1, c1))
-      }.distinct
-      val rot = t(s"slices(${keys.size})")(
-        LopqIndexStore.rotationSlices(spark, s.dir, keys))
-      val tables = t(s"adcTables(${cells.size})")(
-        cells.map { c =>
-          val cc = CellMath.unpackCell(c, idx.slim.v)
-          (c, idx.slim.adcTables(aq, cc, (sp, cl) => rot((sp, cl))).map(_.toSeq).toSeq)
-        })
-      import spark.implicits._
-      val tablesDf = tables.toDF("cell_id", "adc_tables")
-      val full = t("searchSlim e2e")(
-        LopqSearcher.searchSlim(idx, vectors, "vec_id", "embedding", query,
-          ReleaseShape.Quota, ReleaseShape.TopK, ReleaseShape.RerankK))
-      t("materialize")(full.write.format("noop").mode("overwrite").save())
-      val _ = tablesDf
-    }
-    spark.stop()
   }
 }

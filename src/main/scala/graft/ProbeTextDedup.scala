@@ -43,7 +43,9 @@ import org.apache.spark.sql.functions._
   *     (numHashes × bands) setting, and a real-corpus
   *     [[graft.ops.TextOps.lshPairsOf]] run per setting anchors the cost.
   *
-  * (SPARK_DRIVER_MEM ≥ 32g recommended at 4M docs.)
+  * Every mode runs on the [[Probe.session]] and accepts `conf:key=value`
+  * args ([[Probe.confArgs]]). (SPARK_DRIVER_MEM ≥ 32g recommended at 4M
+  * docs.)
   */
 object ProbeTextDedup {
 
@@ -73,18 +75,6 @@ object ProbeTextDedup {
     tokens.mkString(" ")
   }
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    spark
-  }
-
   /** Probe scratch root — derived via [[graft.ops.Tables.scratch]]
     * (conf override, else `user.dir`/target) instead of a hardcoded repo
     * path; under sbt this resolves to the same `target/graft-text/...`
@@ -92,16 +82,9 @@ object ProbeTextDedup {
   private def textRoot(spark: SparkSession, nDocs: Long, clique: Int): String =
     graft.ops.Tables.scratch(spark, s"graft-text/n${nDocs}_c$clique")
 
-  private def stage[A](label: String)(body: => A): A = {
-    val b0 = graft.core.DiskStats.readBytes()
-    val t0 = System.nanoTime()
-    val r = body
-    val sec = (System.nanoTime() - t0) / 1e9
-    val gb = (graft.core.DiskStats.readBytes() - b0) / 1e9
-    println(f"[probe-text] stage $label%-12s $sec%9.2f s  read=$gb%7.2f GB  " +
-      f"scratch=${graft.core.DiskStats.scratchBytes() / 1e9}%6.2f GB")
-    r
-  }
+  private def stage[A](label: String)(body: => A): A =
+    Probe.timed("probe-text", f"stage $label%-12s",
+      f"  scratch=${graft.core.DiskStats.scratchBytes() / 1e9}%6.2f GB")(body)
 
   private def dropCaches(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
@@ -129,23 +112,28 @@ object ProbeTextDedup {
     staged
   }
 
-  def main(args: Array[String]): Unit = args.headOption match {
-    case Some("screen") => runScreen(args.drop(1))
-    case Some("simhash") => runSimhash(args.drop(1))
-    case Some("lshcurve") => runLshCurve(args.drop(1))
-    case _ => runChain(args)
+  def main(args: Array[String]): Unit = {
+    val spark = Probe.session()
+    try {
+      val rest = Probe.confArgs(spark, args.toSeq, "probe-text")
+      rest.headOption match {
+        case Some("screen") => runScreen(spark, rest.drop(1))
+        case Some("simhash") => runSimhash(spark, rest.drop(1))
+        case Some("lshcurve") => runLshCurve(spark, rest.drop(1))
+        case _ => runChain(spark, rest)
+      }
+    } finally spark.stop()
   }
 
   // ------------------------------------------------ r14: the batch chain
 
-  private def runChain(args: Array[String]): Unit = {
+  private def runChain(spark: SparkSession, args: Array[String]): Unit = {
     val nums = args.filter(_.forall(_.isDigit)).map(_.toLong)
     val nDocs = nums.headOption.getOrElse(4000000L)
     val clique = args.find(_.startsWith("clique:"))
       .map(_.stripPrefix("clique:").toInt).getOrElse(5000)
     val naive = args.contains("naive")
     val keep = args.contains("keep")
-    val spark = session()
 
     val route = if (naive) "naive" else "collapsed"
     val root = textRoot(spark, nDocs, clique)
@@ -191,7 +179,6 @@ object ProbeTextDedup {
     println(f"[probe-text] TOTAL ${(System.nanoTime() - t0) / 1e9}%9.2f s  " +
       f"scratch=${graft.core.DiskStats.scratchBytes() / 1e9}%6.2f GB")
     if (!keep) fs.delete(new org.apache.hadoop.fs.Path(edgesDir), true)
-    spark.stop()
   }
 
   private def auditComponents(spark: SparkSession, docsDf: DataFrame,
@@ -249,8 +236,7 @@ object ProbeTextDedup {
     toks.mkString(" ")
   }
 
-  private def runScreen(args: Array[String]): Unit = {
-    import org.apache.spark.sql.SparkSession
+  private def runScreen(spark: SparkSession, args: Array[String]): Unit = {
     val nums = args.filter(_.forall(_.isDigit)).map(_.toLong)
     val nDocs = nums.headOption.getOrElse(4000000L)
     val clique = args.find(_.startsWith("clique:"))
@@ -266,11 +252,10 @@ object ProbeTextDedup {
     val majorRatio = args.find(_.startsWith("major:"))
       .map(_.stripPrefix("major:").toDouble)
     if (nBatches > 1) {
-      runScreenSeq(nDocs, clique, batchN, nBatches, majorRatio, args); return
+      runScreenSeq(spark, nDocs, clique, batchN, nBatches, majorRatio, args); return
     }
     val rerun = args.contains("rerun")
     val keep = args.contains("keep")
-    val spark = session()
     val (simTier, simBits) = applyScreenConfs(spark, args)
     val lp = graft.ops.TextOps.lshParams(spark)
     import spark.implicits._
@@ -382,7 +367,6 @@ object ProbeTextDedup {
     println(f"[probe-text] TOTAL ${(System.nanoTime() - t0) / 1e9}%9.2f s  " +
       f"scratch=${graft.core.DiskStats.scratchBytes() / 1e9}%6.2f GB")
     if (!keep) fs.delete(new org.apache.hadoop.fs.Path(storeDir), true)
-    spark.stop()
   }
 
   /** M sequential batches against a SELF-CONTAINED store — the streaming
@@ -449,9 +433,8 @@ object ProbeTextDedup {
     }
   }
 
-  private def runScreenSeq(nDocs: Long, clique: Int, batchN: Long,
+  private def runScreenSeq(spark: SparkSession, nDocs: Long, clique: Int, batchN: Long,
       m: Int, majorRatio: Option[Double], args: Array[String]): Unit = {
-    val spark = session()
     import spark.implicits._
     majorRatio.foreach(r =>
       spark.conf.set(graft.ops.SideStoreFold.MajorRatioConf, r.toString))
@@ -590,12 +573,11 @@ object ProbeTextDedup {
     println(f"[probe-text] TOTAL ${(System.nanoTime() - t0) / 1e9}%9.2f s  " +
       f"scratch=${graft.core.DiskStats.scratchBytes() / 1e9}%6.2f GB")
     fs.delete(new org.apache.hadoop.fs.Path(storeDir), true)
-    spark.stop()
   }
 
   // ------------------------------------------------ r15: simhash chain
 
-  private def runSimhash(args: Array[String]): Unit = {
+  private def runSimhash(spark: SparkSession, args: Array[String]): Unit = {
     val nums = args.filter(_.forall(_.isDigit)).map(_.toLong)
     val nDocs = nums.headOption.getOrElse(4000000L)
     val clique = args.find(_.startsWith("clique:"))
@@ -606,7 +588,6 @@ object ProbeTextDedup {
     // corpus magnitude — the width sweep is this probe's reason to exist)
     val bits = args.find(_.startsWith("bits:"))
       .map(_.stripPrefix("bits:").toInt)
-    val spark = session()
     bits.foreach(b =>
       spark.conf.set(graft.ops.TextOps.SimhashBitsConf, b.toString))
     val route = if (naive) "naive" else "collapsed"
@@ -642,7 +623,6 @@ object ProbeTextDedup {
     println(f"[probe-text] TOTAL ${(System.nanoTime() - t0) / 1e9}%9.2f s  " +
       f"scratch=${graft.core.DiskStats.scratchBytes() / 1e9}%6.2f GB")
     if (!keep) fs.delete(new org.apache.hadoop.fs.Path(edgesDir), true)
-    spark.stop()
   }
 
   // ------------------------------------- r15: LSH operating-point curve
@@ -660,12 +640,11 @@ object ProbeTextDedup {
     (base.mkString(" "), variant.mkString(" "))
   }
 
-  private def runLshCurve(args: Array[String]): Unit = {
+  private def runLshCurve(spark: SparkSession, args: Array[String]): Unit = {
     val nums = args.filter(_.forall(_.isDigit)).map(_.toLong)
     val nPairs = nums.headOption.getOrElse(50000L)
     val corpusN = args.find(_.startsWith("corpus:"))
       .map(_.stripPrefix("corpus:").toLong).getOrElse(500000L)
-    val spark = session()
     import spark.implicits._
     import graft.ops.TextOps
     val points = Seq((16, 2), (16, 4), (16, 8), (32, 8), (32, 16))
@@ -742,6 +721,5 @@ object ProbeTextDedup {
     }
     spark.conf.unset(TextOps.NumHashesConf)
     spark.conf.unset(TextOps.BandsConf)
-    spark.stop()
   }
 }

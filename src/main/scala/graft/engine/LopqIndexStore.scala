@@ -283,45 +283,21 @@ object LopqIndexStore {
     LopqProto.export(s"$dir/model.pb", model)
   }
 
+  /** The full model: [[loadModelSlim]]'s components plus the rotation
+    * tensor, read from the `part = 'rot'` files alone. */
   def loadModel(spark: SparkSession, dir: String): (LopqModel, Option[LopqPca]) = {
-    val meta = readMeta(dir).getOrElse(sys.error(s"no meta.json under $dir"))
-    val v = meta("v").toInt
-    val mTotal = meta("m").toInt
-    val renorm = meta.getOrElse("renorm", "false").toBoolean
-    val rows = spark.read.parquet(s"$dir/model")
-      .select("part", "split", "a", "b", "vec").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getSeq[Double](4).toArray))
-
-    def floats(part: String): Map[(Int, Int, Int), Array[Float]] =
-      rows.filter(_._1 == part)
-        .map(r => (r._2, r._3, r._4) -> r._5.map(_.toFloat)).toMap
-
-    val coarseM = floats("coarse")
-    val muM = floats("mu")
-    val rotM = floats("rot")
-    val subqM = floats("subq")
-    val halfDim = coarseM((0, 0, -1)).length
-    val fineSplits = mTotal / 2
-    val subClusters = subqM.keys.map(_._3).max + 1
-
+    val (slim, pca) = loadModelSlim(spark, dir)
+    val rotM = spark.read.parquet(s"$dir/model")
+      .where(col("part") === "rot")
+      .select("split", "a", "b", "vec").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) ->
+        r.getSeq[Double](3).toArray.map(_.toFloat))
+      .toMap
     val model = LopqModel(
-      coarse = Array.tabulate(2, v)((s, c) => coarseM((s, c, -1))),
-      rotations = Array.tabulate(2, v, halfDim)((s, c, k) => rotM((s, c, k))),
-      mus = Array.tabulate(2, v)((s, c) => muM((s, c, -1))),
-      subquantizers = Array.tabulate(2, fineSplits, subClusters)((s, f, sc) => subqM((s, f, sc))))
-
-    val pcaDims = meta.getOrElse("pcaDims", "0").toInt
-    val pca =
-      if (pcaDims == 0) None
-      else {
-        val doubles = rows.filter(r => r._1 == "pca_mu" || r._1 == "pca_p")
-          .map(r => (r._1, r._3) -> r._5).toMap
-        Some(LopqPca(
-          mu = doubles(("pca_mu", -1)),
-          p = Array.tabulate(pcaDims)(j => doubles(("pca_p", j))),
-          renorm = renorm))
-      }
+      coarse = slim.coarse,
+      rotations = Array.tabulate(2, slim.v, slim.halfDim)((s, c, k) => rotM((s, c, k))),
+      mus = slim.mus,
+      subquantizers = slim.subquantizers)
     (model, pca)
   }
 

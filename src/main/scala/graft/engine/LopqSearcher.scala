@@ -128,7 +128,7 @@ object LopqSearcher {
     * cell's tables are a pure function of immutable inputs (query
     * projection, codebooks, fetched rotation slices), so the only effect
     * of the parallelism is wall-clock — content is deterministic. */
-  private def parTables(cells: Seq[Int], tablesOf: ((Int, Int)) => Array[Array[Double]],
+  private[graft] def parTables(cells: Seq[Int], tablesOf: ((Int, Int)) => Array[Array[Double]],
       v: Int): Seq[(Int, Array[Array[Double]])] = {
     import scala.collection.parallel.CollectionConverters._
     cells.par.map(cell => cell -> tablesOf(CellMath.unpackCell(cell, v))).seq
@@ -201,15 +201,13 @@ object LopqSearcher {
     * and every row surviving the cell filter has its cell in the map, so
     * the inner join dropped nothing this form keeps). */
   /** Flatten per-cell ADC tables (mi-major, M·S doubles per cell) onto a
-    * broadcast variable — shared by the serve path and
-    * `ProbeServeBreakdown` so the probe measures exactly the shipped
-    * layout. Lifecycle parity with the broadcast JOIN this replaced: the
+    * broadcast variable. Lifecycle parity with the broadcast JOIN this replaced: the
     * old per-query LocalRelation also materialized as a per-query
     * TorrentBroadcast (the `BroadcastExchange`), released by the
     * ContextCleaner once the plan became unreachable — same here, so a
     * long-running serve process accretes no more broadcast state than it
     * did before r19. */
-  private[graft] def broadcastFlatTables(spark: org.apache.spark.sql.SparkSession,
+  private def broadcastFlatTables(spark: org.apache.spark.sql.SparkSession,
       tables: Seq[(Int, Array[Array[Double]])])
       : (org.apache.spark.broadcast.Broadcast[java.util.HashMap[Integer, Array[Double]]], Int) = {
     val m = tables.head._2.length
@@ -224,7 +222,7 @@ object LopqSearcher {
     (spark.sparkContext.broadcast(flat), m)
   }
 
-  private def approxOverCells(codes: DataFrame, cells: Seq[Int],
+  private[graft] def approxOverCells(codes: DataFrame, cells: Seq[Int],
       tables: Seq[(Int, Array[Array[Double]])], k: Int, cellBuckets: Int): DataFrame = {
     val spark = codes.sparkSession
     ensureInPushdown(spark, cells.size)

@@ -160,14 +160,19 @@ private[graft] object SideStoreFold {
   private def plainRuns(fs: FileSystem, root: String): Seq[RunArt] =
     listArts(fs, root).filter(a => !a.isMerge && a.isComplete).sortBy(_.lo)
 
-  /** The base level's readable root: a COMPLETE not-yet-promoted
-    * `_base_next` (a superset of `_base` by construction) beats the base
-    * itself. Also used for the LEGACY `_tier` pair on the read path. */
+  /** The base level's readable data files: those of a COMPLETE
+    * not-yet-promoted `_base_next` (a superset of `_base` by construction),
+    * else those of the base itself. Files, not the level's directory: Spark
+    * treats a `_`-named root as hidden and logs "All paths were ignored"
+    * whenever it is a read's only root (a fully folded side). Also used for
+    * the LEGACY `_tier` pair on the read path. */
   private def levelToRead(fs: FileSystem, lvl: Path, next: Path)
-      : Seq[String] =
-    if (complete(fs, next)) Seq(next.toString)
-    else if (fs.exists(lvl)) Seq(lvl.toString)
-    else Seq.empty
+      : Seq[String] = {
+    val dir = if (complete(fs, next)) Some(next) else Some(lvl).filter(fs.exists)
+    dir.toSeq.flatMap(d => fs.listStatus(d).toSeq.map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+      .map(n => new Path(d, n).toString))
+  }
 
   /** Every compacted root a reader unions with the un-folded deltas:
     * base level, the run ladder, and any legacy single-tier artifact a

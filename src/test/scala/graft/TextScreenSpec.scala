@@ -251,9 +251,19 @@ class TextScreenSpec extends SparkSpec {
       assert(c1.subsetOf(c2) && c2.size > c1.size)
       // read-path equivalence across tier states: the same rows read
       // from (base + tier) and from the explicitly full-folded base
+      val rows2 = TextSigStore.sigs(spark, dir).count()
       TextSigStore.compact(spark, dir)
       assert(entries() === Seq("_base"))
       assert(content() === c2)
+      assert(TextSigStore.sigs(spark, dir).count() === rows2)
+      // the fully folded side is read through the base's data files, not
+      // the `_base` directory: Spark treats a `_`-named root as hidden and
+      // logs "All paths were ignored" for a read whose only root it is
+      val roots = SideStoreFold.storedRoots(fs, s"$dir/sigs")
+      assert(roots.nonEmpty && roots.forall { r =>
+        val leaf = new org.apache.hadoop.fs.Path(r).getName
+        !leaf.startsWith("_") && !leaf.startsWith(".")
+      }, roots)
       // force the major path (ratio 0 ⇒ any tier is due): the next
       // cycle's valve minor-folds its delta then majors tier → base
       spark.conf.set(graft.ops.SideStoreFold.MajorRatioConf, "0.0")
