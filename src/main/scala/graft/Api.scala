@@ -26,16 +26,15 @@ final class GraftApi(spark: SparkSession, sfDir: String,
   private def vectors: DataFrame = Tables(spark, sfDir, "embeddings")
 
   /** Conf-driven searcher selection, like the reference's `get_searcher`
-    * registry dispatch. `lopq_slim` serves the SAME persisted index through
-    * the release-magnitude path (rotation tensor never driver-resident). */
+    * registry dispatch. `lopq` and `lopq_slim` run the same serve plan over
+    * the SAME persisted index; `lopq_slim` reads rotation slices per query
+    * instead of holding the tensor (the release-magnitude path). */
   private def searcher: AnnIndex = searcherName match {
     case "lopq" =>
       AnnIndexes.lopq(EngineOps.index(spark, sfDir), vectors, "vec_id", "embedding")
     case "lopq_slim" =>
       EngineOps.index(spark, sfDir) // ensure built + persisted
-      AnnIndexes.lopqSlim(
-        graft.engine.LopqIndexStore.loadSlim(spark, EngineOps.indexDir(sfDir)).get,
-        vectors, "vec_id", "embedding")
+      AnnIndexes.lopqSlim(EngineOps.slimIndex(spark, sfDir), vectors, "vec_id", "embedding")
     case "brute" => AnnIndexes.brute(vectors, "vec_id", "embedding")
     case other => throw new IllegalArgumentException(s"unknown searcher: $other")
   }
@@ -71,9 +70,7 @@ final class GraftApi(spark: SparkSession, sfDir: String,
   def searchBulk(queries: DataFrame, qIdCol: String, vecCol: String, k: Int,
       quota: Int = 200, rerankK: Int = 50): DataFrame = {
     EngineOps.index(spark, sfDir) // ensure built + persisted
-    val slim = graft.engine.LopqIndexStore
-      .loadSlim(spark, EngineOps.indexDir(sfDir)).get
-    graft.engine.LopqSearcher.annJoin(slim, queries, qIdCol, vecCol,
+    graft.engine.LopqSearcher.annJoin(EngineOps.slimIndex(spark, sfDir), queries, qIdCol, vecCol,
         vectors, "vec_id", "embedding", quota, k, rerankK)
       .select(col("q_id"), col("rank"), col("id").as("n_id"),
         floor(col("exact_dist") * 1e6 + lit(0.5)).cast("long").as("micro"))
@@ -469,7 +466,7 @@ final class GraftApi(spark: SparkSession, sfDir: String,
     }
     val h = EngineOps.index(spark, sfDir)
     val kept = graft.ops.VectorQueries.protoPrune(surv, "vec_id",
-        "embedding", h.model, keepFrac, h.pca)
+        "embedding", h.model.slim, keepFrac, h.pca)
       .where(col("keep"))
       .select(col("id"), col("cell_id"), col("proto_dist"))
       .localCheckpoint()
@@ -490,6 +487,6 @@ final class GraftApi(spark: SparkSession, sfDir: String,
     // pca=None today, so this is armor, not a behavior change)
     val h = EngineOps.index(spark, sfDir)
     graft.ops.VectorQueries.protoPrune(vectors, "vec_id", "embedding",
-      h.model, keepFrac, h.pca)
+      h.model.slim, keepFrac, h.pca)
   }
 }

@@ -2,14 +2,15 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
 
-import graft.core.{CellMath, DiskStats}
-import graft.engine.{LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef, RerankShape}
+import graft.core.DiskStats
+import graft.engine.{LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef, RerankShape, RotationSource}
 
 /** The dev probe harness, and the small probes as its modes.
   *
@@ -129,28 +130,48 @@ object Probe {
     r
   }
 
+  /** A job's label: the caller's description or short call site when set,
+    * else the call site of the SQL action that ran it (its execution's
+    * description, e.g. `count at LopqSearcher.scala:123`; every job of one
+    * action, AQE's asynchronous stage jobs included, carries its execution
+    * id), else its last stage's name, which Spark fills with the call site
+    * of an RDD action. */
+  private def jobLabel(e: SparkListenerJobStart, sqlDescriptions: ConcurrentHashMap[Long, String])
+      : String = {
+    def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+    prop("spark.job.description").orElse(prop("callSite.short"))
+      .orElse(prop("spark.sql.execution.id").flatMap(id => Option(sqlDescriptions.get(id.toLong))))
+      .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+      .getOrElse("?")
+  }
+
   /** Runs `body` with a listener that prints, under `[tag]`, every Spark
     * job's wall time and every stage over 100 ms (tasks, executor CPU and
     * run time, records read and shuffled). The listener is removed, after
-    * the listener bus has delivered the body's events, when `body` returns. */
+    * the listener bus has delivered the body's events, when `body` returns.
+    * Lines go to the caller's `Console.out`, not the listener thread's. */
   def census[A](spark: SparkSession, tag: String)(body: => A): A = {
+    val out = Console.out
     val jobStarts = new ConcurrentHashMap[Int, (Long, String)]()
+    val sqlDescriptions = new ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => sqlDescriptions.put(x.executionId, x.description)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobStarts.put(e.jobId,
-          (System.nanoTime(), Option(e.properties.getProperty("spark.job.description"))
-            .orElse(Option(e.properties.getProperty("callSite.short"))).getOrElse("?").take(90)))
+        jobStarts.put(e.jobId, (System.nanoTime(), jobLabel(e, sqlDescriptions).take(90)))
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val st = jobStarts.remove(e.jobId)
         if (st != null)
-          println(f"[$tag]   job ${e.jobId}%3d ${(System.nanoTime() - st._1) / 1e6}%9.1f ms  ${st._2}")
+          out.println(f"[$tag]   job ${e.jobId}%3d ${(System.nanoTime() - st._1) / 1e6}%9.1f ms  ${st._2}")
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         val wall = (for (a <- si.completionTime; b <- si.submissionTime) yield a - b).getOrElse(-1L)
         val tm = si.taskMetrics
         if (wall > 100)
-          println(f"[$tag]     stage ${si.stageId}%3d ${wall}%7d ms  tasks=${si.numTasks}%3d" +
+          out.println(f"[$tag]     stage ${si.stageId}%3d ${wall}%7d ms  tasks=${si.numTasks}%3d" +
             f"  cpu=${tm.executorCpuTime / 1000000}%6d ms run=${tm.executorRunTime}%6d ms" +
             f"  in=${tm.inputMetrics.recordsRead}%9d sw=${tm.shuffleWriteMetrics.recordsWritten}%8d" +
             f" sr=${tm.shuffleReadMetrics.recordsRead}%8d  ${si.name.take(60)}")
@@ -250,13 +271,7 @@ object Probe {
           val (d0, d1) = slim.coarseDistances(aq)
           (aq, LopqSearcher.selectCellsFrom(slim.v, d0, d1, ReleaseShape.Quota, idx.cellCounts))
         }
-        val rot = lap(1) {
-          val keys = cells.flatMap { cell =>
-            val (c0, c1) = CellMath.unpackCell(cell, slim.v)
-            Seq((0, c0), (1, c1))
-          }.distinct
-          LopqIndexStore.rotationSlices(spark, idx.dir, keys)
-        }
+        val rot = lap(1)(idx.rotations.slices(RotationSource.keysOf(cells, slim.v)))
         val tables = lap(2)(LopqSearcher.parTables(cells,
           cc => slim.adcTables(aq, cc, (sp, c) => rot((sp, c))), slim.v))
         val approx = lap(3)(LopqSearcher.approxOverCells(idx.codes, cells, tables,

@@ -413,11 +413,16 @@ object ProbeRelease {
       nBatchesArg: Option[Int], rowsArg: Option[Int],
       compactAtArg: Option[Int]): Unit = {
     import org.apache.spark.sql.functions._
+    val srcDir = s.dir
+    // check the source index first: everything below deletes, copies or
+    // stages batch files
+    require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$srcDir/meta.json")),
+      s"no release index under $srcDir (meta.json missing); build it first " +
+        "with runMain graft.BuildRelease")
     val nBatches = nBatchesArg.getOrElse(16)
     val batchRows = rowsArg.getOrElse(1000)
     val compactAt = compactAtArg.getOrElse(6)
     spark.conf.set(graft.ops.SideStoreFold.CompactAtConf, compactAt.toString)
-    val srcDir = s.dir
     val cloneDir = srcDir + "_stream_probe"
     val stagedDir = srcDir + "_stream_probe_src"
     val ckpt = cloneDir + "/_ckpt"
@@ -645,7 +650,7 @@ object ProbeRelease {
     val vectors = ReleaseShape.vectors(spark, s.dir)
     (1 to 3).foreach { pass =>
       val t0 = System.nanoTime()
-      val r = graft.ops.VectorQueries.protoPruneSlim(vectors, "vec_id",
+      val r = graft.ops.VectorQueries.protoPrune(vectors, "vec_id",
           "embedding", idx.slim, keepFrac, idx.pca)
         .agg(sum(when(col("keep"), 1L).otherwise(0L)), count(lit(1))).head()
       println(f"[probe-release] protoPrune pass $pass  " +
@@ -727,7 +732,7 @@ object ProbeRelease {
     val kept = stage("protoPrune") {
       val surv = graft.ops.TextOps.antiJoinIds(vectors, "vec_id", losers)
       val k = graft.ops.VectorQueries
-        .protoPruneSlim(surv, "vec_id", "embedding", idx.slim, keepFrac, idx.pca)
+        .protoPrune(surv, "vec_id", "embedding", idx.slim, keepFrac, idx.pca)
         .where(col("keep"))
         .select(col("id"), col("cell_id"), col("proto_dist"))
         .localCheckpoint()

@@ -24,7 +24,7 @@ trait AnnIndex {
   * `lopq/lopq/eval.py:7-38`). One codegen'd distance per row, then
   * `TakeOrderedAndProject`; no index build. Guarded: refuses above
   * `spark.graft.allpairs.maxRows` so the eval baseline can't silently
-  * become a production plan (use [[LopqAnnIndex]] at scale). */
+  * become a production plan (use [[LopqSlimAnnIndex]] at scale). */
 final class BruteForceIndex(vectors: DataFrame, idCol: String, vecCol: String)
   extends AnnIndex {
   val name = "brute"
@@ -42,24 +42,15 @@ final class BruteForceIndex(vectors: DataFrame, idCol: String, vecCol: String)
 }
 
 /** The LOPQ ANN engine behind the plugin trait: persisted partition-pruned
-  * codes + ADC + exact rerank (ref `searcher_lopqhbase.py:862-912`). */
-final class LopqAnnIndex(index: LopqIndex, vectors: DataFrame, idCol: String,
-    vecCol: String, quota: Int, rerankK: Int) extends AnnIndex {
-  val name = "lopq"
-  def count: Long = index.cellCounts.total
-  def search(query: Array[Float], k: Int): DataFrame =
-    LopqSearcher.search(index.codes, vectors, idCol, vecCol, index.model,
-      query, quota, k, rerankK, index.cellCounts, index.pca, index.cellBuckets)
-      .select(col("id"), col("exact_dist").as("dist"))
-}
-
-/** The release-MAGNITUDE searcher behind the same plugin trait: slim serve —
-  * the rotation tensor never driver-resident, per-query slice fetch (see
-  * [[SlimLopqModel]]). A facade user switches searchers by name, exactly
-  * like flipping the reference's searcher conf. */
-final class LopqSlimAnnIndex(index: LopqSlimIndex, vectors: DataFrame,
+  * codes + ADC + exact rerank (ref `searcher_lopqhbase.py:862-912`) through
+  * [[LopqSearcher.searchSlim]]. Registered as `lopq` over a full-model
+  * handle ([[LopqIndex.serving]], resident rotation tensor) and as
+  * `lopq_slim` over a [[LopqIndexStore.loadSlim]] handle (the
+  * release-MAGNITUDE shape: per-query slice fetch, see [[SlimLopqModel]]).
+  * A facade user switches searchers by name, exactly like flipping the
+  * reference's searcher conf. */
+final class LopqSlimAnnIndex(val name: String, index: LopqSlimIndex, vectors: DataFrame,
     idCol: String, vecCol: String, quota: Int, rerankK: Int) extends AnnIndex {
-  val name = "lopq_slim"
   def count: Long = index.cellCounts.total
   def search(query: Array[Float], k: Int): DataFrame =
     LopqSearcher.searchSlim(index, vectors, idCol, vecCol, query, quota, k, rerankK)
@@ -73,8 +64,8 @@ object AnnIndexes {
     new BruteForceIndex(vectors, idCol, vecCol)
   def lopq(index: LopqIndex, vectors: DataFrame, idCol: String, vecCol: String,
       quota: Int = 200, rerankK: Int = 50): AnnIndex =
-    new LopqAnnIndex(index, vectors, idCol, vecCol, quota, rerankK)
+    new LopqSlimAnnIndex("lopq", index.serving, vectors, idCol, vecCol, quota, rerankK)
   def lopqSlim(index: LopqSlimIndex, vectors: DataFrame, idCol: String,
       vecCol: String, quota: Int = 200, rerankK: Int = 50): AnnIndex =
-    new LopqSlimAnnIndex(index, vectors, idCol, vecCol, quota, rerankK)
+    new LopqSlimAnnIndex("lopq_slim", index, vectors, idCol, vecCol, quota, rerankK)
 }

@@ -13,10 +13,12 @@ import graft.core.{CellHistogram, CellMath, UpdateLog}
   * accessors instead of falling back to interpreted mode. */
 private[engine] case class ModelRow(part: String, split: Int, a: Int, b: Int, vec: Seq[Double])
 
-/** A loaded, servable LOPQ index: the broadcastable model (+ optional PCA
-  * front-end), the codes table READ FROM DISK (partitioned so every query's
+/** A loaded LOPQ index holding the FULL model (+ optional PCA front-end),
+  * the codes table READ FROM DISK (partitioned so every query's
   * visited-cell filter becomes on-disk partition pruning), and the per-cell
-  * histogram that drives the multisequence quota walk.
+  * histogram that drives the multisequence quota walk. It serves through
+  * [[serving]]: the same handle as a [[LopqSlimIndex]], reading its
+  * rotation slices from the resident tensor.
   *
   * `cellBuckets` = 0: codes are `partitionBy("cell_id")` — one directory
   * per populated cell, right while V² is small. At the release shape
@@ -33,19 +35,28 @@ final case class LopqIndex(
     dir: String,
     cellBuckets: Int = 0) {
   def codesPath: String = s"$dir/codes"
+
+  /** The serve handle over this index: same codes, histogram, PCA, dir and
+    * layout, slices from the resident tensor (no I/O). Lazy, so its
+    * broadcasts and slice memo live as long as this handle. */
+  @transient lazy val serving: LopqSlimIndex = LopqSlimIndex(model.slim, pca, codes,
+    cellCounts, dir, cellBuckets, RotationSource.Resident(model.rotations))
 }
 
-/** A servable index handle WITHOUT the rotation tensor on the driver — the
-  * release-magnitude serve shape (see [[SlimLopqModel]]): queries fetch the
-  * two rotation slices of each visited cell from the persisted model store,
-  * O(visited clusters) per query instead of O(V·(D/2)²) resident. */
+/** A servable index handle — the one serve/annJoin input. `rotations` says
+  * where the two rotation slices of each visited cell come from:
+  * [[RotationSource.Fetched]] (what [[LopqIndexStore.loadSlim]] gives — the
+  * release-magnitude shape, O(visited clusters) per query instead of
+  * O(V·(D/2)²) resident, see [[SlimLopqModel]]) or
+  * [[RotationSource.Resident]] ([[LopqIndex.serving]]). */
 final case class LopqSlimIndex(
     slim: SlimLopqModel,
     pca: Option[LopqPca],
     codes: DataFrame,
     cellCounts: CellHistogram,
     dir: String,
-    cellBuckets: Int = 0) {
+    cellBuckets: Int,
+    rotations: RotationSource) {
 
   /** Model/histogram/PCA broadcasts hoisted to the HANDLE (VERDICT r7
     * next-round #4): a bulk-probe workload calls [[LopqSearcher.annJoin]]
@@ -98,7 +109,7 @@ final case class LopqSlimIndex(
         val missing = keys.filterNot(base.contains)
         val merged =
           if (missing.isEmpty) base
-          else base ++ LopqIndexStore.rotationSlices(spark, dir, missing)
+          else base ++ rotations.slices(missing)
         val b = spark.sparkContext.broadcast(merged)
         if (sliceMemo != null) sliceMemo._2.unpersist(blocking = false)
         sliceMemo = (merged.keySet, b)
@@ -283,24 +294,6 @@ object LopqIndexStore {
     LopqProto.export(s"$dir/model.pb", model)
   }
 
-  /** The full model: [[loadModelSlim]]'s components plus the rotation
-    * tensor, read from the `part = 'rot'` files alone. */
-  def loadModel(spark: SparkSession, dir: String): (LopqModel, Option[LopqPca]) = {
-    val (slim, pca) = loadModelSlim(spark, dir)
-    val rotM = spark.read.parquet(s"$dir/model")
-      .where(col("part") === "rot")
-      .select("split", "a", "b", "vec").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) ->
-        r.getSeq[Double](3).toArray.map(_.toFloat))
-      .toMap
-    val model = LopqModel(
-      coarse = slim.coarse,
-      rotations = Array.tabulate(2, slim.v, slim.halfDim)((s, c, k) => rotM((s, c, k))),
-      mus = slim.mus,
-      subquantizers = slim.subquantizers)
-    (model, pca)
-  }
-
   /** Load every model component EXCEPT the rotation tensor: O(V·D/2) driver
     * memory instead of O(V·(D/2)²). With the partitioned model layout the
     * `part != rot` filter is directory-level — the tensor's files are never
@@ -359,19 +352,6 @@ object LopqIndexStore {
       .select("split", "a", "b", "vec")
   }
 
-  /** Fetch just the rotation slices for the given `(split, cluster)` keys —
-    * the per-QUERY model transfer of the slim serve path: O(keys·(D/2)²)
-    * data moved, independent of V (the reference ships the whole pickled
-    * model to every searcher process instead,
-    * `searcher_lopqhbase.py:104-223`).
-    *
-    * Slices are memoized per dir in a BOUNDED LRU (the Spark analogue of the
-    * reference memoizing its subquantizer distance tables per coarse pair,
-    * `lopq/lopq/search.py:151-164`): repeat queries against the same hot
-    * clusters skip the fetch job entirely, while the bound
-    * (`spark.graft.slim.sliceCacheBytes`, default 64 MB) keeps the driver
-    * O(1) in V — the cache can never grow back into the tensor. Evicted
-    * alongside the model caches on [[evictModel]]. */
   /** Conf: byte bound on [[LopqSlimIndex.sliceBroadcastFor]]'s cumulative
     * slice memo — past it the memo resets to the current batch's keys
     * instead of accreting toward the full tensor. */
@@ -412,6 +392,20 @@ object LopqIndexStore {
   private[graft] val sliceKeysRequested = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] val sliceKeysMissed = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Fetch just the rotation slices for the given `(split, cluster)` keys —
+    * the per-QUERY model transfer of the slim serve path: O(keys·(D/2)²)
+    * data moved, independent of V (the reference ships the whole pickled
+    * model to every searcher process instead,
+    * `searcher_lopqhbase.py:104-223`).
+    *
+    * Slices are memoized per dir in a BOUNDED LRU (the Spark analogue of the
+    * reference memoizing its subquantizer distance tables per coarse pair,
+    * `lopq/lopq/search.py:151-164`): repeat queries against the same hot
+    * clusters skip the fetch job entirely, while the bound
+    * (`spark.graft.slim.sliceCacheBytes`, default 64 MB) keeps the driver
+    * O(1) in V — the cache can never grow back into the tensor. Evicted
+    * alongside the model caches on [[evictModel]]. Callers read slices through
+    * [[RotationSource.Fetched]]. */
   def rotationSlices(spark: SparkSession, dir: String,
       keys: Seq[(Int, Int)]): Map[(Int, Int), Array[Array[Float]]] = {
     sweepStoppedSessions()
@@ -682,28 +676,41 @@ object LopqIndexStore {
     }
   }
 
-  /** Load the index at `dir`, or None if absent. Self-heals the cell
-    * histogram: if its total disagrees with the codes row count (a crash
-    * between the codes append and the counts merge — see the commit-order
-    * note in [[appendUpdate]]; every crash window skews the TOTAL, so the
-    * sum is a sufficient invariant), the counts are rebuilt from the codes.
-    * Both sides of the check are metadata-only parquet reads. */
-  def load(spark: SparkSession, dir: String): Option[LopqIndex] =
-    readMeta(dir).map { meta =>
-      graft.core.SessionDefaults(spark) // store scans get the engine splits
-      val (model, pca) = loadModel(spark, dir)
-      val codes = readCodes(spark, dir)
-      LopqIndex(model, pca, codes, healedCounts(spark, dir, codes), dir, bucketsOf(meta))
-    }
-
-  /** [[load]] without the rotation tensor — the serve-path handle. */
+  /** Load the serve handle for the index at `dir`, or None if absent —
+    * without the rotation tensor: queries fetch their slices
+    * ([[RotationSource.Fetched]]). Self-heals the cell histogram: if its
+    * total disagrees with the codes row count (a crash between the codes
+    * append and the counts merge — see the commit-order note in
+    * [[appendUpdate]]; every crash window skews the TOTAL, so the sum is a
+    * sufficient invariant), the counts are rebuilt from the codes. Both
+    * sides of the check are metadata-only parquet reads. */
   def loadSlim(spark: SparkSession, dir: String): Option[LopqSlimIndex] =
     readMeta(dir).map { meta =>
       graft.core.SessionDefaults(spark) // store scans get the engine splits
       val (slim, pca) = loadModelSlim(spark, dir)
       val codes = readCodes(spark, dir)
-      LopqSlimIndex(slim, pca, codes, healedCounts(spark, dir, codes), dir, bucketsOf(meta))
+      LopqSlimIndex(slim, pca, codes, healedCounts(spark, dir, codes), dir,
+        bucketsOf(meta), RotationSource.Fetched(spark, dir))
     }
+
+  /** [[loadSlim]] plus the rotation tensor: the full-model handle. */
+  def load(spark: SparkSession, dir: String): Option[LopqIndex] =
+    loadSlim(spark, dir).map(full(spark, _))
+
+  /** `h` with the rotation tensor, read from the `part = 'rot'` files alone
+    * and assembled over `h.slim`'s arrays. */
+  private def full(spark: SparkSession, h: LopqSlimIndex): LopqIndex = {
+    val rotM = spark.read.parquet(s"${h.dir}/model")
+      .where(col("part") === "rot")
+      .select("split", "a", "b", "vec").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) ->
+        r.getSeq[Double](3).toArray.map(_.toFloat))
+      .toMap
+    val m = h.slim
+    val model = LopqModel(m.coarse,
+      Array.tabulate(2, m.v, m.halfDim)((s, c, k) => rotM((s, c, k))), m.mus, m.subquantizers)
+    LopqIndex(model, h.pca, h.codes, h.cellCounts, h.dir, h.cellBuckets)
+  }
 
   private def healedCounts(spark: SparkSession, dir: String,
       codes: DataFrame): CellHistogram = {
@@ -728,15 +735,16 @@ object LopqIndexStore {
         meta.get("pcaDims").contains(expectPcaDims.toString)
     }
 
-  def loadIfValid(spark: SparkSession, dir: String, params: LopqParams, n: Long,
-      expectPcaDims: Int = 0): Option[LopqIndex] =
-    if (fingerprintOk(dir, params, n, expectPcaDims)) load(spark, dir) else None
-
-  /** [[loadIfValid]] for the slim serve handle: the fingerprint check and
-    * the load itself both avoid materializing the rotation tensor. */
+  /** The serve handle, only if the stored fingerprint matches; neither the
+    * check nor the load materializes the rotation tensor. */
   def loadSlimIfValid(spark: SparkSession, dir: String, params: LopqParams, n: Long,
       expectPcaDims: Int = 0): Option[LopqSlimIndex] =
     if (fingerprintOk(dir, params, n, expectPcaDims)) loadSlim(spark, dir) else None
+
+  /** [[loadSlimIfValid]] plus the rotation tensor. */
+  def loadIfValid(spark: SparkSession, dir: String, params: LopqParams, n: Long,
+      expectPcaDims: Int = 0): Option[LopqIndex] =
+    loadSlimIfValid(spark, dir, params, n, expectPcaDims).map(full(spark, _))
 
   // ------------------------------------------- incremental maintenance
 
@@ -798,10 +806,14 @@ object LopqIndexStore {
     * per-cell dedup on insert `lopq/lopq/search.py:340-364`,
     * skip-already-indexed per update `searcher_lopqhbase.py:600-617`), and
     * the cell histogram is merged incrementally instead of re-aggregated.
-    * The encode is [[slimEncode]] at every model width: the rotation
-    * tensor never reaches the driver or a broadcast, and the slim model
-    * (and its broadcast) is the session-cached one [[assignCells]] already
-    * loaded for the screen.
+    * The encode is [[LopqSearcher.encodeWith]], the build's encoder, at
+    * every model width, with only the batch's touched clusters' rotation
+    * slices — ≤ 2·|batch|, fetched through the bounded LRU (hot ingest
+    * clusters stay cached across micro-batches): the tensor never reaches
+    * the driver or a broadcast (a giant backfill touching every cluster
+    * degrades to streaming it once, which the build's encode broadcasts
+    * anyway), and the slim model (and its broadcast) is the session-cached
+    * one [[assignCells]] already loaded for the screen.
     *
     * CONTRACT: update ids must be lexicographically monotone (the
     * reference's ids are timestamp-prefixed, `searcher_lopqhbase.py:
@@ -822,9 +834,20 @@ object LopqIndexStore {
         val applyU = udf((v: Seq[Float]) => pcaB.value.get(v.toArray).toSeq)
         unique.withColumn(vecCol, applyU(col(vecCol)))
       }
-    val (encoded0, touched, cleanup) =
-      slimEncode(spark, dir, input, idCol, vecCol, m)
-    val encoded = encoded0
+    val rows = input.select(col(idCol).as("id"), col(vecCol).as("vec"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the batch's touched cells (O(batch) distinct values, driver-bounded)
+    // name both the rotation slices the encode needs and the cell
+    // directories the dedup scan reads
+    val slimB = m.slimB
+    val cellU = udf { (vec: Seq[Float]) =>
+      val (c0, c1) = slimB.value.predictCoarse(vec.toArray)
+      CellMath.cellId(c0, c1, slimB.value.v)
+    }
+    val touched = rows.select(cellU(col("vec"))).distinct().as[Int].collect().toSeq.sorted
+    val rotB = spark.sparkContext.broadcast(
+      RotationSource.Fetched(spark, dir).slices(RotationSource.keysOf(touched, m.slim.v)))
+    val encoded = LopqSearcher.encodeWith(rows, slimB, rotB)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val deduped =
@@ -839,7 +862,7 @@ object LopqIndexStore {
       // crash in between marked the update applied with a permanently stale
       // histogram): a crash before the tip leaves the update unapplied, so
       // the replay's anti-join suppresses the rows and the histogram is
-      // repaired by the sum check in [[load]]; a crash after the tip only
+      // repaired by the sum check in [[loadSlim]]; a crash after the tip only
       // loses the manifest AUDIT row — codes, counts, and the replay
       // watermark are already consistent.
       appendCodesDelta(spark, dir, deduped)
@@ -850,7 +873,8 @@ object LopqIndexStore {
       true
     } finally {
       encoded.unpersist()
-      cleanup()
+      rows.unpersist()
+      rotB.destroy()
     }
   }
 
@@ -859,9 +883,9 @@ object LopqIndexStore {
     * decision as a full encode, with no fine codes and no rotation
     * slices): the broadcast is O(V·D/2) floats at any model width, and a
     * PCA-fronted index projects first, matching the append path.
-    * [[SlimLopqModel.predictCoarse]] is spec-pinned bit-identical to the
-    * classic encode's coarse stage, so a screened batch lands in exactly
-    * the cells [[appendUpdate]] will store it under. */
+    * [[SlimLopqModel.predictCoarse]] is the encoder's own coarse stage, so
+    * a screened batch lands in exactly the cells [[appendUpdate]] will
+    * store it under (spec-pinned). */
   def assignCells(spark: SparkSession, dir: String, df: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
     val cm = cachedModel(spark, dir)
@@ -921,53 +945,5 @@ object LopqIndexStore {
       m.predictCoarseTopP(x, probes).map { case (c0, c1) => c0.toLong * m.v + c1 }
     }
     df.select(col(idCol).as("id"), explode(u(col(vecCol))).as("cell_id"))
-  }
-
-  /** Encode one update batch WITHOUT the rotation tensor: coarse codes from
-    * the slim broadcast (O(V·D/2)), then fine codes with only the batch's
-    * touched clusters' rotation slices — ≤ 2·|batch| slices, fetched through
-    * the bounded LRU (hot ingest clusters stay cached across micro-batches).
-    * Bit-identical to [[LopqSearcher.encode]] (spec-pinned); a giant
-    * backfill batch touching every cluster degrades to streaming the tensor
-    * once, which is what the build's full-model encode broadcasts anyway.
-    *
-    * Returns the codes frame, the batch's sorted touched cells, and a
-    * cleanup to drop the cached coarse stage and destroy the per-call
-    * rotation-slice broadcast AFTER the caller has materialized the codes
-    * (the slim model rides the dir's cached broadcast). */
-  private def slimEncode(spark: SparkSession, dir: String, input: DataFrame,
-      idCol: String, vecCol: String,
-      m: CachedModel): (DataFrame, Seq[Int], () => Unit) = {
-    import spark.implicits._
-    val slim = m.slim
-    val slimB = m.slimB
-    val coarseU = udf { (vec: Seq[Float]) =>
-      val cc = slimB.value.predictCoarse(vec.toArray)
-      (cc._1, cc._2)
-    }
-    val coarse = input.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("cc", coarseU(col("vec")))
-      .select(col("id"), col("vec"),
-        col("cc._1").as("coarse0"), col("cc._2").as("coarse1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the batch's touched cells (O(batch) distinct values, driver-bounded)
-    // name both the rotation slices the fine stage needs and the cell
-    // directories the append's dedup scan reads
-    val cellId = col("coarse0") * lit(slim.v) + col("coarse1")
-    val touched = coarse.select(cellId).distinct().as[Int].collect().toSeq.sorted
-    val keys = touched.flatMap { c =>
-      val (c0, c1) = CellMath.unpackCell(c, slim.v)
-      Seq((0, c0), (1, c1))
-    }.distinct
-    val rotB = spark.sparkContext.broadcast(rotationSlices(spark, dir, keys))
-    val fineU = udf { (vec: Seq[Float], c0: Int, c1: Int) =>
-      slimB.value
-        .predictFineWith(vec.toArray, (c0, c1), (s, c) => rotB.value((s, c))).toSeq
-    }
-    val codes = coarse
-      .withColumn("fine", fineU(col("vec"), col("coarse0"), col("coarse1")))
-      .withColumn("cell_id", cellId)
-      .select("id", "coarse0", "coarse1", "fine", "cell_id")
-    (codes, touched, () => { coarse.unpersist(); rotB.destroy() })
   }
 }

@@ -1,7 +1,5 @@
 package graft.engine
 
-import graft.core.{CellMath, VectorOps}
-
 /** Locally-Optimized Product Quantization model — the complete parameter set
   * of the reference's ANN engine (`lopq/lopq/model.py:447-541`), as an
   * immutable, broadcast-friendly case class.
@@ -14,8 +12,8 @@ import graft.core.{CellMath, VectorOps}
   *   - `mus`: [2][V][D/2]            per-cluster mean residual
   *   - `subquantizers`: [2][M/2][S][D/M] product-quantizer centroids
   *
-  * All methods are pure JVM math (no Spark) so they run identically on the
-  * driver (query path) and inside executors (encode path) via broadcast.
+  * The predict/project/ADC math lives once, in [[SlimLopqModel]] ([[slim]]);
+  * this class adds the rotation tensor and [[reconstruct]].
   */
 case class LopqModel(
     coarse: Array[Array[Array[Float]]],
@@ -32,79 +30,12 @@ case class LopqModel(
   val subquantizerClusters: Int = subquantizers(0)(0).length
   val subDim: Int = dim / m
 
-  /** Nearest coarse centroid per split (ref `model.py:predict_coarse`). */
-  def predictCoarse(x: Array[Float]): (Int, Int) = {
-    val s = VectorOps.splits(x, numCoarseSplits)
-    (VectorOps.argminL2(s(0), coarse(0)), VectorOps.argminL2(s(1), coarse(1)))
-  }
-
-  /** Project to the local rotated residual frame of the given coarse cell:
-    * per split, `R[c] · (x_split − C[c] − mu[c])` (ref `model.py:project`). */
-  def project(x: Array[Float], coarseCodes: (Int, Int)): Array[Array[Float]] = {
-    val s = VectorOps.splits(x, numCoarseSplits)
-    Array.tabulate(numCoarseSplits) { split =>
-      val c = if (split == 0) coarseCodes._1 else coarseCodes._2
-      val r = VectorOps.subtract(VectorOps.subtract(s(split), coarse(split)(c)), mus(split)(c))
-      VectorOps.matVec(rotations(split)(c), r)
-    }
-  }
-
-  /** Fine (product-quantizer) codes given coarse codes
-    * (ref `model.py:predict_fine`). */
-  def predictFine(x: Array[Float], coarseCodes: (Int, Int)): Array[Short] = {
-    val px = project(x, coarseCodes)
-    val out = new Array[Short](m)
-    var split = 0
-    while (split < numCoarseSplits) {
-      val subs = VectorOps.splits(px(split), numFineSplits)
-      var f = 0
-      while (f < numFineSplits) {
-        out(split * numFineSplits + f) =
-          VectorOps.argminL2(subs(f), subquantizers(split)(f)).toShort
-        f += 1
-      }
-      split += 1
-    }
-    out
-  }
-
-  /** Full code: ((coarse0, coarse1), fine) (ref `model.py:predict`). */
-  def predict(x: Array[Float]): ((Int, Int), Array[Short]) = {
-    val cc = predictCoarse(x)
-    (cc, predictFine(x, cc))
-  }
-
-  def cellIdFor(coarseCodes: (Int, Int)): Int =
-    CellMath.cellId(coarseCodes._1, coarseCodes._2, v)
-
-  /** ADC subquantizer distance tables for a query in the local frame of
-    * `coarseCodes`: tables(m)(s) = ‖px_sub(m) − subC(m)(s)‖² (ref
-    * `model.py:get_subquantizer_distances`). The per-candidate distance is
-    * then Σ_m tables(m)(fine(m)) — see
-    * [[graft.functions.VectorFunctions.adcDistance]]. */
-  def subquantizerDistances(x: Array[Float], coarseCodes: (Int, Int)): Array[Array[Double]] = {
-    val px = project(x, coarseCodes)
-    val out = new Array[Array[Double]](m)
-    var split = 0
-    while (split < numCoarseSplits) {
-      val subs = VectorOps.splits(px(split), numFineSplits)
-      var f = 0
-      while (f < numFineSplits) {
-        out(split * numFineSplits + f) =
-          VectorOps.distancesSq(subs(f), subquantizers(split)(f))
-        f += 1
-      }
-      split += 1
-    }
-    out
-  }
-
-  /** Squared distances of each half-query to every coarse centroid of each
-    * split — the multisequence input (ref `lopq/lopq/search.py:34-43`). */
-  def coarseDistances(x: Array[Float]): (Array[Double], Array[Double]) = {
-    val s = VectorOps.splits(x, numCoarseSplits)
-    (VectorOps.distancesSq(s(0), coarse(0)), VectorOps.distancesSq(s(1), coarse(1)))
-  }
+  /** The rotation-free part of this model over the SAME arrays — the one
+    * implementation of coarse/fine prediction, projection and ADC tables.
+    * Callers pass the resident tensor as the slice source
+    * (`model.slim.adcTables(x, cc, model.rotations(_)(_))`). Transient, so
+    * serializing the model sends no array twice. */
+  @transient lazy val slim: SlimLopqModel = SlimLopqModel(coarse, mus, subquantizers)
 
   /** Decode codes back to an approximate vector (ref `model.py:reconstruct`):
     * per split, `Rᵀ · sx + mu + C[c]` where sx concatenates the fine

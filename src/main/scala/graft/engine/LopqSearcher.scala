@@ -45,7 +45,9 @@ object RerankShape {
   }
 }
 
-/** Encode + query path of the LOPQ index, Spark-first.
+/** Encode + query path of the LOPQ index, Spark-first. Both run on
+  * [[SlimLopqModel]]'s one predict/ADC implementation; the rotation slices
+  * come from the index handle's [[RotationSource]].
   *
   * Encode (ref `searcher_lopqhbase.py:482-524` compute_codes +
   * `lopq/lopq/model.py:543-602` predict): one distributed pass with the
@@ -61,38 +63,47 @@ object RerankShape {
   *      until the retrieval quota is covered (`search.py:110-135`);
   *   2. driver: ADC subquantizer distance tables for each VISITED cell only
   *      (memoized per coarse pair in the reference, `search.py:151-164`),
-  *      shipped as a tiny per-cell DataFrame broadcast-joined on `cell_id`
-  *      — O(cells·M·S) doubles of DATA, constant-size plan (at the release
-  *      shape V=4096/S=256 a literal map would be a codegen bomb);
+  *      built in parallel from the cells' rotation slices and flattened into
+  *      ONE broadcast variable keyed by `cell_id` — O(cells·M·S) doubles of
+  *      data, a constant-size plan (at the release shape V=4096/S=256 a
+  *      literal map would be a codegen bomb) and no join;
   *   3. cluster: partition-pruned scan of the visited cells, per-row ADC
-  *      lookup-sum (codegen'd built-ins), `TakeOrderedAndProject` top-k;
+  *      lookup-sum read map-side from the broadcast
+  *      ([[graft.functions.BroadcastAdcTablesDistExpr]], codegen'd),
+  *      `TakeOrderedAndProject` top-k;
   *   4. optional exact rerank of the prefix by joining raw vectors back by
   *      id (ref `searcher_lopqhbase.py:862-912`).
   */
 object LopqSearcher {
 
-  /** Distributed encode: `(idCol, vecCol)` → codes rows. */
+  /** Distributed encode of a full model: `(idCol, vecCol)` → codes rows.
+    * The whole rotation tensor rides the broadcast (the build path). */
   def encode(df: DataFrame, idCol: String, vecCol: String, model: LopqModel): DataFrame = {
-    val modelB = df.sparkSession.sparkContext.broadcast(model)
-    val predictU = udf { (vec: Seq[Float]) =>
-      val m = modelB.value
-      val ((c0, c1), fine) = m.predict(vec.toArray)
-      (c0, c1, fine.toSeq, m.cellIdFor((c0, c1)))
-    }
-    df.select(col(idCol).as("id"), predictU(col(vecCol)).as("p"))
-      .select(col("id"), col("p._1").as("coarse0"), col("p._2").as("coarse1"),
-        col("p._3").as("fine"), col("p._4").as("cell_id"))
+    val sc = df.sparkSession.sparkContext
+    val all = for (s <- 0 until model.numCoarseSplits; c <- 0 until model.v) yield (s, c)
+    encodeWith(df.select(col(idCol).as("id"), col(vecCol).as("vec")),
+      sc.broadcast(model.slim),
+      sc.broadcast(RotationSource.Resident(model.rotations).slices(all)))
   }
 
-  /** Driver-side cell selection: walk cells best-first until the visited
-    * cells hold ≥ quota items (whole-cell retrieval semantics of the
-    * reference, `search.py:110-135`). `cellCounts` is the index's cell
-    * histogram — primitive parallel arrays, O(populated cells) once per
-    * index load. */
-  def selectCells(model: LopqModel, query: Array[Float], quota: Int,
-      cellCounts: CellHistogram): Seq[Int] = {
-    val (d0, d1) = model.coarseDistances(query)
-    selectCellsFrom(model.v, d0, d1, quota, cellCounts)
+  /** THE encoder (the build and every append): `(id, vec)` rows → codes
+    * rows, coarse codes then fine codes from the cell's two rotation slices
+    * (ref `model.py:predict`). `rotB` must hold the slices of every cell the
+    * rows land in. */
+  private[engine] def encodeWith(rows: DataFrame,
+      slimB: org.apache.spark.broadcast.Broadcast[SlimLopqModel],
+      rotB: org.apache.spark.broadcast.Broadcast[Map[(Int, Int), Array[Array[Float]]]])
+      : DataFrame = {
+    val predictU = udf { (vec: Seq[Float]) =>
+      val m = slimB.value
+      val x = vec.toArray
+      val cc = m.predictCoarse(x)
+      val fine = m.predictFineWith(x, cc, (s, c) => rotB.value((s, c)))
+      (cc._1, cc._2, fine.toSeq, CellMath.cellId(cc._1, cc._2, m.v))
+    }
+    rows.select(col("id"), predictU(col("vec")).as("p"))
+      .select(col("id"), col("p._1").as("coarse0"), col("p._2").as("coarse1"),
+        col("p._3").as("fine"), col("p._4").as("cell_id"))
   }
 
   /** Same visit semantics as the reference's multisequence walk
@@ -109,24 +120,9 @@ object LopqSearcher {
       quota: Int, cellCounts: CellHistogram): Seq[Int] =
     cellCounts.selectCells(v, d0, d1, quota)
 
-  /** Approximate top-k by ADC over the visited cells. Returns
-    * `(id, cell_id, adc_dist)`, ranked, tie-broken by id.
-    * `cellBuckets` > 0 matches a bucketed codes layout (see
-    * [[LopqIndexStore]]): directory pruning happens on `cell_bucket`, the
-    * `cell_id` IN-list prunes row groups within each bucket. */
-  def searchApprox(codes: DataFrame, model: LopqModel, query: Array[Float],
-      quota: Int, k: Int, cellCounts: CellHistogram,
-      cellBuckets: Int = 0): DataFrame = {
-    val cells = selectCells(model, query, quota, cellCounts)
-    if (cells.isEmpty) emptyApprox(codes)
-    else approxOverCells(codes, cells,
-      parTables(cells, cc => model.subquantizerDistances(query, cc), model.v),
-      k, cellBuckets)
-  }
-
   /** Driver-side per-visited-cell ADC tables, computed in parallel: each
     * cell's tables are a pure function of immutable inputs (query
-    * projection, codebooks, fetched rotation slices), so the only effect
+    * projection, codebooks, rotation slices), so the only effect
     * of the parallelism is wall-clock — content is deterministic. */
   private[graft] def parTables(cells: Seq[Int], tablesOf: ((Int, Int)) => Array[Array[Double]],
       v: Int): Seq[(Int, Array[Array[Double]])] = {
@@ -139,21 +135,6 @@ object LopqSearcher {
       .withColumn("id", lit(0L)).withColumn("cell_id", lit(0))
       .withColumn("adc_dist", lit(0.0)).limit(0)
 
-  /** Above `spark.sql.parquet.pushdown.inFilterThreshold` (default 10!)
-    * Spark pushes an IN-list to parquet as a min/max RANGE — useless for
-    * scattered ids or cells (measured: a 100-id lookup rerank against the
-    * 16 GB release-width table decoded 98 % of its rows). Every point-
-    * lookup shape in the engine raises the threshold to cover its actual
-    * list size; monotone — never lowered — so concurrent queries only gain
-    * pruning.
-    *
-    * SESSION-WIDE side effect, deliberately: the raised threshold outlives
-    * the query and changes IN-pushdown for every other plan on the session
-    * (always toward more pushdown — an unrelated small IN that previously
-    * became a row-group range filter now pushes as literals, never less
-    * pruning). The check-then-set is racy under concurrent queries but
-    * benign for the same reason: both interleavings leave the conf at one
-    * of the requested values, and both are ≥ the old one (ADVICE r7). */
   /** Parquet evaluates a pushed IN as a left-nested OR chain in its filter
     * predicate, recursing once per literal — past a few thousand values the
     * evaluation overflows a default 1 MB executor thread stack (observed
@@ -176,6 +157,21 @@ object LopqSearcher {
     * misjudged margin cannot kill a bench/test stage on this rig. */
   val MaxStackSafeInPushdown = 512
 
+  /** Above `spark.sql.parquet.pushdown.inFilterThreshold` (default 10!)
+    * Spark pushes an IN-list to parquet as a min/max RANGE — useless for
+    * scattered ids or cells (measured: a 100-id lookup rerank against the
+    * 16 GB release-width table decoded 98 % of its rows). Every point-
+    * lookup shape in the engine raises the threshold to cover its actual
+    * list size; monotone — never lowered — so concurrent queries only gain
+    * pruning.
+    *
+    * SESSION-WIDE side effect, deliberately: the raised threshold outlives
+    * the query and changes IN-pushdown for every other plan on the session
+    * (always toward more pushdown — an unrelated small IN that previously
+    * became a row-group range filter now pushes as literals, never less
+    * pruning). The check-then-set is racy under concurrent queries but
+    * benign for the same reason: both interleavings leave the conf at one
+    * of the requested values, and both are ≥ the old one (ADVICE r7). */
   private[graft] def ensureInPushdown(spark: org.apache.spark.sql.SparkSession,
       needed: Int): Unit = {
     val key = "spark.sql.parquet.pushdown.inFilterThreshold"
@@ -184,22 +180,6 @@ object LopqSearcher {
     if (cur < target) spark.conf.set(key, target.toString)
   }
 
-  /** The cluster side of the approximate stage, shared by the full-model
-    * and slim paths: partition-pruned scan of the visited cells, per-row
-    * codegen lookup-sum against the BROADCAST per-cell ADC tables,
-    * `TakeOrderedAndProject` top-k.
-    *
-    * r19 (VERDICT r18 #3): the tables previously rode a per-query
-    * LocalRelation (built through the Seq row encoder, ~60 ms/query at the
-    * v3 shape) broadcast-JOINED on `cell_id` — a `BroadcastExchange` plus
-    * an interpreted HOF lookup-sum per row, and the measured ~0.43 s/query
-    * serial driver residue of the release serve rows (their 8-vs-32-core
-    * scaling ratio ≈ 1). Now the driver-computed doubles go straight into
-    * a broadcast variable and [[graft.functions.BroadcastAdcTablesDistExpr]]
-    * reads them map-side — no encode, no exchange, no join; results are
-    * bit-identical (same doubles summed in the same order, spec-pinned,
-    * and every row surviving the cell filter has its cell in the map, so
-    * the inner join dropped nothing this form keeps). */
   /** Flatten per-cell ADC tables (mi-major, M·S doubles per cell) onto a
     * broadcast variable. Lifecycle parity with the broadcast JOIN this replaced: the
     * old per-query LocalRelation also materialized as a per-query
@@ -222,6 +202,21 @@ object LopqSearcher {
     (spark.sparkContext.broadcast(flat), m)
   }
 
+  /** The cluster side of the approximate stage: partition-pruned scan of the visited cells, per-row
+    * codegen lookup-sum against the BROADCAST per-cell ADC tables,
+    * `TakeOrderedAndProject` top-k.
+    *
+    * r19 (VERDICT r18 #3): the tables previously rode a per-query
+    * LocalRelation (built through the Seq row encoder, ~60 ms/query at the
+    * v3 shape) broadcast-JOINED on `cell_id` — a `BroadcastExchange` plus
+    * an interpreted HOF lookup-sum per row, and the measured ~0.43 s/query
+    * serial driver residue of the release serve rows (their 8-vs-32-core
+    * scaling ratio ≈ 1). Now the driver-computed doubles go straight into
+    * a broadcast variable and [[graft.functions.BroadcastAdcTablesDistExpr]]
+    * reads them map-side — no encode, no exchange, no join; results are
+    * bit-identical (same doubles summed in the same order, spec-pinned,
+    * and every row surviving the cell filter has its cell in the map, so
+    * the inner join dropped nothing this form keeps). */
   private[graft] def approxOverCells(codes: DataFrame, cells: Seq[Int],
       tables: Seq[(Int, Array[Array[Double]])], k: Int, cellBuckets: Int): DataFrame = {
     val spark = codes.sparkSession
@@ -239,48 +234,51 @@ object LopqSearcher {
       .select("id", "cell_id", "adc_dist")
   }
 
-  /** Full query: ADC top-`rerankK` then exact-L2 rerank of the prefix via a
-    * broadcast join back to the raw vectors, final top-`k`
-    * (ref rerank join, `searcher_lopqhbase.py:862-912`).
+  /** Full query: ADC top-`rerankK` over the visited cells, then exact-L2
+    * rerank of the prefix against the raw vectors, final top-`k` (ref
+    * rerank join, `searcher_lopqhbase.py:862-912`). Returns
+    * `(id, adc_dist, exact_dist)` ranked by `(exact_dist, id)`.
+    *
+    * The ADC tables are built from each visited cell's two rotation slices,
+    * read through the handle's [[RotationSource]]: on a
+    * [[LopqIndexStore.loadSlim]] handle (the release-MAGNITUDE serve path)
+    * the tensor — the only O(V·(D/2)²) model component, 536 MB at the
+    * reference's release constants — is NEVER resident, and each query
+    * fetches O(distinct visited clusters · (D/2)²) bytes, independent of V;
+    * on [[LopqIndex.serving]] they index the resident tensor. Same plan,
+    * same doubles either way.
     *
     * With `pca` set (the release `lopq_pca` shape), the approximate stage
     * runs in PCA space — `apply_PCA` on the query, ref
     * `lopq/lopq/search.py:198-200` — while the rerank recomputes exact L2
     * against the FULL-dimension vectors, like the reference reranking with
     * the raw features re-read from HBase. */
-  /** Full query against a [[LopqSlimIndex]] — the release-MAGNITUDE serve
-    * path: the rotation tensor (the only O(V·(D/2)²) model component, 536 MB
-    * at the reference's release constants) is NEVER resident; each query
-    * fetches only the two rotation slices of each visited cell from the
-    * persisted model store (a file-and-row-group-pruned read of
-    * O(distinct visited clusters · (D/2)²) bytes — independent of V), builds
-    * the ADC tables from them, and runs the same pruned-scan + broadcast-ADC
-    * + rerank plan as [[search]]. Results are bit-identical to the
-    * full-model path (spec-pinned). */
   def searchSlim(index: LopqSlimIndex, vectors: DataFrame, idCol: String,
       vecCol: String, query: Array[Float], quota: Int, k: Int, rerankK: Int,
       rerankShape: RerankShape = RerankShape.Auto): DataFrame = {
-    val spark = index.codes.sparkSession
-    val slim = index.slim
     val approxQuery = index.pca.map(_.apply(query)).getOrElse(query)
+    rerankExact(approxStage(index, approxQuery, quota, rerankK), vectors,
+      idCol, vecCol, query, k, rerankShape)
+  }
+
+  /** The approximate stage of [[searchSlim]] for an already PCA-projected
+    * query: `(id, cell_id, adc_dist)`, the ADC top-`k` of the visited cells,
+    * ranked by `(adc_dist, id)`. */
+  private[graft] def approxStage(index: LopqSlimIndex, approxQuery: Array[Float],
+      quota: Int, k: Int): DataFrame = {
+    val slim = index.slim
     val (d0, d1) = slim.coarseDistances(approxQuery)
     val cells = selectCellsFrom(slim.v, d0, d1, quota, index.cellCounts)
-    val approx =
-      if (cells.isEmpty) emptyApprox(index.codes)
-      else {
-        val keys = cells.flatMap { cell =>
-          val (c0, c1) = CellMath.unpackCell(cell, slim.v)
-          Seq((0, c0), (1, c1))
-        }.distinct
-        val rot = LopqIndexStore.rotationSlices(spark, index.dir, keys)
-        // per-cell table math is independent and the inputs are immutable —
-        // spread it over driver cores (~46 ms/query serial at the v3 shape,
-        // the dominant driver-side serve cost once the encode/exchange went)
-        val tables = parTables(cells,
-          cc => slim.adcTables(approxQuery, cc, (s, c) => rot((s, c))), slim.v)
-        approxOverCells(index.codes, cells, tables, rerankK, index.cellBuckets)
-      }
-    rerankExact(approx, vectors, idCol, vecCol, query, k, rerankShape)
+    if (cells.isEmpty) emptyApprox(index.codes)
+    else {
+      val rot = index.rotations.slices(RotationSource.keysOf(cells, slim.v))
+      // per-cell table math is independent and the inputs are immutable —
+      // spread it over driver cores (~46 ms/query serial at the v3 shape,
+      // the dominant driver-side serve cost once the encode/exchange went)
+      val tables = parTables(cells,
+        cc => slim.adcTables(approxQuery, cc, (s, c) => rot((s, c))), slim.v)
+      approxOverCells(index.codes, cells, tables, k, index.cellBuckets)
+    }
   }
 
   /** Past this many distinct visited cells the batch join skips the
@@ -476,8 +474,9 @@ object LopqSearcher {
     *      the per-query path uses);
     *   2. one O(distinct visited cells) aggregation → the batch's cell
     *      union (pushed into the codes scan below) and its cluster set,
-    *      whose rotation slices are fetched once through the bounded LRU
-    *      (O(batch-touched clusters · (D/2)²) transfer — a batch visiting
+    *      whose rotation slices are read once through the handle's
+    *      [[RotationSource]] (on a fetched handle: O(batch-touched
+    *      clusters · (D/2)²) transfer — a batch visiting
     *      every cluster degrades to streaming the tensor once, exactly like
     *      the slim-encode backfill);
     *   3. one distributed pass building the per-(q_id, visited cell) query
@@ -499,7 +498,7 @@ object LopqSearcher {
     *      the raw queries by q_id, per-query top-`k` window.
     *
     * Result: `(q_id, rank, id, adc_dist, exact_dist)` — per query
-    * BIT-IDENTICAL to looping [[searchSlim]]/[[search]] (spec-pinned; the
+    * BIT-IDENTICAL to looping [[searchSlim]] (spec-pinned; the
     * windows use the same (dist, id) tie-breaks as the per-query
     * TakeOrderedAndProject prefixes).
     *
@@ -542,10 +541,7 @@ object LopqSearcher {
       .groupBy("cell_id").count().as[(Int, Long)].collect()
     val unionCells = cellRows.map(_._1).sorted
     val nPairs = cellRows.map(_._2).sum
-    val clusterKeys = unionCells.flatMap { c =>
-      val (c0, c1) = CellMath.unpackCell(c, vCoarse)
-      Seq((0, c0), (1, c1))
-    }.distinct.toSeq
+    val clusterKeys = RotationSource.keysOf(unionCells, vCoarse)
     // memoized on the handle: repeat batches against one index reuse the
     // broadcast instead of re-fetching ~O(touched tensor) slices per call
     // (the batch working set does not fit the per-query 64 MB slice LRU)
@@ -1050,18 +1046,6 @@ object LopqSearcher {
       System.gc()
     }
     nChunks
-  }
-
-  /** The rerank read shape is self-selecting by default — see
-    * [[RerankShape]]. */
-  def search(codes: DataFrame, vectors: DataFrame, idCol: String, vecCol: String,
-      model: LopqModel, query: Array[Float], quota: Int, k: Int, rerankK: Int,
-      cellCounts: CellHistogram, pca: Option[LopqPca] = None,
-      cellBuckets: Int = 0, rerankShape: RerankShape = RerankShape.Auto): DataFrame = {
-    val approxQuery = pca.map(_.apply(query)).getOrElse(query)
-    val approx = searchApprox(codes, model, approxQuery, quota, rerankK, cellCounts,
-      cellBuckets)
-    rerankExact(approx, vectors, idCol, vecCol, query, k, rerankShape)
   }
 
   /** Exact-L2 rerank of an approximate prefix `(id, adc_dist)` against the

@@ -256,11 +256,10 @@ object ReleaseShape {
     * table (~200 MB) is over the lookup threshold, so the BENCHED release
     * path is the scale-safe pushed-IN-list lookup — the shape a 2M × 4096-d
     * deployment must use (VERDICT r5 "What's wrong #1") — and the spec pins
-    * that Auto resolves to it. */
+    * that Auto resolves to it. `h` is the V1 full-model handle; its rotation
+    * slices are read from the resident tensor. */
   def search(spark: SparkSession, h: LopqIndex, queryId: Long): DataFrame =
-    LopqSearcher.search(h.codes, vectors(spark, h.dir), "vec_id", "embedding",
-      h.model, rowVec(queryId), Quota, TopK, RerankK, h.cellCounts, h.pca,
-      h.cellBuckets)
+    searchSlim(spark, V1, h.serving, queryId)
 
   /** The online ANN path at release MAGNITUDE: slim serve (per-query
     * rotation-slice fetch) + auto-selected lookup rerank. */

@@ -2,8 +2,13 @@ package graft.engine
 
 import graft.core.VectorOps
 
-/** The LOPQ model WITHOUT its rotation tensor — everything the ONLINE query
-  * path needs resident on the driver.
+/** The LOPQ model WITHOUT its rotation tensor, and the ONE implementation
+  * of the reference's predict / project / subquantizer-distance math
+  * (`lopq/lopq/model.py:543-602`, `lopq/lopq/search.py:34-43,151-164`).
+  * Encode, serve and batch join all call it; the rotation slices each step
+  * needs come from a [[RotationSource]]: the resident tensor of a full
+  * [[LopqModel]] (`model.slim`, `model.rotations(_)(_)`) or a pruned read
+  * of the model store.
   *
   * Motivation (VERDICT r5 "What's missing #2"): of the model's components,
   * only `rotations` is O(V·(D/2)²) — 2×4096×128×128 float32 ≈ 536 MB at the
@@ -12,14 +17,10 @@ import graft.core.VectorOps
   * residual means, and subquantizer codebooks are all O(V·D/2 + M·S·D/M) —
   * single-digit MB at the same constants. A query visits only a handful of
   * cells, and each visited cell touches exactly TWO rotation slices (one per
-  * coarse split), so the serve path fetches those slices from the persisted
-  * model store per query ([[LopqIndexStore.rotationSlices]], a pushed-IN
-  * pruned read) instead of ever materializing the tensor: per-query model
-  * transfer is O(distinct visited clusters · (D/2)²) — INDEPENDENT of V.
-  *
-  * Every method mirrors [[LopqModel]] with the same [[VectorOps]] primitives
-  * in the same order, so slim results are bit-identical to full-model
-  * results (spec-pinned).
+  * coarse split), so the release serve path fetches those slices per query
+  * ([[RotationSource.Fetched]]) instead of ever materializing the tensor:
+  * per-query model transfer is O(distinct visited clusters · (D/2)²) —
+  * INDEPENDENT of V.
   */
 final case class SlimLopqModel(
     coarse: Array[Array[Array[Float]]],
@@ -33,13 +34,13 @@ final case class SlimLopqModel(
   val m: Int = numFineSplits * numCoarseSplits
 
   /** Squared distances of each half-query to every coarse centroid — the
-    * multisequence input (≡ [[LopqModel.coarseDistances]]). */
+    * multisequence input (ref `lopq/lopq/search.py:34-43`). */
   def coarseDistances(x: Array[Float]): (Array[Double], Array[Double]) = {
     val s = VectorOps.splits(x, numCoarseSplits)
     (VectorOps.distancesSq(s(0), coarse(0)), VectorOps.distancesSq(s(1), coarse(1)))
   }
 
-  /** Nearest coarse centroid per split (≡ [[LopqModel.predictCoarse]] —
+  /** Nearest coarse centroid per split (ref `model.py:predict_coarse` —
     * needs no rotations). */
   def predictCoarse(x: Array[Float]): (Int, Int) = {
     val s = VectorOps.splits(x, numCoarseSplits)
@@ -124,19 +125,16 @@ final case class SlimLopqModel(
     out.result()
   }
 
-  /** Fine codes given the coarse codes and just THEIR two rotation slices —
-    * bit-identical to [[LopqModel.predictFine]] (same primitives, same
-    * order). The slim-encode path of [[LopqIndexStore.appendUpdate]]. */
+  /** Fine (product-quantizer) codes given the coarse codes and just THEIR
+    * two rotation slices (ref `model.py:predict_fine`) — the fine stage of
+    * every encode ([[LopqSearcher.encode]], the store's appends). */
   def predictFineWith(x: Array[Float], cc: (Int, Int),
       rot: (Int, Int) => Array[Array[Float]]): Array[Short] = {
-    val s = VectorOps.splits(x, numCoarseSplits)
     val out = new Array[Short](m)
     var split = 0
     while (split < numCoarseSplits) {
       val c = if (split == 0) cc._1 else cc._2
-      val r = VectorOps.subtract(VectorOps.subtract(s(split), coarse(split)(c)), mus(split)(c))
-      val px = VectorOps.matVec(rot(split, c), r)
-      val subs = VectorOps.splits(px, numFineSplits)
+      val subs = VectorOps.splits(projectHalfWith(x, split, c, rot), numFineSplits)
       var f = 0
       while (f < numFineSplits) {
         out(split * numFineSplits + f) =
@@ -241,18 +239,16 @@ final case class SlimLopqModel(
   }
 
   /** ADC distance tables for ONE visited cell, given just that cell's two
-    * rotation slices (`rot(split, cluster)`) — bit-identical to
-    * [[LopqModel.subquantizerDistances]]. */
+    * rotation slices (`rot(split, cluster)`): tables(m)(s) =
+    * ‖px_sub(m) − subC(m)(s)‖² (ref `model.py:get_subquantizer_distances`).
+    * The per-candidate distance is then Σ_m tables(m)(fine(m)). */
   def adcTables(x: Array[Float], cc: (Int, Int),
       rot: (Int, Int) => Array[Array[Float]]): Array[Array[Double]] = {
-    val s = VectorOps.splits(x, numCoarseSplits)
     val out = new Array[Array[Double]](m)
     var split = 0
     while (split < numCoarseSplits) {
       val c = if (split == 0) cc._1 else cc._2
-      val r = VectorOps.subtract(VectorOps.subtract(s(split), coarse(split)(c)), mus(split)(c))
-      val px = VectorOps.matVec(rot(split, c), r)
-      val subs = VectorOps.splits(px, numFineSplits)
+      val subs = VectorOps.splits(projectHalfWith(x, split, c, rot), numFineSplits)
       var f = 0
       while (f < numFineSplits) {
         out(split * numFineSplits + f) =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{CellMath, VectorOps}
-import graft.engine.{LopqIndex, LopqIndexStore, LopqModel, LopqParams, LopqPca, LopqSearcher, LopqSlimIndex, LopqTrainer}
+import graft.engine.{LopqIndex, LopqIndexStore, LopqParams, LopqPca, LopqSearcher, LopqSlimIndex, LopqTrainer}
 import graft.functions.VectorFunctions._
 
 /** The LOPQ ANN engine surface as catalog queries: train → encode →
@@ -224,16 +224,20 @@ object EngineOps {
       val odir = s"$dir/oracle"
 
       // visited cells + ADC tables per query (driver-side model math — the
-      // same values the broadcast join ships to executors), dumped for the
+      // same values the serve broadcasts to executors), dumped for the
       // fixed per-query set AND the larger batched-join set (q70)
       def dumpQuerySet(qs: Array[(Long, Array[Float])], visitedDir: String,
           tabDir: String): Unit = {
-        val visited = qs.flatMap { case (qid, vec) =>
-          LopqSearcher.selectCells(h.model, vec, Quota, h.cellCounts).map(c => (qid, c))
+        val slim = h.model.slim
+        def cellsOf(vec: Array[Float]): Seq[Int] = {
+          val (d0, d1) = slim.coarseDistances(vec)
+          LopqSearcher.selectCellsFrom(slim.v, d0, d1, Quota, h.cellCounts)
         }
+        val visited = qs.flatMap { case (qid, vec) => cellsOf(vec).map(c => (qid, c)) }
         val adctab = qs.flatMap { case (qid, vec) =>
-          LopqSearcher.selectCells(h.model, vec, Quota, h.cellCounts).flatMap { cell =>
-            val tabs = h.model.subquantizerDistances(vec, CellMath.unpackCell(cell, h.model.v))
+          cellsOf(vec).flatMap { cell =>
+            val tabs = slim.adcTables(vec, CellMath.unpackCell(cell, slim.v),
+              h.model.rotations(_)(_))
             for (m <- tabs.indices; sc <- tabs(m).indices)
               yield (qid, cell, m, sc, tabs(m)(sc))
           }
@@ -253,11 +257,15 @@ object EngineOps {
         .flatMap { case (id, emb) =>
           val m = modelB.value
           val x = emb.toArray
-          val px = m.project(x, m.predictCoarse(x))
-          for (split <- 0 until m.numCoarseSplits; f <- 0 until m.numFineSplits) yield {
-            val sub = VectorOps.splits(px(split), m.numFineSplits)(f)
-            val code = VectorOps.argminL2(sub, m.subquantizers(split)(f))
-            (id, split, f, sub.map(_.toDouble).toSeq, code)
+          val (c0, c1) = m.slim.predictCoarse(x)
+          val fine = m.slim.predictFineWith(x, (c0, c1), m.rotations(_)(_))
+          (0 until m.numCoarseSplits).flatMap { split =>
+            val subs = VectorOps.splits(m.slim.projectHalfWith(x, split,
+              if (split == 0) c0 else c1, m.rotations(_)(_)), m.numFineSplits)
+            (0 until m.numFineSplits).map { f =>
+              (id, split, f, subs(f).map(_.toDouble).toSeq,
+                fine(split * m.numFineSplits + f).toInt)
+            }
           }
         }
         .toDF("id", "split", "fidx", "subvec", "code").repartition(1)
@@ -707,60 +715,54 @@ object EngineOps {
 
   // ------------------------------------------------------------- queries
 
+  /** The fixed query set's per-query serves, ranked: `(q_id, rank, n_id,
+    * adc_dist, exact_dist)`. q34/q35 run it on the full-model handle
+    * (resident rotation slices), q69 on the fetched one — one plan, one
+    * oracle. */
+  private def annPerQuery(s: SparkSession, d: String, h: LopqSlimIndex): DataFrame = {
+    val e = t(s, d, "embeddings")
+    val perQuery = queryVectors(s, d).map { case (qid, vec) =>
+      LopqSearcher.searchSlim(h, e, "vec_id", "embedding", vec, Quota, TopK, RerankK)
+        .withColumn("q_id", lit(qid))
+    }
+    val w = Window.partitionBy("q_id").orderBy(col("exact_dist"), col("id"))
+    perQuery.reduce(_.unionAll(_))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .select(col("q_id"), col("rank"), col("id").as("n_id"),
+        round(col("adc_dist"), 6).as("adc_dist"),
+        round(col("exact_dist"), 6).as("exact_dist"))
+      .orderBy("q_id", "rank")
+  }
+
   /** A `def`, not a `val`: the engine oracles are GENERATED when the
     * queries run, so the catalog must re-read the stash on every access
     * (Verify builds `oracleSql` after running all queries). */
   def defs: Seq[QueryDef] = Seq(
     // §3.3/§3.1 full ANN path against the PERSISTED index: load-or-build →
     // per-query multisequence cell selection → partition-pruned ADC scan
-    // (broadcast tables join) → exact rerank. Oracle: generated at runtime
-    // over the dumped artifacts (see ensureOracle).
+    // (broadcast tables) → exact rerank, rotation slices from the RESIDENT
+    // tensor of the full-model handle. Oracle: generated at runtime over
+    // the dumped artifacts (see ensureOracle).
     QueryDef(
       "q34_lopq_ann",
       (s, d) => {
         ensureOracle(s, d)
-        val h = index(s, d)
-        val e = t(s, d, "embeddings")
-        val perQuery = queryVectors(s, d).map { case (qid, vec) =>
-          LopqSearcher.search(h.codes, e, "vec_id", "embedding", h.model, vec,
-            Quota, TopK, RerankK, h.cellCounts)
-            .withColumn("q_id", lit(qid))
-        }
-        val w = Window.partitionBy("q_id").orderBy(col("exact_dist"), col("id"))
-        perQuery.reduce(_.unionAll(_))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .select(col("q_id"), col("rank"), col("id").as("n_id"),
-            round(col("adc_dist"), 6).as("adc_dist"),
-            round(col("exact_dist"), 6).as("exact_dist"))
-          .orderBy("q_id", "rank")
+        annPerQuery(s, d, index(s, d).serving)
       },
       stashed("q34_lopq_ann"),
       bench = true,
       dependsOnIndex = true),
 
-    // The same ANN queries through the release-MAGNITUDE serve path
-    // (SlimLopqModel + per-query rotation slices, tensor never resident) —
-    // hash-gated against the SAME generated oracle as q34: one semantics,
-    // two physical serve paths, both in the driver's correctness gate.
+    // The same ANN queries through the release-MAGNITUDE serve handle
+    // (rotation slices FETCHED per query, tensor never resident) —
+    // hash-gated against the SAME generated oracle as q34: one plan, both
+    // rotation sources, both in the driver's correctness gate.
     QueryDef(
       "q69_lopq_ann_slim",
       (s, d) => {
         ensureOracle(s, d)
         index(s, d) // build/persist the index before loading it slim
-        val slim = slimIndex(s, d)
-        val e = t(s, d, "embeddings")
-        val perQuery = queryVectors(s, d).map { case (qid, vec) =>
-          LopqSearcher.searchSlim(slim, e, "vec_id", "embedding", vec,
-            Quota, TopK, RerankK)
-            .withColumn("q_id", lit(qid))
-        }
-        val w = Window.partitionBy("q_id").orderBy(col("exact_dist"), col("id"))
-        perQuery.reduce(_.unionAll(_))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .select(col("q_id"), col("rank"), col("id").as("n_id"),
-            round(col("adc_dist"), 6).as("adc_dist"),
-            round(col("exact_dist"), 6).as("exact_dist"))
-          .orderBy("q_id", "rank")
+        annPerQuery(s, d, slimIndex(s, d))
       },
       stashed("q69_lopq_ann_slim"),
       dependsOnIndex = true),
@@ -1163,13 +1165,8 @@ object EngineOps {
       "q35_lopq_recall",
       (s, d) => {
         ensureOracle(s, d)
-        val h = index(s, d)
         val e = t(s, d, "embeddings")
-        val ann = queryVectors(s, d).map { case (qid, vec) =>
-          LopqSearcher.search(h.codes, e, "vec_id", "embedding", h.model, vec,
-            Quota, TopK, RerankK, h.cellCounts)
-            .select(lit(qid).as("q_id"), col("id").as("n_id"))
-        }.reduce(_.unionAll(_))
+        val ann = annPerQuery(s, d, index(s, d).serving).select("q_id", "n_id")
         val q = e.where(col("vec_id") < NumQueries)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
         val w = Window.partitionBy("q_id").orderBy(col("exact_dist"), col("vec_id"))
@@ -1376,7 +1373,7 @@ object EngineOps {
         ensureOracle(s, d)
         val h = index(s, d)
         VectorQueries.protoPrune(t(s, d, "embeddings"), "vec_id",
-            "embedding", h.model, ProtoKeepFrac)
+            "embedding", h.model.slim, ProtoKeepFrac)
           .orderBy("cell_id", "rk")
       },
       stashed("q101_proto_prune"),
@@ -1407,7 +1404,7 @@ object EngineOps {
           .where(col("id") =!= col("comp")).select(col("id").as("vec_id"))
         val surv = TextOps.antiJoinIds(e, "vec_id", losers)
         val kept = VectorQueries.protoPrune(surv, "vec_id", "embedding",
-            h.model, ProtoKeepFrac)
+            h.model.slim, ProtoKeepFrac)
           .where(col("keep"))
           .select(col("id"), col("cell_id"), col("proto_dist"))
           .localCheckpoint()

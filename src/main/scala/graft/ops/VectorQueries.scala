@@ -462,33 +462,16 @@ object VectorQueries {
     * the pass is one linear scan — executors scale it, don't micro-tile
     * it. */
   def protoPrune(vectors: DataFrame, idCol: String, vecCol: String,
-      model: graft.engine.LopqModel, keepFrac: Double,
-      pca: Option[graft.engine.LopqPca] = None): DataFrame =
-    protoPruneImpl(vectors, idCol, vecCol, model.coarse, model.mus,
-      keepFrac, pca)
-
-  /** [[protoPrune]] from a SLIM model handle — the release-magnitude form:
-    * the slim model already holds exactly the arrays the score needs
-    * (coarse codebooks + residual means; the rotation tensor it elides is
-    * the part the score provably cannot use). */
-  def protoPruneSlim(vectors: DataFrame, idCol: String, vecCol: String,
-      slim: graft.engine.SlimLopqModel, keepFrac: Double,
-      pca: Option[graft.engine.LopqPca] = None): DataFrame =
-    protoPruneImpl(vectors, idCol, vecCol, slim.coarse, slim.mus,
-      keepFrac, pca)
-
-  private def protoPruneImpl(vectors: DataFrame, idCol: String,
-      vecCol: String, coarse: Array[Array[Array[Float]]],
-      mus: Array[Array[Array[Float]]], keepFrac: Double,
-      pca: Option[graft.engine.LopqPca]): DataFrame = {
+      model: graft.engine.SlimLopqModel, keepFrac: Double,
+      pca: Option[graft.engine.LopqPca] = None): DataFrame = {
     require(keepFrac > 0.0 && keepFrac <= 1.0,
       s"keepFrac must be in (0, 1], got $keepFrac")
     val s = vectors.sparkSession
     import s.implicits._
-    val coarseB = s.sparkContext.broadcast(coarse)
-    val musB = s.sparkContext.broadcast(mus)
+    val coarseB = s.sparkContext.broadcast(model.coarse)
+    val musB = s.sparkContext.broadcast(model.mus)
     val pcaB = s.sparkContext.broadcast(pca)
-    val vCount = coarse(0).length
+    val vCount = model.v
     // shared scorer: assignment = the encoder's own argmin (bit-agrees
     // with the persisted codes); the distance re-folds vs C + mu in double
     val score: Seq[Float] => (Long, Double) = { emb =>

@@ -98,7 +98,7 @@ class CurationSampleSpec extends SparkSpec {
     graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sf, "embeddings")
     val keepFrac = 0.7
-    val got = VectorQueries.protoPrune(e, "vec_id", "embedding", model, keepFrac)
+    val got = VectorQueries.protoPrune(e, "vec_id", "embedding", model.slim, keepFrac)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getBoolean(4)))
 
@@ -108,7 +108,7 @@ class CurationSampleSpec extends SparkSpec {
     val rows = e.select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val scored = rows.map { case (id, x) =>
-      val cc = model.predictCoarse(x)
+      val cc = new LopqReference(model).predictCoarse(x)
       val halves = graft.core.VectorOps.splits(x, model.numCoarseSplits)
       var sq = 0.0
       Seq(cc._1, cc._2).zipWithIndex.foreach { case (ci, split) =>
@@ -150,7 +150,7 @@ class CurationSampleSpec extends SparkSpec {
   test("protoPrune keep boundary: keepFrac = 1.0 keeps everything") {
     graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sf, "embeddings").where(col("vec_id") < 100)
-    val all = VectorQueries.protoPrune(e, "vec_id", "embedding", model, 1.0)
+    val all = VectorQueries.protoPrune(e, "vec_id", "embedding", model.slim, 1.0)
     assert(all.where(!col("keep")).isEmpty)
   }
 
@@ -158,8 +158,8 @@ class CurationSampleSpec extends SparkSpec {
     * CatalogSpec semdedup pattern): random skinny assignments for the two
     * samplers (ranked vs a driver model over the same md5 hash), and
     * HAND-BUILT random models for the prune (no training — protoPrune
-    * reads only coarse/mus, so a LopqModel with placeholder rotations and
-    * a minimal subquantizer block exercises the full scoring path).
+    * reads only coarse/mus, so a SlimLopqModel with a minimal
+    * subquantizer block exercises the full scoring path).
     * Deterministic seed, so a rounding-boundary tie cannot flake. */
   test("curation trio matches brute-force models on random inputs") {
     graft.functions.GraftFunctions.register(spark)
@@ -188,17 +188,15 @@ class CurationSampleSpec extends SparkSpec {
         drawOf(cnt => math.max(1L, math.sqrt(cnt.toDouble).toLong)),
         s"tempered, trial $trial")
 
-      // protoPrune vs a driver model on a hand-built random LopqModel
+      // protoPrune vs a driver model on a hand-built random slim model
       val v = 2 + rnd.nextInt(3)
       val halfDim = 2 + rnd.nextInt(4)
       val keepFrac = 0.3 + rnd.nextDouble() * 0.7
       def block() = Array.fill(v)(Array.fill(halfDim)(rnd.nextGaussian().toFloat))
-      val m = graft.engine.LopqModel(
+      val m = graft.engine.SlimLopqModel(
         coarse = Array(block(), block()),
-        rotations = Array(Array.empty[Array[Array[Float]]],
-          Array.empty[Array[Array[Float]]]), // unused by the score
         mus = Array(block(), block()),
-        subquantizers = Array( // minimal well-formed block, unused too
+        subquantizers = Array( // minimal well-formed block, unused by the score
           Array(Array(Array(0f))), Array(Array(Array(0f)))))
       val vecs = (0 until n).map(i =>
         (i.toLong, Array.fill(2 * halfDim)(rnd.nextGaussian().toFloat).toSeq))
@@ -244,11 +242,11 @@ class CurationSampleSpec extends SparkSpec {
     // (ADVICE r12) — pin that string ids now ride the typed map unchanged
     graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sf, "embeddings")
-    val viaLong = VectorQueries.protoPrune(e, "vec_id", "embedding", model, 0.7)
+    val viaLong = VectorQueries.protoPrune(e, "vec_id", "embedding", model.slim, 0.7)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
     val stringIds = e.select(sha1(col("vec_id").cast("string")).as("vec_id"),
       col("embedding"))
-    val got = VectorQueries.protoPrune(stringIds, "vec_id", "embedding", model, 0.7)
+    val got = VectorQueries.protoPrune(stringIds, "vec_id", "embedding", model.slim, 0.7)
     assert(got.schema("id").dataType ===
       org.apache.spark.sql.types.StringType, "string ids must stay strings")
     val viaString = got.collect()
@@ -267,7 +265,7 @@ class CurationSampleSpec extends SparkSpec {
     import s.implicits._
     val bad = Seq((1.5, Seq(0.1f, 0.2f, 0.3f, 0.4f))).toDF("vec_id", "embedding")
     val ex = intercept[IllegalArgumentException] {
-      VectorQueries.protoPrune(bad, "vec_id", "embedding", model, 0.7)
+      VectorQueries.protoPrune(bad, "vec_id", "embedding", model.slim, 0.7)
     }
     assert(ex.getMessage.contains("unsupported type"))
   }
@@ -302,15 +300,24 @@ class CurationSampleSpec extends SparkSpec {
   }
 
   test("protoPruneSlim ≡ protoPrune: the slim handle scores bit-identically") {
+    // one scorer: a full model's `slim` view and a slim model built
+    // separately over the same arrays score identically, and every row
+    // lands in the reference encoder's coarse cell
     graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sf, "embeddings")
     val slim = graft.engine.SlimLopqModel(
       model.coarse, model.mus, model.subquantizers)
-    val full = VectorQueries.protoPrune(e, "vec_id", "embedding", model, 0.7)
+    val full = VectorQueries.protoPrune(e, "vec_id", "embedding", model.slim, 0.7)
       .orderBy("cell_id", "rk").collect()
     val viaSlim = VectorQueries
-      .protoPruneSlim(e, "vec_id", "embedding", slim, 0.7)
+      .protoPrune(e, "vec_id", "embedding", slim, 0.7)
       .orderBy("cell_id", "rk").collect()
     assert(full.length == viaSlim.length && full.sameElements(viaSlim))
+    val ref = new LopqReference(model)
+    val refCell = e.select("vec_id", "embedding").collect().map { r =>
+      val (c0, c1) = ref.predictCoarse(r.getSeq[Float](1).toArray)
+      r.getLong(0) -> (c0.toLong * model.v + c1)
+    }.toMap
+    assert(full.map(r => r.getLong(0) -> r.getLong(1)).toMap === refCell)
   }
 }

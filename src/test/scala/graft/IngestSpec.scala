@@ -32,6 +32,13 @@ class IngestSpec extends SparkSpec {
       .select(col("id"), col("cell_id").cast("long"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(slim === classic)
+    // both equal the reference's coarse predict
+    val ref = new LopqReference(h.model)
+    val want = e.collect().map { r =>
+      val (c0, c1) = ref.predictCoarse(r.getSeq[Float](1).toArray)
+      r.getLong(0) -> (c0.toLong * h.model.v + c1)
+    }.toMap
+    assert(classic === want)
   }
 
   test("a later micro-batch's exact duplicates are dropped; an orphaned vector dir is inert") {

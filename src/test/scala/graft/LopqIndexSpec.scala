@@ -34,7 +34,8 @@ class LopqIndexSpec extends SparkSpec {
 
   test("model round-trips through parquet bit-exactly") {
     val m0 = built.model
-    val (m1, pca1) = LopqIndexStore.loadModel(spark, dir)
+    val loaded = LopqIndexStore.load(spark, dir).get
+    val (m1, pca1) = (loaded.model, loaded.pca)
     assert(pca1.isEmpty)
     assert(m1.v === m0.v && m1.m === m0.m && m1.dim === m0.dim)
     for (s <- 0 until 2; c <- 0 until m0.v) {
@@ -53,19 +54,17 @@ class LopqIndexSpec extends SparkSpec {
     val e = Tables(spark, sf, "embeddings")
     val qv = e.where(col("vec_id") === 3).select("embedding")
       .head().getSeq[Float](0).toArray
-    def run(codes: org.apache.spark.sql.DataFrame, m: graft.engine.LopqModel,
-        counts: graft.core.CellHistogram) =
-      LopqSearcher.search(codes, e, "vec_id", "embedding", m, qv, 200, 10, 50, counts)
+    def run(index: graft.engine.LopqSlimIndex) =
+      LopqSearcher.searchSlim(index, e, "vec_id", "embedding", qv, 200, 10, 50)
         .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    assert(run(loaded.codes, loaded.model, loaded.cellCounts) ===
-      run(h.codes, h.model, h.cellCounts))
+    assert(run(loaded.serving) === run(h.serving))
   }
 
   test("visited-cell filter prunes partitions on disk") {
     val h = built
     val qv = Tables(spark, sf, "embeddings").where(col("vec_id") === 1)
       .select("embedding").head().getSeq[Float](0).toArray
-    val df = LopqSearcher.searchApprox(h.codes, h.model, qv, 200, 10, h.cellCounts)
+    val df = LopqSearcher.approxStage(h.serving, qv, 200, 10)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), plan.take(2000))
     // the IN-list over cell_id must land in PartitionFilters, not a
@@ -174,8 +173,8 @@ class LopqIndexSpec extends SparkSpec {
     // and the loaded index searches raw-dim queries through the PCA front
     val qv = e.where(col("vec_id") === 7).select("embedding")
       .head().getSeq[Float](0).toArray
-    val hits = LopqSearcher.search(loaded.codes, e, "vec_id", "embedding",
-      loaded.model, qv, 200, 10, 50, loaded.cellCounts, loaded.pca).collect()
+    val hits = LopqSearcher.searchSlim(loaded.serving, e, "vec_id", "embedding",
+      qv, 200, 10, 50).collect()
     assert(hits.length === 10)
     assert(hits.map(_.getAs[Long]("id")).contains(7L),
       "the query vector itself must be retrievable through the PCA front")
@@ -197,6 +196,14 @@ class LopqIndexSpec extends SparkSpec {
       .sortBy(_._1).toSeq
     assert(snap(sdir) === snap(dir),
       "slim-encoded appends must equal the one-shot full-model encode")
+    // the one encoder, under both rotation sources (the build's resident
+    // tensor, the appends' fetched slices), equals the reference's predict
+    val ref = new LopqReference(h.model)
+    val want = e.select("vec_id", "embedding").collect().map { r =>
+      val ((c0, c1), fine) = ref.predict(r.getSeq[Float](1).toArray)
+      (r.getLong(0), c0, c1, fine.toSeq, c0 * h.model.v + c1)
+    }.sortBy(_._1).toSeq
+    assert(snap(dir) === want, "encode diverged from the reference predict")
   }
 
   test("append adds an O(batch) counts delta file, never a histogram rewrite") {

@@ -22,6 +22,10 @@ class LopqSpec extends SparkSpec {
     (m, c, cnt)
   }
 
+  /** An in-memory serve handle: the encoded codes, resident rotations. */
+  private lazy val serving =
+    graft.engine.LopqIndex(model, None, codes, counts, dir = "").serving
+
   test("model shapes match the parameterization") {
     assert(model.v === 8)
     assert(model.m === 4)
@@ -42,12 +46,41 @@ class LopqSpec extends SparkSpec {
     // ref get_proportion_of_reconstructions_with_same_codes, eval.py:77-89
     val vecs = Tables(spark, sf, "embeddings").limit(50)
       .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+    // the production encoder (resident slices) must equal the reference's
+    // predict on every vector it encodes, reconstructions included
+    val ref = new LopqReference(model)
+    def predict(x: Array[Float]): ((Int, Int), Array[Short]) = {
+      val cc = model.slim.predictCoarse(x)
+      val fine = model.slim.predictFineWith(x, cc, model.rotations(_)(_))
+      val (rcc, rfine) = ref.predict(x)
+      assert(cc == rcc && fine.sameElements(rfine), "encoder diverged from the reference")
+      (cc, fine)
+    }
     val stable = vecs.count { v =>
-      val (cc, fine) = model.predict(v)
-      val (cc2, _) = model.predict(model.reconstruct(cc, fine))
+      val (cc, fine) = predict(v)
+      val (cc2, _) = predict(model.reconstruct(cc, fine))
       cc == cc2
     }
     assert(stable >= 40, s"only $stable/50 coarse codes stable under reconstruction")
+  }
+
+  test("adcTables and predictFineWith equal the reference bit for bit on random vectors") {
+    import org.scalacheck.{Gen, Prop, Test}
+    val ref = new LopqReference(model)
+    val rot: (Int, Int) => Array[Array[Float]] = model.rotations(_)(_)
+    val vec = Gen.listOfN(model.dim, Gen.choose(-3.0f, 3.0f)).map(_.toArray)
+    val cell = Gen.zip(Gen.choose(0, model.v - 1), Gen.choose(0, model.v - 1))
+    val prop = Prop.forAll(vec, cell) { (x, cc) =>
+      val tables = model.slim.adcTables(x, cc, rot)
+      val want = ref.subquantizerDistances(x, cc)
+      tables.length == want.length &&
+        tables.indices.forall(i => java.util.Arrays.equals(tables(i), want(i))) &&
+        model.slim.predictFineWith(x, cc, rot).sameElements(ref.predictFine(x, cc)) &&
+        model.slim.predictCoarse(x) == ref.predictCoarse(x)
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(300)
+      .withInitialSeed(org.scalacheck.rng.Seed(11L)), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("rotations are orthonormal (R·Rᵀ = I)") {
@@ -69,8 +102,8 @@ class LopqSpec extends SparkSpec {
     val recalls = queries.map { case (qid, qv) =>
       val brute = all.map { case (id, v) => (id, graft.core.VectorOps.l2(qv, v)) }
         .sortBy { case (id, dist) => (dist, id) }.take(10).map(_._1).toSet
-      val ann = LopqSearcher.search(codes, e, "vec_id", "embedding", model, qv,
-        quota = 200, k = 10, rerankK = 50, counts)
+      val ann = LopqSearcher.searchSlim(serving, e, "vec_id", "embedding", qv,
+        quota = 200, k = 10, rerankK = 50)
         .collect().map(_.getAs[Long]("id")).toSet
       brute.intersect(ann).size / 10.0
     }
@@ -83,8 +116,8 @@ class LopqSpec extends SparkSpec {
     val qv = e.where(col("vec_id") === 7).select("embedding")
       .head().getSeq[Float](0).toArray
     // quota ≥ corpus → all cells visited; rerankK = corpus → exact top-k
-    val ann = LopqSearcher.search(codes, e, "vec_id", "embedding", model, qv,
-      quota = 10000, k = 5, rerankK = 500, counts)
+    val ann = LopqSearcher.searchSlim(serving, e, "vec_id", "embedding", qv,
+      quota = 10000, k = 5, rerankK = 500)
       .collect().map(_.getAs[Long]("id"))
     val all = e.select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))

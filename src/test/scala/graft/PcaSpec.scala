@@ -92,8 +92,9 @@ class PcaSpec extends SparkSpec {
     val recalls = queries.map { case (qid, qv) =>
       val brute = all.map { case (id, v) => (id, VectorOps.l2(qv, v)) }
         .sortBy { case (id, dist) => (dist, id) }.take(10).map(_._1).toSet
-      val ann = LopqSearcher.search(codes, e, "vec_id", "embedding", model, qv,
-        quota = 200, k = 10, rerankK = 50, counts, pca = Some(pca))
+      val ann = LopqSearcher.searchSlim(
+          graft.engine.LopqIndex(model, Some(pca), codes, counts, dir = "").serving,
+          e, "vec_id", "embedding", qv, quota = 200, k = 10, rerankK = 50)
         .collect().map(_.getAs[Long]("id")).toSet
       brute.intersect(ann).size / 10.0
     }

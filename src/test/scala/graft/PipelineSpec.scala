@@ -137,6 +137,21 @@ class PipelineSpec extends SparkSpec {
     val slim = new GraftApi(spark, sf, searcherName = "lopq_slim")
       .searchByIds(Seq(0L, 7L), 5).collect().map(_.getString(1)).toSeq
     assert(slim === full)
+    // and both (resident vs fetched rotation slices) are the reference's
+    // serve semantics, shaped like the API response
+    val h = graft.ops.EngineOps.index(spark, sf)
+    val ref = new LopqReference(h.model)
+    val codes = h.codes.select("id", "cell_id", "fine").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Short](2).toArray)).toSeq
+    val vecs = graft.ops.Tables(spark, sf, "embeddings").select("vec_id", "embedding")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    val want = Seq(0L, 7L).map { q =>
+      val hits = ref.search(codes, vecs, h.cellCounts, None, vecs(q), 200, 5, 50)
+        .map { case (id, _, exact) => (math.floor(exact * 1e6 + 0.5).toLong, id) }.sorted
+      s"""{"queryId":$q,"similarIds":[${hits.map(_._2).mkString(",")}],""" +
+        s""""distancesMicro":[${hits.map(_._1).mkString(",")}]}"""
+    }
+    assert(full === want)
   }
 
   /** The one-call self-dedup facade must reproduce q73's oracle-gated pair

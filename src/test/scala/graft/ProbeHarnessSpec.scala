@@ -51,8 +51,19 @@ class ProbeHarnessSpec extends SparkSpec {
     val sc = spark.sparkContext
     GraftBridge.drainListenerBus(sc)
     val before = GraftBridge.listenerCount(sc)
-    assert(Probe.census(spark, "census-test")(spark.range(0, 1000, 1, 2).count()) === 1000L)
+    var n = 0L
+    val out = captured {
+      n = Probe.census(spark, "census-test")(spark.range(0, 1000, 1, 2).count())
+    }
+    assert(n === 1000L)
     assert(Probe.census(spark, "census-test")(spark.range(0, 10).collect().length) === 10)
     assert(GraftBridge.listenerCount(sc) === before)
+    // job lines are labelled with the action's call site, not `?`
+    val jobLines = out.linesIterator.filter(_.contains("[census-test]   job")).toSeq
+    assert(jobLines.nonEmpty, out)
+    jobLines.foreach { l =>
+      val label = l.substring(l.indexOf(" ms  ") + 5)
+      assert(label != "?" && label.contains(".scala:"), l)
+    }
   }
 }

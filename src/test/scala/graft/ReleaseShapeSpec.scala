@@ -65,9 +65,8 @@ class ReleaseShapeSpec extends SparkSpec {
 
   test("search plan: bucket partition pruning + pushed cell IN-list + broadcast ADC") {
     val h = built
-    val df = LopqSearcher.searchApprox(h.codes, h.model,
-      h.pca.get(ReleaseShape.rowVec(42L)), TwinQuota, 10, h.cellCounts,
-      h.cellBuckets)
+    val df = LopqSearcher.approxStage(h.serving,
+      h.pca.get(ReleaseShape.rowVec(42L)), TwinQuota, 10)
     val plan = df.queryExecution.executedPlan.toString
     val pf = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(pf.contains("cell_bucket"), plan.take(3000))
@@ -87,9 +86,8 @@ class ReleaseShapeSpec extends SparkSpec {
 
   test("executed search scan reads a small pruned fraction of the codes files") {
     val h = built
-    val df = LopqSearcher.searchApprox(h.codes, h.model,
-      h.pca.get(ReleaseShape.rowVec(7L)), TwinQuota, 10, h.cellCounts,
-      h.cellBuckets)
+    val df = LopqSearcher.approxStage(h.serving,
+      h.pca.get(ReleaseShape.rowVec(7L)), TwinQuota, 10)
     df.collect()
     val scan = fileScans(df.queryExecution.executedPlan)
     assert(scan.nonEmpty)
@@ -105,9 +103,8 @@ class ReleaseShapeSpec extends SparkSpec {
   private val TwinK = 10
   private val TwinQuota = 2000
   private def twinSearch(h: graft.engine.LopqIndex, qid: Long) =
-    LopqSearcher.search(h.codes, ReleaseShape.vectors(spark, dir), "vec_id",
-      "embedding", h.model, ReleaseShape.rowVec(qid), TwinQuota, TwinK,
-      ReleaseShape.RerankK, h.cellCounts, h.pca, h.cellBuckets)
+    LopqSearcher.searchSlim(h.serving, ReleaseShape.vectors(spark, dir), "vec_id",
+      "embedding", ReleaseShape.rowVec(qid), TwinQuota, TwinK, ReleaseShape.RerankK)
 
   test("end-to-end release-path search retrieves the query itself") {
     val h = built
@@ -147,9 +144,8 @@ class ReleaseShapeSpec extends SparkSpec {
     val h = built
     val v = ReleaseShape.vectors(spark, dir)
     def run(shape: graft.engine.RerankShape) =
-      LopqSearcher.search(h.codes, v, "vec_id", "embedding", h.model,
-        ReleaseShape.rowVec(99L), TwinQuota, TwinK,
-        ReleaseShape.RerankK, h.cellCounts, h.pca, h.cellBuckets,
+      LopqSearcher.searchSlim(h.serving, v, "vec_id", "embedding",
+        ReleaseShape.rowVec(99L), TwinQuota, TwinK, ReleaseShape.RerankK,
         rerankShape = shape)
     val scan = run(graft.engine.RerankShape.Scan).collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toSeq
@@ -184,15 +180,24 @@ class ReleaseShapeSpec extends SparkSpec {
     val slim = LopqIndexStore.loadSlim(spark, dir).get
     assert(slim.slim.v === h.model.v && slim.cellBuckets === Buckets)
     val v = ReleaseShape.vectors(spark, dir)
+    // one serve plan, two rotation sources (resident tensor vs fetched
+    // slices), both equal to the driver-side reference
+    val ref = new LopqReference(h.model)
+    val codes = h.codes.select("id", "cell_id", "fine").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Short](2).toArray)).toSeq
+    val vecs = v.select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     for (qid <- Seq(42L, 777L)) {
-      val full = LopqSearcher.search(h.codes, v, "vec_id", "embedding", h.model,
-        ReleaseShape.rowVec(qid), 200, TwinK, ReleaseShape.RerankK,
-        h.cellCounts, h.pca, h.cellBuckets).collect()
+      val full = LopqSearcher.searchSlim(h.serving, v, "vec_id", "embedding",
+        ReleaseShape.rowVec(qid), 200, TwinK, ReleaseShape.RerankK).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
       val viaSlim = LopqSearcher.searchSlim(slim, v, "vec_id", "embedding",
         ReleaseShape.rowVec(qid), 200, TwinK, ReleaseShape.RerankK).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
       assert(viaSlim === full, s"slim serve diverged from the full model for q$qid")
+      assert(full === ref.search(codes, vecs, h.cellCounts, h.pca,
+        ReleaseShape.rowVec(qid), 200, TwinK, ReleaseShape.RerankK),
+        s"serve diverged from the reference for q$qid")
     }
   }
 
