@@ -166,16 +166,18 @@ final class GraftApi(spark: SparkSession, sfDir: String,
     *
     * Defaults are the PRODUCTION bounds (bounded pool + bounded prefix —
     * recall measured in PROBES.md), not q73's exactness gate; pass
-    * `quota`/`rerankK` up to the corpus size to reproduce the oracle. */
+    * `quota`/`rerankK` up to the corpus size to reproduce the oracle.
+    * `chunkRows` = 0 sizes the chunks from the session's memory budget. */
   def dedupCorpus(outDir: String, quota: Int = 1000, k: Int = 10,
       rerankK: Int = 128,
-      simThreshold: Double = graft.ops.VectorQueries.NearDupSimThreshold): DataFrame = {
+      simThreshold: Double = graft.ops.VectorQueries.NearDupSimThreshold,
+      chunkRows: Long = 0L): DataFrame = {
     EngineOps.index(spark, sfDir) // ensure built + persisted
     val slim = EngineOps.slimIndex(spark, sfDir)
     val e = vectors
     val queries = e.select(col("vec_id").as("q_id"), col("embedding"))
     graft.engine.LopqSearcher.annJoinChunked(slim, queries, "q_id", "embedding",
-        e, "vec_id", "embedding", quota, k, rerankK) { (df, c) =>
+        e, "vec_id", "embedding", quota, k, rerankK, chunkRows) { (df, c) =>
       EngineOps.verifiedDedupPairs(e, df, simThreshold)
         .write.mode(if (c == 0) "overwrite" else "append").parquet(outDir)
     }

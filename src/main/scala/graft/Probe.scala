@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
 
 import graft.core.DiskStats
-import graft.engine.{LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef, RerankShape, RotationSource}
+import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef,
+  RerankShape, RotationSource}
 
 /** The dev probe harness, and the small probes as its modes.
   *
@@ -31,14 +32,14 @@ import graft.engine.{LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef
   *     timed in order (cell walk, rotation slices, ADC tables, approx plan
   *     with its table broadcast, approx execution + prefix collect, rerank),
   *     then the real `searchSlim` on the same queries as a reference row.
-  *   - `annjoin [v1..v4] [n] [passes]` — per-job and per-stage census of the
-  *     real batch `annJoin` over `n` probes, its TOTAL per pass and the
-  *     regime notes of pass 1 (`PROBE_EXPLAIN=1` dumps the executed plan).
+  *   - `annjoin [v1..v4] [n] [passes] [force:<decision>=<value> …]` —
+  *     per-job and per-stage census of the real batch `annJoin` over `n`
+  *     probes, its TOTAL per pass and the plan of pass 1
+  *     (`PROBE_EXPLAIN=1` dumps the executed plan). Each `force:` arg
+  *     overrides one decision of the chosen plan ([[AnnJoinDecisions]], e.g.
+  *     `force:shipMode=projection`); an unknown decision or value fails.
   *   - `scanfloor <parquetDir> [passes]` — the bare decode floor of a table:
   *     a noop materialization of every column, with this JVM's CPU.
-  *   - `cellfilter [v1..v4] [n]` — the batch join's codes scan unfiltered,
-  *     bucket-filtered and with the full cell IN-list, over the visited-cell
-  *     union of `n` probes.
   *   - `fragments <sfDir>` — pre-checkpoint plans of the text fragments
   *     (MinHash signatures, LSH band rows, SimHash signatures) the catalog
   *     queries' own dumps hide behind `localCheckpoint`.
@@ -51,7 +52,8 @@ import graft.engine.{LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef
   *   ProbeAnnJoinStages fused v3 1000 3       →  Probe annjoin v3 1000 3
   *   ProbeAnnJoinStages v3 1000 3             →  Probe annjoin v3 1000 3   (the staged copy is gone)
   *   ProbeScanFloor <dir> 3                   →  Probe scanfloor <dir> 3
-  *   ProbeCellFilterCost v3 1000              →  Probe cellfilter v3 1000
+  *   ProbeCellFilterCost v3 1000              →  Probe annjoin v3 1000 3 force:cellsPushed=true|false
+  *   Probe cellfilter v3 1000                 →  Probe annjoin v3 1000 3 force:cellsPushed=true|false
   *   ProbeFragments <sf>                      →  Probe fragments <sf>
   * }}}
   */
@@ -81,12 +83,19 @@ object Probe {
 
   /** Sets every `conf:key=value` arg as a session conf, printing each as
     * `[tag] conf key=value`, and returns the other args in order. A `conf:`
-    * arg without a key and `=` fails before any conf is set. */
+    * arg without a key and `=`, or one naming a removed
+    * `spark.graft.annjoin.*` key, fails before any conf is set. */
   def confArgs(spark: SparkSession, args: Seq[String],
       tag: String = "probe"): Array[String] = {
     val (confs, rest) = args.partition(_.startsWith("conf:"))
     confs.map { a =>
       a.stripPrefix("conf:").split("=", 2) match {
+        case Array(k, _) if k.matches("""spark\.graft\.annjoin\..*""") =>
+          throw new IllegalArgumentException(s"$a: the spark.graft.annjoin.* keys " +
+            "are gone; the annJoin gates derive from spark.driver.maxResultSize, set " +
+            "at session build (as `ProbeRelease dedup` does; `ProbeRelease <mode> " +
+            "maxResultSize:<size>`), and `Probe annjoin` takes " +
+            "force:<decision>=<value> args")
         case Array(k, v) if k.nonEmpty => (k, v)
         case _ => throw new IllegalArgumentException(
           s"bad conf arg (want conf:key=value): $a")
@@ -114,6 +123,41 @@ object Probe {
     * for parsers that pick the shape out of mixed args, so an unknown name
     * reaches [[shape]] and fails there instead of parsing as a number. */
   def isShapeArg(a: String): Boolean = a.matches("v\\d+")
+
+  /** Every annJoin decision a `force:` arg may set, with its values. */
+  val AnnJoinDecisions: Seq[(String, Seq[String])] = {
+    def names(e: Enumeration) = e.values.toSeq.map(_.toString)
+    val bools = Seq("true", "false")
+    Seq("shipMode" -> names(AnnJoinPlan.Ship), "cellsPushed" -> bools, "balanced" -> bools,
+      "qsideBroadcast" -> bools, "rerankMode" -> names(AnnJoinPlan.Rerank),
+      "exactShape" -> names(AnnJoinPlan.Exact))
+  }
+
+  /** The force function for `<decision>=<value>` assignments (e.g.
+    * `shipMode=projection`), applied to the chosen plan by
+    * [[LopqSearcher.annJoinPlanned]]; a malformed assignment, or an unknown
+    * decision or value, fails with the valid ones. */
+  def annJoinForce(assignments: Seq[String]): AnnJoinPlan => AnnJoinPlan =
+    assignments.map { a =>
+      val (name, value) = a.split("=", 2) match {
+        case Array(k, v) => (k, v)
+        case _ => throw new IllegalArgumentException(
+          s"bad annJoin force (want <decision>=<value>): $a")
+      }
+      val valid = AnnJoinDecisions.collectFirst { case (`name`, vs) => vs }.getOrElse(
+        throw new IllegalArgumentException(s"unknown annJoin decision '$name' " +
+          s"(want one of ${AnnJoinDecisions.map(_._1).mkString("|")})"))
+      require(valid.contains(value), s"unknown value '$value' for annJoin decision " +
+        s"$name (want one of ${valid.mkString("|")})")
+      (p: AnnJoinPlan) => name match {
+        case "shipMode" => p.copy(shipMode = AnnJoinPlan.Ship.withName(value))
+        case "cellsPushed" => p.copy(cellsPushed = value.toBoolean)
+        case "balanced" => p.copy(balanced = value.toBoolean)
+        case "qsideBroadcast" => p.copy(qsideBroadcast = value.toBoolean)
+        case "rerankMode" => p.copy(rerankMode = AnnJoinPlan.Rerank.withName(value))
+        case _ => p.copy(exactShape = AnnJoinPlan.Exact.withName(value))
+      }
+    }.foldLeft(identity[AnnJoinPlan] _)(_ andThen _)
 
   /** The one probe timer: runs `body`, then prints
     * `[tag] label <wall> s  read=<GB> GB<extra>` — the wall time and the
@@ -197,7 +241,6 @@ object Probe {
     "serve" -> ("serve-breakdown", serve _),
     "annjoin" -> ("probe-fused", annjoin _),
     "scanfloor" -> ("scan-floor", scanFloor _),
-    "cellfilter" -> ("cellfilter", cellFilter _),
     "fragments" -> ("probe", fragments _))
 
   /** Runs one mode on `spark`: the first arg that is not a `conf:` arg names
@@ -292,7 +335,9 @@ object Probe {
     }
   }
 
-  private def annjoin(spark: SparkSession, args: Seq[String]): Unit = {
+  private def annjoin(spark: SparkSession, allArgs: Seq[String]): Unit = {
+    val (forces, args) = allArgs.partition(_.startsWith("force:"))
+    val force = annJoinForce(forces.map(_.stripPrefix("force:")))
     val s = shape(args.headOption, ReleaseShape.V2)
     val n = args.lift(1).fold(1000)(_.toInt)
     val passes = args.lift(2).fold(3)(_.toInt)
@@ -302,7 +347,7 @@ object Probe {
       println(s"--- fused pass $pass (n=$n) ---")
       timed("probe-fused", "TOTAL") {
         census(spark, "probe-fused") {
-          lastDf = ReleaseShape.annJoinFor(spark, s, idx, n)
+          lastDf = ReleaseShape.annJoinFor(spark, s, idx, n, force)
           noop(lastDf)
         }
       }
@@ -331,36 +376,6 @@ object Probe {
       timed("scan-floor", s"$dir pass=$pass",
         f"  selfCpu=${(DiskStats.selfCpuJiffies() - c0) / 100.0}%.1f s")(noop(df))
     }
-  }
-
-  /** Is the batch join's many-thousand-literal cell IN-list on the codes
-    * scan worth its per-row cost when it prunes almost nothing? Past
-    * [[LopqSearcher.MaxStackSafeInPushdown]] literals the list stays
-    * Catalyst-side (InSet, no row-group pruning) here exactly as in the
-    * production plan. */
-  private def cellFilter(spark: SparkSession, args: Seq[String]): Unit = {
-    val s = shape(args.headOption, ReleaseShape.V3)
-    val n = args.lift(1).fold(1000)(_.toInt)
-    val idx = LopqIndexStore.loadSlim(spark, s.dir).get
-    // the batch's visited-cell union, exactly as annJoin computes it
-    val slim = idx.slim
-    val hist = idx.cellCounts
-    val union = (0 until n).iterator.flatMap { q =>
-      val raw = ReleaseShape.rowVecFor(s, q.toLong)
-      val aq = idx.pca.map(_.apply(raw)).getOrElse(raw)
-      val (d0, d1) = slim.coarseDistances(aq)
-      hist.selectCells(slim.v, d0, d1, ReleaseShape.Quota)
-    }.toArray.distinct.sorted
-    val rowsInUnion = union.iterator.map(c => hist.countOf(c)).sum
-    println(s"[cellfilter] unionCells=${union.length} rowsInUnion=$rowsInUnion")
-    def passes(label: String, df: DataFrame): Unit =
-      (1 to 3).foreach(p => timed("cellfilter", s"$label pass=$p")(noop(df)))
-    val cells = scala.collection.immutable.ArraySeq.unsafeWrapArray(union)
-    passes("unfiltered ", idx.codes)
-    passes("bucketOnly ", idx.codes.where(
-      col("cell_bucket").isin(cells.map(_ % idx.cellBuckets).distinct: _*)))
-    passes("full INSET ", idx.codes.where(
-      LopqIndexStore.cellFilter(cells, idx.cellBuckets)))
   }
 
   /** The text rows' fused expressions (`graft_shingle_hashes`,

@@ -19,6 +19,10 @@ import graft.engine.{LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef
   *        runMain graft.ProbeRelease curatepipe [v1..v4] [threshold] [keepFrac] [chunk[:n]] [multi] [resume]
   *        runMain graft.ProbeRelease cellmiss [v1..v4] [nSample] [eps:e1,e2,...]
   *
+  * Every mode also takes `maxResultSize:<size>`, the session's
+  * `spark.driver.maxResultSize` (dedup: 4g by default); the annJoin gates
+  * derive from half of it ([[graft.engine.AnnJoinPlan]]).
+  *
   * `annjoin` mode times the SET-ORIENTED batch path at each given batch
   * size (default 250 1000 2000) against the chosen release index — the
   * amortized ms/query across sizes is the flat-scaling evidence for the
@@ -111,9 +115,10 @@ object ProbeRelease {
     * of the reference's extraction dedup pass
     * (`updater/extraction_checker.py:225-258`), at the probe count where
     * the batch gates cross into their large-batch regimes: the query
-    * payload passes the 1 GB broadcast bound (SMJ fan-out join) and the
-    * candidate set passes the broadcast-candidate bound (shuffle rerank
-    * join). The regimes that RAN are printed from the engine's own gate
+    * payload passes the query-side broadcast bound (SMJ fan-out join) and
+    * the candidate set passes the broadcast-candidate bound (shuffle rerank
+    * join); both derive from the session's `spark.driver.maxResultSize`
+    * ([[graft.engine.AnnJoinPlan]]). The regimes that RAN are printed from the engine's own gate
     * notes ([[LopqSearcher.lastPlanNotes]]), not inferred from timings.
     *
     * Unlike the exactness-gated q73 (tiny model, rerank prefix = whole
@@ -138,8 +143,6 @@ object ProbeRelease {
       jitterEps.map(e => s" jitterEps=$e").getOrElse("") +
       chunkRows.map(r => s" chunked(rows=${if (r > 0) r.toString else "auto"})")
         .getOrElse(""))
-    chunkRows.filter(_ > 0).foreach(r =>
-      spark.conf.set(LopqSearcher.AnnJoinChunkRowsConf, r.toString))
     // Two probe modes, two questions:
     //   - SELF (default): probes ARE corpus rows → recall measures the
     //     in-cluster kNN ranking of the bounded prefix — the hard ANN
@@ -179,9 +182,9 @@ object ProbeRelease {
         case None =>
           sinkOf(LopqSearcher.annJoin(idx, probes, "q_id", "q_vec",
             vectors, "vec_id", "embedding", quota, k + 1, rerankK), 0)
-        case Some(_) =>
+        case Some(rows) =>
           val n = LopqSearcher.annJoinChunked(idx, probes, "q_id", "q_vec",
-            vectors, "vec_id", "embedding", quota, k + 1, rerankK) { (df, c) =>
+            vectors, "vec_id", "embedding", quota, k + 1, rerankK, rows) { (df, c) =>
             sinkOf(df, c)
             val notes = LopqSearcher.lastPlanNotes(spark)
             println(s"[probe-release]   chunk $c " +
@@ -838,13 +841,16 @@ object ProbeRelease {
     // a bad P must fail before the Spark session and index load (ADVICE
     // r14), not minutes later inside assignCellsMulti
     if (mode == "semdedup") args.filter(_.startsWith("multi:")).foreach(multiWidth)
-    // dedup's broadcast-qvec exact stage collects the probe matrix
-    // (O(probes·D) — ~1.2 GB at the 600k × 512-d self-dedup) to the
-    // driver before broadcasting; the default 1g maxResultSize is sized
-    // for accidental collects, not this deliberate one
-    val extra = if (mode == "dedup") Seq("spark.driver.maxResultSize" -> "4g") else Nil
-    val spark = Probe.session(extra: _*)
-    try run(spark, mode, Probe.confArgs(spark, args.toSeq.drop(1), "probe-release").toSeq)
+    // the annJoin memory budget is half of spark.driver.maxResultSize, a
+    // session-build conf: `maxResultSize:<size>` sets it. dedup's
+    // broadcast-qvec exact stage collects the probe matrix (O(probes·D) —
+    // ~1.2 GB at the 600k × 512-d self-dedup) to the driver before
+    // broadcasting, so dedup defaults to 4g (a 2 GiB budget)
+    val (budgetArgs, modeArgs) = args.toSeq.drop(1).partition(_.startsWith("maxResultSize:"))
+    val maxResult = budgetArgs.map(_.stripPrefix("maxResultSize:")) ++
+      (if (mode == "dedup" && budgetArgs.isEmpty) Seq("4g") else Nil)
+    val spark = Probe.session(maxResult.map("spark.driver.maxResultSize" -> _): _*)
+    try run(spark, mode, Probe.confArgs(spark, modeArgs, "probe-release").toSeq)
     finally spark.stop()
   }
 
@@ -916,7 +922,7 @@ object ProbeRelease {
           chunkRows = chunkRows,
           passesArg = passArgs.headOption.map(_.stripPrefix("passes:").toInt))
       case "annjoin" =>
-        // `conf:key=value` args A/B the join's size gates without a rebuild
+        // `maxResultSize:<size>` moves the join's memory gates together
         val sizes = if (other.nonEmpty) other.map(_.toInt) else Seq(250, 1000, 2000)
         probeAnnJoin(spark, s, sizes)
     }

@@ -80,8 +80,8 @@ final case class LopqSlimIndex(
     * slices and re-broadcasts the union, unpersisting the old broadcast.
     * Driver memory is O(batch-touched tensor) — inherent to the batch op,
     * which broadcasts exactly this map anyway — and BOUNDED: if the union
-    * would exceed `spark.graft.annjoin.sliceMemoBytes` (default 1 GiB) the
-    * memo resets to just the current batch's keys, so a long-lived handle
+    * would exceed `maxBytes` (the annJoin budget's [[AnnJoinPlan.sliceMemoBytes]])
+    * the memo resets to just the current batch's keys, so a long-lived handle
     * serving shifting probe distributions cannot accrete the full tensor
     * (the no-accretion guarantee slim serve exists for; a single batch
     * that genuinely touches every cluster still pays its own footprint,
@@ -89,18 +89,15 @@ final case class LopqSlimIndex(
   @transient private var sliceMemo
       : (Set[(Int, Int)], org.apache.spark.broadcast.Broadcast[Map[(Int, Int), Array[Array[Float]]]]) = null
 
-  def sliceBroadcastFor(keys: Seq[(Int, Int)])
+  def sliceBroadcastFor(keys: Seq[(Int, Int)], maxBytes: Long)
       : org.apache.spark.broadcast.Broadcast[Map[(Int, Int), Array[Array[Float]]]] =
     this.synchronized {
       val keySet = keys.toSet
-      val spark = codes.sparkSession
       if (sliceMemo != null && keySet.subsetOf(sliceMemo._1)) sliceMemo._2
       else {
         val have: Map[(Int, Int), Array[Array[Float]]] =
           if (sliceMemo == null) Map.empty else sliceMemo._2.value
         val sliceBytes = slim.halfDim.toLong * slim.halfDim * 4L
-        val maxBytes = spark.conf.get(LopqIndexStore.SliceMemoBytesConf,
-          LopqIndexStore.DefaultSliceMemoBytes.toString).toLong
         val unionSize = (have.keySet ++ keySet).size.toLong
         val base =
           if (unionSize * sliceBytes > maxBytes)
@@ -110,7 +107,7 @@ final case class LopqSlimIndex(
         val merged =
           if (missing.isEmpty) base
           else base ++ rotations.slices(missing)
-        val b = spark.sparkContext.broadcast(merged)
+        val b = codes.sparkSession.sparkContext.broadcast(merged)
         if (sliceMemo != null) sliceMemo._2.unpersist(blocking = false)
         sliceMemo = (merged.keySet, b)
         b
@@ -351,12 +348,6 @@ object LopqIndexStore {
       .where(col("part") === "rot" && bySplit.reduce(_ || _))
       .select("split", "a", "b", "vec")
   }
-
-  /** Conf: byte bound on [[LopqSlimIndex.sliceBroadcastFor]]'s cumulative
-    * slice memo — past it the memo resets to the current batch's keys
-    * instead of accreting toward the full tensor. */
-  val SliceMemoBytesConf = "spark.graft.annjoin.sliceMemoBytes"
-  val DefaultSliceMemoBytes: Long = 1L << 30
 
   val SliceCacheBytesConf = "spark.graft.slim.sliceCacheBytes"
   val DefaultSliceCacheBytes: Long = 64L << 20

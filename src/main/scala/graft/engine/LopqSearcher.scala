@@ -280,185 +280,22 @@ object LopqSearcher {
       approxOverCells(index.codes, cells, tables, k, index.cellBuckets)
     }
   }
-
-  /** Past this many distinct visited cells the batch join skips the
-    * pushed IN-list (a plan with millions of literals is itself the
-    * bottleneck, and at that point the batch visits most of the index
-    * anyway — a full codes scan is the right plan). */
-  val AnnJoinMaxPushedCells = 65536
-
-  /** The batch join's codes-scan cell IN-list is applied only when
-    * it would DROP at least (1 − this) of the indexed rows — i.e. it is
-    * skipped when the batch's visited-cell union keeps more than this
-    * fraction. Both sides are exact driver-known quantities (histogram
-    * counts). Measured r18 at the v3 release shape: a 15.5k-literal INSET
-    * evaluated on 600k rows cost ~1.5 s to prune 0.4 % of them; skipping
-    * is result-identical (the fan-out join's cell_id equi-key discards
-    * non-visited cells). 0.75 keeps the filter where it still halves the
-    * balanced shuffle (the v4 deployment shape keeps 56 %). */
-  val AnnJoinScanFilterMaxKeepFraction = 0.75
-
-  /** Conf: estimated bytes of materialized per-(query, visited cell) ADC
-    * tables above which [[annJoin]] ships the cell-local query PROJECTION
-    * (D floats per pair) through the join instead of the tables (M·S
-    * doubles per pair) — VERDICT r7 "What's wrong #3": at a million-probe
-    * batch the table payload is hundreds of GB of shuffle while the
-    * projections are O(batch pairs · D). Under the threshold the tables
-    * ride a broadcast and the per-row distance is the codegen'd O(M)
-    * lookup-sum; over it, rows pay an O(D) direct sum instead — the right
-    * trade exactly when the pair count is large. */
-  val AnnJoinShipTablesMaxBytesConf = "spark.graft.annjoin.shipTablesMaxBytes"
-  val DefaultAnnJoinShipTablesMaxBytes: Long = 64L << 20
-
-  /** Conf: byte cap for the batch join's HALF-PROJECTION DICTIONARY (r19,
-    * VERDICT r18 next-round #1). Past the tables threshold, the join
-    * prefers broadcasting per-(q_id, split, cluster) projection halves —
-    * a query's visited cells share a few dozen distinct halves, ~7× less
-    * than the per-(query, cell) px payload at the v3 release shape — with
-    * the per-row distance read map-side through
-    * [[graft.functions.BroadcastAdcHalvesExpr]] (bit-identical fold,
-    * spec-pinned). The dictionary is collected to the driver before
-    * broadcasting, so the effective cap is additionally clamped to half
-    * `spark.driver.maxResultSize`; a batch past the cap (a million-probe
-    * self-dedup) falls back to projection mode, today's plan. 0 disables
-    * dictionary mode outright. */
-  val AnnJoinHalvesDictMaxBytesConf = "spark.graft.annjoin.halvesDictMaxBytes"
-  val DefaultAnnJoinHalvesDictMaxBytes: Long = 256L << 20
-
-  /** Conf: candidate-id cap under which [[annJoin]]'s exact rerank reads a
-    * lookup-threshold vector table through a PUSHED id IN-list (the
-    * per-query path's [[RerankShape.Lookup]] shape) instead of joining the
-    * full table. Without it a plain `cand ⋈ vectors` has no usable size
-    * estimate on the candidate side, so Catalyst sort-merges — i.e.
-    * SHUFFLES the entire table (32 GB at the release deployment shape) to
-    * rerank a few hundred bounded candidates. Past the cap (a million-probe
-    * batch holds ~batch·rerankK candidate ids — no IN-list can carry that)
-    * the shuffle join IS the right distributed plan and remains the
-    * fallback. */
-  val AnnJoinMaxLookupIdsConf = "spark.graft.annjoin.maxLookupIds"
-  val DefaultAnnJoinMaxLookupIds: Int = MaxStackSafeInPushdown
-
-  /** Read-side keys for the LAST [[annJoin]] plan's regime decisions
-    * (`spark.graft.annjoin.last.*`). Every gate in the batch join is sized
-    * on quantities the engine knows exactly (pair counts, fan-out rows,
-    * payload bytes — never Catalyst plan-stats); these notes surface WHICH
-    * regime each gate picked so probes and specs can PIN the regime a
-    * given shape runs in rather than inferring it from timings — at the
-    * corpus-self-dedup magnitude the interesting claim is precisely "this
-    * ran through the SMJ fallback", and a claim like that needs a
-    * recorded witness, not an estimate. */
-  val AnnJoinLastPrefix = "spark.graft.annjoin.last."
-  private def note(spark: org.apache.spark.sql.SparkSession, key: String, v: Any): Unit =
-    spark.conf.set(AnnJoinLastPrefix + key, v.toString)
-  /** The last plan's regime notes, for probes/specs. */
-  def lastPlanNotes(spark: org.apache.spark.sql.SparkSession): Map[String, String] =
-    Seq("shipMode", "cellsPushed", "scanKeepFraction", "balanced",
-        "qsideBroadcast", "rerankMode",
-        "exactShape", "nPairs", "fanOutRows", "qsidePayloadBytes", "candBound",
-        "qvecMaxBytes", "chunks", "chunkRows", "dictBytes")
-      .flatMap(k => spark.conf.getOption(AnnJoinLastPrefix + k).map(k -> _))
-      .toMap
-
-  /** Conf: bytes of the probe-vector MATRIX (probes × D floats) under
-    * which a huge batch's exact stage attaches the probe vector by
-    * broadcast map-side lookup ([[graft.functions.BroadcastL2DistSqExpr]])
-    * instead of a `q_id` join. The join form re-shuffles the candidate
-    * rows AFTER they picked up the D-dim candidate vector — a second
-    * O(pairs·D) network pass that dwarfs every other stage at the
-    * corpus-self-dedup shape (600k probes × 256-prefix × 512-d ≈ 300 GB);
-    * the probe matrix is O(probes·D) regardless of the pair count. Only
-    * consulted when the candidate set is past
-    * [[AnnJoinBroadcastCandMaxRowsConf]] (bounded batches broadcast the
-    * small side of the q_id join anyway); past BOTH bounds the shuffle
-    * join is genuinely the only plan. The matrix is collected to the
-    * driver before broadcasting — size `spark.driver.maxResultSize` (and
-    * the driver heap) above the bound when raising it. */
-  val AnnJoinBroadcastQueryVecsMaxBytesConf = "spark.graft.annjoin.broadcastQueryVecsMaxBytes"
-  val DefaultAnnJoinBroadcastQueryVecsMaxBytes: Long = 1L << 30
-
-  /** Conf: probe rows per chunk of [[annJoinChunked]]; 0 (the default)
-    * derives the size from the broadcast-matrix bound so every chunk's
-    * probe matrix clears the exact-stage gate. */
-  val AnnJoinChunkRowsConf = "spark.graft.annjoin.chunkRows"
-
   /** Multiply two non-negative longs, saturating at Long.MaxValue instead
     * of wrapping. The size gates compare PRODUCTS of untrusted-magnitude
     * quantities (pairs · rerankK · row bytes); a silent overflow would
     * read as "tiny payload" and disable a gate exactly at the scale where
     * it matters most (ADVICE r11 #2) — saturation reads as "huge", the
-    * conservative direction for every gate in this file. */
+    * conservative direction for every gate. */
   private[graft] def satMul(a: Long, b: Long): Long =
     if (a <= 0L || b <= 0L) 0L
     else if (a > Long.MaxValue / b) Long.MaxValue
     else a * b
 
-  /** The effective broadcast-probe-matrix byte bound: the conf bound
-    * clamped to HALF the driver's max task-result size, because the matrix
-    * is COLLECTED to the driver before it broadcasts and rides that budget
-    * (ADVICE r10 #2 — the conf default EQUALS Spark's maxResultSize
-    * default, so an unclamped gate could pass a matrix whose collect then
-    * aborts the whole job; the clamped gate falls back to the q_id join,
-    * which completes). `maxResultSize=0` disables Spark's cap, so only the
-    * conf bound applies. Shared by [[annJoin]]'s exact stage and
-    * [[annJoinChunked]]'s chunk sizing — the two must agree or a chunk
-    * sized for the conf bound could still fall to the fallback join. */
-  private[graft] def qvecBroadcastMaxBytes(
-      spark: org.apache.spark.sql.SparkSession): Long = {
-    val confBytes = spark.conf
-      .get(AnnJoinBroadcastQueryVecsMaxBytesConf, DefaultAnnJoinBroadcastQueryVecsMaxBytes.toString).toLong
-    val maxResultBytes = spark.sparkContext.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    if (maxResultBytes > 0L) math.min(confBytes, maxResultBytes / 2)
-    else confBytes
-  }
-
-  /** Conf: estimated bytes of candidate rows CARRYING their D-dim vector
-    * (candBound · D floats) above which the exact stage prefers the
-    * broadcast-probe-matrix lookup even when the candidate set itself is
-    * small enough to broadcast. The trigger matters at WIDE vector
-    * shapes: 100k probes × 32 prefix at the 4096-d deployment width is
-    * only 3.2M candidate rows — under the broadcast-candidate bound — but
-    * each row drags 16 KB of vector through the q_id join's shuffle
-    * (~52 GB); below the floor the q_id join is cheap/broadcastable and
-    * stays the default. */
-  val AnnJoinExactFatShuffleFloorConf = "spark.graft.annjoin.exactFatShuffleFloorBytes"
-  val DefaultAnnJoinExactFatShuffleFloor: Long = 256L << 20
-
-  /** Conf: candidate-row cap for the middle rerank regime — too many ids
-    * for a pushed IN-list, small enough to broadcast. The candidate side
-    * rides a broadcast and the vector table STREAMS through the join (one
-    * scan, zero shuffle of the table); only past this does the rerank pay
-    * the full shuffle join, which at that candidate count is the correct
-    * distributed plan. */
-  val AnnJoinBroadcastCandMaxRowsConf = "spark.graft.annjoin.broadcastCandMaxRows"
-  val DefaultAnnJoinBroadcastCandMaxRows: Long = 4L << 20
-
-  /** Conf: expected fan-out rows (Σ over visited cells of
-    * queries-visiting × codes-in-cell — EXACT, from the batch's cell-visit
-    * counts and the index histogram, both already driver-resident) below
-    * which [[annJoin]] skips the round-robin balancing shuffle before the
-    * fan-out join: under it the whole fan-out stage costs less than the
-    * shuffle's latency; over it (the release regime, where the skew
-    * measurably serialized the stage) the balance is worth its one
-    * narrow-row shuffle. Row count, not plan-stats bytes: Catalyst's
-    * post-IN-filter byte estimate of the pruned scan says nothing about
-    * the join's multiplicative fan-out (a first cut gated on scan bytes
-    * turned the balance off at the 1000-probe V2 shape and gave the 4×
-    * skew back — measured 14 s vs 3.3 s/pass). */
-  val AnnJoinBalanceMinFanOutRowsConf = "spark.graft.annjoin.balanceMinFanOutRows"
-  val DefaultAnnJoinBalanceMinFanOutRows: Long = 1L << 21
-
-  /** Conf: estimated bytes of the per-(query, cell) payload under which
-    * [[annJoin]] BROADCASTS the query side of the fan-out join explicitly.
-    * Catalyst only sees a projected-UDF estimate and flips to sort-merge
-    * past its generic 10 MB autoBroadcast default — re-shuffling the codes
-    * by cell_id, the exact skewed key the round-robin balance just spread
-    * (measured at the 4000-probe V2 shape: 57 s/pass SMJ vs 7 s/pass
-    * broadcast). The payload size is KNOWN here (pairs × mode bytes), so
-    * the hint is exact; past the bound a batch genuinely cannot broadcast
-    * and the shuffle join is the correct distributed plan. */
-  val AnnJoinBroadcastQueriesMaxBytesConf = "spark.graft.annjoin.broadcastQueriesMaxBytes"
-  val DefaultAnnJoinBroadcastQueriesMaxBytes: Long = 1L << 30
+  /** The last [[annJoin]] plan of this session, as strings: its regime
+    * decisions and gate inputs ([[AnnJoinPlan.notes]]), plus `chunks` and
+    * `chunkRows` after [[annJoinChunked]]. Empty before the first call. */
+  def lastPlanNotes(spark: org.apache.spark.sql.SparkSession): Map[String, String] =
+    AnnJoinPlan.last(spark)
 
   /** SET-ORIENTED ANN similarity join — every query row of `queries` gets
     * its top-`k` neighbours from the index in ONE shuffle-joined plan, no
@@ -473,34 +310,21 @@ object LopqSearcher {
     *      broadcast; the walk is the SAME pinned [[CellHistogram.selectCells]]
     *      the per-query path uses);
     *   2. one O(distinct visited cells) aggregation → the batch's cell
-    *      union (pushed into the codes scan below) and its cluster set,
-    *      whose rotation slices are read once through the handle's
-    *      [[RotationSource]] (on a fetched handle: O(batch-touched
-    *      clusters · (D/2)²) transfer — a batch visiting
-    *      every cluster degrades to streaming the tensor once, exactly like
-    *      the slim-encode backfill);
-    *   3. one distributed pass building the per-(q_id, visited cell) query
-    *      payload from the broadcast slices — materialized ADC tables
-    *      (M·S doubles/pair, O(M) codegen lookup-sum per row) while the
-    *      estimated payload fits [[AnnJoinShipTablesMaxBytesConf]], the
-    *      cell-local query PROJECTION (D floats/pair, O(D) direct sum per
-    *      row) past it, so the shuffle stays O(pairs·D) at any batch size;
-    *   4. ONE equi-join of the (bucket/partition-pruned, IN-pushed) codes
-    *      scan against that payload on `cell_id` (Catalyst broadcasts the
-    *      query side while it is small), per-row ADC distance, per-query
-    *      top-`rerankK` window;
-    *   5. exact rerank: candidates back to `vectors` by id — through the
-    *      per-query path's pushed-IN-list lookup when the table is
-    *      lookup-sized and the batch's candidate-id set fits
-    *      [[AnnJoinMaxLookupIdsConf]] (point lookups, not a 32 GB table
-    *      shuffle), a plain equi-join otherwise (the only plan that works
-    *      when the batch itself holds millions of candidate ids) — then to
-    *      the raw queries by q_id, per-query top-`k` window.
+    *      union and its pair count, whose rotation slices are read once
+    *      through the handle's [[RotationSource]] (on a fetched handle:
+    *      O(batch-touched clusters · (D/2)²) transfer);
+    *   3. [[AnnJoinPlan.choose]] picks each regime from those exact counts
+    *      and the session's memory budget;
+    *   4. ONE equi-join of the (pruned) codes scan against the per-(q_id,
+    *      visited cell) payload on `cell_id`, per-row ADC distance,
+    *      per-query top-`rerankK` window;
+    *   5. exact rerank: candidates back to `vectors` by id, then to the raw
+    *      queries by q_id, per-query top-`k` window.
     *
     * Result: `(q_id, rank, id, adc_dist, exact_dist)` — per query
     * BIT-IDENTICAL to looping [[searchSlim]] (spec-pinned; the
     * windows use the same (dist, id) tie-breaks as the per-query
-    * TakeOrderedAndProject prefixes).
+    * TakeOrderedAndProject prefixes), under every plan.
     *
     * `queries` is cached for the plan's lifetime (O(batch) rows: raw +
     * projected vector + visited cells per query).
@@ -508,11 +332,24 @@ object LopqSearcher {
     * CONTRACT: `qIdCol` values must be unique within the batch — results
     * are keyed by q_id and the per-query top-k windows partition on it, so
     * duplicate ids would merge two probes' candidate pools into one
-    * ranking. The broadcast-probe-matrix exact stage asserts this where
-    * detection is free; dedupe probes upstream if the source can repeat. */
+    * ranking. Every plan that counts or collects the probes asserts this;
+    * dedupe probes upstream if the source can repeat. */
   def annJoin(index: LopqSlimIndex, queries: DataFrame, qIdCol: String,
       qVecCol: String, vectors: DataFrame, idCol: String, vecCol: String,
-      quota: Int, k: Int, rerankK: Int): DataFrame = {
+      quota: Int, k: Int, rerankK: Int): DataFrame =
+    annJoinPlanned(index, queries, qIdCol, qVecCol, vectors, idCol, vecCol,
+      quota, k, rerankK, AnnJoinPlan.budgetOf(index.codes.sparkSession))._1
+
+  /** [[annJoin]] under an explicit memory `budget` ([[AnnJoinPlan]]), with
+    * `force` applied to the chosen plan before the frame is built — the
+    * seam that runs every regime on one batch. Returns the frame and the
+    * plan it was built from; a forced plan the batch cannot run fails. */
+  private[graft] def annJoinPlanned(index: LopqSlimIndex, queries: DataFrame,
+      qIdCol: String, qVecCol: String, vectors: DataFrame, idCol: String, vecCol: String,
+      quota: Int, k: Int, rerankK: Int, budget: Long,
+      force: AnnJoinPlan => AnnJoinPlan = identity): (DataFrame, AnnJoinPlan) = {
+    import AnnJoinPlan.{Exact, Rerank, Ship}
+    import org.apache.spark.sql.graft.GraftBridge
     val spark = index.codes.sparkSession
     import spark.implicits._
     // model/histogram/PCA broadcasts live on the HANDLE — repeated annJoin
@@ -520,8 +357,10 @@ object LopqSearcher {
     val slimB = index.slimBroadcast
     val histB = index.histBroadcast
     val pcaB = index.pcaBroadcast
-    val vCoarse = index.slim.v
+    val slim = index.slim
+    val vCoarse = slim.v
 
+    // ---- the inputs ----
     val walkU = udf { (vec: Seq[Float]) =>
       val raw = vec.toArray
       val aq = pcaB.value.map(_.apply(raw)).getOrElse(raw)
@@ -535,90 +374,75 @@ object LopqSearcher {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // the batch's visited-cell union (driver-bounded by the POPULATED cell
-    // count, not by the query count) + the (query, cell) pair count that
-    // decides the ship mode — one aggregation for both
+    // count, not by the query count) and its per-cell visit counts — one
+    // aggregation for the pair count, the scan selectivity and the fan-out
     val cellRows = qcells.select(explode(col("cells")).as("cell_id"))
       .groupBy("cell_id").count().as[(Int, Long)].collect()
     val unionCells = cellRows.map(_._1).sorted
-    val nPairs = cellRows.map(_._2).sum
-    val clusterKeys = RotationSource.keysOf(unionCells, vCoarse)
     // memoized on the handle: repeat batches against one index reuse the
     // broadcast instead of re-fetching ~O(touched tensor) slices per call
-    // (the batch working set does not fit the per-query 64 MB slice LRU)
-    val rotB = index.sliceBroadcastFor(clusterKeys)
-
-    // Selectivity gate (r18, guide §1/§2 "don't pay for work that buys
-    // nothing"): the cell IN-list is a per-row set probe over EVERY codes
-    // row, and its cost grows with the literal count (measured at the v3
-    // release shape: a 15.5k-value INSET added ~1.5 s to a 0.4 s scan of
-    // 600k rows) while a large batch's visited-cell union often keeps
-    // nearly the whole index (v3: 597519 of 600000 rows — the filter
-    // prunes 0.4 %). Both sides of that trade are DRIVER-KNOWN exactly
-    // (Σ histogram counts over the union vs the histogram total — the r9
-    // rule: gate on engine-known quantities, never plan stats), so the
-    // filter is applied only when it actually prunes: skipping it is
-    // result-identical because the fan-out equi-join on cell_id discards
-    // non-visited cells' rows anyway.
-    // one histogram walk serves both driver-side gates below: this
-    // selectivity gate (Σ counts over the union) and the balance gate's
-    // fan-out estimate (Σ nq·count)
-    var rowsInUnion = 0L
-    var fanOutRows = 0L
-    cellRows.foreach { case (c, nq) =>
-      val n = index.cellCounts.countOf(c)
-      rowsInUnion += n
-      fanOutRows += nq * n
-    }
+    val rotB = index.sliceBroadcastFor(RotationSource.keysOf(unionCells, vCoarse),
+      AnnJoinPlan.sliceMemoBytes(budget))
+    val rowsInUnion = cellRows.map { case (c, _) => index.cellCounts.countOf(c) }.sum
     val totalRows = index.cellCounts.total
-    val keepFraction = if (totalRows > 0) rowsInUnion.toDouble / totalRows else 1.0
-    val applyCellFilter = unionCells.length <= AnnJoinMaxPushedCells &&
-      keepFraction <= AnnJoinScanFilterMaxKeepFraction
-    if (applyCellFilter) ensureInPushdown(spark, unionCells.length)
-    note(spark, "cellsPushed", applyCellFilter)
-    note(spark, "scanKeepFraction", math.round(keepFraction * 1000.0) / 1000.0)
-    val pruned =
-      if (applyCellFilter)
-        index.codes.where(LopqIndexStore.cellFilter(
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(unionCells),
-          index.cellBuckets))
-      else index.codes
+    val qIdIntegral = Seq(org.apache.spark.sql.types.LongType,
+      org.apache.spark.sql.types.IntegerType).contains(queries.schema(qIdCol).dataType)
+    val inputs = new AnnJoinPlan.Inputs(
+      nPairs = cellRows.map(_._2).sum, unionCells = unionCells.length,
+      scanKeepFraction = if (totalRows > 0) rowsInUnion.toDouble / totalRows else 1.0,
+      fanOutRows = cellRows.map { case (c, nq) => nq * index.cellCounts.countOf(c) }.sum,
+      m = slim.m, subClusters = slim.subquantizers(0)(0).length, halfDim = slim.halfDim,
+      // raw probe width is driver-known: the PCA front's input, else the model's
+      dim = index.pca.map(_.mu.length).getOrElse(slim.halfDim * 2),
+      rerankK = rerankK, qIdIntegral = qIdIntegral,
+      lookupTable = RerankShape.useLookup(vectors, RerankShape.Auto),
+      // one skinny aggregation over the cached qcells
+      distinctHalvesCount = {
+        val n = qcells.select(
+          sum(size(array_distinct(transform(col("cells"),
+              c => (c / lit(vCoarse)).cast("int")))) +
+            size(array_distinct(transform(col("cells"),
+              c => pmod(c, lit(vCoarse))))))).head()
+        if (n.isNullAt(0)) 0L else n.getLong(0)
+      },
+      // counts DISTINCT q_id in the same job, so the unique-q_id contract
+      // fails fast in every plan that pays for the count (VERDICT r11
+      // "What's wrong #2": a repeated id silently merged two candidate pools)
+      probeCount = {
+        val r = qcells.agg(count(lit(1)), countDistinct(col("q_id"))).head()
+        val (n, d) = (r.getLong(0), r.getLong(1))
+        require(d == n,
+          s"annJoin requires unique q_id values per batch: $n probe rows " +
+            s"hold $d distinct ids")
+        n
+      })
+    val plan = force(AnnJoinPlan.choose(inputs, budget))
+    AnnJoinPlan.requireRunnable(plan, qIdIntegral)
 
-    // Ship mode (VERDICT r7 "What's wrong #3"): materialized ADC tables are
-    // M·S doubles per (query, cell) pair — broadcast-friendly for a small
-    // batch, hundreds of GB of shuffle at a million-probe one. Past the
-    // threshold ship the cell-local query projection instead (D floats per
-    // pair) and pay an O(D) per-row direct sum — bit-identical results
-    // (spec-pinned; see [[SlimLopqModel.adcDistanceFromProjection]]).
-    // r19 (VERDICT r18 next-round #1): past the tables threshold, prefer
-    // the HALF-PROJECTION DICTIONARY over per-pair px — px is the
-    // concatenation of two per-(query, split, cluster) halves and a
-    // query's ~hundreds of visited cells share a few dozen distinct
-    // halves, so a broadcast dictionary keyed by (q_id, split·V+cluster)
-    // is ~7× smaller than the per-(query, cell) payload (243 MB → ~31 MB
-    // per pass at the v3 release shape) and the per-pair projection stage
-    // disappears; the per-row distance reads the two halves map-side
-    // ([[graft.functions.BroadcastAdcHalvesExpr]] — bit-identical fold).
-    // Byte-gated with fallback to px mode: the dictionary is COLLECTED to
-    // the driver before broadcasting (clamped to half maxResultSize like
-    // the probe matrix), and a million-probe batch's dictionary would not
-    // broadcast. Both gate sides are driver-known or exactly counted —
-    // when the loose driver-known bound (2 halves per counted pair)
-    // already fits, the count job is skipped; only a batch the bound
-    // cannot settle pays one skinny aggregation over the cached qcells.
-    val sClusters = index.slim.subquantizers(0)(0).length
-    val tableBytesEst = nPairs * index.slim.m.toLong * sClusters * 8L
-    val shipTables = tableBytesEst <= spark.conf
-      .get(AnnJoinShipTablesMaxBytesConf, DefaultAnnJoinShipTablesMaxBytes.toString).toLong
-    note(spark, "nPairs", nPairs)
-    note(spark, "dictBytes", -1L) // overwritten when dictionary mode engages
-    val qIdIntegral = queries.schema(qIdCol).dataType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => true
-      case _ => false
+    // ---- the frame the plan names ----
+    val broadcasts = Seq.newBuilder[org.apache.spark.broadcast.Broadcast[_]]
+    // collects one (q_id, value) row per probe into a q_id-keyed map — the
+    // unique-q_id contract is checked where detection is free: a repeated
+    // id would silently collapse to one entry
+    def collectByQid[V](rows: Array[Row], value: Row => V): java.util.HashMap[java.lang.Long, V] = {
+      val map = new java.util.HashMap[java.lang.Long, V](rows.length * 2)
+      rows.foreach(r => map.put(r.getLong(0), value(r)))
+      require(map.size == rows.length,
+        s"annJoin requires unique q_id values per batch: ${rows.length} " +
+          s"probe rows collapse to ${map.size} distinct ids")
+      map
     }
+
+    val pruned = if (!plan.cellsPushed) index.codes else {
+      ensureInPushdown(spark, unionCells.length)
+      index.codes.where(LopqIndexStore.cellFilter(
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(unionCells), index.cellBuckets))
+    }
+
     val qpairs = qcells
       .select(col("q_id"), col("aq"), explode(col("cells")).as("cell_id"))
-    val (qside, adcCol, shipMode) =
-      if (shipTables) {
+    val (qside, adcCol) = plan.shipMode match {
+      case Ship.Tables =>
         val tablesU = udf { (aq: Seq[Float], cell: Int) =>
           val cc = CellMath.unpackCell(cell, vCoarse)
           slimB.value.adcTables(aq.toArray, cc, (s, c) => rotB.value((s, c)))
@@ -626,300 +450,107 @@ object LopqSearcher {
         }
         (qpairs.withColumn("adc_tables", tablesU(col("aq"), col("cell_id")))
            .select("q_id", "cell_id", "adc_tables"),
-         VectorFunctions.adcDistance(col("fine"), col("adc_tables")),
-         "tables")
-      } else {
-        val slim = index.slim
-        val halfEntryBytes = slim.halfDim * 4L + 56L // float payload + framing
-        val dictMaxConf = spark.conf
-          .get(AnnJoinHalvesDictMaxBytesConf, DefaultAnnJoinHalvesDictMaxBytes.toString).toLong
-        // collected to the driver before broadcasting — ride the same
-        // task-result clamp as the probe matrix (ADVICE r10 #2)
-        val maxResultBytes = spark.sparkContext.getConf
-          .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-        val dictMax =
-          if (maxResultBytes > 0L) math.min(dictMaxConf, maxResultBytes / 2)
-          else dictMaxConf
-        // eligibility is a separate flag, NOT a sentinel byte value: with
-        // maxResultSize=0 and an unbounded conf, dictMax can itself be
-        // Long.MaxValue, and a sentinel would compare "eligible" for a
-        // non-integral-q_id batch (self-review r19)
-        val dictEligible = qIdIntegral && dictMax > 0L
-        // ≤ 2 distinct halves per counted (query, cell) pair — driver-known
-        val dictUb = satMul(satMul(2L, nPairs), halfEntryBytes)
-        val dictBytes: Long =
-          if (!dictEligible) Long.MaxValue
-          else if (dictUb <= dictMax) dictUb
-          else {
-            // exact distinct-halves count, one skinny agg on cached qcells
-            val n = qcells.select(
-              sum(size(array_distinct(transform(col("cells"),
-                  c => (c / lit(vCoarse)).cast("int")))) +
-                size(array_distinct(transform(col("cells"),
-                  c => pmod(c, lit(vCoarse))))))).head()
-            if (n.isNullAt(0)) 0L else satMul(n.getLong(0), halfEntryBytes)
+         VectorFunctions.adcDistance(col("fine"), col("adc_tables")))
+      case Ship.HalvesDict =>
+        // per-(q_id, split·V+cluster) projection halves, read map-side by
+        // BroadcastAdcHalvesExpr (the same floats as the px fold, bit-identical)
+        // keyed split·V + cluster, sorted by key
+        val halvesU = udf { (aq: Seq[Float], cells: Seq[Int]) =>
+          val x = aq.toArray
+          (cells.map(_ / vCoarse) ++ cells.map(vCoarse + _ % vCoarse)).distinct.sorted.map { key =>
+            key -> slimB.value.projectHalfWith(x, key / vCoarse, key % vCoarse,
+              (sp, c) => rotB.value((sp, c))).toSeq
           }
-        if (dictEligible && dictBytes <= dictMax) {
-          val halvesU = udf { (aq: Seq[Float], cells: Seq[Int]) =>
-            val x = aq.toArray
-            val sm = slimB.value
-            val rm = rotB.value
-            val seen = new java.util.HashSet[Int]()
-            val out = Seq.newBuilder[(Int, Seq[Float])]
-            cells.foreach { cell =>
-              val c0 = cell / vCoarse
-              val c1 = cell % vCoarse
-              if (seen.add(c0))
-                out += ((c0, sm.projectHalfWith(x, 0, c0, (sp, c) => rm((sp, c))).toSeq))
-              if (seen.add(vCoarse + c1))
-                out += ((vCoarse + c1,
-                  sm.projectHalfWith(x, 1, c1, (sp, c) => rm((sp, c))).toSeq))
-            }
-            out.result()
-          }
-          val qrows = qcells
-            .select(col("q_id").cast("long").as("qh_id"), halvesU(col("aq"), col("cells")).as("hs"))
-            .collect()
-          val dictMap = new java.util.HashMap[java.lang.Long, graft.functions.QueryHalves](
-            qrows.length * 2)
-          qrows.foreach { r =>
-            val entries = r.getSeq[org.apache.spark.sql.Row](1).sortBy(_.getInt(0))
-            dictMap.put(r.getLong(0), new graft.functions.QueryHalves(
-              entries.map(_.getInt(0)).toArray,
-              entries.map(_.getSeq[Float](1).toArray).toArray))
-          }
-          // the annJoin unique-q_id contract, checked where detection is
-          // free (a repeated id would silently collapse to one dictionary
-          // entry here — same rule as the broadcast-matrix exact stage)
-          require(dictMap.size == qrows.length,
-            s"annJoin requires unique q_id values per batch: ${qrows.length} " +
-              s"probe rows collapse to ${dictMap.size} distinct ids")
-          val dictB = spark.sparkContext.broadcast(dictMap)
-          note(spark, "dictBytes", dictBytes)
-          import org.apache.spark.sql.graft.GraftBridge
-          (qpairs.select("q_id", "cell_id"),
-           GraftBridge.column(graft.functions.BroadcastAdcHalvesExpr(
-             GraftBridge.expression(col("q_id")),
-             GraftBridge.expression(col("cell_id")),
-             GraftBridge.expression(col("fine")),
-             dictB, slim.flatSubquantizers, slim.m,
-             slim.halfDim / slim.numFineSplits, vCoarse)),
-           "halvesDict")
-        } else {
-          val projU = udf { (aq: Seq[Float], cell: Int) =>
-            val cc = CellMath.unpackCell(cell, vCoarse)
-            slimB.value.projectWith(aq.toArray, cc, (s, c) => rotB.value((s, c))).toSeq
-          }
-          // per-candidate distance is the CODEGEN'D projection fold — the r8
-          // Scala-UDF form re-boxed both arrays per row and was the dominant
-          // cost of the whole batch join (measured 7-14 s of a ~14 s pass at
-          // the 1000-probe V2 shape)
-          (qpairs.withColumn("px", projU(col("aq"), col("cell_id")))
-             .select("q_id", "cell_id", "px"),
-           VectorFunctions.adcProjectionDistance(col("px"), col("fine"),
-             slim.flatSubquantizers, slim.m, slim.halfDim / slim.numFineSplits),
-           "projection")
         }
-      }
-    note(spark, "shipMode", shipMode)
+        val dictMap = collectByQid(qcells
+          .select(col("q_id").cast("long"), halvesU(col("aq"), col("cells"))).collect(),
+          { r =>
+            val entries = r.getSeq[Row](1)
+            new graft.functions.QueryHalves(entries.map(_.getInt(0)).toArray,
+              entries.map(_.getSeq[Float](1).toArray).toArray)
+          })
+        val dictB = spark.sparkContext.broadcast(dictMap)
+        broadcasts += dictB
+        (qpairs.select("q_id", "cell_id"),
+         GraftBridge.column(graft.functions.BroadcastAdcHalvesExpr(
+           GraftBridge.expression(col("q_id")),
+           GraftBridge.expression(col("cell_id")),
+           GraftBridge.expression(col("fine")),
+           dictB, slim.flatSubquantizers, slim.m,
+           slim.halfDim / slim.numFineSplits, vCoarse)))
+      case Ship.Projection =>
+        val projU = udf { (aq: Seq[Float], cell: Int) =>
+          val cc = CellMath.unpackCell(cell, vCoarse)
+          slimB.value.projectWith(aq.toArray, cc, (s, c) => rotB.value((s, c))).toSeq
+        }
+        // per-candidate distance is the CODEGEN'D projection fold — the r8
+        // Scala-UDF form re-boxed both arrays per row (7-14 s of a ~14 s
+        // pass at the 1000-probe V2 shape)
+        (qpairs.withColumn("px", projU(col("aq"), col("cell_id")))
+           .select("q_id", "cell_id", "px"),
+         VectorFunctions.adcProjectionDistance(col("px"), col("fine"),
+           slim.flatSubquantizers, slim.m, slim.halfDim / slim.numFineSplits))
+    }
 
+    // round-robin splits every heavy cell's rows across tasks; the join is
+    // broadcast or re-hashed on the query side, and every window breaks ties
+    // on (dist, id), so row order changes nothing
+    val codesSide =
+      if (plan.balanced) pruned.repartition(spark.sessionState.conf.numShufflePartitions)
+      else pruned
     val wApprox = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id").orderBy(col("adc_dist"), col("id"))
-    // Round-robin the pruned codes before the broadcast join: the join FANS
-    // OUT each code row by the queries visiting its cell, and that weight is
-    // wildly skewed — a clustered corpus concentrates both code rows AND
-    // probe visits on the same few heavy cells, which land in the same few
-    // scan tasks (measured r9 at the 1000-probe V2 shape: 23 s of stage CPU
-    // at average parallelism TWO, 12 s of a ~14 s pass). Hash-repartitioning
-    // on cell_id would keep each heavy cell in one task; round-robin splits
-    // every cell's rows uniformly, so the fan-out work is balanced at any
-    // skew. Costs one O(pruned codes) narrow-row shuffle — the fan-out side
-    // (candidate rows) never shuffles. Results are unchanged: the join is
-    // broadcast (no co-location needed) and every downstream window breaks
-    // ties on (dist, id), independent of row order (AnnJoinSpec pins
-    // bit-equality with the per-query path). FAN-OUT-GATED: below
-    // [[AnnJoinBalanceMinFanOutRowsConf]] expected join-output rows the
-    // whole fan-out stage is trivial CPU, so the balancing shuffle is pure
-    // added latency (~a stage round-trip per call at the test shapes) —
-    // skew balancing is bought exactly when there is stage CPU to balance.
-    val balanceMinRows = spark.conf
-      .get(AnnJoinBalanceMinFanOutRowsConf, DefaultAnnJoinBalanceMinFanOutRows.toString).toLong
-    note(spark, "fanOutRows", fanOutRows)
-    note(spark, "balanced", fanOutRows > balanceMinRows)
-    val prunedBalanced =
-      if (fanOutRows > balanceMinRows)
-        pruned.repartition(spark.sessionState.conf.numShufflePartitions)
-      else pruned
-    // Explicit broadcast of the query payload while its EXACT size (pairs ×
-    // mode bytes — known here, invisible to Catalyst through the UDF
-    // projection) fits [[AnnJoinBroadcastQueriesMaxBytesConf]]: past its
-    // generic autoBroadcast default Catalyst would sort-merge — re-hashing
-    // the codes by cell_id, the very skew the round-robin just spread.
-    val pairBytes = shipMode match {
-      case "tables" => index.slim.m.toLong * sClusters * 8L
-      case "halvesDict" => 12L // (q_id BIGINT, cell_id INT) — payload rides the dict
-      case _ => index.slim.halfDim.toLong * 2L * 4L
-    }
-    val qsidePayloadBytes = nPairs * (pairBytes + 24L)
-    val broadcastQMax = spark.conf
-      .get(AnnJoinBroadcastQueriesMaxBytesConf, DefaultAnnJoinBroadcastQueriesMaxBytes.toString).toLong
-    note(spark, "qsidePayloadBytes", qsidePayloadBytes)
-    note(spark, "qsideBroadcast", qsidePayloadBytes <= broadcastQMax)
-    val qsideHinted =
-      if (qsidePayloadBytes <= broadcastQMax)
-        org.apache.spark.sql.functions.broadcast(qside)
-      else qside
-    val cand = prunedBalanced
-      .join(qsideHinted, "cell_id")
+    val cand = codesSide
+      .join(if (plan.qsideBroadcast) broadcast(qside) else qside, "cell_id")
       .withColumn("adc_dist", adcCol)
       .withColumn("arnk", row_number().over(wApprox))
       .where(col("arnk") <= rerankK)
       .select("q_id", "id", "adc_dist")
 
-    val wExact = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("exact_dist"), col("id"))
-    // Rerank read shape, adaptive like the per-query path (RerankShape.Auto):
-    // against a lookup-threshold table, a bounded batch's candidate ids
-    // (≤ queries·rerankK) are collected once from the persisted candidate
-    // set and PUSHED into the vector scan as an IN-list — only matching row
-    // groups decode, instead of Catalyst sort-merge-shuffling the whole
-    // table against a candidate side it cannot size. A batch too large for
-    // an IN-list falls back to the equi-join, the correct plan at that
-    // scale.
     val vecSide = vectors.select(col(idCol).as("id"), col(vecCol).as("n_vec"))
-    val maxLookupIds = spark.conf
-      .get(AnnJoinMaxLookupIdsConf, DefaultAnnJoinMaxLookupIds.toString).toLong
-    val maxBcastCand = spark.conf
-      .get(AnnJoinBroadcastCandMaxRowsConf, DefaultAnnJoinBroadcastCandMaxRows.toString).toLong
-    // the count-job (cheap — qcells is cached and column-pruned to q_id)
-    // is only paid when a gate actually needs the exact probe count: the
-    // lookup-threshold rerank regimes below, or an exact-stage screen that
-    // the driver-known upper bound could not settle. Scan-mode plans with
-    // small batches keep their fixed job count (ADVICE r10 #3). The same
-    // aggregation counts DISTINCT q_id for free, so the unique-q_id
-    // contract fails fast in EVERY regime that pays a count job — not just
-    // the broadcast-matrix collect (VERDICT r11 "What's wrong #2": in the
-    // q_id-join regimes a repeated id silently merged two probes'
-    // candidate pools into one ranking).
-    lazy val candBound = {
-      val r = qcells.agg(count(lit(1)), countDistinct(col("q_id"))).head()
-      val (n, d) = (r.getLong(0), r.getLong(1))
-      require(d == n,
-        s"annJoin requires unique q_id values per batch: $n probe rows " +
-          s"hold $d distinct ids")
-      n * rerankK
-    }
-    def noteRerank(mode: String): Unit = {
-      note(spark, "rerankMode", mode)
-      note(spark, "candBound",
-        if (RerankShape.useLookup(vectors, RerankShape.Auto)) candBound else -1L)
-    }
-    val rerankJoined =
-      if (!RerankShape.useLookup(vectors, RerankShape.Auto)) {
-        noteRerank("scan")
-        cand.join(vecSide, "id") // table streams comfortably — Catalyst picks
-      } else if (candBound <= maxLookupIds) {
-        noteRerank("lookup")
+    val rerankJoined = plan.rerankMode match {
+      case Rerank.Lookup =>
+        // candidate ids collected once from the persisted candidates and
+        // pushed into the vector scan: only matching row groups decode
         val candP = cand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val ids = candP.select("id").distinct().collect().map(_.get(0))
         ensureInPushdown(spark, ids.length)
-        val pruned =
+        val hits =
           if (ids.isEmpty) vecSide.where(lit(false))
           else vecSide.where(col("id").isin(
             scala.collection.immutable.ArraySeq.unsafeWrapArray(ids): _*))
-        pruned.join(broadcast(candP), "id")
-      } else if (candBound <= maxBcastCand) {
-        // middle regime: candidates broadcast, the big table STREAMS through
-        // the join — one scan, no shuffle of the table
-        noteRerank("broadcastCand")
-        vecSide.join(broadcast(cand), "id")
-      } else {
-        noteRerank("shuffle")
-        cand.join(vecSide, "id") // genuinely huge batch: shuffle join
-      }
-    // ---- exact stage: attach the probe vector to each candidate pair ----
-    // Bounded batches: a q_id join — Catalyst broadcasts the small side and
-    // the distance is the codegen'd two-column fold. HUGE batches (the
-    // candidate set already past the broadcast-candidate bound): the q_id
-    // join would re-shuffle the candidate rows AFTER the id-join attached
-    // the D-dim candidate vector — a second O(pairs·D) network pass, the
-    // scale-killer of a corpus-self-dedup (600k probes × 256 prefix ×
-    // 512-d ≈ 300 GB of fat-row shuffle). While the probe MATRIX fits
-    // [[AnnJoinBroadcastQueryVecsMaxBytesConf]] (O(probes·D), independent
-    // of the pair count), broadcast it and compute the distance map-side
-    // ([[graft.functions.BroadcastL2DistSqExpr]] — bit-identical fold), so
-    // candidate rows never move again; past both bounds the shuffle join
-    // is genuinely the only distributed plan. (qIdIntegral is computed at
-    // the ship-mode gate above — the dictionary mode shares the rule.)
-    // The probe matrix is COLLECTED to the driver before broadcasting, so
-    // it rides the task-result budget: the conf bound arrives pre-clamped
-    // to half the session's spark.driver.maxResultSize (ADVICE r10 #2 —
-    // see [[qvecBroadcastMaxBytes]]; a matrix past the clamp falls back to
-    // the q_id join instead of aborting the collect).
-    val qvecMaxBytes = qvecBroadcastMaxBytes(spark)
-    note(spark, "qvecMaxBytes", qvecMaxBytes)
-    val fatFloor = spark.conf
-      .get(AnnJoinExactFatShuffleFloorConf, DefaultAnnJoinExactFatShuffleFloor.toString).toLong
-    // trigger on EITHER huge-batch signal: the candidate set is past the
-    // broadcast bound (many pairs), or the pairs are few but WIDE enough
-    // that dragging their vectors through a q_id shuffle dwarfs the probe
-    // matrix (the 4096-d deployment shape).
-    // Raw probe dimensionality is DRIVER-KNOWN — the PCA front's input
-    // width, or the model width without one — so no take(1) probe job
-    // (ADVICE r10 #3; walkU would have refused mismatched probes anyway).
-    val dim = index.pca.map(_.mu.length).getOrElse(index.slim.halfDim * 2)
-    // Cheap screen before forcing the count job: every counted (query,
-    // cell) pair comes from a probe visiting ≥ 1 cell, so nProbes ≤ nPairs
-    // and candBound ≤ nPairs·rerankK. When even that upper bound clears
-    // neither trigger, the gate cannot fire and small scan-mode batches
-    // keep their fixed job count; when it might, the count is one job on
-    // the cached qcells (and shared with the lookup-regime candBound).
-    // products saturate instead of wrapping: at extreme nPairs·rerankK·dim
-    // a Long overflow would read as a TINY payload and silently skip the
-    // broadcast-probe plan (ADVICE r11 #2) — saturation reads as huge,
-    // i.e. "may trigger", the conservative side of this screen
-    val candUb = satMul(nPairs, rerankK)
-    val mayTrigger = qIdIntegral && dim > 0 &&
-      (candUb > maxBcastCand || satMul(candUb, 4L * dim + 24L) > fatFloor)
-    val exactViaBroadcast = mayTrigger && {
-      // serialized collect rows are fatter than their raw floats — count
-      // Row framing + boxing at ~96 B/row, not 64 (ADVICE r10 #2)
-      val probeMatrixBytes = candBound / rerankK * (4L * dim + 96L)
-      val pairVecBytes = satMul(candBound, 4L * dim + 24L)
-      probeMatrixBytes <= qvecMaxBytes &&
-        (candBound > maxBcastCand ||
-          pairVecBytes > math.max(probeMatrixBytes, fatFloor))
+        hits.join(broadcast(candP), "id")
+      // candidates broadcast, the big table streams through once
+      case Rerank.BroadcastCand => vecSide.join(broadcast(cand), "id")
+      // scan: the table streams comfortably and Catalyst picks the join;
+      // shuffle: a batch too large for either bound
+      case Rerank.Scan | Rerank.Shuffle => cand.join(vecSide, "id")
     }
-    val exactJoined =
-      if (exactViaBroadcast) {
-        note(spark, "exactShape", "broadcastQvec")
-        val qmap = new java.util.HashMap[java.lang.Long, Array[Float]]()
-        val qrows = qcells.select(col("q_id").cast("long"), col("q_vec")).collect()
-        qrows.foreach(r => qmap.put(r.getLong(0), r.getSeq[Float](1).toArray))
-        // q_id must be unique per batch (the annJoin contract): a repeated
-        // id would silently collapse to the last-collected vector here,
-        // while the q_id-join regime would instead mix both probes'
-        // candidates inside one window partition — neither is the caller's
-        // intent, so fail fast where detection is free (ADVICE r10 #4).
-        require(qmap.size == qrows.length,
-          s"annJoin requires unique q_id values per batch: ${qrows.length} " +
-            s"probe rows collapse to ${qmap.size} distinct ids")
-        val bc = spark.sparkContext.broadcast(qmap)
-        import org.apache.spark.sql.graft.GraftBridge
+
+    val exactJoined = plan.exactShape match {
+      case Exact.BroadcastQvec =>
+        val qmap = collectByQid(
+          qcells.select(col("q_id").cast("long"), col("q_vec")).collect(),
+          _.getSeq[Float](1).toArray)
+        val qvecB = spark.sparkContext.broadcast(qmap)
+        broadcasts += qvecB
         rerankJoined.withColumn("exact_dist",
           sqrt(GraftBridge.column(graft.functions.BroadcastL2DistSqExpr(
             GraftBridge.expression(col("q_id")),
-            GraftBridge.expression(col("n_vec")), bc))))
-      } else {
-        note(spark, "exactShape", "qidJoin")
+            GraftBridge.expression(col("n_vec")), qvecB))))
+      case Exact.QidJoin =>
         rerankJoined
           .join(qcells.select(col("q_id"), col("q_vec")), "q_id")
           .withColumn("exact_dist", sqrt(VectorFunctions.l2DistanceSq(col("q_vec"), col("n_vec"))))
-      }
-    exactJoined
+    }
+    val wExact = org.apache.spark.sql.expressions.Window
+      .partitionBy("q_id").orderBy(col("exact_dist"), col("id"))
+    AnnJoinPlan.record(spark, plan.notes)
+    (exactJoined
       .withColumn("rank", row_number().over(wExact).cast("long"))
       .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("id"), col("adc_dist"), col("exact_dist"))
+      .select(col("q_id"), col("rank"), col("id"), col("adc_dist"), col("exact_dist")),
+     plan.copy(broadcasts = broadcasts.result()))
   }
 
   /** Driver loop over matrix-bound-sized probe chunks — the production
@@ -928,11 +559,11 @@ object LopqSearcher {
     * self-dedup, 2M probes × raw 4096-d ≈ 33 GB, where a single [[annJoin]]
     * would fall to the q_id-join exact stage — the documented ~300 GB
     * fat-row-shuffle scale-killer; ref `updater/extraction_checker.py:
-    * 225-258` runs the same pass id-batched). Each chunk is sized so ITS
-    * probe matrix clears [[qvecBroadcastMaxBytes]] with headroom, so every
-    * chunk runs the measured broadcastQvec exact stage: candidate rows are
-    * joined to their probe vector map-side and never shuffle a second
-    * time.
+    * 225-258` runs the same pass id-batched). With `chunkRows = 0` (auto)
+    * each chunk is sized so ITS probe matrix clears the budget's matrix
+    * gate ([[AnnJoinPlan.qvecMaxBytes]]) with headroom, so every chunk runs
+    * the broadcastQvec exact stage: candidate rows are joined to their probe
+    * vector map-side and never shuffle a second time.
     *
     * Chunks are RANGES over the sorted probe id: boundary ids come from a
     * skinny distributed prefix sum over the id column alone (per-partition
@@ -951,21 +582,31 @@ object LopqSearcher {
     * partitions on q_id), so the concatenation of chunk results is
     * BIT-IDENTICAL to the one-shot join (spec-pinned). `sink` is called
     * once per chunk with that chunk's result plan and index — materialize
-    * it there (parquet append, foreach, …); chunk-local caches are
-    * released after each sink returns, so a 2M-probe run's footprint is
-    * one chunk, not the whole probe set. Returns the chunk count. */
+    * it there (parquet append, foreach, …); the chunk's cache and per-call
+    * broadcasts are released after each sink returns, so a 2M-probe run's
+    * footprint is one chunk, not the whole probe set. Returns the chunk
+    * count. */
   def annJoinChunked(index: LopqSlimIndex, queries: DataFrame, qIdCol: String,
       qVecCol: String, vectors: DataFrame, idCol: String, vecCol: String,
-      quota: Int, k: Int, rerankK: Int)(sink: (DataFrame, Int) => Unit): Int = {
+      quota: Int, k: Int, rerankK: Int, chunkRows: Long = 0L)
+      (sink: (DataFrame, Int) => Unit): Int =
+    annJoinChunkedPlanned(index, queries, qIdCol, qVecCol, vectors, idCol, vecCol,
+      quota, k, rerankK, chunkRows, AnnJoinPlan.budgetOf(index.codes.sparkSession))(sink)
+
+  /** [[annJoinChunked]] with every chunk planned by [[annJoinPlanned]]
+    * under `budget` and `force`. */
+  private[graft] def annJoinChunkedPlanned(index: LopqSlimIndex, queries: DataFrame,
+      qIdCol: String, qVecCol: String, vectors: DataFrame, idCol: String, vecCol: String,
+      quota: Int, k: Int, rerankK: Int, chunkRows: Long, budget: Long,
+      force: AnnJoinPlan => AnnJoinPlan = identity)(sink: (DataFrame, Int) => Unit): Int = {
     val spark = index.codes.sparkSession
     val dim = index.pca.map(_.mu.length).getOrElse(index.slim.halfDim * 2)
-    val confChunk = spark.conf.get(AnnJoinChunkRowsConf, "0").toLong
-    // the 96 B/row estimate matches the exact-stage collect gate; the 20%
+    // the 96 B/row estimate matches the exact-stage matrix gate; the 20%
     // headroom keeps a chunk safely inside the gate (range chunks are
     // exact-sized, but the byte estimate itself is approximate)
-    val autoChunk =
-      math.max(1L, qvecBroadcastMaxBytes(spark) * 4 / 5 / (4L * dim + 96L))
-    val chunkRows = if (confChunk > 0L) confChunk else autoChunk
+    val rows =
+      if (chunkRows > 0L) chunkRows
+      else math.max(1L, AnnJoinPlan.qvecMaxBytes(budget) * 4 / 5 / (4L * dim + 96L))
     // one skinny agg sizes the chunks AND enforces the chunking contract
     // directly (ADVICE r12: the old boundary-count require was purely
     // positional and could not detect duplicates; null ids would silently
@@ -981,12 +622,24 @@ object LopqSearcher {
     require(distinct == nProbes,
       s"annJoinChunked requires unique probe ids: $nProbes rows hold " +
         s"$distinct distinct $qIdCol values")
-    val nChunks = math.max(1L, (nProbes + chunkRows - 1) / chunkRows).toInt
-    note(spark, "chunkRows", chunkRows)
+    val nChunks = math.max(1L, (nProbes + rows - 1) / rows).toInt
+    // one chunk's join → sink, then its per-call state goes: the qcells
+    // cache annJoin persists for the plan's lifetime, and the dictionary and
+    // probe-matrix broadcasts (the handle's own broadcasts are kept)
+    def runChunk(chunk: DataFrame, c: Int): Unit = {
+      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val (df, plan) = annJoinPlanned(index, chunk, qIdCol, qVecCol, vectors, idCol,
+        vecCol, quota, k, rerankK, budget, force)
+      AnnJoinPlan.record(spark, plan.notes ++
+        Map("chunks" -> nChunks.toString, "chunkRows" -> rows.toString))
+      sink(df, c)
+      spark.sparkContext.getPersistentRDDs
+        .filterNot { case (id, _) => cachedBefore(id) }
+        .values.foreach(_.unpersist(blocking = false))
+      plan.broadcasts.foreach(_.destroy())
+    }
     if (nChunks <= 1) {
-      note(spark, "chunks", 1)
-      sink(annJoin(index, queries, qIdCol, qVecCol, vectors, idCol, vecCol,
-        quota, k, rerankK), 0)
+      runChunk(queries, 0)
       return 1
     }
     // RANGE chunking over sorted q_id (r12: hash chunking previously
@@ -994,50 +647,27 @@ object LopqSearcher {
     // O(probes·D) local cache, ~32 GB at the 2M × 4096-d deployment
     // shape, i.e. the very footprint chunking exists to bound; it filled
     // the box's scratch before chunk 0 finished). Boundary ids come from
-    // one skinny distributed prefix-sum pass over the sorted id column
-    // (the q77 pattern — per-partition counts → broadcast offsets, never
-    // a one-task global window), and each chunk is then a RANGE FILTER on
-    // the probe source: nothing fat is cached, each chunk holds exactly
-    // `chunkRows` probes (no hash imbalance), and on an id-ordered
-    // parquet source the pushed range prunes row groups so chunk I/O is
-    // O(chunk), not O(corpus) per chunk.
+    // one skinny distributed prefix sum over the sorted id column
+    // (zipWithIndex: per-partition counts, then positions — never a
+    // one-task global window), and each chunk is then a RANGE FILTER on
+    // the probe source.
     val qids = queries.select(col(qIdCol).as("_qid")).sort("_qid")
       .localCheckpoint() // skinny: O(probes) ids, MBs at deployment scale
-    val parts = qids.rdd
-      .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = parts.scanLeft(0L)(_ + _).init
-    val offB = spark.sparkContext.broadcast(offsets)
-    val boundaries = qids.rdd.mapPartitionsWithIndex { case (i, it) =>
-      var pos = offB.value(i)
-      it.flatMap { row =>
-        pos += 1
-        // a boundary closes each full chunk; pos == nProbes would only
-        // open an empty trailing chunk
-        if (pos % chunkRows == 0 && pos < nProbes) Some(row.get(0)) else None
-      }
-    }.collect()
+    // a boundary closes each full chunk; the last position would only open
+    // an empty trailing chunk
+    val boundaries = qids.rdd.zipWithIndex()
+      .filter { case (_, i) => (i + 1) % rows == 0 && i + 1 < nProbes }
+      .map(_._1.get(0)).collect()
     // pure sanity: uniqueness + non-null were enforced above, so the
     // positional boundary count is determined by nProbes and chunkRows
     require(boundaries.length == nChunks - 1,
       s"internal: range chunking derived ${boundaries.length} boundaries " +
-        s"for $nChunks chunks of $chunkRows over $nProbes probes")
-    note(spark, "chunks", nChunks)
+        s"for $nChunks chunks of $rows over $nProbes probes")
     (0 until nChunks).foreach { c =>
-      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
       var cond: Column = lit(true)
       if (c > 0) cond = cond && col(qIdCol) > lit(boundaries(c - 1))
       if (c < nChunks - 1) cond = cond && col(qIdCol) <= lit(boundaries(c))
-      val chunk = queries.where(cond)
-      sink(annJoin(index, chunk, qIdCol, qVecCol, vectors, idCol, vecCol,
-        quota, k, rerankK), c)
-      // release the chunk's qcells cache (annJoin persists it for the
-      // plan's lifetime) before the next chunk builds its own — without
-      // this a long run accretes O(probes·D) of cached chunk state, the
-      // very footprint chunking exists to avoid
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => cachedBefore(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      runChunk(queries.where(cond), c)
       // drop the finished chunk's shuffle files: the ContextCleaner frees
       // them only when the chunk plan's RDDs are GC'd, and its own
       // periodic nudge (30 min) is longer than several chunks — a long

@@ -273,17 +273,17 @@ object ReleaseShape {
     * workload the reference can only loop client-side
     * (`lopq/lopq/eval.py:7-38`), at the release workload constants. Probe
     * vectors are corpus rows (every probe has a true near-duplicate, like a
-    * dedup pass). Past the ship threshold the join runs in PROJECTION mode
-    * ([[LopqSearcher.AnnJoinShipTablesMaxBytesConf]]) — the payload that
-    * stays O(pairs·D) at any batch size. */
+    * dedup pass). The session's memory budget picks the plan
+    * ([[AnnJoinPlan]]); `force` overrides its decisions. */
   def annJoinFor(spark: SparkSession, s: ReleaseShapeDef, idx: LopqSlimIndex,
-      nQueries: Int): DataFrame = {
+      nQueries: Int, force: AnnJoinPlan => AnnJoinPlan = identity): DataFrame = {
     import spark.implicits._
     val queries = spark.range(0, nQueries.toLong, 1, 32)
       .map(id => (id, rowVecFor(s, id).toSeq))
       .toDF("q_id", "q_vec")
-    LopqSearcher.annJoin(idx, queries, "q_id", "q_vec",
-      vectors(spark, idx.dir), "vec_id", "embedding", Quota, TopK, RerankK)
+    LopqSearcher.annJoinPlanned(idx, queries, "q_id", "q_vec",
+      vectors(spark, idx.dir), "vec_id", "embedding", Quota, TopK, RerankK,
+      AnnJoinPlan.budgetOf(spark), force)._1
   }
 
   // ------------------------------------------- release-WIDTH rerank proof

@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -303,34 +303,40 @@ object EngineOps {
       // shared CTE prefix: candidates → ADC (explicit 4-term sum = the
       // fold order of adcDistance) → rerank prefix → exact-L2 ranking;
       // parameterized by the artifact set (per-query q34/q35 vs batched
-      // join q70 — the SQL is identical, only the query set differs)
+      // join q70 — the SQL is identical, only the query set differs). Each
+      // (query, cell) pair's four tables are one row of dense per-sub lists
+      // indexed by the fine code, and the rerank prefix is cut before the
+      // embeddings joins: one equi-join per candidate instead of four, which
+      // keeps the sf0.01 oracle within a few GB
       def annCtesFor(visitedDir: String, tabDir: String) =
         s"""WITH codes AS (
            |  SELECT id, coarse0, coarse1, fine, (coarse0 * $v + coarse1) AS cell_id
            |  FROM read_parquet('$codesGlob')),
            |visited AS (SELECT * FROM read_parquet('$odir/$visitedDir/*.parquet')),
-           |tab AS (SELECT * FROM read_parquet('$odir/$tabDir/*.parquet')),
+           |tab AS (
+           |  SELECT q_id, cell_id,
+           |         list(dist ORDER BY code) FILTER (WHERE sub = 0) AS d0,
+           |         list(dist ORDER BY code) FILTER (WHERE sub = 1) AS d1,
+           |         list(dist ORDER BY code) FILTER (WHERE sub = 2) AS d2,
+           |         list(dist ORDER BY code) FILTER (WHERE sub = 3) AS d3
+           |  FROM read_parquet('$odir/$tabDir/*.parquet') GROUP BY q_id, cell_id),
            |e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
            |cand AS (
            |  SELECT vis.q_id, c.id, c.cell_id,
-           |         t0.dist + t1.dist + t2.dist + t3.dist AS adc_dist
+           |         t.d0[c.fine[1] + 1] + t.d1[c.fine[2] + 1] + t.d2[c.fine[3] + 1] +
+           |           t.d3[c.fine[4] + 1] AS adc_dist
            |  FROM visited vis
-           |  JOIN codes c ON c.cell_id = vis.cell_id
-           |  JOIN tab t0 ON t0.q_id = vis.q_id AND t0.cell_id = c.cell_id AND t0.sub = 0 AND t0.code = c.fine[1]
-           |  JOIN tab t1 ON t1.q_id = vis.q_id AND t1.cell_id = c.cell_id AND t1.sub = 1 AND t1.code = c.fine[2]
-           |  JOIN tab t2 ON t2.q_id = vis.q_id AND t2.cell_id = c.cell_id AND t2.sub = 2 AND t2.code = c.fine[3]
-           |  JOIN tab t3 ON t3.q_id = vis.q_id AND t3.cell_id = c.cell_id AND t3.sub = 3 AND t3.code = c.fine[4]),
+           |  JOIN tab t ON t.q_id = vis.q_id AND t.cell_id = vis.cell_id
+           |  JOIN codes c ON c.cell_id = vis.cell_id),
            |approx AS (
-           |  SELECT q_id, id, adc_dist,
-           |         row_number() OVER (PARTITION BY q_id ORDER BY adc_dist, id) AS arnk
-           |  FROM cand),
+           |  SELECT q_id, id, adc_dist FROM cand
+           |  QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc_dist, id) <= $RerankK),
            |rr AS (
            |  SELECT a.q_id, a.id, a.adc_dist,
            |         sqrt(${l2sqSql("q.v", "n.v")}) AS exact_dist
            |  FROM approx a
            |  JOIN e q ON q.vec_id = a.q_id
-           |  JOIN e n ON n.vec_id = a.id
-           |  WHERE a.arnk <= $RerankK),
+           |  JOIN e n ON n.vec_id = a.id),
            |ranked AS (
            |  SELECT q_id, id AS n_id, adc_dist, exact_dist,
            |         row_number() OVER (PARTITION BY q_id ORDER BY exact_dist, id)::BIGINT AS rank
@@ -911,17 +917,17 @@ object EngineOps {
         val slim = slimIndex(s, d)
         val e = t(s, d, "embeddings")
         val queries = e.select(col("vec_id").as("q_id"), col("embedding"))
-        val chunks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val saved = s.conf.getOption(LopqSearcher.AnnJoinChunkRowsConf)
-        s.conf.set(LopqSearcher.AnnJoinChunkRowsConf, "128")
-        try LopqSearcher.annJoinChunked(slim, queries, "q_id", "embedding",
+        // each chunk is collected in its sink: the chunk's cache and
+        // per-call broadcasts are released once the sink returns
+        val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+        var schema: org.apache.spark.sql.types.StructType = null
+        LopqSearcher.annJoinChunked(slim, queries, "q_id", "embedding",
           e, "vec_id", "embedding", DedupQuota, DedupK,
-          dedupRerankK(slim.cellCounts.total)) { (df, _) => chunks += df }
-        finally saved match {
-          case Some(v) => s.conf.set(LopqSearcher.AnnJoinChunkRowsConf, v)
-          case None => s.conf.unset(LopqSearcher.AnnJoinChunkRowsConf)
+          dedupRerankK(slim.cellCounts.total), chunkRows = 128) { (df, _) =>
+          schema = df.schema
+          rows ++= df.collect()
         }
-        verifiedDedupPairs(e, chunks.reduce(_.unionAll(_)))
+        verifiedDedupPairs(e, s.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema))
       },
       Some(VectorQueries.nearDupPairsOracleSql),
       dependsOnIndex = true),

@@ -357,8 +357,7 @@ object TextScreen {
     * the MinHash candidate set before its (text-touching) jaccard
     * verification. Same broadcast byte gate and same shape as the
     * MinHash band join. */
-  /** Post-run regime notes (the annJoin `spark.graft.annjoin.last.*`
-    * discipline): which physical shape the byte-gated band joins took —
+  /** Post-run regime notes: which physical shape the byte-gated band joins took —
     * `broadcast` (batch bands map-side against the streaming corpus
     * table) or `shuffle` (the cluster regime past the cap). Written per
     * screen so probes and specs read the decision the run actually

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{LopqIndexStore, LopqParams, LopqSearcher, LopqTrainer, RerankShape}
+import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqParams, LopqSearcher, LopqTrainer,
+  RerankShape}
+import graft.engine.AnnJoinPlan.{Exact, Rerank, Ship}
 import graft.ops.Tables
 
 /** The set-oriented ANN similarity join must be (a) per-query BIT-IDENTICAL
@@ -33,15 +35,51 @@ class AnnJoinSpec extends SparkSpec {
     LopqIndexStore.loadSlim(spark, dir).get
   }
 
-  private def joinResults(nQueries: Int): Seq[(Long, Long, Long, Double, Double)] = {
-    val e = Tables(spark, sf, "embeddings")
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding"))
-    LopqSearcher.annJoin(built, queries, "q_id", "embedding",
-      e, "vec_id", "embedding", Quota, TopK, RerankK)
-      .collect()
+  private type Rows = Seq[(Long, Long, Long, Double, Double)]
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Rows =
+    df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._2)).toSeq
+
+  private def queriesOf(nQueries: Int) =
+    Tables(spark, sf, "embeddings").where(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"), col("embedding"))
+
+  private def joinResults(nQueries: Int): Rows =
+    rowsOf(LopqSearcher.annJoin(built, queriesOf(nQueries), "q_id", "embedding",
+      Tables(spark, sf, "embeddings"), "vec_id", "embedding", Quota, TopK, RerankK))
+
+  /** B at the test session's (default 1g) `spark.driver.maxResultSize`. */
+  private val DefaultBudget = 512L << 20
+
+  /** One planned join over the first `nQueries` embeddings: its rows, its
+    * plan and its executed plan's text. */
+  private def planned(nQueries: Int, budget: Long = DefaultBudget,
+      force: AnnJoinPlan => AnnJoinPlan = identity): (Rows, AnnJoinPlan, String) = {
+    val (df, plan) = LopqSearcher.annJoinPlanned(built, queriesOf(nQueries), "q_id",
+      "embedding", Tables(spark, sf, "embeddings"), "vec_id", "embedding",
+      Quota, TopK, RerankK, budget, force)
+    (rowsOf(df), plan, df.queryExecution.executedPlan.toString)
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.sql.graft.GraftBridge
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    GraftBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      GraftBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
   }
 
   test("batched join ≡ looping the per-query slim search, bit-identical") {
@@ -139,22 +177,22 @@ class AnnJoinSpec extends SparkSpec {
   test("halves-dictionary and projection ship modes are bit-identical to the table mode") {
     val base = joinResults(7)
     assert(LopqSearcher.lastPlanNotes(spark)("shipMode") === "tables")
-    spark.conf.set(LopqSearcher.AnnJoinShipTablesMaxBytesConf, "0")
-    try {
-      // r19: past the tables threshold the default is the half-projection
-      // DICTIONARY (VERDICT r18 next-round #1) — same floats through
-      // BroadcastAdcHalvesExpr's pinned fold, so bit-identical results
-      assert(joinResults(7) === base)
-      assert(LopqSearcher.lastPlanNotes(spark)("shipMode") === "halvesDict")
-      assert(LopqSearcher.lastPlanNotes(spark)("dictBytes").toLong > 0L)
-      // dictionary disabled → the r8 per-(query, cell) px fallback
-      spark.conf.set(LopqSearcher.AnnJoinHalvesDictMaxBytesConf, "0")
-      assert(joinResults(7) === base)
-      assert(LopqSearcher.lastPlanNotes(spark)("shipMode") === "projection")
-    } finally {
-      spark.conf.unset(LopqSearcher.AnnJoinHalvesDictMaxBytesConf)
-      spark.conf.unset(LopqSearcher.AnnJoinShipTablesMaxBytesConf)
-    }
+    val (_, p0, _) = planned(7)
+    // a budget whose tables gate (B/8) sits one byte under the batch's
+    // table payload: past the tables threshold the plan is the
+    // half-projection DICTIONARY (r19, VERDICT r18 next-round #1) — the
+    // same floats through BroadcastAdcHalvesExpr's pinned fold
+    val tableBytes = p0.nPairs * built.slim.m * built.slim.subquantizers(0)(0).length * 8L
+    val (dictRows, p1, _) = planned(7, budget = 8 * tableBytes - 8)
+    assert(dictRows === base)
+    assert(p1.shipMode === Ship.HalvesDict)
+    assert(LopqSearcher.lastPlanNotes(spark)("shipMode") === "halvesDict")
+    assert(LopqSearcher.lastPlanNotes(spark)("dictBytes").toLong > 0L)
+    // no budget for a dictionary → the r8 per-(query, cell) px fallback
+    val (pxRows, p2, _) = planned(7, budget = 0L)
+    assert(pxRows === base)
+    assert(p2.shipMode === Ship.Projection)
+    assert(LopqSearcher.lastPlanNotes(spark)("shipMode") === "projection")
   }
 
   test("projection mode shuffles fewer bytes than table mode through the codes join") {
@@ -162,41 +200,27 @@ class AnnJoinSpec extends SparkSpec {
     // force the join to actually shuffle (the tiny test batch would ride a
     // broadcast and ship nothing) — the pin is about the SHUFFLED payload:
     // O(pairs·D) floats in projection mode vs O(pairs·M·S) doubles of
-    // materialized tables (VERDICT r7 "What's wrong #3")
-    def totalShuffle(): Long = {
-      val e = Tables(spark, sf, "embeddings")
-      val queries = e.where(col("vec_id") < 60)
-        .select(col("vec_id").as("q_id"), col("embedding"))
-      val df = LopqSearcher.annJoin(built, queries, "q_id", "embedding",
-        e, "vec_id", "embedding", Quota, TopK, RerankK)
+    // materialized tables (VERDICT r7 "What's wrong #3"). The px plan is
+    // the one a dictionary-ineligible batch (non-integral ids, or past the
+    // dictionary budget) still runs.
+    def totalShuffle(ship: Ship): Long = {
+      val (df, _) = LopqSearcher.annJoinPlanned(built, queriesOf(60), "q_id", "embedding",
+        Tables(spark, sf, "embeddings"), "vec_id", "embedding", Quota, TopK, RerankK,
+        DefaultBudget, _.copy(shipMode = ship, qsideBroadcast = false))
       df.collect()
       shuffleWriteBytes(df.queryExecution.executedPlan)
     }
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // r9: the payload normally rides an EXPLICIT broadcast (exact-size
-    // hint); force the genuinely-huge-batch regime where it must shuffle —
-    // that is where the O(pairs·D) vs O(pairs·M·S) payload pin matters
-    spark.conf.set(LopqSearcher.AnnJoinBroadcastQueriesMaxBytesConf, "0")
-    // r19: force the px FALLBACK (dictionary off) — this pin is about the
-    // shuffled per-pair projection payload, the plan a dictionary-ineligible
-    // batch (non-integral ids, or past the collect clamp) still runs
-    spark.conf.set(LopqSearcher.AnnJoinHalvesDictMaxBytesConf, "0")
     try {
-      val tableBytes = totalShuffle()
-      spark.conf.set(LopqSearcher.AnnJoinShipTablesMaxBytesConf, "0")
-      val projBytes = totalShuffle()
+      val tableBytes = totalShuffle(Ship.Tables)
+      val projBytes = totalShuffle(Ship.Projection)
       info(s"shuffle write: tables=$tableBytes B, projections=$projBytes B")
       // at this shape (m=4, S=16, D=64) the table payload is 512 B/pair vs
       // 256 B/pair of projection — the margin scales with M·S/D and reaches
       // 64× at the release shape (m=8, S=256, D=256)
       assert(projBytes < tableBytes,
         s"projection mode shuffled MORE: $projBytes >= $tableBytes")
-    } finally {
-      spark.conf.unset(LopqSearcher.AnnJoinHalvesDictMaxBytesConf)
-      spark.conf.unset(LopqSearcher.AnnJoinShipTablesMaxBytesConf)
-      spark.conf.unset(LopqSearcher.AnnJoinBroadcastQueriesMaxBytesConf)
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("repeated annJoin calls reuse the handle's model/histogram broadcasts") {
@@ -237,106 +261,75 @@ class AnnJoinSpec extends SparkSpec {
     * so it sort-merge-SHUFFLES the whole table (32 GB at release deployment
     * shape — ran the test machine out of disk) to rerank a few hundred
     * bounded candidates. Results must be bit-identical in all three shapes:
-    * scan join, pushed-IN lookup, and the huge-batch fallback join. */
+    * scan join, pushed-IN lookup, and the huge-batch fallback join. 7 probes
+    * × rerankK 50 = 350 candidate ids fit the 512-id cap; 11 probes (550)
+    * are past it. */
   test("lookup-threshold vectors rerank via a pushed id IN-list, fallback join past the id cap") {
     val base = joinResults(7)
-    val e = Tables(spark, sf, "embeddings")
-    val queries = e.where(col("vec_id") < 7)
-      .select(col("vec_id").as("q_id"), col("embedding"))
-    def run(): (Seq[(Long, Long, Long, Double, Double)], String) = {
-      val df = LopqSearcher.annJoin(built, queries, "q_id", "embedding",
-        e, "vec_id", "embedding", Quota, TopK, RerankK)
-      val rows = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
-        .sortBy(t => (t._1, t._2)).toSeq
-      (rows, df.queryExecution.executedPlan.toString)
-    }
+    val base11 = joinResults(11)
     spark.conf.set(RerankShape.ThresholdConf, "0") // everything is lookup-sized
     try {
-      val (lookupRows, lookupPlan) = run()
+      val (lookupRows, lookupPlan, lookupExec) = planned(7)
       assert(lookupRows === base)
-      assert(lookupPlan.contains("PushedFilters: [In(vec_id"),
+      assert(lookupPlan.rerankMode === Rerank.Lookup)
+      assert(lookupExec.contains("PushedFilters: [In(vec_id"),
         "lookup rerank did not push the candidate id IN-list into the vector scan:\n" +
-          lookupPlan.take(3000))
+          lookupExec.take(3000))
       // past the id cap no IN-list can carry the batch — the equi-join is
       // the correct distributed plan and must kick back in
-      spark.conf.set(LopqSearcher.AnnJoinMaxLookupIdsConf, "0")
-      val (fallbackRows, fallbackPlan) = run()
-      assert(fallbackRows === base)
-      assert(!fallbackPlan.contains("PushedFilters: [In(vec_id"),
+      val (fallbackRows, fallbackPlan, fallbackExec) = planned(11)
+      assert(fallbackRows === base11)
+      assert(fallbackPlan.candBound > AnnJoinPlan.MaxLookupIds)
+      assert(fallbackPlan.rerankMode === Rerank.BroadcastCand)
+      assert(!fallbackExec.contains("PushedFilters: [In(vec_id"),
         "fallback join unexpectedly pushed an id IN-list")
-    } finally {
-      spark.conf.unset(RerankShape.ThresholdConf)
-      spark.conf.unset(LopqSearcher.AnnJoinMaxLookupIdsConf)
-    }
+    } finally spark.conf.unset(RerankShape.ThresholdConf)
   }
 
-  /** r10: every annJoin run records WHICH regime each size gate picked
-    * (`spark.graft.annjoin.last.*`) — the corpus-self-dedup probe's claim
-    * "this ran through the SMJ fallback" needs a recorded witness, not a
-    * timing inference. Pin (a) the default small-batch regimes, (b) that
-    * forcing every gate to its LARGE-batch side both flips the notes AND
-    * leaves the results bit-identical — the fallback regimes are the same
-    * answer, differently shuffled. */
+  /** r10: every annJoin run records WHICH regime each gate picked — the
+    * corpus-self-dedup probe's claim "this ran through the SMJ fallback"
+    * needs a recorded witness, not a timing inference. Pin (a) the default
+    * small-batch regimes, (b) that forcing every gate to its LARGE-batch
+    * side both flips the record AND leaves the results bit-identical — the
+    * fallback regimes are the same answer, differently shuffled. */
   test("regime notes record each gate's decision; forced fallbacks stay bit-identical") {
     val base = joinResults(7)
     def notes = LopqSearcher.lastPlanNotes(spark)
     val n0 = notes
     assert(n0("shipMode") == "tables") // tiny batch: tables ride the broadcast
     assert(n0("balanced") == "false") // under the fan-out gate
-    assert(n0("qsideBroadcast") == "true") // payload far under 1 GB
+    assert(n0("qsideBroadcast") == "true") // payload far under 2B
     assert(n0("nPairs").toLong > 0 && n0("fanOutRows").toLong > 0)
-    try {
-      // force every gate across its threshold: projection ship, balanced
-      // fan-out, SMJ query side, shuffle rerank — the million-probe regime
-      // (r19: the halves dictionary is also past its collect clamp there,
-      // so force it off too — the px fallback is the regime under test)
-      spark.conf.set(LopqSearcher.AnnJoinShipTablesMaxBytesConf, "0")
-      spark.conf.set(LopqSearcher.AnnJoinHalvesDictMaxBytesConf, "0")
-      spark.conf.set(LopqSearcher.AnnJoinBalanceMinFanOutRowsConf, "0")
-      spark.conf.set(LopqSearcher.AnnJoinBroadcastQueriesMaxBytesConf, "0")
-      spark.conf.set(RerankShape.ThresholdConf, "0")
-      spark.conf.set(LopqSearcher.AnnJoinMaxLookupIdsConf, "0")
-      spark.conf.set(LopqSearcher.AnnJoinBroadcastCandMaxRowsConf, "0")
-      assert(joinResults(7) === base)
-      val n1 = notes
-      assert(n1("shipMode") == "projection")
-      assert(n1("balanced") == "true")
-      assert(n1("qsideBroadcast") == "false")
-      assert(n1("rerankMode") == "shuffle")
-      // a huge-batch exact stage with a broadcastable probe matrix attaches
-      // q_vec by map-side lookup (BroadcastL2DistSqExpr) — bit-identical
-      assert(n1("exactShape") == "broadcastQvec")
-      // ...and past the probe-matrix bound too, the q_id join is genuinely
-      // the only plan left — still bit-identical
-      spark.conf.set(LopqSearcher.AnnJoinBroadcastQueryVecsMaxBytesConf, "0")
-      assert(joinResults(7) === base)
-      assert(notes("exactShape") == "qidJoin")
-      // middle rerank regime: candidates broadcast, table streams
-      spark.conf.unset(LopqSearcher.AnnJoinBroadcastCandMaxRowsConf)
-      assert(joinResults(7) === base)
-      assert(notes("rerankMode") == "broadcastCand")
-      assert(notes("exactShape") == "qidJoin") // qvec bound still 0
-      // WIDE-pair trigger: even a broadcastable candidate set prefers the
-      // probe-matrix lookup once dragging its vectors through the q_id
-      // shuffle passes the fat-row floor (the 4096-d deployment shape,
-      // forced here by zeroing the floor) — still bit-identical
-      spark.conf.unset(LopqSearcher.AnnJoinBroadcastQueryVecsMaxBytesConf)
-      spark.conf.set(LopqSearcher.AnnJoinExactFatShuffleFloorConf, "0")
-      assert(joinResults(7) === base)
-      assert(notes("rerankMode") == "broadcastCand")
-      assert(notes("exactShape") == "broadcastQvec")
-    } finally {
-      Seq(LopqSearcher.AnnJoinShipTablesMaxBytesConf,
-        LopqSearcher.AnnJoinHalvesDictMaxBytesConf,
-        LopqSearcher.AnnJoinBalanceMinFanOutRowsConf,
-        LopqSearcher.AnnJoinBroadcastQueriesMaxBytesConf,
-        RerankShape.ThresholdConf,
-        LopqSearcher.AnnJoinMaxLookupIdsConf,
-        LopqSearcher.AnnJoinBroadcastCandMaxRowsConf,
-        LopqSearcher.AnnJoinBroadcastQueryVecsMaxBytesConf,
-        LopqSearcher.AnnJoinExactFatShuffleFloorConf).foreach(spark.conf.unset)
-    }
+    // every gate on its large-batch side: projection ship, balanced
+    // fan-out, SMJ query side, shuffle rerank — the million-probe regime —
+    // with the exact stage's broadcast probe matrix
+    val huge = (p: AnnJoinPlan) => p.copy(shipMode = Ship.Projection, balanced = true,
+      qsideBroadcast = false, rerankMode = Rerank.Shuffle, exactShape = Exact.BroadcastQvec)
+    val (r1, p1, _) = planned(7, force = huge)
+    assert(r1 === base)
+    val n1 = notes
+    assert(n1 === p1.notes)
+    assert(n1("shipMode") == "projection")
+    assert(n1("balanced") == "true")
+    assert(n1("qsideBroadcast") == "false")
+    assert(n1("rerankMode") == "shuffle")
+    // a huge-batch exact stage with a broadcastable probe matrix attaches
+    // q_vec by map-side lookup (BroadcastL2DistSqExpr) — bit-identical
+    assert(n1("exactShape") == "broadcastQvec")
+    // ...and past the probe-matrix bound too, the q_id join is genuinely
+    // the only plan left — still bit-identical
+    assert(planned(7, force = huge.andThen(_.copy(exactShape = Exact.QidJoin)))._1 === base)
+    assert(notes("exactShape") == "qidJoin")
+    // middle rerank regime: candidates broadcast, table streams
+    val middle = huge.andThen(_.copy(rerankMode = Rerank.BroadcastCand))
+    assert(planned(7, force = middle.andThen(_.copy(exactShape = Exact.QidJoin)))._1 === base)
+    assert(notes("rerankMode") == "broadcastCand")
+    assert(notes("exactShape") == "qidJoin")
+    // WIDE-pair regime: a broadcastable candidate set with the probe-matrix
+    // lookup (the 4096-d deployment shape) — still bit-identical
+    assert(planned(7, force = middle)._1 === base)
+    assert(notes("rerankMode") == "broadcastCand")
+    assert(notes("exactShape") == "broadcastQvec")
   }
 
   /** r9: the codes side must pass through a round-robin repartition before
@@ -344,27 +337,18 @@ class AnnJoinSpec extends SparkSpec {
     * candidate expansion in the few scan tasks holding the heavy cells
     * (measured at the 1000-probe V2 shape: 23 s of stage CPU at average
     * parallelism TWO). The join is broadcast, so no co-location is lost.
-    * The balance is SIZE-GATED (`annjoin.balanceMinFanOutRows`): below the
-    * threshold the fan-out stage is cheaper than the shuffle's latency,
-    * so the test-shape plan must NOT carry the exchange; forcing the
-    * threshold to 0 must bring it back (the release-scan regime). */
+    * The balance is SIZE-GATED ([[AnnJoinPlan.BalanceMinFanOutRows]]):
+    * below the threshold the fan-out stage is cheaper than the shuffle's
+    * latency, so the test-shape plan must NOT carry the exchange; forcing
+    * the balance must bring it back (the release-scan regime). */
   test("the fan-out join is fed by a round-robin balanced codes side") {
-    val e = Tables(spark, sf, "embeddings")
-    val queries = e.where(col("vec_id") < 3)
-      .select(col("vec_id").as("q_id"), col("embedding"))
-    def planOf(): String = {
-      val df = LopqSearcher.annJoin(built, queries, "q_id", "embedding",
-        e, "vec_id", "embedding", Quota, TopK, RerankK)
-      df.collect()
-      df.queryExecution.executedPlan.toString.toLowerCase
-    }
-    assert(!planOf().contains("roundrobinpartitioning"),
+    val (_, p0, plan0) = planned(3)
+    assert(!p0.balanced)
+    assert(!plan0.toLowerCase.contains("roundrobinpartitioning"),
       "tiny codes side paid the balancing shuffle anyway")
-    spark.conf.set(LopqSearcher.AnnJoinBalanceMinFanOutRowsConf, "0")
-    try
-      assert(planOf().contains("roundrobinpartitioning"),
-        "no round-robin exchange on the codes side at release-scan sizes")
-    finally spark.conf.unset(LopqSearcher.AnnJoinBalanceMinFanOutRowsConf)
+    assert(planned(3, force = _.copy(balanced = true))._3.toLowerCase
+      .contains("roundrobinpartitioning"),
+      "no round-robin exchange on the codes side at release-scan sizes")
   }
 
   /** r9: a repeated batch against one handle must not re-fetch rotation
@@ -380,17 +364,15 @@ class AnnJoinSpec extends SparkSpec {
       "a repeated identical batch re-fetched rotation slices from the store")
   }
 
-  /** r9: the slice memo is BOUNDED — past `sliceMemoBytes` it resets to the
-    * current batch's keys instead of accreting toward the full tensor. At a
-    * zero cap every call resets; results must be unchanged (the cap is a
-    * memory knob, never a correctness knob). */
+  /** r9: the slice memo is BOUNDED — past the budget's
+    * [[AnnJoinPlan.sliceMemoBytes]] it resets to the current batch's keys
+    * instead of accreting toward the full tensor. At a zero budget every
+    * call resets; results must be unchanged (the cap is a memory bound,
+    * never a correctness knob). */
   test("slice-memo byte cap resets instead of accreting, results unchanged") {
     val base = joinResults(7)
-    spark.conf.set(LopqIndexStore.SliceMemoBytesConf, "0")
-    try {
-      assert(joinResults(3).nonEmpty) // a differently-keyed batch in between
-      assert(joinResults(7) === base)
-    } finally spark.conf.unset(LopqIndexStore.SliceMemoBytesConf)
+    assert(planned(3, budget = 0L)._1.nonEmpty) // a differently-keyed batch in between
+    assert(planned(7, budget = 0L)._1 === base)
   }
 
   /** The interpreted (non-codegen) path of `graft_adc_proj` must compute
@@ -471,22 +453,14 @@ class AnnJoinSpec extends SparkSpec {
     * equivalence. */
   test("chunked driver ≡ the one-shot join, bit-identical across chunk boundaries") {
     val base = joinResults(7)
-    val e = Tables(spark, sf, "embeddings")
-    val queries = e.where(col("vec_id") < 7)
-      .select(col("vec_id").as("q_id"), col("embedding"))
-    spark.conf.set(LopqSearcher.AnnJoinChunkRowsConf, "3")
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double, Double)]
-    try {
-      val n = LopqSearcher.annJoinChunked(built, queries, "q_id", "embedding",
-        e, "vec_id", "embedding", Quota, TopK, RerankK) { (df, _) =>
-        buf ++= df.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
-      }
-      assert(n === 3, "7 probes at chunkRows=3 should make 3 chunks")
-      val notes = LopqSearcher.lastPlanNotes(spark)
-      assert(notes("chunks") === "3" && notes("chunkRows") === "3")
-      assert(buf.sortBy(t => (t._1, t._2)).toSeq === base)
-    } finally spark.conf.unset(LopqSearcher.AnnJoinChunkRowsConf)
+    val n = LopqSearcher.annJoinChunked(built, queriesOf(7), "q_id", "embedding",
+      Tables(spark, sf, "embeddings"), "vec_id", "embedding", Quota, TopK, RerankK,
+      chunkRows = 3) { (df, _) => buf ++= rowsOf(df) }
+    assert(n === 3, "7 probes at chunkRows=3 should make 3 chunks")
+    val notes = LopqSearcher.lastPlanNotes(spark)
+    assert(notes("chunks") === "3" && notes("chunkRows") === "3")
+    assert(buf.sortBy(t => (t._1, t._2)).toSeq === base)
   }
 
   test("annJoinChunked fails fast on duplicate and on null probe ids") {
@@ -512,8 +486,8 @@ class AnnJoinSpec extends SparkSpec {
   }
 
   /** r12 (VERDICT r11 "What's wrong #1a"): the broadcast-probe-matrix gate
-    * is clamped to HALF the driver's maxResultSize because the matrix is
-    * collected before it broadcasts. Shrinking the LIVE enforcement knob
+    * is the budget B = half the driver's maxResultSize, because the matrix
+    * is collected before it broadcasts. Shrinking the LIVE enforcement knob
     * (via the package bridge — Spark re-reads it per stage) below the
     * matrix estimate must flip the exact stage to the q_id join, which
     * both matches bit-for-bit AND completes under the shrunken budget;
@@ -522,39 +496,32 @@ class AnnJoinSpec extends SparkSpec {
     import org.apache.spark.graft.TestSparkConf
     val e = Tables(spark, sf, "embeddings")
     val nProbes = 400
-    val queries = e.where(col("vec_id") < nProbes)
-      .select(col("vec_id").as("q_id"), col("embedding"))
-    def run(): Seq[(Long, Long, Long, Double, Double)] = {
-      // k=1 keeps the final collect tiny — the point of the shrunken
-      // budget is to catch the MATRIX collect, not the result fetch
-      val df = LopqSearcher.annJoin(built, queries, "q_id", "embedding",
-        e, "vec_id", "embedding", Quota, k = 1, rerankK = RerankK)
-      df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
-        .sortBy(t => (t._1, t._2)).toSeq
+    // k=1 keeps the final collect tiny — the point of the shrunken budget is
+    // to catch the MATRIX collect, not the result fetch. The fan-out query
+    // side is forced to its huge-batch SMJ side for both runs: at true
+    // deployment scale it would not broadcast either, and a
+    // BroadcastExchange's internal collect rides the same task-result
+    // budget this test is about to shrink.
+    def run(force: AnnJoinPlan => AnnJoinPlan): (Rows, AnnJoinPlan) = {
+      val (df, plan) = LopqSearcher.annJoinPlanned(built, queriesOf(nProbes), "q_id",
+        "embedding", e, "vec_id", "embedding", Quota, k = 1, rerankK = RerankK,
+        AnnJoinPlan.budgetOf(spark), force.andThen(_.copy(qsideBroadcast = false)))
+      (rowsOf(df), plan)
     }
     val sc = spark.sparkContext
     val saved = TestSparkConf.get(sc, "spark.driver.maxResultSize")
-    // the wide-pair trigger makes the gate live at this small shape (the
-    // same forcing the regime-notes row uses for the 4096-d deployment
-    // shape). The OTHER broadcasts are forced to their huge-batch SMJ
-    // side for both runs — at true deployment scale neither the fan-out
-    // query side nor the probe join would broadcast either, and each
-    // BroadcastExchange's internal collect rides the same task-result
-    // budget this test is about to shrink.
-    spark.conf.set(LopqSearcher.AnnJoinExactFatShuffleFloorConf, "0")
-    spark.conf.set(LopqSearcher.AnnJoinBroadcastQueriesMaxBytesConf, "0")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val base = run()
-      assert(LopqSearcher.lastPlanNotes(spark)("exactShape") === "broadcastQvec")
+      val (base, p0) = run(_.copy(exactShape = Exact.BroadcastQvec))
+      assert(p0.exactShape === Exact.BroadcastQvec)
       // 400 probes × (4·64 + 96) B ≈ 137 KiB of collected matrix; a 200k
-      // maxResultSize clamps the gate to 100 KiB — closed — while every
-      // remaining stage's task results stay far below 200 KiB
+      // maxResultSize makes B 100 KiB — closed — while every remaining
+      // stage's task results stay far below 200 KiB
       TestSparkConf.set(sc, "spark.driver.maxResultSize", "200k")
-      assert(run() === base)
+      val (rows, p1) = run(identity)
+      assert(rows === base)
       val notes = LopqSearcher.lastPlanNotes(spark)
-      assert(notes("exactShape") === "qidJoin",
+      assert(notes("exactShape") === "qidJoin" && p1.exactShape === Exact.QidJoin,
         s"clamped gate did not fall back: $notes")
       assert(notes("qvecMaxBytes").toLong === 200L * 1024 / 2)
     } finally {
@@ -562,10 +529,9 @@ class AnnJoinSpec extends SparkSpec {
         case Some(v) => TestSparkConf.set(sc, "spark.driver.maxResultSize", v)
         case None => TestSparkConf.remove(sc, "spark.driver.maxResultSize")
       }
-      spark.conf.unset(LopqSearcher.AnnJoinExactFatShuffleFloorConf)
-      spark.conf.unset(LopqSearcher.AnnJoinBroadcastQueriesMaxBytesConf)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
+    assert(AnnJoinPlan.budgetOf(spark) === DefaultBudget)
   }
 
   /** r12 (VERDICT r11 "What's wrong #1b" + #2): a repeated q_id must fail
@@ -576,25 +542,21 @@ class AnnJoinSpec extends SparkSpec {
     * before any action on the result. */
   test("duplicate q_id fails fast in the broadcast AND the counted q_id-join regimes") {
     val e = Tables(spark, sf, "embeddings")
-    val q = e.where(col("vec_id") < 7)
-      .select(col("vec_id").as("q_id"), col("embedding"))
-    val dup = q.union(q.where(col("q_id") === 3))
-    def buildJoin(): Unit =
-      LopqSearcher.annJoin(built, dup, "q_id", "embedding",
-        e, "vec_id", "embedding", Quota, TopK, RerankK)
-    // broadcastQvec-forcing shape (wide-pair trigger)
-    spark.conf.set(LopqSearcher.AnnJoinExactFatShuffleFloorConf, "0")
-    try {
-      val ex = intercept[IllegalArgumentException](buildJoin())
-      assert(ex.getMessage.contains("unique q_id"), ex.getMessage)
-      assert(ex.getMessage.contains("8 probe rows") &&
-        ex.getMessage.contains("7 distinct ids"), ex.getMessage)
-    } finally spark.conf.unset(LopqSearcher.AnnJoinExactFatShuffleFloorConf)
+    val dup = queriesOf(7).union(queriesOf(7).where(col("q_id") === 3))
+    def buildJoin(force: AnnJoinPlan => AnnJoinPlan): Unit =
+      LopqSearcher.annJoinPlanned(built, dup, "q_id", "embedding",
+        e, "vec_id", "embedding", Quota, TopK, RerankK, DefaultBudget, force)
+    // the broadcast probe matrix
+    val ex = intercept[IllegalArgumentException](
+      buildJoin(_.copy(exactShape = Exact.BroadcastQvec)))
+    assert(ex.getMessage.contains("unique q_id"), ex.getMessage)
+    assert(ex.getMessage.contains("8 probe rows") &&
+      ex.getMessage.contains("7 distinct ids"), ex.getMessage)
     // lookup rerank regime: the count job is already paid, uniqueness is
     // asserted in the same aggregation
     spark.conf.set(RerankShape.ThresholdConf, "0")
     try {
-      val ex = intercept[IllegalArgumentException](buildJoin())
+      val ex = intercept[IllegalArgumentException](buildJoin(identity))
       assert(ex.getMessage.contains("unique q_id"), ex.getMessage)
     } finally spark.conf.unset(RerankShape.ThresholdConf)
   }
@@ -629,5 +591,120 @@ class AnnJoinSpec extends SparkSpec {
     assert(empty.columns.toSeq ===
       Seq("q_id", "rank", "id", "adc_dist", "exact_dist"))
     assert(empty.count() === 0)
+  }
+
+  /** Every value of every decision, and every pair of values of two
+    * decisions, at least once: a greedy pairwise covering set over the full
+    * product of [[Probe.AnnJoinDecisions]] (192 plans). */
+  private lazy val pairwiseCover: Seq[Seq[(String, String)]] = {
+    val full = Probe.AnnJoinDecisions.foldLeft(Seq(Seq.empty[(String, String)])) {
+      case (acc, (name, values)) => for (row <- acc; v <- values) yield row :+ (name -> v)
+    }
+    def pairsOf(row: Seq[(String, String)]) =
+      for (i <- row.indices; j <- row.indices if i < j) yield (row(i), row(j))
+    var uncovered = full.flatMap(pairsOf).toSet
+    val cover = Seq.newBuilder[Seq[(String, String)]]
+    while (uncovered.nonEmpty) {
+      val best = full.maxBy(r => pairsOf(r).count(uncovered))
+      cover += best
+      uncovered --= pairsOf(best)
+    }
+    cover.result()
+  }
+
+  /** ROADMAP item 3's matrix: each forced plan of the covering set must
+    * return the default plan's rows bit for bit, report the decisions it
+    * ran, and carry the plan shapes those decisions name. */
+  test("every forced plan of a pairwise covering set returns the default plan's rows") {
+    val base = joinResults(7)
+    val cover = pairwiseCover
+    val values = Probe.AnnJoinDecisions.flatMap { case (n, vs) => vs.map(n -> _) }
+    assert(values.forall(v => cover.exists(_.contains(v))))
+    assert(cover.size < 30, s"${cover.size} plans")
+    info(s"${cover.size} forced plans cover every pair of decision values")
+    cover.foreach { assignment =>
+      val (rows, plan, exec) =
+        planned(7, force = Probe.annJoinForce(assignment.map { case (k, v) => s"$k=$v" }))
+      val label = assignment.map { case (k, v) => s"$k=$v" }.mkString(" ")
+      assert(rows === base, label)
+      assignment.foreach { case (k, v) => assert(plan.notes(k) === v, label) }
+      assert(LopqSearcher.lastPlanNotes(spark) === plan.notes, label)
+      assert(exec.toLowerCase.contains("roundrobinpartitioning") === plan.balanced, label)
+      assert(exec.contains("PushedFilters: [In(vec_id") === (plan.rerankMode == Rerank.Lookup),
+        label)
+    }
+  }
+
+  /** ROADMAP item 2: the plan record is per call. Two threads plan on one
+    * session under budgets that put them on different ship modes; each
+    * gets its own plan and rows, and the session's last record is one of
+    * the two plans whole. */
+  test("concurrent annJoin callers get their own plans; the record is one complete plan") {
+    val (want3, plan3, _) = planned(3)
+    val (want60, plan60, _) = planned(60, budget = 0L)
+    assert(plan3.shipMode === Ship.Tables && plan60.shipMode === Ship.Projection)
+    assert(want3 === joinResults(3) && want60 === joinResults(60))
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    (1 to 3).foreach { _ =>
+      val small = Future(planned(3))
+      val big = Future(planned(60, budget = 0L))
+      val (rows3, p3, _) = Await.result(small, 5.minutes)
+      val (rows60, p60, _) = Await.result(big, 5.minutes)
+      assert(rows3 === want3 && p3.notes === plan3.notes)
+      assert(rows60 === want60 && p60.notes === plan60.notes)
+      val last = LopqSearcher.lastPlanNotes(spark)
+      assert(last === plan3.notes || last === plan60.notes, s"a mixed record: $last")
+    }
+  }
+
+  /** The chunked driver releases each chunk's per-call broadcasts (the
+    * halves dictionary and the probe matrix, both `java.util.HashMap`
+    * values) once the chunk's sink returns; the handle's cached broadcasts
+    * stay. The sink keeps each chunk's frame reachable, as a caller that
+    * unions the chunk results does: the ContextCleaner can then reclaim
+    * nothing, and before the destroy all six maps stayed resident. */
+  test("annJoinChunked destroys each chunk's dictionary and probe-matrix broadcasts") {
+    import org.apache.spark.graft.TestBroadcastBlocks
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val base = joinResults(7)
+    val marker = spark.sparkContext.broadcast(0)
+    marker.destroy()
+    def chunkMaps(): Set[Long] = TestBroadcastBlocks.resident().collect {
+      case (id, cls) if id > marker.id && cls == "java.util.HashMap" => id
+    }.toSet
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Set[Long]]
+    val held = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double, Double)]
+    val n = LopqSearcher.annJoinChunkedPlanned(built, queriesOf(7), "q_id", "embedding",
+      Tables(spark, sf, "embeddings"), "vec_id", "embedding", Quota, TopK, RerankK,
+      chunkRows = 3, DefaultBudget,
+      _.copy(shipMode = Ship.HalvesDict, exactShape = Exact.BroadcastQvec)) { (df, _) =>
+      held += df
+      buf ++= rowsOf(df)
+      seen += chunkMaps()
+    }
+    assert(n === 3 && held.size === 3)
+    assert(buf.sortBy(t => (t._1, t._2)).toSeq === base)
+    assert(LopqSearcher.lastPlanNotes(spark)("shipMode") === "halvesDict")
+    // while its sink ran, each chunk held its own dictionary + probe matrix
+    seen.zipWithIndex.foreach { case (ids, c) =>
+      val earlier = seen.take(c).flatten.toSet
+      assert((ids -- earlier).size >= 2, s"chunk $c: ${seen.toList}")
+    }
+    eventually(timeout(20.seconds), interval(200.millis)) {
+      assert(chunkMaps().isEmpty, s"chunk broadcasts still resident: ${chunkMaps()}")
+    }
+  }
+
+  /** The default-budget plan of the 7-probe shape runs exactly the jobs the
+    * earlier per-gate code ran on it (the count and distinct-halves jobs
+    * stay lazy); 10 was measured at the parent with the same listener. */
+  test("the default-budget annJoin runs the same Spark jobs as the earlier gates") {
+    joinResults(7) // warm: handle broadcasts and slice memo
+    val jobs = jobsDuring(joinResults(7))
+    assert(jobs === 10, s"$jobs jobs")
   }
 }

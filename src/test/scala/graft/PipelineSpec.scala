@@ -159,23 +159,15 @@ class PipelineSpec extends SparkSpec {
     * chunks, per-chunk verify + parquet append, global distinct at read
     * back) when run at the same exactness bounds. */
   test("GraftApi dedupCorpus (chunked) reproduces the exact verified pair set") {
-    import graft.engine.LopqSearcher
     import graft.ops.EngineOps
     val out = java.nio.file.Files.createTempDirectory("graft_dedup_corpus").toString
-    val saved = spark.conf.getOption(LopqSearcher.AnnJoinChunkRowsConf)
-    spark.conf.set(LopqSearcher.AnnJoinChunkRowsConf, "64")
-    try {
-      val got = new GraftApi(spark, sf)
-        .dedupCorpus(out, quota = EngineOps.DedupQuota, k = EngineOps.DedupK,
-          rerankK = EngineOps.dedupRerankK(500L))
-        .collect().toSeq
-      val want = SparkEntry.queries("q73_anndedup_pairs")(spark, sf).collect().toSeq
-      assert(got.nonEmpty)
-      assert(got == want)
-    } finally saved match {
-      case Some(v) => spark.conf.set(LopqSearcher.AnnJoinChunkRowsConf, v)
-      case None => spark.conf.unset(LopqSearcher.AnnJoinChunkRowsConf)
-    }
+    val got = new GraftApi(spark, sf)
+      .dedupCorpus(out, quota = EngineOps.DedupQuota, k = EngineOps.DedupK,
+        rerankK = EngineOps.dedupRerankK(500L), chunkRows = 64)
+      .collect().toSeq
+    val want = SparkEntry.queries("q73_anndedup_pairs")(spark, sf).collect().toSeq
+    assert(got.nonEmpty)
+    assert(got == want)
   }
 
   /** The semantic-dedup facade must return exactly q95's survivor rows

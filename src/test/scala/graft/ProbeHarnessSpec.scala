@@ -28,6 +28,18 @@ class ProbeHarnessSpec extends SparkSpec {
     } finally spark.conf.unset(key)
   }
 
+  test("confArgs rejects the removed annJoin keys, naming the budget that replaced them") {
+    val key = "spark.graft.test.probeHarness"
+    val ex = intercept[IllegalArgumentException](Probe.confArgs(spark,
+      Seq(s"conf:$key=1", "conf:spark.graft.annjoin.shipTablesMaxBytes=0")))
+    assert(ex.getMessage.contains("spark.driver.maxResultSize"), ex.getMessage)
+    assert(ex.getMessage.contains("force:"), ex.getMessage)
+    assert(spark.conf.getOption(key).isEmpty, "a rejected arg sets no conf at all")
+    val force = intercept[IllegalArgumentException](
+      Probe.run(spark, Array("annjoin", "v1", "1", "1", "force:shipMode=px")))
+    assert(force.getMessage.contains("tables|halvesDict|projection"), force.getMessage)
+  }
+
   test("shape maps v1–v4, defaults when absent, rejects any other name") {
     assert(Probe.shape(Some("v1"), ReleaseShape.V3) === ReleaseShape.V1)
     assert(Probe.shape(Some("v2"), ReleaseShape.V3) === ReleaseShape.V2)

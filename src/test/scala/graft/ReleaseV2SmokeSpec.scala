@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.CellMath
-import graft.engine.{LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef}
+import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef}
 
 /** Release-MAGNITUDE smoke against the PERSISTED big indexes that
   * `Bench`/`BuildRelease` create once per workspace: v2 (V=1024/split →
@@ -153,8 +153,9 @@ class ReleaseV2SmokeSpec extends SparkSpec {
       assume(indexPresent(s), s"${s.name} not built in this workspace")
       val idx = slimOf(s)
       val n = 4
-      def joined(): Seq[(Long, Long, Long, Double, Double)] =
-        ReleaseShape.annJoinFor(spark, s, idx, n).collect()
+      def joined(force: AnnJoinPlan => AnnJoinPlan = identity)
+          : Seq[(Long, Long, Long, Double, Double)] =
+        ReleaseShape.annJoinFor(spark, s, idx, n, force).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getDouble(3), r.getDouble(4)))
           .sortBy(t => (t._1, t._2)).toSeq
@@ -167,9 +168,7 @@ class ReleaseV2SmokeSpec extends SparkSpec {
       }.sortBy(t => (t._1, t._2))
       assert(batched === perQuery)
       // force PROJECTION ship mode (the million-probe path) — bit-identical
-      spark.conf.set(LopqSearcher.AnnJoinShipTablesMaxBytesConf, "0")
-      try assert(joined() === batched)
-      finally spark.conf.unset(LopqSearcher.AnnJoinShipTablesMaxBytesConf)
+      assert(joined(_.copy(shipMode = AnnJoinPlan.Ship.Projection)) === batched)
     }
 
     /** At this corpus geometry each synthetic center has ~586 members whose
