@@ -5,7 +5,9 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerDriverAccumUpdates,
+  SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
 
@@ -19,7 +21,8 @@ import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqSearcher, ReleaseShape, Re
   * [[BuildRelease]], [[MaintainRelease]]): [[session]] is the one probe
   * session, [[confArgs]] applies `conf:key=value` args, [[timed]] times a
   * block with its machine read-bytes, [[shape]] resolves a release-shape
-  * name, and [[census]] prints the Spark jobs and stages a block runs.
+  * name, and [[census]] prints the Spark jobs and stages a block runs
+  * ([[tally]] also returns them, with the files its scans read).
   *
   * Usage: `runMain graft.Probe <mode> … [conf:key=value …]`
   *   - `query <sfDir[,…]> <query[,…]> [explain|noop|execplan]` — plan-build
@@ -27,11 +30,14 @@ import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqSearcher, ReleaseShape, Re
   *     column through the noop sink (what Bench times) instead of a count
   *     Catalyst can prune; `execplan` prints the EXECUTED plan afterwards,
   *     the only dump that shows the final WholeStageCodegen `*(n)` spans.
-  *   - `serve [v1..v4] [passes]` — per-phase wall of the per-query slim
-  *     serve (`searchSlim`), 5 queries per pass: the engine's own stages
-  *     timed in order (cell walk, rotation slices, ADC tables, approx plan
-  *     with its table broadcast, approx execution + prefix collect, rerank),
-  *     then the real `searchSlim` on the same queries as a reference row.
+  *   - `serve [v1..v4] [passes] [dir:<indexDir>]` — per-phase wall and
+  *     Spark jobs of the per-query slim serve (`searchSlim`), 5 queries
+  *     per pass: the engine's own stages timed in order (cell walk,
+  *     rotation slices, ADC tables, approx plan with its table broadcast,
+  *     approx execution + prefix collect, rerank, with the files its scan
+  *     read), then the real `searchSlim` on the same queries as a
+  *     reference row. Defaults to `v1`, the shape the benchmark fixture
+  *     holds (`GRAFT_INDEX_ROOT=.bench_build/perfbench/index`).
   *   - `annjoin [v1..v4] [n] [passes] [force:<decision>=<value> …]` —
   *     per-job and per-stage census of the real batch `annJoin` over `n`
   *     probes, its TOTAL per pass and the plan of pass 1
@@ -189,33 +195,57 @@ object Probe {
       .getOrElse("?")
   }
 
+  /** What a [[census]] saw: the labels of the jobs its body started, in
+    * start order, and the files its parquet scans read (their `numFiles`
+    * metrics). */
+  final case class Tally(jobs: Seq[String], filesRead: Long)
+
   /** Runs `body` with a listener that prints, under `[tag]`, every Spark
     * job's wall time and every stage over 100 ms (tasks, executor CPU and
-    * run time, records read and shuffled). The listener is removed, after
+    * run time, records read and shuffled); `quiet` prints nothing. Returns
+    * the body's value and its [[Tally]]. The listener is removed, after
     * the listener bus has delivered the body's events, when `body` returns.
     * Lines go to the caller's `Console.out`, not the listener thread's. */
-  def census[A](spark: SparkSession, tag: String)(body: => A): A = {
+  def tally[A](spark: SparkSession, tag: String, quiet: Boolean = false)(body: => A): (A, Tally) = {
     val out = Console.out
+    def say(line: String): Unit = if (!quiet) out.println(line)
     val jobStarts = new ConcurrentHashMap[Int, (Long, String)]()
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sqlDescriptions = new ConcurrentHashMap[Long, String]()
+    // the scans' `numFiles` accumulators, and their last posted values
+    val fileMetrics = ConcurrentHashMap.newKeySet[Long]()
+    val filesRead = new ConcurrentHashMap[Long, Long]()
+    def scanMetrics(p: SparkPlanInfo): Unit = {
+      if (p.nodeName.startsWith("Scan parquet"))
+        p.metrics.filter(_.name == "number of files read").foreach(m => fileMetrics.add(m.accumulatorId))
+      p.children.foreach(scanMetrics)
+    }
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart => sqlDescriptions.put(x.executionId, x.description)
+        case x: SparkListenerSQLExecutionStart =>
+          sqlDescriptions.put(x.executionId, x.description)
+          scanMetrics(x.sparkPlanInfo)
+        case x: SparkListenerSQLAdaptiveExecutionUpdate => scanMetrics(x.sparkPlanInfo)
+        case x: SparkListenerDriverAccumUpdates =>
+          x.accumUpdates.foreach { case (id, v) => if (fileMetrics.contains(id)) filesRead.put(id, v) }
         case _ =>
       }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobStarts.put(e.jobId, (System.nanoTime(), jobLabel(e, sqlDescriptions).take(90)))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val label = jobLabel(e, sqlDescriptions).take(90)
+        labels.add(label)
+        jobStarts.put(e.jobId, (System.nanoTime(), label))
+      }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val st = jobStarts.remove(e.jobId)
         if (st != null)
-          out.println(f"[$tag]   job ${e.jobId}%3d ${(System.nanoTime() - st._1) / 1e6}%9.1f ms  ${st._2}")
+          say(f"[$tag]   job ${e.jobId}%3d ${(System.nanoTime() - st._1) / 1e6}%9.1f ms  ${st._2}")
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         val wall = (for (a <- si.completionTime; b <- si.submissionTime) yield a - b).getOrElse(-1L)
         val tm = si.taskMetrics
         if (wall > 100)
-          out.println(f"[$tag]     stage ${si.stageId}%3d ${wall}%7d ms  tasks=${si.numTasks}%3d" +
+          say(f"[$tag]     stage ${si.stageId}%3d ${wall}%7d ms  tasks=${si.numTasks}%3d" +
             f"  cpu=${tm.executorCpuTime / 1000000}%6d ms run=${tm.executorRunTime}%6d ms" +
             f"  in=${tm.inputMetrics.recordsRead}%9d sw=${tm.shuffleWriteMetrics.recordsWritten}%8d" +
             f" sr=${tm.shuffleReadMetrics.recordsRead}%8d  ${si.name.take(60)}")
@@ -223,12 +253,17 @@ object Probe {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    try body
+    val r = try body
     finally {
       try GraftBridge.drainListenerBus(sc) // times out (throws) after 10 s
       finally sc.removeSparkListener(listener)
     }
+    import scala.jdk.CollectionConverters._
+    (r, Tally(labels.asScala.toSeq, filesRead.values.asScala.map(_.toLong).sum))
   }
+
+  /** [[tally]], printing, returning only the body's value. */
+  def census[A](spark: SparkSession, tag: String)(body: => A): A = tally(spark, tag)(body)._1
 
   /** Materializes every column of `df` through the noop sink (what Bench
     * times). */
@@ -289,49 +324,75 @@ object Probe {
     * called from the engine itself, in its order. The rerank's lookup shape
     * collects the approximate prefix while the rerank plan is built, so
     * `approxExec+collect` is that call and `rerank` is the final noop
-    * write. */
-  private def serve(spark: SparkSession, args: Seq[String]): Unit = {
-    val name = args.headOption.getOrElse("v3")
-    val s = shape(Some(name), ReleaseShape.V3)
+    * write. Each phase reports its wall and the Spark jobs it ran
+    * (`…ms/<n>j`), the rerank also the files its scan read; pass 1 lists
+    * every phase's job labels for its first query. `dir:<indexDir>` serves
+    * the index there instead of the shape's under `GRAFT_INDEX_ROOT` (the
+    * queries stay the shape's rows). */
+  private def serve(spark: SparkSession, allArgs: Seq[String]): Unit = {
+    val (dirArgs, args) = allArgs.partition(_.startsWith("dir:"))
+    val name = args.headOption.getOrElse("v1")
+    val s = shape(Some(name), ReleaseShape.V1)
     val passes = args.lift(1).fold(3)(_.toInt)
-    val idx = LopqIndexStore.loadSlim(spark, s.dir).get
+    val dir = dirArgs.headOption.fold(s.dir)(_.stripPrefix("dir:"))
+    val idx = LopqIndexStore.loadSlim(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no index under $dir"))
     val vectors = ReleaseShape.vectors(spark, idx.dir)
     val slim = idx.slim
+    val queries = 5
     val phases = Seq("walk", "slices", "tables", "approxPlan", "approxExec+collect", "rerank")
     (1 to passes).foreach { pass =>
       val ms = new Array[Double](phases.size)
-      def lap[A](phase: Int)(body: => A): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        ms(phase) += (System.nanoTime() - t0) / 1e6
+      val jobs = new Array[Int](phases.size)
+      var rerankFiles = 0L
+      def lap[A](phase: Int, q: Int)(body: => A): A = {
+        val (r, t) = tally(spark, "serve-breakdown", quiet = true) {
+          val t0 = System.nanoTime()
+          val r = body
+          ms(phase) += (System.nanoTime() - t0) / 1e6
+          r
+        }
+        jobs(phase) += t.jobs.size
+        if (phase == 5) rerankFiles += t.filesRead
+        if (pass == 1 && q == 0)
+          t.jobs.foreach(l => println(s"[serve-breakdown]   ${phases(phase)} job: $l"))
         r
       }
       val t0 = System.nanoTime()
-      (0 until 5).foreach { q =>
+      (0 until queries).foreach { q =>
         val query = ReleaseShape.rowVecFor(s, q.toLong * 997L)
-        val (aq, cells) = lap(0) {
+        val (aq, cells) = lap(0, q) {
           val aq = idx.pca.map(_.apply(query)).getOrElse(query)
           val (d0, d1) = slim.coarseDistances(aq)
           (aq, LopqSearcher.selectCellsFrom(slim.v, d0, d1, ReleaseShape.Quota, idx.cellCounts))
         }
-        val rot = lap(1)(idx.rotations.slices(RotationSource.keysOf(cells, slim.v)))
-        val tables = lap(2)(LopqSearcher.parTables(cells,
+        val rot = lap(1, q)(idx.rotations.slices(RotationSource.keysOf(cells, slim.v)))
+        val tables = lap(2, q)(LopqSearcher.parTables(cells,
           cc => slim.adcTables(aq, cc, (sp, c) => rot((sp, c))), slim.v))
-        val approx = lap(3)(LopqSearcher.approxOverCells(idx.codes, cells, tables,
+        val (approx, tablesB) = lap(3, q)(LopqSearcher.approxOverCells(idx.codes, cells, tables,
           ReleaseShape.RerankK, idx.cellBuckets))
-        val reranked = lap(4)(LopqSearcher.rerankExact(approx, vectors, "vec_id",
-          "embedding", query, ReleaseShape.TopK, RerankShape.Auto))
-        lap(5)(noop(reranked))
+        val reranked = lap(4, q)(LopqSearcher.rerankExact(approx, vectors, "vec_id",
+          "embedding", query, ReleaseShape.TopK, RerankShape.Auto,
+          prefixCollected = () => tablesB.destroy()))
+        lap(5, q)(noop(reranked))
       }
       println(f"[serve-breakdown] $name pass=$pass total=${(System.nanoTime() - t0) / 1e9}%.3fs " +
-        phases.zip(ms).map { case (p, v) => f"$p=$v%.0fms" }.mkString(" "))
+        phases.indices.map(p => f"${phases(p)}=${ms(p)}%.0fms/${jobs(p)}j").mkString(" ") +
+        f" rerankFiles/q=${rerankFiles.toDouble / queries}%.1f of ${vectors.inputFiles.length}")
     }
-    // reference row: the real searchSlim, same 5 queries
+    // reference row: the real searchSlim, same queries
     (1 to passes).foreach { pass =>
       val t0 = System.nanoTime()
-      (0 until 5).foreach(q => noop(ReleaseShape.searchSlim(spark, s, idx, q.toLong * 997L)))
+      val (_, t) = tally(spark, "serve-breakdown", quiet = true) {
+        (0 until queries).foreach { q =>
+          noop(LopqSearcher.searchSlim(idx, vectors, "vec_id", "embedding",
+            ReleaseShape.rowVecFor(s, q.toLong * 997L), ReleaseShape.Quota, ReleaseShape.TopK,
+            ReleaseShape.RerankK))
+        }
+      }
       println(f"[serve-breakdown] $name searchSlim pass=$pass " +
-        f"total=${(System.nanoTime() - t0) / 1e9}%.3fs")
+        f"total=${(System.nanoTime() - t0) / 1e9}%.3fs jobs/q=${t.jobs.size.toDouble / queries}%.1f " +
+        f"files/q=${t.filesRead.toDouble / queries}%.1f")
     }
   }
 

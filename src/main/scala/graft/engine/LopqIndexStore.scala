@@ -301,7 +301,7 @@ object LopqIndexStore {
     val v = meta("v").toInt
     val mTotal = meta("m").toInt
     val renorm = meta.getOrElse("renorm", "false").toBoolean
-    val rows = spark.read.parquet(s"$dir/model")
+    val rows = sliceCacheOf(spark, dir).model
       .where(col("part") =!= "rot")
       .select("part", "split", "a", "b", "vec").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3),
@@ -344,7 +344,7 @@ object LopqIndexStore {
       if (clusters.isEmpty) None
       else Some(col("split") === s && col("a").isin(clusters: _*))
     }
-    spark.read.parquet(s"$dir/model")
+    sliceCacheOf(spark, dir).model
       .where(col("part") === "rot" && bySplit.reduce(_ || _))
       .select("split", "a", "b", "vec")
   }
@@ -352,7 +352,12 @@ object LopqIndexStore {
   val SliceCacheBytesConf = "spark.graft.slim.sliceCacheBytes"
   val DefaultSliceCacheBytes: Long = 64L << 20
 
-  private final class SliceCache(maxBytes: Long) {
+  /** One (session, dir)'s rotation slices, and the `model` relation
+    * [[loadModelSlim]] and every slice miss read: held, so its listing and
+    * schema-inference job run once, at load, and a miss runs just its one
+    * collect job (a fresh `spark.read.parquet` ran both per miss). */
+  private final class SliceCache(maxBytes: Long, readModel: () => DataFrame) {
+    lazy val model: DataFrame = readModel()
     private val lru = new java.util.LinkedHashMap[(Int, Int), Array[Array[Float]]](64, 0.75f, true)
     private var bytes = 0L
     private def sizeOf(m: Array[Array[Float]]): Long =
@@ -374,6 +379,14 @@ object LopqIndexStore {
   private val sliceCaches =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), SliceCache]
 
+  private def sliceCacheOf(spark: SparkSession, dir: String): SliceCache = {
+    sweepStoppedSessions()
+    sliceCaches.getOrElseUpdate((spark, dir), {
+      val max = spark.conf.get(SliceCacheBytesConf, DefaultSliceCacheBytes.toString).toLong
+      new SliceCache(max, () => spark.read.parquet(s"$dir/model"))
+    })
+  }
+
   /** Fetch counter for the spec: total rotation ROWS read from the store
     * (cache misses only). */
   private[graft] val sliceRowsFetched = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -394,16 +407,13 @@ object LopqIndexStore {
     * `lopq/lopq/search.py:151-164`): repeat queries against the same hot
     * clusters skip the fetch job entirely, while the bound
     * (`spark.graft.slim.sliceCacheBytes`, default 64 MB) keeps the driver
-    * O(1) in V — the cache can never grow back into the tensor. Evicted
-    * alongside the model caches on [[evictModel]]. Callers read slices through
+    * O(1) in V — the cache can never grow back into the tensor. Evicted,
+    * with its held `model` relation, alongside the model caches on
+    * [[evictModel]]. Callers read slices through
     * [[RotationSource.Fetched]]. */
   def rotationSlices(spark: SparkSession, dir: String,
       keys: Seq[(Int, Int)]): Map[(Int, Int), Array[Array[Float]]] = {
-    sweepStoppedSessions()
-    val cache = sliceCaches.getOrElseUpdate((spark, dir), {
-      val max = spark.conf.get(SliceCacheBytesConf, DefaultSliceCacheBytes.toString).toLong
-      new SliceCache(max)
-    })
+    val cache = sliceCacheOf(spark, dir)
     val cached = keys.flatMap(k => cache.get(k).map(k -> _)).toMap
     val missing = keys.filterNot(cached.contains)
     sliceKeysRequested.addAndGet(keys.size.toLong)

@@ -136,7 +136,13 @@ object ReleaseShape {
     * decodes most of the table (VERDICT r7 "What's wrong #1": v2/v3
     * staged this way reranked at ~0.5–0.8 s/query against 1.2 GB while
     * the 16 GB wide table in the lookup layout reranked at 0.29 s/query).
-    * Do not stage a rerank table with `write.parquet` defaults. */
+    * Do not stage a rerank table with `write.parquet` defaults.
+    *
+    * Id-ordered files also make FILE skipping work: [[vectors]] reads the
+    * table through a [[graft.core.IdRangeFileIndex]], which drops every
+    * file whose footer id range holds no candidate before any task opens
+    * it (~89 of 256 files kept for a 100-id V1 lookup); row-group pruning
+    * then runs inside the files kept. */
   def stageVectors(spark: SparkSession, indexDir: String, n: Long): Unit =
     stageVectorsFor(spark, V1, indexDir, n)
 
@@ -162,13 +168,19 @@ object ReleaseShape {
     * magnitude (257 files). Safe to memoize: a staged vectors dir is
     * written at most once per session ([[stageVectorsFor]] skips existing
     * dirs) and always before its first read. Weak keys let closed test
-    * sessions unpin their entries. */
+    * sessions unpin their entries.
+    *
+    * The listing is an [[graft.core.IdRangeFileIndex]] on `vec_id`: an id
+    * lookup (the rerank's, annJoin's lookup rerank's) opens only the files
+    * whose id range can hold a candidate; a scan without an id filter
+    * reads every file, as before. */
   private val vecRelations =
     new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, DataFrame]]()
   def vectors(spark: SparkSession, indexDir: String): DataFrame =
     vecRelations.synchronized {
       vecRelations.computeIfAbsent(spark, _ => new java.util.HashMap())
-        .computeIfAbsent(indexDir, d => spark.read.parquet(s"$d/vectors"))
+        .computeIfAbsent(indexDir, d =>
+          graft.core.IdRangeFileIndex.wrap(spark.read.parquet(s"$d/vectors"), "vec_id"))
     }
 
   /** Load the persisted index for `s`, or train+build it once (PCA front →
@@ -317,7 +329,10 @@ object ReleaseShape {
     * one group and a 100-id lookup decodes ~86 files' worth of rows
     * (measured: 672k of 2M); at 1 MB groups the same lookup touches ≤ 100
     * groups ≈ 12k rows. A full-scan consumer pays a little footer overhead;
-    * the rerank gains two orders of magnitude. */
+    * the rerank gains two orders of magnitude. Read through
+    * [[wideVectors]], the id-ordered files also let the driver skip every
+    * file whose footer id range holds no candidate
+    * ([[graft.core.IdRangeFileIndex]]) before row-group pruning starts. */
   def stageWide(spark: SparkSession): Unit =
     if (!wideStaged(spark)) {
       import spark.implicits._
@@ -334,7 +349,8 @@ object ReleaseShape {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  def wideVectors(spark: SparkSession): DataFrame = spark.read.parquet(wideDir)
+  def wideVectors(spark: SparkSession): DataFrame =
+    graft.core.IdRangeFileIndex.wrap(spark.read.parquet(wideDir), "vec_id")
 
   /** The rerank stage ALONE at release width: a RerankK-candidate prefix
     * against the staged wide table through the auto-selected shape (the

@@ -64,7 +64,7 @@ class LopqIndexSpec extends SparkSpec {
     val h = built
     val qv = Tables(spark, sf, "embeddings").where(col("vec_id") === 1)
       .select("embedding").head().getSeq[Float](0).toArray
-    val df = LopqSearcher.approxStage(h.serving, qv, 200, 10)
+    val df = LopqSearcher.approxStage(h.serving, qv, 200, 10)._1
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), plan.take(2000))
     // the IN-list over cell_id must land in PartitionFilters, not a

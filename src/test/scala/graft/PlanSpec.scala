@@ -202,7 +202,7 @@ class PlanSpec extends SparkSpec {
     val q = spark.read.parquet(s"$sf/embeddings.parquet")
       .where(col("vec_id") === 0).select("embedding")
       .head().getSeq[Float](0).toArray
-    val approx = LopqSearcher.approxStage(h.serving, q, 200, 10)
+    val approx = LopqSearcher.approxStage(h.serving, q, 200, 10)._1
     val p = approx.queryExecution.executedPlan.toString
     // visited-cell filter must reach the partitioned codes table as
     // PartitionFilters (directory pruning), not a post-scan Filter

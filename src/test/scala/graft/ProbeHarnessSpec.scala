@@ -59,6 +59,52 @@ class ProbeHarnessSpec extends SparkSpec {
     intercept[IllegalArgumentException](Probe.run(spark, Array("nosuchmode")))
   }
 
+  test("serve mode runs v1 against an index dir and reports each phase's jobs and rerank files") {
+    import graft.engine.{LopqIndexStore, LopqParams, LopqPca, LopqSearcher, LopqTrainer}
+    import org.apache.spark.sql.functions._
+    // a small index over V1's corpus rows (raw 256-d, so the mode's V1
+    // queries fit), in the staged feature-store layout
+    val dir = System.getProperty("user.dir") + "/target/graft-index-test/probe_serve"
+    val n = 3000L
+    val e = ReleaseShape.corpus(spark, n).cache()
+    val pca = LopqPca.train(e, "embedding", 16)
+    val pcaB = spark.sparkContext.broadcast(pca)
+    val applyU = udf((v: Seq[Float]) => pcaB.value(v.toArray).toSeq)
+    val projected = e.select(col("vec_id"), applyU(col("embedding")).as("pvec")).cache()
+    val p = LopqParams(v = 4, m = 4, subClusters = 16, seed = 7L, kmeansMaxIter = 3)
+    val model = LopqTrainer.train(projected, "pvec", p)
+    LopqIndexStore.build(spark, dir, model, Some(pca),
+      LopqSearcher.encode(projected, "vec_id", "pvec", model), p, n, ReleaseShape.RawDim)
+    val vecDir = new org.apache.hadoop.fs.Path(s"$dir/vectors")
+    vecDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(vecDir, true)
+    ReleaseShape.stageVectors(spark, dir, n)
+    projected.unpersist(); e.unpersist()
+
+    // a table this small reranks by scan under Auto; the probe's conf arg
+    // selects the lookup the release-sized fixture takes
+    val threshold = graft.engine.RerankShape.ThresholdConf
+    val out = try captured(Probe.run(spark,
+      Array("serve", "v1", "2", s"dir:$dir", s"conf:$threshold=0")))
+    finally spark.conf.unset(threshold)
+    val passes = out.linesIterator.filter(_.matches("""\[serve-breakdown\] v1 pass=\d.*""")).toSeq
+    assert(passes.size === 2, out)
+    // every phase reports its jobs; the rerank also the files its scan read
+    val phase = """(\S+)=(\d+)ms/(\d+)j""".r
+    passes.foreach { l =>
+      val jobs = phase.findAllMatchIn(l).map(m => m.group(1) -> m.group(3).toInt).toMap
+      assert(jobs.keySet === Set("walk", "slices", "tables", "approxPlan",
+        "approxExec+collect", "rerank"), l)
+      assert(jobs("walk") === 0 && jobs("tables") === 0 && jobs("rerank") === 5, l)
+      val files = """rerankFiles/q=([\d.]+) of (\d+)""".r.findFirstMatchIn(l).getOrElse(fail(l))
+      assert(files.group(2).toInt === 256, l)
+      assert(files.group(1).toDouble > 0 && files.group(1).toDouble <= 100, l)
+    }
+    // the second pass hits the slice cache
+    assert(passes(1).contains("slices=") && passes(1).matches(""".* slices=\d+ms/0j .*"""), passes(1))
+    assert(out.linesIterator.exists(_.matches(""".*searchSlim pass=1 .* jobs/q=2\.0 .*""")), out)
+    assert(out.contains("rerank job: save at Probe.scala"), out)
+  }
+
   test("census returns its body's value and leaves no listener behind") {
     val sc = spark.sparkContext
     GraftBridge.drainListenerBus(sc)

@@ -66,7 +66,7 @@ class ReleaseShapeSpec extends SparkSpec {
   test("search plan: bucket partition pruning + pushed cell IN-list + broadcast ADC") {
     val h = built
     val df = LopqSearcher.approxStage(h.serving,
-      h.pca.get(ReleaseShape.rowVec(42L)), TwinQuota, 10)
+      h.pca.get(ReleaseShape.rowVec(42L)), TwinQuota, 10)._1
     val plan = df.queryExecution.executedPlan.toString
     val pf = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(pf.contains("cell_bucket"), plan.take(3000))
@@ -87,7 +87,7 @@ class ReleaseShapeSpec extends SparkSpec {
   test("executed search scan reads a small pruned fraction of the codes files") {
     val h = built
     val df = LopqSearcher.approxStage(h.serving,
-      h.pca.get(ReleaseShape.rowVec(7L)), TwinQuota, 10)
+      h.pca.get(ReleaseShape.rowVec(7L)), TwinQuota, 10)._1
     df.collect()
     val scan = fileScans(df.queryExecution.executedPlan)
     assert(scan.nonEmpty)
@@ -155,6 +155,89 @@ class ReleaseShapeSpec extends SparkSpec {
     // the lookup path must push the id IN-list into the vectors scan
     assert(byLookup.queryExecution.executedPlan.toString.contains("In(vec_id"),
       byLookup.queryExecution.executedPlan.toString.take(2000))
+  }
+
+  /** Each row's id and the raw bits of its two distances. */
+  private def bits(rows: Array[org.apache.spark.sql.Row]): Seq[(String, Long, Long)] =
+    rows.map(r => (r.get(0).toString, java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq
+
+  test("join-free lookup rerank equals the earlier join form bit for bit") {
+    built
+    import spark.implicits._
+    val v = ReleaseShape.vectors(spark, dir)
+    // the contract is id-type-agnostic: the same rows as an INT-id table
+    val vInt = v.select(col("vec_id").cast("int").as("vec_id"), col("embedding"))
+    val rnd = new scala.util.Random(11)
+    for (trial <- 0 until 6; (table, intIds) <- Seq(v -> false, vInt -> true)) {
+      val ids = rnd.shuffle((0L until N).toList).take(if (trial == 0) 0 else 1 + rnd.nextInt(150))
+      // trial 2 ties every adc_dist
+      val adc = ids.map(_ => if (trial == 2) 1.0 else rnd.nextGaussian())
+      val prefix =
+        if (intIds) ids.map(_.toInt).zip(adc).toDF("id", "adc_dist")
+        else ids.zip(adc).toDF("id", "adc_dist")
+      val q = ReleaseShape.rowVec(rnd.nextInt(N.toInt).toLong)
+      val k = 1 + rnd.nextInt(120)
+      val got = LopqSearcher.rerankExact(prefix, table, "vec_id", "embedding", q, k,
+        graft.engine.RerankShape.Lookup)
+      val ref = RerankJoinReference.rerankLookup(prefix, table, "vec_id", "embedding", q, k)
+      assert(got.schema === ref.schema)
+      assert(bits(got.collect()) === bits(ref.collect()), s"trial $trial, int ids $intIds")
+    }
+  }
+
+  test("lookup rerank fails on a repeated prefix id, naming it") {
+    built
+    import spark.implicits._
+    val prefix = Seq((17L, 1.0), (5L, 2.0), (17L, 3.0)).toDF("id", "adc_dist")
+    val ex = intercept[IllegalArgumentException](LopqSearcher.rerankExact(prefix,
+      ReleaseShape.vectors(spark, dir), "vec_id", "embedding", ReleaseShape.rowVec(1L), TwinK,
+      graft.engine.RerankShape.Lookup))
+    assert(ex.getMessage.contains("repeats id 17"), ex.getMessage)
+  }
+
+  test("a Lookup search runs 2 jobs on cached slices; a slice miss adds one collect, no schema job") {
+    built
+    LopqIndexStore.evictModel(dir) // a fresh handle: its slice cache starts empty
+    val slim = LopqIndexStore.loadSlim(spark, dir).get
+    val v = ReleaseShape.vectors(spark, dir)
+    def jobs(): Seq[String] = Probe.tally(spark, "jobs", quiet = true) {
+      LopqSearcher.searchSlim(slim, v, "vec_id", "embedding", ReleaseShape.rowVec(4242L),
+        TwinQuota, TwinK, ReleaseShape.RerankK,
+        rerankShape = graft.engine.RerankShape.Lookup).collect()
+    }._2.jobs
+    try {
+      val cold = jobs()
+      assert(cold.size === 3, s"slice collect, prefix collect, rerank: $cold")
+      assert(!cold.exists(_.startsWith("parquet at")), s"a miss must not re-read the schema: $cold")
+      val warm = jobs()
+      assert(warm.size === 2, s"prefix collect, rerank: $warm")
+    } finally LopqIndexStore.evictModel(dir) // later specs start from a cold slice cache
+  }
+
+  test("back-to-back Lookup searches leave no ADC-table broadcast resident") {
+    import org.apache.spark.graft.TestBroadcastBlocks
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    built
+    val slim = LopqIndexStore.loadSlim(spark, dir).get
+    val v = ReleaseShape.vectors(spark, dir)
+    def search(qid: Long) = LopqSearcher.searchSlim(slim, v, "vec_id", "embedding",
+      ReleaseShape.rowVec(qid), TwinQuota, TwinK, ReleaseShape.RerankK,
+      rerankShape = graft.engine.RerankShape.Lookup)
+    try {
+      search(1L).collect() // the handle's own broadcasts
+      val before = TestBroadcastBlocks.resident().keySet
+      // the results stay referenced: only their own plans could pin a broadcast
+      val results = (0 until 10).map(i => search(100L + i))
+      results.foreach(_.collect())
+      eventually(timeout(5.seconds), interval(100.millis)) {
+        val left = TestBroadcastBlocks.resident().filter { case (id, cls) =>
+          !before(id) && cls == "java.util.HashMap" }
+        assert(left.isEmpty, s"per-query ADC tables still resident: $left")
+      }
+      assert(results.forall(_.collect().length == TwinK))
+    } finally LopqIndexStore.evictModel(dir)
   }
 
   test("Auto rerank shape self-selects from the vector-table size") {
