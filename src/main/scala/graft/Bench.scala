@@ -233,7 +233,7 @@ object Bench {
     // indexes are built OFFLINE like the reference's model training —
     // persisted under target/ and reloaded by fingerprint — so the timed
     // path is 5 online searches against the disk-resident bucketed index,
-    // rerank on the scale-safe pushed-lookup shape (auto-selected):
+    // rerank through the scale-safe pushed id lookup:
     //   - release_ann: V=256/split (65,536 cells), M=8, S=256, PCA-64,
     //     200k × 256-d; classic full-model serve.
     //   - release_ann_v2: V=1024/split (1,048,576 cells), M=8, S=256,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.graft.GraftBridge
 
 import graft.core.DiskStats
 import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqSearcher, ReleaseShape, ReleaseShapeDef,
-  RerankShape, RotationSource}
+  RotationSource}
 
 /** The dev probe harness, and the small probes as its modes.
   *
@@ -321,8 +321,8 @@ object Probe {
   }
 
   /** The per-query serve split into the stages `searchSlim` composes, each
-    * called from the engine itself, in its order. The rerank's lookup shape
-    * collects the approximate prefix while the rerank plan is built, so
+    * called from the engine itself, in its order. The rerank collects the
+    * approximate prefix while the rerank plan is built, so
     * `approxExec+collect` is that call and `rerank` is the final noop
     * write. Each phase reports its wall and the Spark jobs it ran
     * (`…ms/<n>j`), the rerank also the files its scan read; pass 1 lists
@@ -372,8 +372,7 @@ object Probe {
         val (approx, tablesB) = lap(3, q)(LopqSearcher.approxOverCells(idx.codes, cells, tables,
           ReleaseShape.RerankK, idx.cellBuckets))
         val reranked = lap(4, q)(LopqSearcher.rerankExact(approx, vectors, "vec_id",
-          "embedding", query, ReleaseShape.TopK, RerankShape.Auto,
-          prefixCollected = () => tablesB.destroy()))
+          "embedding", query, ReleaseShape.TopK, prefixCollected = () => tablesB.destroy()))
         lap(5, q)(noop(reranked))
       }
       println(f"[serve-breakdown] $name pass=$pass total=${(System.nanoTime() - t0) / 1e9}%.3fs " +

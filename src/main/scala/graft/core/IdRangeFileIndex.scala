@@ -31,8 +31,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
   * range. Everything else keeps the file: no such filter, a filter of
   * another shape, an id column that is not INT or BIGINT, or a file
   * without statistics. `sizeInBytes`, `inputFiles` and `rootPaths`
-  * delegate, so plan statistics (and [[graft.engine.RerankShape.Auto]]) see
-  * the same table.
+  * delegate, so plan statistics see the same table.
   *
   * Ranges are read lazily — only when a scan carries an id filter — once
   * per file version, in parallel, and memoized for the JVM keyed by

@@ -11,12 +11,11 @@ import graft.engine.LopqSearcher.satMul
   * pins bit-equal rows); the plan only moves cost and memory.
   *
   * The gate inputs are those of the chosen plan; forcing a decision leaves
-  * them as they were. `scanKeepFraction` is rounded to 0.001. `candBound`
-  * is -1 when the planner never needed the probe count (the count job did
-  * not run); `dictBytes` is -1 unless the planner chose the halves
-  * dictionary. `broadcasts` are the per-call broadcasts the built frame
-  * reads (the halves dictionary, the probe matrix) — the caller may destroy
-  * them once the frame is materialized. */
+  * them as they were. `scanKeepFraction` is rounded to 0.001. `dictBytes`
+  * is -1 unless the planner chose the halves dictionary. `broadcasts` are
+  * the per-call broadcasts the built frame reads (the halves dictionary,
+  * the probe matrix) — the caller may destroy them once the frame is
+  * materialized. */
 final case class AnnJoinPlan(
     shipMode: AnnJoinPlan.Ship, cellsPushed: Boolean, balanced: Boolean,
     qsideBroadcast: Boolean, rerankMode: AnnJoinPlan.Rerank, exactShape: AnnJoinPlan.Exact,
@@ -60,7 +59,7 @@ object AnnJoinPlan {
   }
   /** How the exact rerank reads the raw-vector table. */
   object Rerank extends Enumeration {
-    val Scan = Value("scan"); val Lookup = Value("lookup")
+    val Lookup = Value("lookup")
     val BroadcastCand = Value("broadcastCand"); val Shuffle = Value("shuffle")
   }
   /** How the exact stage attaches each candidate's probe vector. */
@@ -115,20 +114,19 @@ object AnnJoinPlan {
   /** Candidate ids a lookup rerank pushes as one IN-list at most. */
   val MaxLookupIds: Long = LopqSearcher.MaxStackSafeInPushdown.toLong
 
-  /** The planner's inputs, all exact and driver-known. The two counts that
-    * cost a Spark job — the distinct projection halves of the batch and the
-    * probe count (which also asserts unique q_ids) — are by-name and are
-    * evaluated only when a gate cannot be settled without them. */
+  /** The planner's inputs, all exact and driver-known. `nProbes` is a count
+    * job (which also asserts unique q_ids) that every plan pays: the rerank
+    * bound needs it. The distinct projection halves of the batch cost a
+    * second job, so that count is by-name and is evaluated only when the
+    * ship gate cannot be settled without it. */
   final class Inputs(
       val nPairs: Long, val unionCells: Int, val scanKeepFraction: Double, val fanOutRows: Long,
       val m: Int, val subClusters: Int, val halfDim: Int, val dim: Int, val rerankK: Int,
-      val qIdIntegral: Boolean, val lookupTable: Boolean,
-      distinctHalvesCount: => Long, probeCount: => Long) {
+      val qIdIntegral: Boolean, distinctHalvesCount: => Long, val nProbes: Long) {
     lazy val distinctHalves: Long = distinctHalvesCount
-    lazy val nProbes: Long = probeCount
   }
 
-  /** The plan for `in` under `budget`. Pure apart from the by-name counts
+  /** The plan for `in` under `budget`. Pure apart from the by-name count
     * of `in`. */
   def choose(in: Inputs, budget: Long): AnnJoinPlan = {
     // The codes-scan cell filter is a per-row set probe over every codes row
@@ -180,29 +178,27 @@ object AnnJoinPlan {
     val qsidePayloadBytes = satMul(in.nPairs, pairBytes + 24L)
     val qsideBroadcast = qsidePayloadBytes <= qsideBroadcastMaxBytes(budget)
 
-    // The exact stage's screen before any count job: every counted pair
-    // comes from a probe visiting ≥ 1 cell, so the candidate count is at
-    // most nPairs·rerankK. When even that bound trips neither trigger —
-    // many candidates, or few but wide enough that dragging their vectors
-    // through a q_id shuffle passes the floor (the 4096-d shape) — small
-    // batches keep their job count.
+    // The exact stage's screen: every counted pair comes from a probe
+    // visiting ≥ 1 cell, so the candidate count is at most nPairs·rerankK.
+    // When even that bound trips neither trigger — many candidates, or few
+    // but wide enough that dragging their vectors through a q_id shuffle
+    // passes the floor (the 4096-d shape) — the q_id join stays.
     val maxCand = broadcastCandMaxRows(budget)
     val fatFloor = fatShuffleFloorBytes(budget)
     val pairVecRowBytes = 4L * in.dim + 24L
     val candUpper = satMul(in.nPairs, in.rerankK.toLong)
     val mayTrigger = in.qIdIntegral && in.dim > 0 &&
       (candUpper > maxCand || satMul(candUpper, pairVecRowBytes) > fatFloor)
-    def candBound = satMul(in.nProbes, in.rerankK.toLong)
+    val candBound = satMul(in.nProbes, in.rerankK.toLong)
 
-    // Rerank read shape. Against a lookup-sized table a bounded batch pushes
-    // its candidate ids into the vector scan; without that, Catalyst cannot
-    // size the candidate side and sort-merges the whole table (32 GB at the
-    // deployment shape). Too many ids for an IN-list but few enough to
-    // broadcast: the candidates broadcast and the table streams. Past both,
-    // the shuffle join is the distributed plan.
+    // Rerank read shape. A bounded batch pushes its candidate ids into the
+    // vector scan; without that, Catalyst cannot size the candidate side and
+    // sort-merges the whole table (32 GB at the deployment shape). Too many
+    // ids for an IN-list but few enough to broadcast: the candidates
+    // broadcast and the table streams. Past both, the shuffle join is the
+    // distributed plan.
     val rerankMode =
-      if (!in.lookupTable) Rerank.Scan
-      else if (candBound <= MaxLookupIds) Rerank.Lookup
+      if (candBound <= MaxLookupIds) Rerank.Lookup
       else if (candBound <= maxCand) Rerank.BroadcastCand
       else Rerank.Shuffle
 
@@ -222,7 +218,7 @@ object AnnJoinPlan {
 
     AnnJoinPlan(shipMode, cellsPushed, balanced, qsideBroadcast, rerankMode, exactShape,
       in.nPairs, in.fanOutRows, math.round(in.scanKeepFraction * 1000.0) / 1000.0, qsidePayloadBytes,
-      if (in.lookupTable || mayTrigger) candBound else -1L, qvecMaxBytes(budget), dictBytes)
+      candBound, qvecMaxBytes(budget), dictBytes)
   }
 
   /** Fails on a plan the batch cannot run: the halves dictionary and the

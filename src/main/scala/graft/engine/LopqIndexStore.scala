@@ -280,7 +280,12 @@ object LopqIndexStore {
     // ~536 MB — a single-file layout would force a full read per slice).
     val rotBytes = 2L * model.v * model.halfDim * model.halfDim * 8L
     val nFiles = math.max(1, math.min(512, (rotBytes / (2L << 20)).toInt))
-    rows.result().toDF()
+    // sliced so no task carries more than ~512 KiB of rows: a local relation
+    // would serialize every row into each sampling and write task
+    val all = rows.result()
+    val rowBytes = all.iterator.map(_.vec.length * 8L + 64L).sum
+    val slices = math.max(1L, (rowBytes + (512L << 10) - 1) / (512L << 10)).toInt
+    spark.sparkContext.parallelize(all, slices).toDF()
       .repartitionByRange(nFiles, col("part"), col("split"), col("a"), col("b"))
       .sortWithinPartitions("part", "split", "a", "b")
       .write.mode(SaveMode.Overwrite).partitionBy("part").parquet(s"$dir/model")

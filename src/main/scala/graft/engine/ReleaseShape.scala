@@ -25,8 +25,7 @@ final case class ReleaseShapeDef(
   *   - [[V1]] (r4, `release_ann`): V=256/split → 65,536 cells, M=8, S=256,
   *     PCA-64, bucketed codes layout, 200k × 256-d corpus. Proves the PLAN
   *     shapes (constant-size plan, bucket pruning, broadcast rerank) and,
-  *     since r6, the self-selecting LOOKUP rerank (its ~200 MB staged table
-  *     is over the threshold).
+  *     since r6, the LOOKUP rerank against its ~200 MB staged table.
   *   - [[V2]] (r6, `release_ann_v2`): V=1024/split → 1,048,576 cells, M=8,
   *     S=256, **PCA-256 — the true release half-width (D/2 = 128)** — over
   *     600k × 512-d. Its rotation tensor is 2×1024×128×128 float32 ≈ 268 MB
@@ -264,17 +263,15 @@ object ReleaseShape {
 
   /** The online ANN path at the release shape: PCA-projected approximate
     * stage over the bucketed codes, exact rerank against the staged raw-dim
-    * feature table. The rerank shape is [[RerankShape.Auto]]: the staged
-    * table (~200 MB) is over the lookup threshold, so the BENCHED release
-    * path is the scale-safe pushed-IN-list lookup — the shape a 2M × 4096-d
-    * deployment must use (VERDICT r5 "What's wrong #1") — and the spec pins
-    * that Auto resolves to it. `h` is the V1 full-model handle; its rotation
-    * slices are read from the resident tensor. */
+    * feature table through the pushed id lookup
+    * ([[LopqSearcher.rerankExact]]) — the read a 2M × 4096-d deployment
+    * must use (VERDICT r5 "What's wrong #1"). `h` is the V1 full-model
+    * handle; its rotation slices are read from the resident tensor. */
   def search(spark: SparkSession, h: LopqIndex, queryId: Long): DataFrame =
     searchSlim(spark, V1, h.serving, queryId)
 
   /** The online ANN path at release MAGNITUDE: slim serve (per-query
-    * rotation-slice fetch) + auto-selected lookup rerank. */
+    * rotation-slice fetch) + lookup rerank. */
   def searchSlim(spark: SparkSession, s: ReleaseShapeDef, idx: LopqSlimIndex,
       queryId: Long): DataFrame =
     LopqSearcher.searchSlim(idx, vectors(spark, idx.dir), "vec_id", "embedding",
@@ -353,8 +350,7 @@ object ReleaseShape {
     graft.core.IdRangeFileIndex.wrap(spark.read.parquet(wideDir), "vec_id")
 
   /** The rerank stage ALONE at release width: a RerankK-candidate prefix
-    * against the staged wide table through the auto-selected shape (the
-    * table is two orders of magnitude past the lookup threshold). The
+    * against the staged wide table through the pushed id lookup. The
     * candidate ids are a deterministic per-query draw — the rerank's cost
     * is a function of the id COUNT and the table layout, not of where the
     * ids came from, so this isolates exactly the unmeasured budget. */
@@ -377,7 +373,6 @@ object ReleaseShape {
     val prefix = Seq.fill(RerankK)(
         (math.floorMod(rnd.nextLong(), n), rnd.nextDouble()))
       .distinctBy(_._1).toDF("id", "adc_dist")
-    LopqSearcher.rerankExact(prefix, table, "vec_id", "embedding",
-      queryVec, TopK, RerankShape.Auto)
+    LopqSearcher.rerankExact(prefix, table, "vec_id", "embedding", queryVec, TopK)
   }
 }

@@ -831,14 +831,13 @@ object EngineOps {
           .option("checkpointLocation", outDir + "/_ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            val cachedBefore = s.sparkContext.getPersistentRDDs.keySet
-            LopqSearcher.annJoin(slim, batch, "q_id", "embedding",
-              e, "vec_id", "embedding", Quota, TopK, RerankK)
-              .write.mode(SaveMode.Append).parquet(outDir + "/results")
-            // drop only the per-batch qcells cache annJoin created
-            s.sparkContext.getPersistentRDDs
-              .filterNot { case (id, _) => cachedBefore(id) }
-              .values.foreach(_.unpersist(blocking = false))
+            // the chunked driver drops each join's caches and per-call
+            // broadcasts after its sink, so a long-lived stream accretes none
+            LopqSearcher.annJoinChunked(slim, batch, "q_id", "embedding",
+              e, "vec_id", "embedding", Quota, TopK, RerankK, chunkRows = 0L) { (df, _) =>
+              df.write.mode(SaveMode.Append).parquet(outDir + "/results")
+            }
+            ()
           }
           .start().awaitTermination()
         s.read.parquet(outDir + "/results")

@@ -76,10 +76,10 @@ object TextOps {
     * byte-identical at default confs; the measured recall/cost curve per
     * setting is PROBES.md r15's `lshcurve` table. rowsPerBand is derived
     * (`numHashes / bands` — bands must divide numHashes); the banding
-    * S-curve midpoint is ≈ (1/bands)^(bands/numHashes). */
+    * S-curve midpoint is ≈ (1/bands)^(bands/numHashes). The 0.5 verification
+    * threshold stays a constant: every oracle hard-codes it. */
   private[graft] val NumHashesConf = "spark.graft.text.lsh.numHashes"
   private[graft] val BandsConf = "spark.graft.text.lsh.bands"
-  private[graft] val JaccardThresholdConf = "spark.graft.text.lsh.jaccardThreshold"
 
   private[graft] final case class LshParams(
       numHashes: Int, bands: Int, threshold: Double) {
@@ -94,7 +94,7 @@ object TextOps {
       spark: org.apache.spark.sql.SparkSession): LshParams = LshParams(
     spark.conf.get(NumHashesConf, NumHashes.toString).toInt,
     spark.conf.get(BandsConf, Bands.toString).toInt,
-    spark.conf.get(JaccardThresholdConf, JaccardThreshold.toString).toDouble)
+    JaccardThreshold)
 
   private val stopWords = Seq("the", "a", "of", "and", "to", "in", "is")
 

@@ -33,11 +33,10 @@ class AnnJoinPlanSpec extends AnyFunSuite {
     dim <- Gen.oneOf(64, 256, 512, 4096)
     rerankK <- Gen.oneOf(1, 10, 32, 50, 100, 128, 256)
     qIdIntegral <- Gen.frequency(4 -> true, 1 -> false)
-    lookupTable <- Gen.oneOf(true, false)
     nProbes <- Gen.choose(1L, math.max(1L, nPairs))
     distinctHalves <- Gen.choose(0L, 2L * nPairs)
   } yield AnnJoinGateReference.Inputs(nPairs, unionCells, keepFraction, fanOutRows, m, s,
-    halfDim, dim, rerankK, qIdIntegral, lookupTable, distinctHalves, nProbes)
+    halfDim, dim, rerankK, qIdIntegral, lookupTable = true, distinctHalves, nProbes)
 
   /** The planner's view of `in`, recording which counts it paid for. */
   private final class Counted(in: AnnJoinGateReference.Inputs) {
@@ -45,7 +44,7 @@ class AnnJoinPlanSpec extends AnyFunSuite {
     var probes = false
     val planInputs = new AnnJoinPlan.Inputs(in.nPairs, in.unionCells, in.keepFraction,
       in.fanOutRows, in.m, in.sClusters, in.halfDim, in.dim, in.rerankK, in.qIdIntegral,
-      in.lookupTable, { halves = true; in.distinctHalves }, { probes = true; in.nProbes })
+      { halves = true; in.distinctHalves }, { probes = true; in.nProbes })
   }
 
   private def plan(in: AnnJoinGateReference.Inputs, budget: Long): AnnJoinPlan =
@@ -68,7 +67,7 @@ class AnnJoinPlanSpec extends AnyFunSuite {
   test("raising the budget never moves a memory gate toward its fallback") {
     def shipRank(s: Ship) = s.id // tables < halvesDict < projection
     def rerankRank(r: Rerank) = r match {
-      case Rerank.Scan | Rerank.Lookup => 0 // not budget gates
+      case Rerank.Lookup => 0 // not a budget gate
       case Rerank.BroadcastCand => 1
       case Rerank.Shuffle => 2
     }
@@ -123,7 +122,7 @@ class AnnJoinPlanSpec extends AnyFunSuite {
 
   test("forcing names a decision and one of its values; anything else fails") {
     val base = plan(AnnJoinGateReference.Inputs(10L, 3, 0.1, 100L, 4, 16, 32, 64, 50,
-      true, false, 5L, 3L), DefaultBudget)
+      true, true, 5L, 3L), DefaultBudget)
     val forced = Probe.annJoinForce(Seq("shipMode=projection", "balanced=true",
       "rerankMode=broadcastCand", "exactShape=broadcastQvec"))(base)
     assert(forced === base.copy(shipMode = Ship.Projection, balanced = true,
@@ -135,6 +134,8 @@ class AnnJoinPlanSpec extends AnyFunSuite {
     assert(badName.getMessage.contains("shipMode|cellsPushed"), badName.getMessage)
     val badValue = intercept[IllegalArgumentException](Probe.annJoinForce(Seq("shipMode=px")))
     assert(badValue.getMessage.contains("tables|halvesDict|projection"), badValue.getMessage)
+    val noScan = intercept[IllegalArgumentException](Probe.annJoinForce(Seq("rerankMode=scan")))
+    assert(noScan.getMessage.contains("lookup|broadcastCand|shuffle"), noScan.getMessage)
     intercept[IllegalArgumentException](Probe.annJoinForce(Seq("shipMode")))
     // the dictionary and the probe matrix are keyed by a long q_id
     intercept[IllegalArgumentException](

@@ -675,8 +675,7 @@ class IngestSpec extends SparkSpec {
         .select(col("id"), lit(0.0).as("adc_dist"))
       LopqSearcher.rerankExact(approx,
         IngestOps.vectorStore(spark, dir, "vec_id", "embedding"),
-        "vec_id", "embedding", qv, k = 10,
-        graft.engine.RerankShape.Auto)
+        "vec_id", "embedding", qv, k = 10)
         .select("id").collect().map(_.getLong(0)).toSeq
     }
     val pairs0 = screenPairs()

@@ -80,12 +80,7 @@ class ProbeHarnessSpec extends SparkSpec {
     ReleaseShape.stageVectors(spark, dir, n)
     projected.unpersist(); e.unpersist()
 
-    // a table this small reranks by scan under Auto; the probe's conf arg
-    // selects the lookup the release-sized fixture takes
-    val threshold = graft.engine.RerankShape.ThresholdConf
-    val out = try captured(Probe.run(spark,
-      Array("serve", "v1", "2", s"dir:$dir", s"conf:$threshold=0")))
-    finally spark.conf.unset(threshold)
+    val out = captured(Probe.run(spark, Array("serve", "v1", "2", s"dir:$dir")))
     val passes = out.linesIterator.filter(_.matches("""\[serve-breakdown\] v1 pass=\d.*""")).toSeq
     assert(passes.size === 2, out)
     // every phase reports its jobs; the rerank also the files its scan read

@@ -142,14 +142,15 @@ class ReleaseShapeSpec extends SparkSpec {
 
   test("lookup rerank (feature-store shape) matches the broadcast-scan rerank") {
     val h = built
+    assert(h.cellBuckets === Buckets)
     val v = ReleaseShape.vectors(spark, dir)
-    def run(shape: graft.engine.RerankShape) =
-      LopqSearcher.searchSlim(h.serving, v, "vec_id", "embedding",
-        ReleaseShape.rowVec(99L), TwinQuota, TwinK, ReleaseShape.RerankK,
-        rerankShape = shape)
-    val scan = run(graft.engine.RerankShape.Scan).collect()
-      .map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    val byLookup = run(graft.engine.RerankShape.Lookup)
+    val q = ReleaseShape.rowVec(99L)
+    val approx = LopqSearcher.approxStage(h.serving, h.pca.get(q), TwinQuota,
+      ReleaseShape.RerankK)._1
+    val scan = RerankJoinReference.rerankScan(approx, v, "vec_id", "embedding", q, TwinK)
+      .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    val byLookup = LopqSearcher.searchSlim(h.serving, v, "vec_id", "embedding", q,
+      TwinQuota, TwinK, ReleaseShape.RerankK)
     val lookup = byLookup.collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     assert(lookup === scan, "the two rerank read shapes must be result-identical")
     // the lookup path must push the id IN-list into the vectors scan
@@ -169,8 +170,14 @@ class ReleaseShapeSpec extends SparkSpec {
     // the contract is id-type-agnostic: the same rows as an INT-id table
     val vInt = v.select(col("vec_id").cast("int").as("vec_id"), col("embedding"))
     val rnd = new scala.util.Random(11)
-    for (trial <- 0 until 6; (table, intIds) <- Seq(v -> false, vInt -> true)) {
-      val ids = rnd.shuffle((0L until N).toList).take(if (trial == 0) 0 else 1 + rnd.nextInt(150))
+    // trials 6 and 7 pass MaxStackSafeInPushdown: their id list stays Spark-side
+    for (trial <- 0 until 8; (table, intIds) <- Seq(v -> false, vInt -> true)) {
+      val size = trial match {
+        case 0 => 0
+        case 6 | 7 => LopqSearcher.MaxStackSafeInPushdown + 1 + rnd.nextInt(188)
+        case _ => 1 + rnd.nextInt(150)
+      }
+      val ids = rnd.shuffle((0L until N).toList).take(size)
       // trial 2 ties every adc_dist
       val adc = ids.map(_ => if (trial == 2) 1.0 else rnd.nextGaussian())
       val prefix =
@@ -178,8 +185,7 @@ class ReleaseShapeSpec extends SparkSpec {
         else ids.zip(adc).toDF("id", "adc_dist")
       val q = ReleaseShape.rowVec(rnd.nextInt(N.toInt).toLong)
       val k = 1 + rnd.nextInt(120)
-      val got = LopqSearcher.rerankExact(prefix, table, "vec_id", "embedding", q, k,
-        graft.engine.RerankShape.Lookup)
+      val got = LopqSearcher.rerankExact(prefix, table, "vec_id", "embedding", q, k)
       val ref = RerankJoinReference.rerankLookup(prefix, table, "vec_id", "embedding", q, k)
       assert(got.schema === ref.schema)
       assert(bits(got.collect()) === bits(ref.collect()), s"trial $trial, int ids $intIds")
@@ -191,8 +197,7 @@ class ReleaseShapeSpec extends SparkSpec {
     import spark.implicits._
     val prefix = Seq((17L, 1.0), (5L, 2.0), (17L, 3.0)).toDF("id", "adc_dist")
     val ex = intercept[IllegalArgumentException](LopqSearcher.rerankExact(prefix,
-      ReleaseShape.vectors(spark, dir), "vec_id", "embedding", ReleaseShape.rowVec(1L), TwinK,
-      graft.engine.RerankShape.Lookup))
+      ReleaseShape.vectors(spark, dir), "vec_id", "embedding", ReleaseShape.rowVec(1L), TwinK))
     assert(ex.getMessage.contains("repeats id 17"), ex.getMessage)
   }
 
@@ -203,8 +208,7 @@ class ReleaseShapeSpec extends SparkSpec {
     val v = ReleaseShape.vectors(spark, dir)
     def jobs(): Seq[String] = Probe.tally(spark, "jobs", quiet = true) {
       LopqSearcher.searchSlim(slim, v, "vec_id", "embedding", ReleaseShape.rowVec(4242L),
-        TwinQuota, TwinK, ReleaseShape.RerankK,
-        rerankShape = graft.engine.RerankShape.Lookup).collect()
+        TwinQuota, TwinK, ReleaseShape.RerankK).collect()
     }._2.jobs
     try {
       val cold = jobs()
@@ -223,8 +227,7 @@ class ReleaseShapeSpec extends SparkSpec {
     val slim = LopqIndexStore.loadSlim(spark, dir).get
     val v = ReleaseShape.vectors(spark, dir)
     def search(qid: Long) = LopqSearcher.searchSlim(slim, v, "vec_id", "embedding",
-      ReleaseShape.rowVec(qid), TwinQuota, TwinK, ReleaseShape.RerankK,
-      rerankShape = graft.engine.RerankShape.Lookup)
+      ReleaseShape.rowVec(qid), TwinQuota, TwinK, ReleaseShape.RerankK)
     try {
       search(1L).collect() // the handle's own broadcasts
       val before = TestBroadcastBlocks.resident().keySet
@@ -238,24 +241,6 @@ class ReleaseShapeSpec extends SparkSpec {
       }
       assert(results.forall(_.collect().length == TwinK))
     } finally LopqIndexStore.evictModel(dir)
-  }
-
-  test("Auto rerank shape self-selects from the vector-table size") {
-    import graft.engine.RerankShape
-    val v = built; val vecs = ReleaseShape.vectors(spark, dir)
-    // the 8k-row twin table is far under the threshold → streaming scan
-    assert(!RerankShape.useLookup(vecs, RerankShape.Auto))
-    // shrink the threshold below the table size → the SAME table flips to
-    // the pushed-lookup shape; no caller flag involved (VERDICT r5 #2)
-    spark.conf.set(RerankShape.ThresholdConf, "1024")
-    try assert(RerankShape.useLookup(vecs, RerankShape.Auto))
-    finally spark.conf.unset(RerankShape.ThresholdConf)
-    // the benched release corpus (200k × 256-d ≈ 200 MB staged parquet) is
-    // over the default 128 MB threshold → release_ann measures the
-    // scale-safe lookup shape
-    assert(ReleaseShape.N * ReleaseShape.RawDim * 4L >
-      RerankShape.DefaultThresholdBytes)
-    assert(v.cellBuckets === Buckets)
   }
 
   test("slim serve path (no rotation tensor on the driver) is bit-identical") {

@@ -26,9 +26,7 @@ class ReleaseV2SmokeSpec extends SparkSpec {
   }
 
   for (s <- Seq(ReleaseShape.V2, ReleaseShape.V3, ReleaseShape.V4)) {
-    // the Scan rerank shape streams the whole vectors table — a fine
-    // end-to-end probe at v2/v3's ~1.2 GB, not a test-sized plan at v4's
-    // ~32 GB (where ONLY the lookup shape is viable, which is the point)
+    // v2/v3 stage ~1.2 GB of raw vectors, v4 ~32 GB
     val scanShapeTestSized = s.n * s.rawDim * 4L < (4L << 30)
     // Regression budget at local[4], tightened after the point-lookup
     // restage (VERDICT r7 #4/#5): measured warm medians are v2 0.49–0.76 s,
@@ -69,31 +67,12 @@ class ReleaseV2SmokeSpec extends SparkSpec {
         f"slice rows=${fetched.length} of $totalRotRows (${ratio * 100}%.2f%%)")
       assert(ratio <= 0.2, s"per-query slice read fetched $ratio of the tensor")
       // and the executed codes read prunes at the bucket/file level
-      val codesScan =
-        if (scanShapeTestSized) {
-          // Scan rerank shape: in the benched Lookup shape the approx stage
-          // executes eagerly inside searchSlim, so its scan isn't in the
-          // returned plan — the Scan shape exposes it end-to-end
-          val approx = LopqSearcher.searchSlim(idx,
-            ReleaseShape.vectors(spark, s.dir), "vec_id", "embedding",
-            ReleaseShape.rowVecFor(s, 997L), ReleaseShape.Quota, 10, 10,
-            rerankShape = graft.engine.RerankShape.Scan)
-          approx.collect()
-          val scans = fileScans(approx.queryExecution.executedPlan)
-          assert(scans.nonEmpty)
-          val cs = scans.filter(_.output.exists(_.name == "fine"))
-          assert(cs.nonEmpty, scans.map(_.toString.take(100)).mkString("\n"))
-          cs
-        } else {
-          // v4: pin the same WHERE the search pushes, on the codes directly
-          LopqSearcher.ensureInPushdown(spark, cells.size)
-          val pruned = idx.codes.where(
-            LopqIndexStore.cellFilter(cells, idx.cellBuckets))
-          pruned.collect()
-          val cs = fileScans(pruned.queryExecution.executedPlan)
-          assert(cs.nonEmpty)
-          cs
-        }
+      // the approximate stage's own plan carries the codes scan, at every shape
+      val approx = LopqSearcher.approxStage(idx, q, ReleaseShape.Quota, 10)._1
+      approx.collect()
+      val scans = fileScans(approx.queryExecution.executedPlan)
+      val codesScan = scans.filter(_.output.exists(_.name == "fine"))
+      assert(codesScan.nonEmpty, scans.map(_.toString.take(100)).mkString("\n"))
       val filesRead = codesScan.map(_.metrics("numFiles").value).sum
       info(s"codes files read: $filesRead")
       assert(filesRead > 0 && filesRead <= s.cellBuckets / 2,

@@ -7,12 +7,28 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.engine.LopqSearcher
 import graft.functions.VectorFunctions
 
-/** The Lookup rerank as it stood before the join-free form
-  * ([[graft.engine.LopqSearcher.rerankExact]]): the collected prefix
-  * becomes a local DataFrame of the table's id type, broadcast-joined to
-  * the pushed id IN-list read of the table. The body is copied unchanged;
-  * the specs pin the production rerank against it bit for bit. */
+/** The two join forms of the exact rerank that stood before the join-free
+  * id lookup ([[graft.engine.LopqSearcher.rerankExact]]), each body copied
+  * unchanged; the specs pin the production rerank against them. */
 object RerankJoinReference {
+
+  /** The earlier Scan shape: the prefix broadcast against a streaming scan
+    * of the whole table. */
+  def rerankScan(approx: DataFrame, vectors: DataFrame, idCol: String, vecCol: String,
+      query: Array[Float], k: Int): DataFrame = {
+    val qLit = array(query.map(lit): _*)
+    def rerank(rows: DataFrame): DataFrame = rows
+      .withColumn("exact_dist", sqrt(VectorFunctions.l2DistanceSq(qLit, col("vec"))))
+      .orderBy(col("exact_dist"), col("id"))
+      .limit(k)
+      .select(col("id"), col("adc_dist"), col("exact_dist"))
+    val vecs = vectors.select(col(idCol).as("id"), col(vecCol).as("vec"))
+    rerank(vecs.join(broadcast(approx.select("id", "adc_dist")), "id"))
+  }
+
+  /** The earlier Lookup shape: the collected prefix becomes a local
+    * DataFrame of the table's id type, broadcast-joined to the pushed id
+    * IN-list read of the table. */
 
   def rerankLookup(approx: DataFrame, vectors: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], k: Int): DataFrame = {
