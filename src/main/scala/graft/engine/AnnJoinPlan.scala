@@ -114,11 +114,10 @@ object AnnJoinPlan {
   /** Candidate ids a lookup rerank pushes as one IN-list at most. */
   val MaxLookupIds: Long = LopqSearcher.MaxStackSafeInPushdown.toLong
 
-  /** The planner's inputs, all exact and driver-known. `nProbes` is a count
-    * job (which also asserts unique q_ids) that every plan pays: the rerank
-    * bound needs it. The distinct projection halves of the batch cost a
-    * second job, so that count is by-name and is evaluated only when the
-    * ship gate cannot be settled without it. */
+  /** The planner's inputs, all exact and driver-known. `nProbes` comes out
+    * of the same aggregation as the cell union. The distinct projection
+    * halves of the batch cost a second job, so that count is by-name and is
+    * evaluated only when the ship gate cannot be settled without it. */
   final class Inputs(
       val nPairs: Long, val unionCells: Int, val scanKeepFraction: Double, val fanOutRows: Long,
       val m: Int, val subClusters: Int, val halfDim: Int, val dim: Int, val rerankK: Int,
@@ -178,17 +177,9 @@ object AnnJoinPlan {
     val qsidePayloadBytes = satMul(in.nPairs, pairBytes + 24L)
     val qsideBroadcast = qsidePayloadBytes <= qsideBroadcastMaxBytes(budget)
 
-    // The exact stage's screen: every counted pair comes from a probe
-    // visiting ≥ 1 cell, so the candidate count is at most nPairs·rerankK.
-    // When even that bound trips neither trigger — many candidates, or few
-    // but wide enough that dragging their vectors through a q_id shuffle
-    // passes the floor (the 4096-d shape) — the q_id join stays.
     val maxCand = broadcastCandMaxRows(budget)
     val fatFloor = fatShuffleFloorBytes(budget)
     val pairVecRowBytes = 4L * in.dim + 24L
-    val candUpper = satMul(in.nPairs, in.rerankK.toLong)
-    val mayTrigger = in.qIdIntegral && in.dim > 0 &&
-      (candUpper > maxCand || satMul(candUpper, pairVecRowBytes) > fatFloor)
     val candBound = satMul(in.nProbes, in.rerankK.toLong)
 
     // Rerank read shape. A bounded batch pushes its candidate ids into the
@@ -206,9 +197,11 @@ object AnnJoinPlan {
     // up their D-dim vector — a second O(pairs·D) pass that dominates the
     // corpus self-dedup (600k × 256 × 512-d ≈ 300 GB). While the probe
     // matrix (O(probes·D), collected then broadcast, ~96 B/row of framing)
-    // fits the budget, broadcast it and compute the distance map-side.
+    // fits the budget and the candidates are many, or few but wide enough
+    // that dragging their vectors through a q_id shuffle passes the floor
+    // (the 4096-d shape), broadcast it and compute the distance map-side.
     val exactShape =
-      if (mayTrigger && {
+      if (in.qIdIntegral && in.dim > 0 && {
         val matrixBytes = satMul(in.nProbes, 4L * in.dim + 96L)
         matrixBytes <= qvecMaxBytes(budget) &&
           (candBound > maxCand ||

@@ -38,13 +38,13 @@ class AnnJoinPlanSpec extends AnyFunSuite {
   } yield AnnJoinGateReference.Inputs(nPairs, unionCells, keepFraction, fanOutRows, m, s,
     halfDim, dim, rerankK, qIdIntegral, lookupTable = true, distinctHalves, nProbes)
 
-  /** The planner's view of `in`, recording which counts it paid for. */
+  /** The planner's view of `in`, recording whether it paid for the
+    * distinct-halves count (the probe count it always has). */
   private final class Counted(in: AnnJoinGateReference.Inputs) {
     var halves = false
-    var probes = false
     val planInputs = new AnnJoinPlan.Inputs(in.nPairs, in.unionCells, in.keepFraction,
       in.fanOutRows, in.m, in.sClusters, in.halfDim, in.dim, in.rerankK, in.qIdIntegral,
-      { halves = true; in.distinctHalves }, { probes = true; in.nProbes })
+      { halves = true; in.distinctHalves }, in.nProbes)
   }
 
   private def plan(in: AnnJoinGateReference.Inputs, budget: Long): AnnJoinPlan =
@@ -57,7 +57,7 @@ class AnnJoinPlanSpec extends AnyFunSuite {
       val want = AnnJoinGateReference.decide(in)
       val got = AnnJoinGateReference.Decisions(p.shipMode.toString, p.cellsPushed, p.balanced,
         p.qsideBroadcast, p.rerankMode.toString, p.exactShape.toString, p.dictBytes,
-        p.qsidePayloadBytes, p.qvecMaxBytes, c.halves, c.probes)
+        p.qsidePayloadBytes, p.qvecMaxBytes, c.halves, countedProbes = true)
       Prop(got == want) :| s"planner $got\nreference $want"
     }
     val res = Test.check(params(400, 12L), prop)

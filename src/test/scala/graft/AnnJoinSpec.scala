@@ -137,11 +137,8 @@ class AnnJoinSpec extends SparkSpec {
     assert(jobsBig <= jobsSmall + 2,
       s"jobs grew with the query count: $jobsSmall → $jobsBig")
     // 11 as of r9: the fan-out-balancing round-robin repartition of the
-    // pruned codes adds one fixed AQE stage — still O(1) in the query count.
-    // 14 since the rerank reads every table by id: the probe count and the
-    // broadcast candidates are fixed jobs too (the same 14 the earlier code
-    // ran with its lookup threshold at 0)
-    assert(jobsBig <= 14, s"expected a handful of jobs, got $jobsBig")
+    // pruned codes adds one fixed AQE stage — still O(1) in the query count
+    assert(jobsBig <= 12, s"expected a handful of jobs, got $jobsBig")
   }
 
   test("the codes scan is pruned by the batch's visited-cell union") {
@@ -534,25 +531,24 @@ class AnnJoinSpec extends SparkSpec {
   }
 
   /** r12 (VERDICT r11 "What's wrong #1b" + #2): a repeated q_id must fail
-    * fast with the contract message in EVERY regime that can detect it —
-    * at the broadcast-matrix shape AND in the q_id-join regimes that pay a
-    * count job (where r11 still silently merged two probes' candidate
-    * pools into one ranking). Both failures happen at plan-BUILD time,
-    * before any action on the result. */
+    * fast with the contract message in EVERY regime — at the
+    * broadcast-matrix shape AND in the q_id-join regimes (where r11 still
+    * silently merged two probes' candidate pools into one ranking). Both
+    * fail in the cell-union aggregation, which counts the probes and their
+    * distinct q_ids at plan-BUILD time, before any frame is built. */
   test("duplicate q_id fails fast in the broadcast AND the counted q_id-join regimes") {
     val e = Tables(spark, sf, "embeddings")
     val dup = queriesOf(7).union(queriesOf(7).where(col("q_id") === 3))
     def buildJoin(force: AnnJoinPlan => AnnJoinPlan): Unit =
       LopqSearcher.annJoinPlanned(built, dup, "q_id", "embedding",
         e, "vec_id", "embedding", Quota, TopK, RerankK, DefaultBudget, force)
-    // the broadcast probe matrix
+    // forced onto the broadcast probe matrix
     val ex = intercept[IllegalArgumentException](
       buildJoin(_.copy(exactShape = Exact.BroadcastQvec)))
     assert(ex.getMessage.contains("unique q_id"), ex.getMessage)
     assert(ex.getMessage.contains("8 probe rows") &&
       ex.getMessage.contains("7 distinct ids"), ex.getMessage)
-    // lookup rerank regime: the count job is already paid, uniqueness is
-    // asserted in the same aggregation
+    // the default plan: lookup rerank, q_id-join exact stage
     val exLookup = intercept[IllegalArgumentException](buildJoin(identity))
     assert(exLookup.getMessage.contains("unique q_id"), exLookup.getMessage)
   }
@@ -695,13 +691,15 @@ class AnnJoinSpec extends SparkSpec {
     }
   }
 
-  /** The default-budget plan of the 7-probe shape runs exactly the jobs the
+  /** The default-budget plan of the 7-probe shape runs the jobs the
     * earlier per-gate code ran on its lookup plan (the distinct-halves job
-    * stays lazy); 17 was measured with the same listener on the code before
-    * the rerank scan shape was deleted, with its lookup threshold at 0. */
+    * stays lazy) less the probe count's own two: 17 was measured with the
+    * same listener on the code before the rerank scan shape was deleted,
+    * with its lookup threshold at 0, and the probe count now rides the
+    * cell-union aggregation. */
   test("the default-budget annJoin runs the same Spark jobs as the earlier gates") {
     joinResults(7) // warm: handle broadcasts and slice memo
     val jobs = jobsDuring(joinResults(7))
-    assert(jobs === 17, s"$jobs jobs")
+    assert(jobs === 15, s"$jobs jobs")
   }
 }
