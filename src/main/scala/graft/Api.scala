@@ -397,15 +397,17 @@ final class GraftApi(spark: SparkSession, sfDir: String,
     * KEEP: the batch minus everything the conservative-prefix rule drops
     * (a row whose content near-duplicates any indexed row, or any
     * smaller-id row of its own batch — [[graft.ops.VectorQueries
-    * .screenSurvivors]]). Pure — nothing is appended; hand the result to
+    * .screenDrops]]). Pure — nothing is appended; hand the result to
     * [[graft.ops.IngestOps.screenAndAppend]] (or run the whole cycle
     * through it / [[graft.streaming.ScreenedIngest]]) to mutate an index
     * you own. */
   def screenBatch(batch: DataFrame, idCol: String, vecCol: String,
       simThreshold: Double = graft.ops.VectorQueries.NearDupSimThreshold)
-      : DataFrame =
-    graft.ops.VectorQueries.screenSurvivors(batch, idCol,
-      semDedupIncrement(batch, idCol, vecCol, simThreshold))
+      : DataFrame = {
+    val ids = batch.select(col(idCol).cast("long")).collect().map(_.getLong(0)).toSet
+    graft.ops.VectorQueries.screenDrops(
+      semDedupIncrement(batch, idCol, vecCol, simThreshold), ids).survivors(batch, idCol)
+  }
 
   /** Cluster-BALANCED deterministic sample over the indexed corpus — a
     * per-cell quota drawn in md5-hash order with the persisted coarse

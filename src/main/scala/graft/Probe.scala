@@ -44,6 +44,17 @@ import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqSearcher, ReleaseShape, Re
   *     (`PROBE_EXPLAIN=1` dumps the executed plan). Each `force:` arg
   *     overrides one decision of the chosen plan ([[AnnJoinDecisions]], e.g.
   *     `force:shipMode=projection`); an unknown decision or value fails.
+  *   - `ingest [v1..v4] [dir:<indexDir>] [text:<textStoreDir>] [cycles]` —
+  *     Spark jobs and wall per phase of screened update cycles, each on a
+  *     fresh clone of the index (and of the text store, when given): the
+  *     screened 1000-vector append (`vec`), the screened 300-doc append
+  *     (`doc`), the reload (`load`) and two searches (`reads`); cycle 1 lists
+  *     every phase's job labels. The batch plants near-duplicates of rows
+  *     `[0, n)` of the index's `n` rows; the screen's feature store is the
+  *     index's staged `vectors/`, else the shape's. Against the benchmark
+  *     fixture: `GRAFT_INDEX_ROOT=.bench_build/perfbench/index … ingest v1
+  *     dir:.bench_build/perfbench/ingest_base/index
+  *     text:.bench_build/perfbench/ingest_base/text 3`.
   *   - `scanfloor <parquetDir> [passes]` — the bare decode floor of a table:
   *     a noop materialization of every column, with this JVM's CPU.
   *   - `fragments <sfDir>` — pre-checkpoint plans of the text fragments
@@ -275,6 +286,7 @@ object Probe {
     "query" -> ("probe", query _),
     "serve" -> ("serve-breakdown", serve _),
     "annjoin" -> ("probe-fused", annjoin _),
+    "ingest" -> ("probe-ingest", ingest _),
     "scanfloor" -> ("scan-floor", scanFloor _),
     "fragments" -> ("probe", fragments _))
 
@@ -420,6 +432,84 @@ object Probe {
     }
     if (sys.env.contains("PROBE_EXPLAIN"))
       println(lastDf.queryExecution.executedPlan.toString.take(20000))
+  }
+
+  /** Screened update cycles on clones of `dir:` (see the mode list). */
+  private def ingest(spark: SparkSession, allArgs: Seq[String]): Unit = {
+    import spark.implicits._
+    def opt(key: String) = allArgs.find(_.startsWith(key)).map(_.stripPrefix(key))
+    val args = allArgs.filterNot(a => a.startsWith("dir:") || a.startsWith("text:"))
+    val name = args.find(isShapeArg).getOrElse("v1")
+    val s = shape(Some(name), ReleaseShape.V1)
+    val cycles = args.filterNot(isShapeArg).headOption.fold(3)(_.toInt)
+    val src = opt("dir:").getOrElse(s.dir)
+    val textSrc = opt("text:")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
+    val vectors = ReleaseShape.vectors(spark,
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$src/vectors"))) src else s.dir)
+    val work = s"${System.getProperty("java.io.tmpdir")}/graft-probe-ingest"
+    val (dir, textDir) = (s"$work/index", s"$work/text")
+    def cloneTo(from: String, to: String): Unit = {
+      val dst = new org.apache.hadoop.fs.Path(to)
+      if (fs.exists(dst)) fs.delete(dst, true)
+      org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(from), fs, dst,
+        false, conf)
+      ()
+    }
+    val n = LopqIndexStore.readCodes(spark, src).count()
+    val stored = textSrc.map(t => graft.ops.TextSigStore.textStore(spark, t)
+      .select("text").limit(100).as[String].collect())
+    val phases = Seq("vec", "doc", "load", "reads")
+    try (1 to cycles).foreach { c =>
+      cloneTo(src, dir)
+      textSrc.foreach(cloneTo(_, textDir))
+      LopqIndexStore.evictModel(dir)
+      val r = new java.util.Random(31L * c)
+      // 2 in 10 rows near-duplicate an indexed row, the rest are fresh
+      val batch = (0 until 1000).map { j =>
+        val v =
+          if (j % 10 < 2) ReleaseShape.rowVecFor(s, math.floorMod(r.nextLong(), n))
+            .map(x => x + 0.05f * r.nextGaussian().toFloat)
+          else Array.fill(s.rawDim)(4f * r.nextGaussian().toFloat)
+        (10000000L + j, v.toSeq)
+      }.toDF("vec_id", "embedding")
+      // 3 in 10 docs repeat a stored text, the rest are fresh word lists
+      val docs = stored.map(texts => (0 until 300).map { j =>
+        val text =
+          if (j % 10 < 3 && texts.nonEmpty) texts(r.nextInt(texts.length))
+          else Seq.fill(40)(s"w${r.nextInt(5000)}").mkString(" ")
+        (1000000L + j, text)
+      }.toDF("doc_id", "text"))
+      val uid = f"upd-probe-$c%06d"
+      val ms = new Array[Double](phases.size)
+      val jobs = new Array[Int](phases.size)
+      def lap[A](phase: Int)(body: => A): A = {
+        val t0 = System.nanoTime()
+        val (out, t) = tally(spark, "probe-ingest", quiet = true)(body)
+        ms(phase) = (System.nanoTime() - t0) / 1e6
+        jobs(phase) = t.jobs.size
+        if (c == 1) t.jobs.groupBy(identity).toSeq.sortBy(-_._2.size).foreach { case (l, ls) =>
+          println(f"[probe-ingest]   ${phases(phase)} ${ls.size}%2d x $l")
+        }
+        out
+      }
+      val vrep = lap(0)(graft.ops.IngestOps.screenAndAppend(spark, dir, vectors, batch,
+        "vec_id", "embedding", uid))
+      val trep = docs.map(d => lap(1)(graft.ops.TextScreen.screenAndAppend(spark, textDir,
+        graft.ops.TextSigStore.textStore(spark, textDir), d, uid, storeTexts = true)))
+      val h = lap(2)(LopqIndexStore.loadSlim(spark, dir).get)
+      lap(3) {
+        val idx = graft.engine.AnnIndexes.lopqSlim(h, vectors, "vec_id", "embedding",
+          ReleaseShape.Quota, ReleaseShape.RerankK)
+        (0 until 2).foreach(q => idx.search(ReleaseShape.rowVecFor(s, q * 997L),
+          ReleaseShape.TopK).collect())
+      }
+      println(s"[probe-ingest] $name cycle=$c " +
+        phases.indices.filter(p => p != 1 || docs.nonEmpty)
+          .map(p => f"${phases(p)}=${ms(p)}%.0fms/${jobs(p)}j").mkString(" ") +
+        s" vec=$vrep" + trep.fold("")(t => s" doc=$t"))
+    } finally { fs.delete(new org.apache.hadoop.fs.Path(work), true); () }
   }
 
   /** Is a table's scan already at its parquet decode floor? Used to test

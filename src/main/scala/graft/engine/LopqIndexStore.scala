@@ -5,8 +5,11 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, ShortType, StructField,
+  StructType}
+import org.apache.spark.storage.StorageLevel
 
-import graft.core.{CellHistogram, CellMath, UpdateLog}
+import graft.core.{CellHistogram, UpdateLog}
 
 /** One parquet row per model vector; `part` selects the component.
   * Top-level (not nested/private) so Spark's encoder codegen can reach the
@@ -155,7 +158,7 @@ object LopqIndexStore {
     * out-of-process ones (the API `refresh` flow: index dir superseded on
     * disk, then refreshIndex — without the evict, appends would keep
     * encoding with the stale model, landing codes in wrong cells). */
-  private final case class CachedModel(slim: SlimLopqModel, pca: Option[LopqPca],
+  private[graft] final case class CachedModel(slim: SlimLopqModel, pca: Option[LopqPca],
       slimB: Broadcast[SlimLopqModel], pcaB: Broadcast[Option[LopqPca]]) {
     def destroy(): Unit = { slimB.destroy(); pcaB.destroy() }
   }
@@ -163,7 +166,7 @@ object LopqIndexStore {
   private val slimModelCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), CachedModel]
 
-  private def cachedModel(spark: SparkSession, dir: String): CachedModel = {
+  private[graft] def cachedModel(spark: SparkSession, dir: String): CachedModel = {
     sweepStoppedSessions()
     // under the lock: a racing second load would broadcast a pair nothing
     // ever destroys
@@ -466,7 +469,7 @@ object LopqIndexStore {
     * log (a crash during compaction is caught by [[healedCounts]]'s sum
     * check). The reference's in-memory histogram is likewise updated per
     * insert, never rebuilt (`lopq/lopq/search.py:310-323`). */
-  private def appendCountsDelta(spark: SparkSession, dir: String,
+  private[graft] def appendCountsDelta(spark: SparkSession, dir: String,
       batch: Seq[(Int, Long)]): Unit = {
     import spark.implicits._
     if (batch.isEmpty) return
@@ -497,16 +500,29 @@ object LopqIndexStore {
     * that the compaction path stays fully distributed. */
   private[graft] val histogramRowsCollected = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** The `cell_counts` files' schema: every writer above emits it, so a
+    * read needs no footer-inference job. */
+  private val CountsSchema = StructType(Seq(
+    StructField("cell_id", IntegerType), StructField("cnt", LongType)))
+
+  /** The summed histogram, sorted on the driver: the collect is
+    * O(populated cells) either way, and a Spark `orderBy` would add a
+    * range-sampling job. */
   private def readCounts(spark: SparkSession, dir: String): CellHistogram = {
-    val rows = spark.read.parquet(s"$dir/cell_counts")
+    val rows = spark.read.schema(CountsSchema).parquet(s"$dir/cell_counts")
       .groupBy("cell_id").agg(sum("cnt").as("cnt"))
-      .orderBy("cell_id")
       .collect()
     histogramRowsCollected.addAndGet(rows.length.toLong)
+    // cell ids are non-negative ints: (cell << 32 | row) sorts primitive
+    val order = Array.tabulate(rows.length)(i => (rows(i).getInt(0).toLong << 32) | i)
+    java.util.Arrays.sort(order)
     val ids = new Array[Int](rows.length)
     val cnts = new Array[Long](rows.length)
     var i = 0
-    while (i < rows.length) { ids(i) = rows(i).getInt(0); cnts(i) = rows(i).getLong(1); i += 1 }
+    while (i < rows.length) {
+      val r = rows((order(i) & 0xffffffffL).toInt)
+      ids(i) = r.getInt(0); cnts(i) = r.getLong(1); i += 1
+    }
     CellHistogram.fromSorted(ids, cnts)
   }
 
@@ -596,6 +612,13 @@ object LopqIndexStore {
     spark.conf.get(CompactDeltaAtConf, DefaultCompactDeltaAt.toString).toInt
 
   private def deltaPath(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/codes_delta")
+
+  /** The `codes_delta` files' schema ([[LopqSearcher.encodeWith]]'s rows),
+    * so [[readCodes]] runs no footer-inference job on them. */
+  private val DeltaSchema = StructType(Seq(
+    StructField("id", LongType), StructField("coarse0", IntegerType),
+    StructField("coarse1", IntegerType), StructField("fine", ArrayType(ShortType)),
+    StructField("cell_id", IntegerType)))
   private def compactingPath(dir: String) =
     new org.apache.hadoop.fs.Path(s"$dir/codes_delta_compacting")
 
@@ -621,7 +644,7 @@ object LopqIndexStore {
     // base's layout column is derived on read so the union lines up and
     // cellFilter's bucket predicate applies to both branches
     def delta = {
-      val df = spark.read.parquet(deltaPath(dir).toString)
+      val df = spark.read.schema(DeltaSchema).parquet(deltaPath(dir).toString)
       if (buckets > 0) df.withColumn("cell_bucket", col("cell_id") % buckets) else df
     }
     (baseExists, deltaExists) match {
@@ -664,7 +687,7 @@ object LopqIndexStore {
 
   /** One delta file per append; past the threshold, atomically stage the
     * whole delta dir and promote it into the base layout. */
-  private def appendCodesDelta(spark: SparkSession, dir: String,
+  private[graft] def appendCodesDelta(spark: SparkSession, dir: String,
       batch: DataFrame): Unit = {
     val fs = deltaPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     batch.repartition(1)
@@ -804,22 +827,23 @@ object LopqIndexStore {
     * `updateId` is a no-op (idempotent at-least-once ingest, ref the
     * skip-already-indexed check at `searcher_lopqhbase.py:600-617`).
     *
-    * The whole job is O(batch), never O(index): the batch is encoded FIRST,
-    * its predicted cells bound the duplicate-id anti-join to a
-    * partition-pruned read of just those cell directories (ids are content
-    * hashes and the persisted model is fixed, so a replayed id re-encodes
-    * to the SAME cell — checking the batch's own cells is exhaustive; ref
-    * per-cell dedup on insert `lopq/lopq/search.py:340-364`,
-    * skip-already-indexed per update `searcher_lopqhbase.py:600-617`), and
-    * the cell histogram is merged incrementally instead of re-aggregated.
-    * The encode is [[LopqSearcher.encodeWith]], the build's encoder, at
-    * every model width, with only the batch's touched clusters' rotation
-    * slices — ≤ 2·|batch|, fetched through the bounded LRU (hot ingest
-    * clusters stay cached across micro-batches): the tensor never reaches
-    * the driver or a broadcast (a giant backfill touching every cluster
+    * The whole job is O(batch), never O(index): the batch is assigned
+    * FIRST ([[assign]]), its predicted cells bound the duplicate-id
+    * anti-join to a partition-pruned read of just those cell directories
+    * (ids are content hashes and the persisted model is fixed, so a
+    * replayed id re-encodes to the SAME cell — checking the batch's own
+    * cells is exhaustive; ref per-cell dedup on insert
+    * `lopq/lopq/search.py:340-364`, skip-already-indexed per update
+    * `searcher_lopqhbase.py:600-617`), and the cell histogram is merged
+    * incrementally instead of re-aggregated. The encode is
+    * [[LopqSearcher.encodeWith]], the build's encoder, at every model
+    * width, with only the batch's touched clusters' rotation slices —
+    * ≤ 2·|batch|, fetched through the bounded LRU (hot ingest clusters
+    * stay cached across micro-batches): the tensor never reaches the
+    * driver or a broadcast (a giant backfill touching every cluster
     * degrades to streaming it once, which the build's encode broadcasts
     * anyway), and the slim model (and its broadcast) is the session-cached
-    * one [[assignCells]] already loaded for the screen.
+    * one the screen's [[assign]] already loaded.
     *
     * CONTRACT: update ids must be lexicographically monotone (the
     * reference's ids are timestamp-prefixed, `searcher_lopqhbase.py:
@@ -831,80 +855,96 @@ object LopqIndexStore {
       idCol: String, vecCol: String, updateId: String): Boolean = {
     import spark.implicits._
     if (UpdateLog.covers(watermark(spark, dir), updateId)) return false
-    val m = cachedModel(spark, dir)
-    val unique = batch0.dropDuplicates(idCol)
-    val input =
-      if (m.pca.isEmpty) unique
-      else {
-        val pcaB = m.pcaB
-        val applyU = udf((v: Seq[Float]) => pcaB.value.get(v.toArray).toSeq)
-        unique.withColumn(vecCol, applyU(col(vecCol)))
-      }
-    val rows = input.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the batch's touched cells (O(batch) distinct values, driver-bounded)
-    // name both the rotation slices the encode needs and the cell
-    // directories the dedup scan reads
-    val slimB = m.slimB
-    val cellU = udf { (vec: Seq[Float]) =>
-      val (c0, c1) = slimB.value.predictCoarse(vec.toArray)
-      CellMath.cellId(c0, c1, slimB.value.v)
-    }
-    val touched = rows.select(cellU(col("vec"))).distinct().as[Int].collect().toSeq.sorted
-    val rotB = spark.sparkContext.broadcast(
-      RotationSource.Fetched(spark, dir).slices(RotationSource.keysOf(touched, m.slim.v)))
-    val encoded = LopqSearcher.encodeWith(rows, slimB, rotB)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = assign(spark, dir, batch0.dropDuplicates(idCol), idCol, vecCol, probes = 1)
+      .select("id", "pvec", "cell_id")
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val deduped =
-        if (hasCodes(spark, dir))
-          encoded.join(indexedIdsInCells(spark, dir, touched), Seq("id"), "left_anti")
-        else encoded
-      val batchCounts = deduped.groupBy("cell_id").agg(count(lit(1)).as("cnt"))
-        .as[(Int, Long)].collect().toSeq
-      val n = batchCounts.map(_._2).sum
-      // Commit order: codes → counts → tip → manifest. Every crash window
-      // is recoverable (r5 committed the manifest BEFORE the counts, so a
-      // crash in between marked the update applied with a permanently stale
-      // histogram): a crash before the tip leaves the update unapplied, so
-      // the replay's anti-join suppresses the rows and the histogram is
-      // repaired by the sum check in [[loadSlim]]; a crash after the tip only
-      // loses the manifest AUDIT row — codes, counts, and the replay
-      // watermark are already consistent.
-      appendCodesDelta(spark, dir, deduped)
-      appendCountsDelta(spark, dir, batchCounts)
-      UpdateLog.advance(spark, dir, Some(updateId))
-      Seq((updateId, n)).toDF("update_id", "n_rows")
-        .write.mode(SaveMode.Append).parquet(s"$dir/manifest")
-      true
-    } finally {
-      encoded.unpersist()
-      rows.unpersist()
-      rotB.destroy()
-    }
+      // the batch's touched cells (O(batch) distinct values, driver-bounded)
+      val touched = rows.select(col("cell_id").cast("int")).distinct().as[Int].collect()
+      appendAssigned(spark, dir, rows, touched.toSeq.sorted, updateId)
+    } finally { rows.unpersist(); () }
   }
 
-  /** Coarse-only CELL assignment of a batch with this dir's persisted
-    * model — the ingest screen's candidate generator (the same quantizer
-    * decision as a full encode, with no fine codes and no rotation
-    * slices): the broadcast is O(V·D/2) floats at any model width, and a
-    * PCA-fronted index projects first, matching the append path.
-    * [[SlimLopqModel.predictCoarse]] is the encoder's own coarse stage, so
-    * a screened batch lands in exactly the cells [[appendUpdate]] will
-    * store it under (spec-pinned). */
-  def assignCells(spark: SparkSession, dir: String, df: DataFrame,
-      idCol: String, vecCol: String): DataFrame = {
+  /** [[appendUpdate]] over rows already projected and assigned by
+    * [[assign]]: `(id, pvec, cell_id)`, unique by id, and `touched` their
+    * distinct cells (which name both the rotation slices the encode needs
+    * and the cell directories the dedup scan reads). The screened ingest
+    * calls it with the survivors of the frame its screen assigned, so the
+    * batch is projected and assigned once per cycle. */
+  private[graft] def appendAssigned(spark: SparkSession, dir: String, rows: DataFrame,
+      touched: Seq[Int], updateId: String): Boolean = {
+    import spark.implicits._
+    if (UpdateLog.covers(watermark(spark, dir), updateId)) return false
+    val m = cachedModel(spark, dir)
+    val rotB = spark.sparkContext.broadcast(
+      RotationSource.Fetched(spark, dir).slices(RotationSource.keysOf(touched, m.slim.v)))
+    try {
+      val encoded = LopqSearcher.encodeWith(rows.select(col("id"), col("pvec").as("vec")),
+        m.slimB, rotB)
+      // persisted past the anti-join: the histogram collect and the delta
+      // write read the same deduped rows
+      val deduped = (if (hasCodes(spark, dir))
+          encoded.join(indexedIdsInCells(spark, dir, touched), Seq("id"), "left_anti")
+        else encoded).persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val batchCounts = deduped.groupBy("cell_id").agg(count(lit(1)).as("cnt"))
+          .as[(Int, Long)].collect().toSeq
+        val n = batchCounts.map(_._2).sum
+        // Commit order: codes → counts → tip → manifest. Every crash window
+        // is recoverable (r5 committed the manifest BEFORE the counts, so a
+        // crash in between marked the update applied with a permanently stale
+        // histogram): a crash before the tip leaves the update unapplied, so
+        // the replay's anti-join suppresses the rows and the histogram is
+        // repaired by the sum check in [[loadSlim]]; a crash after the tip only
+        // loses the manifest AUDIT row — codes, counts, and the replay
+        // watermark are already consistent.
+        appendCodesDelta(spark, dir, deduped)
+        appendCountsDelta(spark, dir, batchCounts)
+        UpdateLog.advance(spark, dir, Some(updateId))
+        Seq((updateId, n)).toDF("update_id", "n_rows")
+          .write.mode(SaveMode.Append).parquet(s"$dir/manifest")
+        true
+      } finally { deduped.unpersist(); () }
+    } finally rotB.destroy()
+  }
+
+  /** A batch projected and assigned ONCE with this dir's persisted model:
+    * `(id, vec, pvec, cell_id)` — `vec` as given, `pvec` through the PCA
+    * front when the index has one (the encoder's input; `vec` itself
+    * otherwise), `cell_id` the coarse cell an append stores the row under
+    * ([[SlimLopqModel.predictCoarse]], the encoder's own coarse stage).
+    * With `probes` ≥ 2 it also carries `cells`, the row's top-`probes`
+    * cells ([[SlimLopqModel.predictCoarseTopP]]; rank 0 is `cell_id`,
+    * spec-pinned). The broadcast is O(V·D/2) floats at any model width, and
+    * nothing here needs rotation slices. Lazy: the screened ingest persists
+    * it and reads it for the screen's cells, its vectors and the append. */
+  private[graft] def assign(spark: SparkSession, dir: String, df: DataFrame,
+      idCol: String, vecCol: String, probes: Int): DataFrame = {
     val cm = cachedModel(spark, dir)
     val (slimB, pcaB) = (cm.slimB, cm.pcaB)
     val u = udf { (v: Seq[Float]) =>
       val x0 = v.toArray
       val x = pcaB.value.map(_(x0)).getOrElse(x0)
       val m = slimB.value
-      val (c0, c1) = m.predictCoarse(x)
-      c0.toLong * m.v + c1
+      val cells =
+        if (probes > 1) m.predictCoarseTopP(x, probes).map { case (c0, c1) => c0.toLong * m.v + c1 }
+        else { val (c0, c1) = m.predictCoarse(x); Seq(c0.toLong * m.v + c1) }
+      (x.toSeq, cells)
     }
-    df.select(col(idCol).as("id"), u(col(vecCol)).as("cell_id"))
+    val p = df.select(col(idCol).as("id"), col(vecCol).as("vec"), u(col(vecCol)).as("p"))
+    val cols = Seq(col("id"), col("vec"), col("p._1").as("pvec"), col("p._2")(0).as("cell_id"))
+    p.select((if (probes > 1) cols :+ col("p._2").as("cells") else cols): _*)
   }
+
+  /** Coarse-only CELL assignment of a batch with this dir's persisted
+    * model — `(id, cell_id)` of [[assign]], the ingest screen's candidate
+    * generator (the same quantizer decision as a full encode, with no fine
+    * codes and no rotation slices). A PCA-fronted index projects first,
+    * matching the append path, so a screened batch lands in exactly the
+    * cells [[appendUpdate]] will store it under (spec-pinned). */
+  def assignCells(spark: SparkSession, dir: String, df: DataFrame,
+      idCol: String, vecCol: String): DataFrame =
+    assign(spark, dir, df, idCol, vecCol, probes = 1).select("id", "cell_id")
 
   /** Conf: how many coarse cells a MULTI-probe assignment emits per
     * vector (the `P` of [[SlimLopqModel.predictCoarseTopP]]), default 2.
@@ -942,14 +982,7 @@ object LopqIndexStore {
       idCol: String, vecCol: String, probes: Int): DataFrame = {
     require(probes >= 2,
       s"multi-probe width must be >= 2 (use assignCells for 1), got $probes")
-    val cm = cachedModel(spark, dir)
-    val (slimB, pcaB) = (cm.slimB, cm.pcaB)
-    val u = udf { (v: Seq[Float]) =>
-      val x0 = v.toArray
-      val x = pcaB.value.map(_(x0)).getOrElse(x0)
-      val m = slimB.value
-      m.predictCoarseTopP(x, probes).map { case (c0, c1) => c0.toLong * m.v + c1 }
-    }
-    df.select(col(idCol).as("id"), explode(u(col(vecCol))).as("cell_id"))
+    assign(spark, dir, df, idCol, vecCol, probes)
+      .select(col("id"), explode(col("cells")).as("cell_id"))
   }
 }

@@ -53,7 +53,7 @@ object LopqSearcher {
     * rows, coarse codes then fine codes from the cell's two rotation slices
     * (ref `model.py:predict`). `rotB` must hold the slices of every cell the
     * rows land in. */
-  private[engine] def encodeWith(rows: DataFrame,
+  private[graft] def encodeWith(rows: DataFrame,
       slimB: org.apache.spark.broadcast.Broadcast[SlimLopqModel],
       rotB: org.apache.spark.broadcast.Broadcast[Map[(Int, Int), Array[Array[Float]]]])
       : DataFrame = {

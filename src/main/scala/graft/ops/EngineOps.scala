@@ -471,7 +471,7 @@ object EngineOps {
       // half, screen the even-id batch (q97's pair semantics against the
       // seeded corpus only), drop flagged rows by the conservative-prefix
       // rule (drop a batch row whose content near-dups any corpus row or
-      // any smaller-id batch row — VectorQueries.screenSurvivors), append
+      // any smaller-id batch row — VectorQueries.screenDrops), append
       // the survivors. Final codes = odd codes ∪ surviving even codes;
       // encode is deterministic and per-row, so every code comes from the
       // one-shot dump.
@@ -1069,7 +1069,7 @@ object EngineOps {
     // searcher_lopqhbase.py:600-617): seed a fresh index with the odd-id
     // half, SCREEN the even-id batch against it (q97's incremental pass),
     // drop flagged rows by the conservative-prefix rule
-    // (VectorQueries.screenSurvivors), append the survivors, replay the
+    // (VectorQueries.screenDrops), append the survivors, replay the
     // update (must no-op). The final codes table is the oracle's subject —
     // it must hold every odd id plus exactly the surviving evens, with the
     // codes the one-shot encode produced (encode is deterministic).

@@ -24,7 +24,7 @@ import graft.functions.TextFunctions
   *     exact-jaccard verification (the same shape as the embedding
   *     screen's map-side-filtered vector pass);
   *   - batch rows drop by the same conservative-prefix rule as the
-  *     embedding screen ([[VectorQueries.screenSurvivors]] — the rule is
+  *     embedding screen ([[VectorQueries.screenDrops]] — the rule is
   *     content-generic), survivors' signatures append to the store under
   *     a lexicographic watermark, and a replayed update id is inert.
   *
@@ -487,7 +487,7 @@ object TextScreen {
   /** One screened text-ingest cycle against a [[TextSigStore]] at `dir`:
     * replay check (O(1) tip read), screen ([[screenPairs]] against the
     * persisted signatures), conservative-prefix drop
-    * ([[VectorQueries.screenSurvivors]] — a batch doc whose text near-dups
+    * ([[VectorQueries.screenDrops]] — a batch doc whose text near-dups
     * any indexed doc or any smaller-id batch doc is dropped, whether or
     * not that smaller doc itself survives), then the SURVIVORS' signature
     * rows append under the update id. Commit order delta → tip: every
@@ -531,28 +531,26 @@ object TextScreen {
     // the drop rule needs pair EXISTENCE only: tier-verified pairs join
     // the jaccard-verified ones (they were anti-joined out of the
     // verification, never out of the verdict)
-    val pairs = (sims match {
+    val pairs = sims match {
       case Some((tierPairs, _)) => minhashPairs.select("id_a", "id_b")
         .unionAll(tierPairs).distinct()
       case None => minhashPairs.select("id_a", "id_b")
-    }).localCheckpoint()
-    // checkpoint the text column only when the STORE owns the content
-    // side — the caller-owned-content path uses nothing but survivor ids,
-    // and pinning fat text rows in the block manager for it is pure waste
-    // (ADVICE r15)
-    val survCols =
-      if (storeTexts) Seq(col("doc_id"), col("text")) else Seq(col("doc_id"))
-    val survivors = VectorQueries.screenSurvivors(batch, "doc_id", pairs)
-      .select(survCols: _*).localCheckpoint()
+    }
+    // batch-bounded, like the screen's band-row broadcasts
+    val batchIds = batch.select(col("doc_id").cast("long")).collect().map(_.getLong(0))
+    val drops = VectorQueries.screenDrops(pairs, batchIds.toSet)
     val survIds =
       if (storeTexts) {
-        TextSigStore.writeTexts(spark, dir, survivors, updateId)
+        TextSigStore.writeTexts(spark, dir, drops.survivors(batch, "doc_id"), updateId)
         if (spark.conf.get(CrashAfterWriteTextsConf, "false").toBoolean)
           throw new IllegalStateException(
             "injected crash: after writeTexts, before appendSigs")
         spark.read.parquet(TextSigStore.textsUpdateDir(dir, updateId))
           .select("doc_id")
-      } else survivors.select("doc_id")
+      } else {
+        import spark.implicits._
+        batchIds.filterNot(drops.dropped).toSeq.toDF("doc_id")
+      }
     // survivors' sigs: slice the already-computed batch signatures (a
     // broadcast-sized semi-join), never a recompute. The tier's side
     // appends the same way (survivors ⊆ representatives — every exact
@@ -565,13 +563,11 @@ object TextScreen {
     }
     val survSigs = batchSigs.join(survIds, "doc_id")
     val applied = TextSigStore.appendSigs(spark, dir, survSigs, updateId)
-    // the report MUST materialize before compaction: survIds is a lazy
-    // plan over this update's just-written text delta, and a fold at the
-    // compactAt threshold deletes that directory — counting it afterwards
-    // dies with FILE_NOT_EXIST (found by the r15 multi-batch probe at the
-    // forced fold; the default compactAt never folds at gate scale)
-    val report =
-      TextIngestReport(applied, batch.count(), pairs.count(), survIds.count())
+    // the report is settled before compaction: a fold at the compactAt
+    // threshold deletes this update's text delta, which nothing may read
+    // afterwards
+    val report = TextIngestReport(applied, batchIds.length.toLong, drops.flaggedPairs,
+      batchIds.count(id => !drops.dropped(id)).toLong)
     if (applied) TextSigStore.maybeCompact(spark, dir)
     report
   }

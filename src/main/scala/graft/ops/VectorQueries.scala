@@ -268,8 +268,16 @@ object VectorQueries {
         col("cell_id"), round(sim, 6).as("cos_sim"))
   }
 
-  /** Survivor set of an ingest screen — the CONSERVATIVE-PREFIX keep rule
-    * applied to [[semDedupPairsIncremental]]'s flagged pairs (ref
+  /** What the drop rule settled for one screened batch: how many flagged
+    * pairs it saw and which batch ids it drops. */
+  final case class ScreenDrops(flaggedPairs: Long, dropped: Set[Long]) {
+    /** `batch` minus the dropped ids. */
+    def survivors(batch: DataFrame, idCol: String): DataFrame =
+      if (dropped.isEmpty) batch else batch.where(!col(idCol).isInCollection(dropped))
+  }
+
+  /** The CONSERVATIVE-PREFIX drop rule of an ingest screen, applied to
+    * [[semDedupPairsIncremental]]'s flagged pairs (ref
     * `updater/extraction_checker.py:225-258`, which marks content as
     * processed whether or not it is stored): a batch row is DROPPED when
     * its content near-duplicates anything observed before it — any indexed
@@ -281,24 +289,18 @@ object VectorQueries {
     * collapse for OFFLINE dedup, where the canonical member must exist in
     * the output), and non-recursive SQL for the oracle.
     *
-    * Scale shape: `pairs` and the batch id set are O(batch)-bounded, so
-    * every join here broadcasts; the batch passes through one anti-join.
-    * Pairs must be id-normalized (`id_a < id_b`), as
-    * [[semDedupPairsIncremental]] emits them. */
-  def screenSurvivors(batch: DataFrame, idCol: String,
-      pairs: DataFrame): DataFrame = {
-    val bids = batch.select(col(idCol).as("_bid"))
-    // batch row with ANY smaller-id partner (corpus or batch): drop
-    val dSmaller = pairs.join(broadcast(bids), col("id_b") === col("_bid"))
-      .select(col("id_b").as(idCol))
-    // batch row whose LARGER partner is corpus (already indexed): drop too
-    val dCorpusLarger = pairs
-      .join(broadcast(bids), col("id_a") === col("_bid"))
-      .join(broadcast(bids.withColumnRenamed("_bid", "_bid2")),
-        col("id_b") === col("_bid2"), "left_anti")
-      .select(col("id_a").as(idCol))
-    batch.join(broadcast(dSmaller.union(dCorpusLarger).distinct()),
-      Seq(idCol), "left_anti")
+    * Each pair names at most one dropped id: its larger id when that is a
+    * batch row, else its smaller id when that is a batch row (its larger
+    * partner is then corpus). One aggregation over the pairs returns their
+    * count and the dropped set, at most one id per batch row. Pairs must be
+    * id-normalized (`id_a < id_b`), as [[semDedupPairsIncremental]] emits
+    * them; `batchIds` is the batch's id set, batch-bounded like the
+    * screen's own broadcasts. */
+  def screenDrops(pairs: DataFrame, batchIds: Set[Long]): ScreenDrops = {
+    val drop = when(col("id_b").isInCollection(batchIds), col("id_b"))
+      .when(col("id_a").isInCollection(batchIds), col("id_a"))
+    val r = pairs.agg(count(lit(1)), collect_set(drop)).head()
+    ScreenDrops(r.getLong(0), r.getSeq[Long](1).toSet)
   }
 
   /** Conf: when true, ingest screens probe each batch row's TOP-2 coarse

@@ -12,7 +12,8 @@ import graft.ops.{IngestOps, VectorQueries}
   * what's indexed → store only the new content: `kafka_ingester.py`
   * feeding `extraction_checker.py:225-258`, whose survivors the updater
   * stores). Each micro-batch is screened against the index's CURRENT
-  * state by [[IngestOps.screenPairs]], the batch cycle's own screen —
+  * state by [[IngestOps.screened]], the batch cycle's own screen step and
+  * drop rule —
   * codes for candidate cells, the [[IngestOps.vectorStore]] side-store
   * for the cosines — so a near-duplicate arriving hours after its
   * original, in a different micro-batch, is still dropped.
@@ -58,14 +59,10 @@ object ScreenedIngest {
         val uid = f"${updatePrefix}_$batchId%019d"
         if (!UpdateLog.covers(LopqIndexStore.watermark(spark, indexDir), uid)) {
           import org.apache.spark.sql.functions.col
-          val b = df.select(col(idCol), col(vecCol))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val pairs = IngestOps.screenPairs(spark, indexDir,
+          IngestOps.screened(spark, indexDir,
               IngestOps.vectorStore(spark, indexDir, idCol, vecCol),
-              b, idCol, vecCol, simThreshold)
-            val survivors = VectorQueries.screenSurvivors(b, idCol, pairs)
-            IngestOps.writeVectors(spark, indexDir, survivors, idCol, vecCol, uid)
+              df, idCol, vecCol, simThreshold) { s =>
+            IngestOps.writeVectors(spark, indexDir, s.survivors, "id", "vec", uid)
             if (spark.conf.get(CrashAfterWriteVectorsConf, "false").toBoolean)
               throw new IllegalStateException(
                 "injected crash: after writeVectors, before appendUpdate")
@@ -76,11 +73,11 @@ object ScreenedIngest {
               .select(col("id").as(idCol), col("vec").as(vecCol))
             LopqIndexStore.appendUpdate(spark, indexDir, stored,
               idCol, vecCol, uid)
-            // fold the per-update vector dirs once enough pile up (the
-            // side-store's LSM promote) — AFTER the batch commits, so a
-            // crash mid-compaction never loses an uncommitted update
-            IngestOps.maybeCompactVectors(spark, indexDir)
-          } finally { b.unpersist(); () }
+          }
+          // fold the per-update vector dirs once enough pile up (the
+          // side-store's LSM promote) — AFTER the batch commits, so a
+          // crash mid-compaction never loses an uncommitted update
+          IngestOps.maybeCompactVectors(spark, indexDir)
         }
         ()
       }

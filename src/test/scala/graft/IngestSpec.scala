@@ -254,7 +254,7 @@ class IngestSpec extends SparkSpec {
     * compared against a literal Scala restatement of the rule. Invariants
     * additionally asserted: no survivor pairs the corpus, and no two
     * survivors pair each other (the batch that ships is pairwise clean). */
-  test("screenSurvivors matches the brute-force rule on 100 random pair graphs") {
+  test("screenDrops matches the brute-force rule on 100 random pair graphs") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260815L)
     (1 to 100).foreach { trial =>
@@ -272,10 +272,11 @@ class IngestSpec extends SparkSpec {
           (x == b && !batchIds.contains(y))              // larger corpus partner
         }
       }
-      val batchDf = batchIds.toSeq.toDF("id")
       val pairsDf = pairs.toDF("id_a", "id_b")
-      val got = graft.ops.VectorQueries.screenSurvivors(batchDf, "id", pairsDf)
-        .collect().map(_.getLong(0)).toSet
+      val drops = graft.ops.VectorQueries.screenDrops(pairsDf, batchIds)
+      assert(drops.flaggedPairs === pairs.size.toLong, s"trial $trial")
+      assert(drops.dropped.subsetOf(batchIds), s"trial $trial: drops a non-batch id")
+      val got = batchIds -- drops.dropped
       assert(got === expected, s"trial $trial: ids=$nIds batch=$batchIds pairs=$pairs")
       // shipped batch is pairwise clean and corpus-clean
       got.foreach { s =>
@@ -799,11 +800,37 @@ class IngestSpec extends SparkSpec {
       "every planted copy pairs its own source at cos=1 and must be dropped")
   }
 
+  test("one screened vector append runs in a fraction of the earlier form's Spark jobs") {
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val seed = e.where(col("vec_id") % 3 === 0)
+    val batch = e.where(col("vec_id") % 3 === 1).unionByName(seed.where(col("vec_id") < 30)
+      .select((col("vec_id") + 70000000L).as("vec_id"), col("embedding"))).localCheckpoint()
+    def jobs(d: String)(cycle: => IngestOps.IngestReport): (IngestOps.IngestReport, Int) = {
+      del(d)
+      LopqIndexStore.cloneEmpty(spark, EngineOps.indexDir(sf), d)
+      assert(LopqIndexStore.appendUpdate(spark, d, seed, "vec_id", "embedding", "u000"))
+      val (r, t) = Probe.tally(spark, "append-jobs", quiet = true)(cycle)
+      del(d)
+      (r, t.jobs.size)
+    }
+    val (ref, refJobs) = jobs(s"$root/jobs_ref")(ScreenAppendReference.screenAndAppend(spark,
+      s"$root/jobs_ref", e, batch, "vec_id", "embedding", "u001"))
+    val (one, oneJobs) = jobs(s"$root/jobs_one")(IngestOps.screenAndAppend(spark,
+      s"$root/jobs_one", e, batch, "vec_id", "embedding", "u001"))
+    assert(one === ref)
+    info(s"vector append: $oneJobs jobs, the earlier form $refJobs")
+    // measured at sf0.001 on 4 cores: 18 jobs, the earlier form 37 (the
+    // V1 perfbench cycle: PROBES.md, `Probe ingest`)
+    assert(oneJobs <= 20 && oneJobs < refJobs, s"one pass ran $oneJobs jobs, the earlier form $refJobs")
+  }
+
   /** Each append and each screen reads the slim model and the PCA front
     * through the dir's ONE cached broadcast pair, and each append
     * broadcasts the batch's rotation slices per call; a streaming session
     * cycles once per micro-batch, so any per-call broadcast left for the
-    * ContextCleaner accretes until a driver GC. Spark's own broadcasts
+    * ContextCleaner accretes until a driver GC. Three back-to-back cycles
+    * each run an append, a screen and a whole screened append. Spark's own broadcasts
     * (plan relations, Hadoop conf, the scheduler's serialized task
     * binaries) are out of scope: the ContextCleaner owns those. */
   test("back-to-back appendUpdates leave none of their broadcasts resident") {
@@ -822,12 +849,18 @@ class IngestSpec extends SparkSpec {
       }
     def cycle(i: Int): Unit = {
       assert(LopqIndexStore.appendUpdate(spark, dir,
-        e.where(col("vec_id") % 3 === i), "vec_id", "embedding", f"u$i%03d"))
+        e.where(col("vec_id") % 3 === i), "vec_id", "embedding", f"u${2 * i}%03d"))
       IngestOps.screenPairs(spark, dir,
         IngestOps.vectorStore(spark, dir, "vec_id", "embedding"),
         e.where(col("vec_id") % 7 === i).select((col("vec_id") + 50000000L)
           .as("vec_id"), col("embedding")),
         "vec_id", "embedding", graft.ops.VectorQueries.NearDupSimThreshold).count()
+      // a whole screened cycle: its assigned frame, the append's deduped
+      // rows and its rotation slices must all go with the call
+      assert(IngestOps.screenAndAppend(spark, dir, e,
+        e.where(col("vec_id") % 11 === i).select((col("vec_id") + 60000000L)
+          .as("vec_id"), col("embedding")),
+        "vec_id", "embedding", f"u${2 * i + 1}%03d").applied)
     }
     graft.functions.GraftFunctions.register(spark) // graft_dot in the pair gate
     try {

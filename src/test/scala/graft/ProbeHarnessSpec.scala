@@ -59,11 +59,11 @@ class ProbeHarnessSpec extends SparkSpec {
     intercept[IllegalArgumentException](Probe.run(spark, Array("nosuchmode")))
   }
 
-  test("serve mode runs v1 against an index dir and reports each phase's jobs and rerank files") {
+  /** A small index over V1's corpus rows (raw 256-d, so the modes' V1
+    * queries and batches fit), in the staged feature-store layout. */
+  private lazy val v1Dir: String = {
     import graft.engine.{LopqIndexStore, LopqParams, LopqPca, LopqSearcher, LopqTrainer}
     import org.apache.spark.sql.functions._
-    // a small index over V1's corpus rows (raw 256-d, so the mode's V1
-    // queries fit), in the staged feature-store layout
     val dir = System.getProperty("user.dir") + "/target/graft-index-test/probe_serve"
     val n = 3000L
     val e = ReleaseShape.corpus(spark, n).cache()
@@ -79,7 +79,11 @@ class ProbeHarnessSpec extends SparkSpec {
     vecDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(vecDir, true)
     ReleaseShape.stageVectors(spark, dir, n)
     projected.unpersist(); e.unpersist()
+    dir
+  }
 
+  test("serve mode runs v1 against an index dir and reports each phase's jobs and rerank files") {
+    val dir = v1Dir
     val out = captured(Probe.run(spark, Array("serve", "v1", "2", s"dir:$dir")))
     val passes = out.linesIterator.filter(_.matches("""\[serve-breakdown\] v1 pass=\d.*""")).toSeq
     assert(passes.size === 2, out)
@@ -98,6 +102,29 @@ class ProbeHarnessSpec extends SparkSpec {
     assert(passes(1).contains("slices=") && passes(1).matches(""".* slices=\d+ms/0j .*"""), passes(1))
     assert(out.linesIterator.exists(_.matches(""".*searchSlim pass=1 .* jobs/q=2\.0 .*""")), out)
     assert(out.contains("rerank job: save at Probe.scala"), out)
+  }
+
+  test("ingest mode runs screened cycles on a clone and reports each phase's jobs") {
+    import spark.implicits._
+    val dir = v1Dir
+    val tdir = System.getProperty("user.dir") + "/target/graft-index-test/probe_text"
+    val r = new java.util.Random(5L)
+    graft.ops.TextSigStore.build(spark, tdir, (0 until 200).map(i =>
+      (i.toLong, Seq.fill(40)(s"w${r.nextInt(5000)}").mkString(" "))).toDF("doc_id", "text"),
+      storeTexts = true)
+    val before = graft.engine.LopqIndexStore.readCodes(spark, dir).count()
+    val out = captured(Probe.run(spark, Array("ingest", "v1", s"dir:$dir", s"text:$tdir", "1")))
+    val line = out.linesIterator.find(_.startsWith("[probe-ingest] v1 cycle=1 ")).getOrElse(fail(out))
+    val jobs = """(\S+)=\d+ms/(\d+)j""".r.findAllMatchIn(line)
+      .map(m => m.group(1) -> m.group(2).toInt).toMap
+    assert(jobs.keySet === Set("vec", "doc", "load", "reads"), line)
+    assert(jobs("vec") > 0 && jobs("vec") <= 25, line)
+    assert(line.contains("vec=IngestReport(true,1000,") &&
+      line.contains("doc=TextIngestReport(true,300,"), line)
+    // cycle 1 names every phase's jobs
+    assert(out.linesIterator.exists(_.matches("""\[probe-ingest\]   vec +\d+ x .*\.scala:\d+""")), out)
+    assert(graft.engine.LopqIndexStore.readCodes(spark, dir).count() === before,
+      "the cycles run on a clone")
   }
 
   test("census returns its body's value and leaves no listener behind") {

@@ -84,7 +84,7 @@ class TextScreenSpec extends SparkSpec {
     // always drops against it)
     def survivorsFrom(ps: Set[(Long, Long)]): Set[Long] = {
       val df = ps.toSeq.toDF("id_a", "id_b")
-      graft.ops.VectorQueries.screenSurvivors(batch, "doc_id", df)
+      graft.ops.VectorQueries.screenDrops(df, batchIds).survivors(batch, "doc_id")
         .select("doc_id").as[Long].collect().toSet
     }
     assert(survivorsFrom(got) === survivorsFrom(full))
