@@ -116,8 +116,8 @@ def main(root):
     no_main = [k for k in options if not sets_main[k]]
     unset = [k for k in no_main if not sets_test[k]]
     print()
-    print("keys: %d = %d options + %d run-note channels"
-          % (len(keys), len(options), len(notes)))
+    print("keys: %d = %d options + %d run-note channel%s"
+          % (len(keys), len(options), len(notes), "" if len(notes) == 1 else "s"))
     print("options: %d  set by no non-test file: %d  set by nothing: %d"
           % (len(options), len(no_main), len(unset)))
     for k in sorted(unset):

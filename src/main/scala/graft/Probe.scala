@@ -17,8 +17,7 @@ import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqSearcher, ReleaseShape, Re
 
 /** The dev probe harness, and the small probes as its modes.
   *
-  * Harness, shared by every probe main ([[ProbeRelease]], [[ProbeTextDedup]],
-  * [[BuildRelease]], [[MaintainRelease]]): [[session]] is the one probe
+  * Harness, shared with [[BuildRelease]]: [[session]] is the one probe
   * session, [[confArgs]] applies `conf:key=value` args, [[timed]] times a
   * block with its machine read-bytes, [[shape]] resolves a release-shape
   * name, and [[census]] prints the Spark jobs and stages a block runs
@@ -38,12 +37,13 @@ import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqSearcher, ReleaseShape, Re
   *     read), then the real `searchSlim` on the same queries as a
   *     reference row. Defaults to `v1`, the shape the benchmark fixture
   *     holds (`GRAFT_INDEX_ROOT=.bench_build/perfbench/index`).
-  *   - `annjoin [v1..v4] [n] [passes] [force:<decision>=<value> …]` —
+  *   - `annjoin [v1..v4] [n] [passes] [dir:<indexDir>] [force:<decision>=<value> …]` —
   *     per-job and per-stage census of the real batch `annJoin` over `n`
   *     probes, its TOTAL per pass and the plan of pass 1
   *     (`PROBE_EXPLAIN=1` dumps the executed plan). Each `force:` arg
   *     overrides one decision of the chosen plan ([[AnnJoinDecisions]], e.g.
   *     `force:shipMode=projection`); an unknown decision or value fails.
+  *     `dir:` joins against the index there instead of the shape's.
   *   - `ingest [v1..v4] [dir:<indexDir>] [text:<textStoreDir>] [cycles]` —
   *     Spark jobs and wall per phase of screened update cycles, each on a
   *     fresh clone of the index (and of the text store, when given): the
@@ -55,6 +55,14 @@ import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqSearcher, ReleaseShape, Re
   *     fixture: `GRAFT_INDEX_ROOT=.bench_build/perfbench/index … ingest v1
   *     dir:.bench_build/perfbench/ingest_base/index
   *     text:.bench_build/perfbench/ingest_base/text 3`.
+  *   - `maintain [v1..v4] [dir:<indexDir>] [nBatches] [batchRows]` — index
+  *     maintenance at the release cadence: `nBatches` micro-batches of
+  *     `batchRows` rows (default 50 × 2048, the reference's release update
+  *     size, `hbase_indexer_minimal.py:36`) streamed through the real
+  *     streaming maintenance path into a clone of the index, with each
+  *     batch's wall, the clone's codes count and the slice-LRU hit rate, so
+  *     steady-state flatness is measurable at hundreds of batches. Defaults
+  *     to `v2`.
   *   - `scanfloor <parquetDir> [passes]` — the bare decode floor of a table:
   *     a noop materialization of every column, with this JVM's CPU.
   *   - `fragments <sfDir>` — pre-checkpoint plans of the text fragments
@@ -72,6 +80,8 @@ import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqSearcher, ReleaseShape, Re
   *   ProbeCellFilterCost v3 1000              →  Probe annjoin v3 1000 3 force:cellsPushed=true|false
   *   Probe cellfilter v3 1000                 →  Probe annjoin v3 1000 3 force:cellsPushed=true|false
   *   ProbeFragments <sf>                      →  Probe fragments <sf>
+  *   MaintainRelease v2 200                   →  Probe maintain v2 200
+  *   ProbeRelease <mode>, ProbeTextDedup …    →  gone; outputs and last commit in PROBES.md
   * }}}
   */
 object Probe {
@@ -109,9 +119,9 @@ object Probe {
       a.stripPrefix("conf:").split("=", 2) match {
         case Array(k, _) if k.matches("""spark\.graft\.annjoin\..*""") =>
           throw new IllegalArgumentException(s"$a: the spark.graft.annjoin.* keys " +
-            "are gone; the annJoin gates derive from spark.driver.maxResultSize, set " +
-            "at session build (as `ProbeRelease dedup` does; `ProbeRelease <mode> " +
-            "maxResultSize:<size>`), and `Probe annjoin` takes " +
+            "are gone; every annJoin gate derives from B = spark.driver.maxResultSize / 2, " +
+            "a context conf read at session build (pass it as the JVM system property " +
+            "-Dspark.driver.maxResultSize=<size>), and `Probe annjoin` takes " +
             "force:<decision>=<value> args")
         case Array(k, v) if k.nonEmpty => (k, v)
         case _ => throw new IllegalArgumentException(
@@ -287,6 +297,7 @@ object Probe {
     "serve" -> ("serve-breakdown", serve _),
     "annjoin" -> ("probe-fused", annjoin _),
     "ingest" -> ("probe-ingest", ingest _),
+    "maintain" -> ("maintain", maintain _),
     "scanfloor" -> ("scan-floor", scanFloor _),
     "fragments" -> ("probe", fragments _))
 
@@ -408,12 +419,15 @@ object Probe {
   }
 
   private def annjoin(spark: SparkSession, allArgs: Seq[String]): Unit = {
-    val (forces, args) = allArgs.partition(_.startsWith("force:"))
+    val (forces, rest) = allArgs.partition(_.startsWith("force:"))
+    val (dirArgs, args) = rest.partition(_.startsWith("dir:"))
     val force = annJoinForce(forces.map(_.stripPrefix("force:")))
     val s = shape(args.headOption, ReleaseShape.V2)
     val n = args.lift(1).fold(1000)(_.toInt)
     val passes = args.lift(2).fold(3)(_.toInt)
-    val idx = LopqIndexStore.loadSlim(spark, s.dir).get
+    val dir = dirArgs.headOption.fold(s.dir)(_.stripPrefix("dir:"))
+    val idx = LopqIndexStore.loadSlim(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no index under $dir"))
     var lastDf: DataFrame = null
     (1 to passes).foreach { pass =>
       println(s"--- fused pass $pass (n=$n) ---")
@@ -450,20 +464,13 @@ object Probe {
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$src/vectors"))) src else s.dir)
     val work = s"${System.getProperty("java.io.tmpdir")}/graft-probe-ingest"
     val (dir, textDir) = (s"$work/index", s"$work/text")
-    def cloneTo(from: String, to: String): Unit = {
-      val dst = new org.apache.hadoop.fs.Path(to)
-      if (fs.exists(dst)) fs.delete(dst, true)
-      org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(from), fs, dst,
-        false, conf)
-      ()
-    }
     val n = LopqIndexStore.readCodes(spark, src).count()
     val stored = textSrc.map(t => graft.ops.TextSigStore.textStore(spark, t)
       .select("text").limit(100).as[String].collect())
     val phases = Seq("vec", "doc", "load", "reads")
     try (1 to cycles).foreach { c =>
-      cloneTo(src, dir)
-      textSrc.foreach(cloneTo(_, textDir))
+      cloneDir(spark, src, dir)
+      textSrc.foreach(cloneDir(spark, _, textDir))
       LopqIndexStore.evictModel(dir)
       val r = new java.util.Random(31L * c)
       // 2 in 10 rows near-duplicate an indexed row, the rest are fresh
@@ -510,6 +517,89 @@ object Probe {
           .map(p => f"${phases(p)}=${ms(p)}%.0fms/${jobs(p)}j").mkString(" ") +
         s" vec=$vrep" + trep.fold("")(t => s" doc=$t"))
     } finally { fs.delete(new org.apache.hadoop.fs.Path(work), true); () }
+  }
+
+  /** Replaces the directory `to` with a copy of `from`, leaving out the
+    * children named in `skip`. */
+  private def cloneDir(spark: SparkSession, from: String, to: String,
+      skip: Set[String] = Set.empty): Unit = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (src, dst) = (new Path(from), new Path(to))
+    val fs = src.getFileSystem(conf)
+    fs.delete(dst, true)
+    fs.mkdirs(dst)
+    fs.listStatus(src).map(_.getPath).filterNot(p => skip(p.getName))
+      .foreach(p => FileUtil.copy(fs, p, fs, new Path(dst, p.getName), false, conf))
+  }
+
+  /** Maintenance at the release cadence (see the mode list) on a clone of
+    * `dir:` at `<dir>_maintain/index`. The clone leaves out the staged
+    * `vectors/`, which appends never read; the micro-batches are staged
+    * under `<dir>_maintain/incoming`, one parquet file each, and drained
+    * one per trigger. */
+  private def maintain(spark: SparkSession, allArgs: Seq[String]): Unit = {
+    import spark.implicits._
+    val (dirArgs, args) = allArgs.partition(_.startsWith("dir:"))
+    val name = args.find(isShapeArg).getOrElse("v2")
+    val s = shape(Some(name), ReleaseShape.V2)
+    val sizes = args.filterNot(isShapeArg)
+    val nBatches = sizes.headOption.fold(50)(_.toInt)
+    val batchRows = sizes.lift(1).fold(2048)(_.toInt)
+    val src = dirArgs.headOption.fold {
+      require(LopqIndexStore.fingerprintOk(s.dir, s.p, s.n, s.pcaDims),
+        s"prebuilt $name index required (runMain graft.BuildRelease $name)")
+      s.dir
+    }(_.stripPrefix("dir:"))
+    val work = src + "_maintain"
+    val dir = s"$work/index"
+    val incoming = s"$work/incoming"
+    val wp = new org.apache.hadoop.fs.Path(work)
+    wp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wp, true)
+    cloneDir(spark, src, dir, skip = Set("vectors"))
+    LopqIndexStore.evictModel(dir)
+    val n0 = LopqIndexStore.readCodes(spark, dir).count()
+
+    // one parquet file per micro-batch, ids disjoint from the corpus
+    (0 until nBatches).foreach { b =>
+      val base = 10000000L + b.toLong * batchRows
+      spark.range(base, base + batchRows, 1, 1)
+        .map(id => (id, ReleaseShape.rowVecFor(s, id).toSeq))
+        .toDF("vec_id", "embedding")
+        .write.mode("append").parquet(incoming)
+    }
+    // recentProgress keeps this many entries (Spark's default is 100); at
+    // hundreds of batches the half-by-half comparison below would silently
+    // cover just the tail. A session conf, read when the stream starts.
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", (nBatches + 16).toString)
+
+    val req0 = LopqIndexStore.sliceKeysRequested.get()
+    val miss0 = LopqIndexStore.sliceKeysMissed.get()
+    val t0 = System.nanoTime()
+    val source = spark.readStream
+      .schema(spark.read.parquet(incoming).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(incoming)
+    val q = graft.streaming.IndexMaintenance.maintain(spark, dir, source,
+      "vec_id", "embedding", s"$work/ckpt")
+    q.awaitTermination()
+    val wall = (System.nanoTime() - t0) / 1e9
+
+    val perBatch = q.recentProgress.toSeq
+      .filter(_.numInputRows > 0)
+      .map(p => p.batchId ->
+        Option(p.durationMs.get("triggerExecution")).map(_.toLong).getOrElse(0L))
+    perBatch.foreach { case (b, ms) => println(f"[maintain] batch $b%4d  $ms%6d ms") }
+    val n = LopqIndexStore.readCodes(spark, dir).count()
+    val req = LopqIndexStore.sliceKeysRequested.get() - req0
+    val miss = LopqIndexStore.sliceKeysMissed.get() - miss0
+    val hitRate = if (req == 0) 0.0 else 1.0 - miss.toDouble / req
+    val half = perBatch.length / 2
+    def med(xs: Seq[Long]): Long = if (xs.isEmpty) 0L else xs.sorted.apply(xs.size / 2)
+    println(f"[maintain] $name: ${perBatch.length} batches x $batchRows rows " +
+      f"in $wall%.1f s into $dir; codes=$n0->$n; slice-LRU hit rate ${hitRate * 100}%.1f%% " +
+      f"(req=$req miss=$miss); median batch first-half ${med(perBatch.take(half).map(_._2))} ms " +
+      f"second-half ${med(perBatch.drop(half).map(_._2))} ms")
   }
 
   /** Is a table's scan already at its parquet decode floor? Used to test

@@ -96,17 +96,4 @@ object DiskStats {
       scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split("\\s+")(0).toDouble
     }.getOrElse(-1.0)
-
-  /** Recursive byte size of this session's Spark scratch dirs (blockmgr +
-    * spark-* under java.io.tmpdir) — the "scratch stays flat" witness the
-    * magnitude probes print per stage. */
-  def scratchBytes(): Long = {
-    def size(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles).map(_.iterator.map(size).sum).getOrElse(0L)
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir", "/tmp"))
-    Option(tmp.listFiles).map(_.iterator
-      .filter(f => f.getName.startsWith("blockmgr-") || f.getName.startsWith("spark-"))
-      .map(size).sum).getOrElse(0L)
-  }
 }

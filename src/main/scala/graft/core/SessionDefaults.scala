@@ -24,27 +24,21 @@ import org.apache.spark.sql.SparkSession
   * An explicitly configured value always wins: the default is lifted only
   * when the session still carries Spark's own 128 MB default, so a
   * deployment that tunes the key (builder `.config`, `--conf`, or a prior
-  * `spark.conf.set`) is never overridden. A caller that explicitly wants
-  * exactly the 128 MB Spark default is indistinguishable from an
-  * untouched session — set [[EnabledKey]] to `false` to make the engine
-  * leave the session's scan confs entirely alone.
+  * `spark.conf.set`) is never overridden. A caller that explicitly sets
+  * exactly the 128 MB Spark default is indistinguishable from an untouched
+  * session, so it gets the engine's 512 MB; to split finer, set any other
+  * value.
   */
 object SessionDefaults {
   val MaxPartitionBytesKey = "spark.sql.files.maxPartitionBytes"
-
-  /** `spark.graft.sessionDefaults=false` disables all engine session
-    * tuning — the explicit opt-out for a deployment whose cluster
-    * template intentionally pins the Spark defaults. */
-  val EnabledKey = "spark.graft.sessionDefaults"
 
   /** Guide §9's large-sequential-scan split size. */
   val EngineMaxPartitionBytes: Long = 512L << 20
 
   private val SparkDefaultMaxPartitionBytes: Long = 128L << 20
 
-  /** Idempotent; cheap (two conf reads) — safe on every table/store open. */
+  /** Idempotent; cheap (one conf read) — safe on every table/store open. */
   def apply(spark: SparkSession): Unit =
-    if (spark.conf.get(EnabledKey, "true").toBoolean &&
-        spark.sessionState.conf.filesMaxPartitionBytes == SparkDefaultMaxPartitionBytes)
+    if (spark.sessionState.conf.filesMaxPartitionBytes == SparkDefaultMaxPartitionBytes)
       spark.conf.set(MaxPartitionBytesKey, EngineMaxPartitionBytes.toString)
 }

@@ -594,7 +594,7 @@ object LopqIndexStore {
     *
     * Why: a `partitionBy` append fans a 2048-row release update into one
     * file PER TOUCHED BUCKET (~1000 tiny files at V=1024) — measured via
-    * `graft.MaintainRelease`, 200 release-cadence batches shed 200k+ files
+    * `graft.Probe maintain`, 200 release-cadence batches shed 200k+ files
     * and append latency grew with the file count (every dedup scan re-lists
     * the table). With the delta log an append is O(1) files, and the
     * promote every [[CompactDeltaAtConf]] appends adds at most one file per

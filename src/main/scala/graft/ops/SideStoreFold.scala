@@ -80,26 +80,6 @@ private[graft] object SideStoreFold {
   val RunMergeRatioConf = "spark.graft.store.runMergeRatio"
   val DefaultRunMergeRatio = 0.75
 
-  /** Post-fold note (the screen's `last.bandJoin` discipline): every fold
-    * op appends one line — `<side> <op> <secs>s <detail>` — so probes and
-    * specs read what the valve actually did (which level, what it cost)
-    * instead of re-deriving it from directory listings. [[foldIfDue]]
-    * resets it per firing. */
-  val FoldNoteConf = "spark.graft.store.last.folds"
-  def resetFoldNote(spark: SparkSession): Unit =
-    spark.conf.set(FoldNoteConf, "")
-  private def note(spark: SparkSession, root: String, line: String): Unit = {
-    val prev = spark.conf.get(FoldNoteConf, "")
-    val side = new Path(root).getName
-    spark.conf.set(FoldNoteConf,
-      (if (prev.isEmpty) "" else prev + "; ") + s"$side $line")
-  }
-  private def timed[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   private def basePath(root: String) = new Path(s"$root/_base")
   private def baseNextPath(root: String) = new Path(s"$root/_base_next")
   private def legacyTierPath(root: String) = new Path(s"$root/_tier")
@@ -299,12 +279,8 @@ private[graft] object SideStoreFold {
     if (deltas.isEmpty) return
     val seq = nextSeq(fs, root)
     val dst = runPath(root, seq)
-    val (_, sec) = timed {
-      foldInto(spark, deltas.map(_.toString), dst, key)
-    }
+    foldInto(spark, deltas.map(_.toString), dst, key)
     deltas.foreach(p => fs.delete(p, true))
-    note(spark, root, f"minor $sec%.1fs ${dst.getName} " +
-      f"${bytesOf(fs, dst) / 1e6}%.1fMB")
     mergeDue(spark, fs, root, key)
   }
 
@@ -340,7 +316,6 @@ private[graft] object SideStoreFold {
     // the major's dedup(base ∪ runs) subsumes all merge work — skip the
     // cascade in the firing where the major is already due (ADVICE r17)
     if (majorDue(spark, fs, root, runs.map(_._2).toSeq)) {
-      if (runs.size >= 2) note(spark, root, "cascade skipped (major due)")
       // Contract tripwire (ADVICE r18 #3): a valve that calls minorFold
       // without the contractual majorFoldIfDue follow-up accumulates one
       // unmerged run per firing forever (on a base-less store majorDue is
@@ -360,10 +335,7 @@ private[graft] object SideStoreFold {
       val (prev, prevBytes) = runs(runs.size - 2)
       if (newestBytes >= ratio * prevBytes) {
         val dst = mergePath(root, prev.lo, newest.hi)
-        val (_, sec) = timed {
-          foldInto(spark,
-            Seq(prev.path.toString, newest.path.toString), dst, key)
-        }
+        foldInto(spark, Seq(prev.path.toString, newest.path.toString), dst, key)
         promoteMerge(fs, root,
           RunArt(dst, prev.lo, newest.hi, isMerge = true, isComplete = true))
         val merged = RunArt(runPath(root, prev.lo), prev.lo, newest.hi,
@@ -371,8 +343,6 @@ private[graft] object SideStoreFold {
         val mergedBytes = bytesOf(fs, merged.path)
         runs.remove(runs.size - 2, 2)
         runs += ((merged, mergedBytes))
-        note(spark, root, f"merge $sec%.1fs r${prev.lo}%05d..r${newest.hi}%05d " +
-          f"${mergedBytes / 1e6}%.1fMB")
       } else more = false
     }
   }
@@ -394,14 +364,10 @@ private[graft] object SideStoreFold {
     if (runBytes < ratio * baseBytes) return
     val srcs = runs.map(_.path.toString) ++
       (if (fs.exists(base)) Seq(base.toString) else Seq.empty)
-    val (_, sec) = timed {
-      foldInto(spark, srcs, baseNextPath(root), key)
-    }
+    foldInto(spark, srcs, baseNextPath(root), key)
     runs.foreach(a => fs.delete(a.path, true))
     dropRunsRootIfEmpty(fs, root)
     healBase(fs, root) // promotes the complete _base_next
-    note(spark, root, f"major $sec%.1fs runs=${runs.size} " +
-      f"${bytesOf(fs, basePath(root)) / 1e6}%.1fMB base")
   }
 
   /** The in-loop LSM valve every side store runs after a batch commits:
@@ -413,12 +379,10 @@ private[graft] object SideStoreFold {
     * whole history every `compactAt` batches (the r15 8-batch probe's
     * 88-92 s fold spikes were exactly that base rewrite), and no minor
     * fold approaches the base rewrite it replaced. `sides` is only listed
-    * when the valve fires; what the firing did is readable at
-    * [[FoldNoteConf]]. */
+    * when the valve fires. */
   def foldIfDue(spark: SparkSession, pending: Int,
       sides: => Seq[(String, Seq[Path])], key: String): Unit =
     if (pending >= spark.conf.get(CompactAtConf, DefaultCompactAt.toString).toInt) {
-      resetFoldNote(spark)
       sides.foreach { case (root, deltas) =>
         val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
         minorFold(spark, fs, root, deltas, key)

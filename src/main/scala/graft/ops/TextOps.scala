@@ -259,9 +259,8 @@ object TextOps {
     lshPairsOf(docs(s, d))
 
   /** Frame-parametric [[lshPairs]] — the same verified pipeline over any
-    * `(doc_id, text)` frame, so the release-magnitude probe
-    * ([[graft.ProbeTextDedup]]) and the collapsed edge generator
-    * ([[dedupEdgesOf]]) drive the exact operator the gates pin.
+    * `(doc_id, text)` frame, so the collapsed edge generator
+    * ([[dedupEdgesOf]]) drives the exact operator the gates pin.
     *
     * The verification join PRUNES the fat shingle table to candidate ids
     * first (r14, found by the magnitude probe): `sh` rows are ~4 KB
@@ -369,7 +368,7 @@ object TextOps {
   }
 
   /** Verified near-dup EDGES for the COMPONENT consumers (q63's
-    * clustering, q72's corpus materialization, [[graft.ProbeTextDedup]]):
+    * clustering, q72's corpus materialization):
     * byte-identical documents collapse to one representative BEFORE the
     * LSH, then representative-level verified pairs union with the exact
     * groups' star edges.

@@ -347,6 +347,23 @@ object TextScreen {
       batch: DataFrame): DataFrame =
     screenImpl(corpus, corpusSigs, batch)._1
 
+  /** Post-run regime note: which physical shape the MinHash tier's
+    * byte-gated band join took — `broadcast` (batch bands map-side against
+    * the streaming corpus table) or `shuffle` (the cluster regime past the
+    * cap). Written per screen so specs read the decision the run actually
+    * made instead of re-deriving the arithmetic. */
+  val LastBandJoinNote = "spark.graft.screen.last.bandJoin"
+
+  /** The batch band rows as a band join's build side: broadcast when their
+    * driver-known count fits the CC broadcast row cap. `note`, when given,
+    * records the decision under that conf key. */
+  private def gated(spark: org.apache.spark.sql.SparkSession,
+      bands: DataFrame, note: Option[String] = None): DataFrame = {
+    val fits = bands.count() <= TextOps.ccBroadcastRowCap(spark)
+    note.foreach(spark.conf.set(_, if (fits) "broadcast" else "shuffle"))
+    if (fits) broadcast(bands) else bands
+  }
+
   /** The simhash TIER's verified pairs (r16): batch simhashes banded
     * against the store's `simsigs/` side and against themselves, the
     * one-long hamming verify running INSIDE the bucket join (the
@@ -357,21 +374,6 @@ object TextScreen {
     * the MinHash candidate set before its (text-touching) jaccard
     * verification. Same broadcast byte gate and same shape as the
     * MinHash band join. */
-  /** Post-run regime notes: which physical shape the byte-gated band joins took —
-    * `broadcast` (batch bands map-side against the streaming corpus
-    * table) or `shuffle` (the cluster regime past the cap). Written per
-    * screen so probes and specs read the decision the run actually
-    * made instead of re-deriving the arithmetic. */
-  val LastBandJoinNote = "spark.graft.screen.last.bandJoin"
-  val LastSimBandJoinNote = "spark.graft.screen.last.simBandJoin"
-
-  private def gated(spark: org.apache.spark.sql.SparkSession,
-      bands: DataFrame, note: String): DataFrame = {
-    val fits = bands.count() <= TextOps.ccBroadcastRowCap(spark)
-    spark.conf.set(note, if (fits) "broadcast" else "shuffle")
-    if (fits) broadcast(bands) else bands
-  }
-
   private def simTierPairs(corpusSims: DataFrame, batchSims: DataFrame,
       bits: Int): DataFrame = {
     val spark = batchSims.sparkSession
@@ -385,7 +387,7 @@ object TextScreen {
     val batchBands = TextOps.simhashBandRowsOf(batchSims, bits)
       .localCheckpoint(false)
     val corpusBands = TextOps.simhashBandRowsOf(corpusSims, bits)
-    val bSide = gated(spark, batchBands, LastSimBandJoinNote)
+    val bSide = gated(spark, batchBands)
     val hamNO = graft.functions.TextFunctions
       .hammingDistance(col("c.sh"), col("b.sh"))
     val newOld = corpusBands.as("c")
@@ -429,7 +431,7 @@ object TextScreen {
     // bounded-batch contract: band rows are |batch|·bands skinny rows
     // with a driver-known count, so the broadcast decision is exact
     // (same byte gate as the CC node map — ~(long, long-ish-string) rows)
-    val bSide = gated(spark, batchBands, LastBandJoinNote)
+    val bSide = gated(spark, batchBands, Some(LastBandJoinNote))
     val newOld = corpusBands.as("c")
       .join(bSide.as("b"),
         col("c.band") === col("b.band") && col("c.bsig") === col("b.bsig"))

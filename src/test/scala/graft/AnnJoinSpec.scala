@@ -444,9 +444,9 @@ class AnnJoinSpec extends SparkSpec {
     * the SAME answer as the one-shot join — per-query results are
     * independent of batch composition, so the concatenation of chunk
     * results is bit-identical. The production shape this exists for (a
-    * probe set whose one-shot matrix can never broadcast) is exercised at
-    * magnitude by `ProbeRelease dedup ... chunk`; this row pins the
-    * equivalence. */
+    * probe set whose one-shot matrix can never broadcast) was exercised at
+    * magnitude by the release dedup probe (PROBES.md r12); this row pins
+    * the equivalence. */
   test("chunked driver ≡ the one-shot join, bit-identical across chunk boundaries") {
     val base = joinResults(7)
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double, Double)]

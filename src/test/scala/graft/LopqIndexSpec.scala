@@ -235,7 +235,7 @@ class LopqIndexSpec extends SparkSpec {
   test("appends are O(1) files; past the threshold the delta promotes into the base") {
     // the 2048-row release update previously fanned into one file PER
     // TOUCHED PARTITION (~1000 at V=1024) and append latency grew with the
-    // table's file count (measured via graft.MaintainRelease) — the delta
+    // table's file count (measured via graft.Probe maintain) — the delta
     // log writes ONE file per append and promotes in bulk
     val h = built
     val ldir = incrDir + "_lsm"

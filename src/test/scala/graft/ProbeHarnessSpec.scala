@@ -4,7 +4,7 @@ import org.apache.spark.sql.graft.GraftBridge
 
 import graft.engine.ReleaseShape
 
-/** The probe harness's parsers, one mode end to end, and the census
+/** The probe harness's parsers, every mode end to end, and the census
   * listener's lifecycle, on the shared test session. */
 class ProbeHarnessSpec extends SparkSpec {
 
@@ -34,6 +34,9 @@ class ProbeHarnessSpec extends SparkSpec {
       Seq(s"conf:$key=1", "conf:spark.graft.annjoin.shipTablesMaxBytes=0")))
     assert(ex.getMessage.contains("spark.driver.maxResultSize"), ex.getMessage)
     assert(ex.getMessage.contains("force:"), ex.getMessage)
+    // it points only at live commands
+    Seq("ProbeRelease", "ProbeTextDedup", "MaintainRelease").foreach(main =>
+      assert(!ex.getMessage.contains(main), ex.getMessage))
     assert(spark.conf.getOption(key).isEmpty, "a rejected arg sets no conf at all")
     val force = intercept[IllegalArgumentException](
       Probe.run(spark, Array("annjoin", "v1", "1", "1", "force:shipMode=px")))
@@ -125,6 +128,43 @@ class ProbeHarnessSpec extends SparkSpec {
     assert(out.linesIterator.exists(_.matches("""\[probe-ingest\]   vec +\d+ x .*\.scala:\d+""")), out)
     assert(graft.engine.LopqIndexStore.readCodes(spark, dir).count() === before,
       "the cycles run on a clone")
+  }
+
+  test("annjoin mode runs v1 against an index dir and prints its total and plan") {
+    val out = captured(Probe.run(spark, Array("annjoin", "v1", "20", "1", s"dir:$v1Dir")))
+    assert(out.linesIterator.exists(_.matches("""\[probe-fused\] TOTAL +[\d.]+ s .*""")), out)
+    assert(out.linesIterator.exists(_.matches("""\[probe-fused\]   regime shipMode +=.*""")), out)
+    assert(out.linesIterator.exists(_.matches("""\[probe-fused\]   job +\d+ .*""")), out)
+  }
+
+  test("maintain mode streams micro-batches into a clone of the index") {
+    val dir = v1Dir
+    def codes(d: String) = graft.engine.LopqIndexStore.readCodes(spark, d).count()
+    val n = codes(dir)
+    val work = new org.apache.hadoop.fs.Path(dir + "_maintain")
+    try {
+      val out = captured(Probe.run(spark, Array("maintain", "v1", s"dir:$dir", "3", "64")))
+      assert(out.linesIterator.count(_.matches("""\[maintain\] batch +\d+ +\d+ ms""")) === 3, out)
+      assert(out.linesIterator.exists(_.startsWith("[maintain] v1: 3 batches x 64 rows")), out)
+      assert(codes(s"$work/index") === n + 192)
+      assert(codes(dir) === n, "the batches go to the clone")
+    } finally {
+      work.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(work, true)
+      ()
+    }
+  }
+
+  test("scanfloor mode times a noop scan of a table per pass") {
+    val out = captured(Probe.run(spark, Array("scanfloor", s"$v1Dir/vectors", "2")))
+    val passes = out.linesIterator.filter(_.matches("""\[scan-floor\] .* pass=\d +[\d.]+ s .*selfCpu=.*""")).toSeq
+    assert(passes.size === 2, out)
+  }
+
+  test("fragments mode prints the three pre-checkpoint text fragments' plans") {
+    val out = captured(Probe.run(spark, Array("fragments", sf)))
+    Seq("minhash_sigs", "band_rows", "simhash_sigs").foreach(f =>
+      assert(out.contains(s"== fragment: $f"), out))
+    assert(out.contains("Physical Plan"), out)
   }
 
   test("census returns its body's value and leaves no listener behind") {

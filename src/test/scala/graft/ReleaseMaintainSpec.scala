@@ -10,7 +10,7 @@ import graft.engine.{LopqIndexStore, ReleaseShape}
   * slim-encode path, tensor never driver-resident — must stay O(batch):
   * flat wall-clock across batches and an effective slice LRU. Runs on a
   * CLONE of the v2 model (the benched index is never mutated); skips when
-  * v2 is not built. `graft.MaintainRelease` is the hundreds-of-batches
+  * v2 is not built. `graft.Probe maintain` is the hundreds-of-batches
   * probe through the real streaming path; this pins the invariants. */
 class ReleaseMaintainSpec extends SparkSpec {
 
