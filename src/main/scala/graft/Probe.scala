@@ -90,18 +90,15 @@ object Probe {
 
   /** The one probe session: `local[$SPARK_GRAFT_CPUS]` (default 32) with as
     * many shuffle partitions, UI off, UTC, legacy nanosecond timestamps
-    * readable, WARN logging and the graft SQL functions registered. `extra`
-    * carries the builder-time confs a mode needs (set before the context
-    * starts, so `spark.conf.set` cannot stand in for them). */
-  def session(extra: (String, String)*): SparkSession = {
+    * readable, WARN logging and the graft SQL functions registered. */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
@@ -546,17 +543,19 @@ object Probe {
     val sizes = args.filterNot(isShapeArg)
     val nBatches = sizes.headOption.fold(50)(_.toInt)
     val batchRows = sizes.lift(1).fold(2048)(_.toInt)
-    val src = dirArgs.headOption.fold {
+    // a Path drops a trailing '/', so the work dir is always the index's
+    // sibling, never a child that the clone would copy into itself
+    val src = new org.apache.hadoop.fs.Path(dirArgs.headOption.fold {
       require(LopqIndexStore.fingerprintOk(s.dir, s.p, s.n, s.pcaDims),
         s"prebuilt $name index required (runMain graft.BuildRelease $name)")
       s.dir
-    }(_.stripPrefix("dir:"))
-    val work = src + "_maintain"
+    }(_.stripPrefix("dir:")))
+    val wp = src.suffix("_maintain")
+    val work = wp.toString
     val dir = s"$work/index"
     val incoming = s"$work/incoming"
-    val wp = new org.apache.hadoop.fs.Path(work)
     wp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wp, true)
-    cloneDir(spark, src, dir, skip = Set("vectors"))
+    cloneDir(spark, src.toString, dir, skip = Set("vectors"))
     LopqIndexStore.evictModel(dir)
     val n0 = LopqIndexStore.readCodes(spark, dir).count()
 
@@ -570,19 +569,24 @@ object Probe {
     }
     // recentProgress keeps this many entries (Spark's default is 100); at
     // hundreds of batches the half-by-half comparison below would silently
-    // cover just the tail. A session conf, read when the stream starts.
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", (nBatches + 16).toString)
+    // cover just the tail. Set for this stream only, and put back after it.
+    val progressKey = "spark.sql.streaming.numRecentProgressUpdates"
+    val progressWas = spark.conf.getOption(progressKey)
+    spark.conf.set(progressKey, (nBatches + 16).toString)
 
     val req0 = LopqIndexStore.sliceKeysRequested.get()
     val miss0 = LopqIndexStore.sliceKeysMissed.get()
     val t0 = System.nanoTime()
-    val source = spark.readStream
-      .schema(spark.read.parquet(incoming).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(incoming)
-    val q = graft.streaming.IndexMaintenance.maintain(spark, dir, source,
-      "vec_id", "embedding", s"$work/ckpt")
-    q.awaitTermination()
+    val q = try {
+      val source = spark.readStream
+        .schema(spark.read.parquet(incoming).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(incoming)
+      val q = graft.streaming.IndexMaintenance.maintain(spark, dir, source,
+        "vec_id", "embedding", s"$work/ckpt")
+      q.awaitTermination()
+      q
+    } finally progressWas.fold(spark.conf.unset(progressKey))(spark.conf.set(progressKey, _))
     val wall = (System.nanoTime() - t0) / 1e9
 
     val perBatch = q.recentProgress.toSeq

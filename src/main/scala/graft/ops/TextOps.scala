@@ -66,19 +66,20 @@ object TextOps {
   private val RowsPerBand = 4
   private val JaccardThreshold = 0.5
 
-  /** The LSH operating point as SESSION CONFS (VERDICT r14 "what's
+  /** The LSH band count as a SESSION CONF (VERDICT r14 "what's
     * missing #2"): `NumHashes=16, Bands=4` puts the banding S-curve's
     * midpoint at jaccard ≈ 0.71, so pairs near the 0.5 verification
     * threshold are mostly never candidates (~24 % candidate probability
     * by the collision formula) — self-consistent with the oracle (which
     * replays the same banding) but a RECALL CHOICE a user must be able
-    * to make. Defaults are the pinned constants above, so the gates are
+    * to make. The default is the pinned constant above, so the gates are
     * byte-identical at default confs; the measured recall/cost curve per
-    * setting is PROBES.md r15's `lshcurve` table. rowsPerBand is derived
-    * (`numHashes / bands` — bands must divide numHashes); the banding
-    * S-curve midpoint is ≈ (1/bands)^(bands/numHashes). The 0.5 verification
-    * threshold stays a constant: every oracle hard-codes it. */
-  private[graft] val NumHashesConf = "spark.graft.text.lsh.numHashes"
+    * setting is PROBES.md r15's `lshcurve` table (16×8 catches 98.3 % of
+    * pairs at the 16×4 wall). rowsPerBand is derived (`numHashes / bands`
+    * — bands must divide numHashes); the banding S-curve midpoint is
+    * ≈ (1/bands)^(bands/numHashes). numHashes and the 0.5 verification
+    * threshold stay constants: every oracle hard-codes the threshold, and
+    * 16 is the only signature width in use. */
   private[graft] val BandsConf = "spark.graft.text.lsh.bands"
 
   private[graft] final case class LshParams(
@@ -92,7 +93,7 @@ object TextOps {
 
   private[graft] def lshParams(
       spark: org.apache.spark.sql.SparkSession): LshParams = LshParams(
-    spark.conf.get(NumHashesConf, NumHashes.toString).toInt,
+    NumHashes,
     spark.conf.get(BandsConf, Bands.toString).toInt,
     JaccardThreshold)
 

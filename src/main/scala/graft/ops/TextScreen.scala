@@ -139,17 +139,16 @@ object TextSigStore {
     readSide(spark, dir, textsDir(dir),
       s"no text content store at $dir — build(storeTexts = true) first")
 
-  /** Fail fast when the session's LSH confs disagree with the operating
-    * point the store was built at — band keys from different constants
+  /** Fail fast when the session's LSH operating point disagrees with the
+    * one the store was built at — band keys from different constants
     * never collide correctly, which would silently screen nothing. */
   private[graft] def requireParams(spark: SparkSession, dir: String,
       p: TextOps.LshParams): Unit = {
     val lines = metaLines(spark, dir)
     require(lines(0).toInt == p.numHashes && lines(1).toInt == p.bands,
       s"text sig store at $dir was built at numHashes=${lines(0)} " +
-        s"bands=${lines(1)}, session confs say ${p.numHashes}/${p.bands} — " +
-        s"set ${TextOps.NumHashesConf}/${TextOps.BandsConf} to match or " +
-        "rebuild the store")
+        s"bands=${lines(1)}, this session uses ${p.numHashes}/${p.bands} — " +
+        s"set ${TextOps.BandsConf} to match or rebuild the store")
     // a simhash-tier store fingerprints its width too: band keys from a
     // different width never collide correctly (same failure mode as a
     // banding mismatch — a silent under-screen, so fail fast instead)
@@ -354,14 +353,13 @@ object TextScreen {
     * made instead of re-deriving the arithmetic. */
   val LastBandJoinNote = "spark.graft.screen.last.bandJoin"
 
-  /** The batch band rows as a band join's build side: broadcast when their
-    * driver-known count fits the CC broadcast row cap. `note`, when given,
-    * records the decision under that conf key. */
+  /** The batch band rows as a band join's build side, and whether they
+    * were broadcast: they are when their driver-known count fits the CC
+    * broadcast row cap. */
   private def gated(spark: org.apache.spark.sql.SparkSession,
-      bands: DataFrame, note: Option[String] = None): DataFrame = {
+      bands: DataFrame): (DataFrame, Boolean) = {
     val fits = bands.count() <= TextOps.ccBroadcastRowCap(spark)
-    note.foreach(spark.conf.set(_, if (fits) "broadcast" else "shuffle"))
-    if (fits) broadcast(bands) else bands
+    (if (fits) broadcast(bands) else bands, fits)
   }
 
   /** The simhash TIER's verified pairs (r16): batch simhashes banded
@@ -387,7 +385,7 @@ object TextScreen {
     val batchBands = TextOps.simhashBandRowsOf(batchSims, bits)
       .localCheckpoint(false)
     val corpusBands = TextOps.simhashBandRowsOf(corpusSims, bits)
-    val bSide = gated(spark, batchBands)
+    val (bSide, _) = gated(spark, batchBands)
     val hamNO = graft.functions.TextFunctions
       .hammingDistance(col("c.sh"), col("b.sh"))
     val newOld = corpusBands.as("c")
@@ -431,7 +429,8 @@ object TextScreen {
     // bounded-batch contract: band rows are |batch|·bands skinny rows
     // with a driver-known count, so the broadcast decision is exact
     // (same byte gate as the CC node map — ~(long, long-ish-string) rows)
-    val bSide = gated(spark, batchBands, Some(LastBandJoinNote))
+    val (bSide, fits) = gated(spark, batchBands)
+    spark.conf.set(LastBandJoinNote, if (fits) "broadcast" else "shuffle")
     val newOld = corpusBands.as("c")
       .join(bSide.as("b"),
         col("c.band") === col("b.band") && col("c.bsig") === col("b.bsig"))

@@ -142,14 +142,20 @@ class ProbeHarnessSpec extends SparkSpec {
     def codes(d: String) = graft.engine.LopqIndexStore.readCodes(spark, d).count()
     val n = codes(dir)
     val work = new org.apache.hadoop.fs.Path(dir + "_maintain")
+    val fs = work.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val progressKey = "spark.sql.streaming.numRecentProgressUpdates"
+    val progressWas = spark.conf.getOption(progressKey)
     try {
-      val out = captured(Probe.run(spark, Array("maintain", "v1", s"dir:$dir", "3", "64")))
+      // a trailing '/' on dir: still puts the clone beside the index
+      val out = captured(Probe.run(spark, Array("maintain", "v1", s"dir:$dir/", "3", "64")))
       assert(out.linesIterator.count(_.matches("""\[maintain\] batch +\d+ +\d+ ms""")) === 3, out)
       assert(out.linesIterator.exists(_.startsWith("[maintain] v1: 3 batches x 64 rows")), out)
       assert(codes(s"$work/index") === n + 192)
       assert(codes(dir) === n, "the batches go to the clone")
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_maintain")))
+      assert(spark.conf.getOption(progressKey) === progressWas, "the mode restores the conf")
     } finally {
-      work.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(work, true)
+      fs.delete(work, true)
       ()
     }
   }
