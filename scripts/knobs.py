@@ -2,7 +2,7 @@
 """Knob audit: every `spark.graft.*` key the library declares, and who
 touches it.
 
-Usage: python3 scripts/knobs.py [repoRoot]
+Usage: python3 scripts/knobs.py [--check] [repoRoot]
 
 For each distinct "spark.graft.*" string literal under src/main (a key,
 or a key prefix ending in "." such as the run-note channels), prints the
@@ -13,13 +13,17 @@ NameConf` alias of it); comment lines are ignored. A line counts as a
 set when it calls `.set(`, `.unset(` or `.config(`; every other
 reference outside the declaration is a read.
 
-Run-note channels (keys with a `.last.` segment, e.g.
-`spark.graft.screen.last.bandJoin`) are OUTPUTS the engine writes after
-a call, not options: they are listed in their own section, and the
+Run-note channels (keys with a `.last.` segment, such as the deleted
+`spark.graft.screen.last.bandJoin`) are OUTPUTS the engine wrote after a
+call, not options: they are listed in their own section, and the
 closing summary counts the settable options, the options no non-test
 file sets, and the options nothing sets at all (candidates for a
 constant). Dev-only tooling — the shipped Scala library does not depend
 on this.
+
+`--check` exits 1 when a run-note channel exists (the engine returns
+what it did instead), or when an option is set by nothing and is not a
+deployment setting on DEPLOYMENT_ALLOW_LIST.
 """
 import os
 import re
@@ -30,6 +34,10 @@ DECL = re.compile(r'val\s+(\w+)\s*(?::\s*String)?\s*=\s*"(spark\.graft\.[A-Za-z0
 SET = re.compile(r'\.(?:set|unset|config)\s*\(')
 ALIAS = re.compile(r'\s*val\s+(\w+)\s*=\s*([\w.]+)\s*$')
 COMMENT = re.compile(r'^\s*(?://|\*|/\*)')
+
+# Options nothing in the repo sets that stay on purpose: a deployment
+# names its scratch volume, so no test or probe has a value to set.
+DEPLOYMENT_ALLOW_LIST = {"spark.graft.scratchDir"}
 
 
 def scala_files(root, sub):
@@ -56,7 +64,7 @@ def declarations(path):
         return DECL.findall(fh.read())
 
 
-def main(root):
+def main(root, check=False):
     main_files = sorted(scala_files(root, "src/main"))
     other_main = sorted(scala_files(root, "perfbench/src"))
     test_files = sorted(scala_files(root, "src/test"))
@@ -122,8 +130,20 @@ def main(root):
           % (len(options), len(no_main), len(unset)))
     for k in sorted(unset):
         print("  unset: " + k)
+    if check:
+        bad = ["run-note channel: " + k for k in notes] + [
+            "set by nothing, not a deployment setting: " + k
+            for k in sorted(unset) if k not in DEPLOYMENT_ALLOW_LIST]
+        for b in bad:
+            print("check: " + b)
+        print("check: " + ("FAIL" if bad else "OK"))
+        return 1 if bad else 0
+    return 0
 
 
 if __name__ == "__main__":
-    main(sys.argv[1] if len(sys.argv) > 1 else
-         os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    args = sys.argv[1:]
+    check = "--check" in args
+    args = [a for a in args if a != "--check"]
+    sys.exit(main(args[0] if args else
+                  os.path.dirname(os.path.dirname(os.path.abspath(__file__))), check))

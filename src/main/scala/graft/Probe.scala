@@ -105,18 +105,24 @@ object Probe {
     spark
   }
 
+  /** The removed memory keys: the `spark.graft.annjoin.*` gates and the CC
+    * broadcast and slice-LRU sizes, all derived from B now. */
+  private val RemovedMemoryKeys = ("""spark\.graft\.annjoin\..*|""" +
+    """spark\.graft\.cc\.broadcastMaxBytes|spark\.graft\.cc\.broadcastNodesMaxRows|""" +
+    """spark\.graft\.slim\.sliceCacheBytes""").r
+
   /** Sets every `conf:key=value` arg as a session conf, printing each as
     * `[tag] conf key=value`, and returns the other args in order. A `conf:`
-    * arg without a key and `=`, or one naming a removed
-    * `spark.graft.annjoin.*` key, fails before any conf is set. */
+    * arg without a key and `=`, or one naming a removed memory key, fails
+    * before any conf is set. */
   def confArgs(spark: SparkSession, args: Seq[String],
       tag: String = "probe"): Array[String] = {
     val (confs, rest) = args.partition(_.startsWith("conf:"))
     confs.map { a =>
       a.stripPrefix("conf:").split("=", 2) match {
-        case Array(k, _) if k.matches("""spark\.graft\.annjoin\..*""") =>
-          throw new IllegalArgumentException(s"$a: the spark.graft.annjoin.* keys " +
-            "are gone; every annJoin gate derives from B = spark.driver.maxResultSize / 2, " +
+        case Array(RemovedMemoryKeys(), _) =>
+          throw new IllegalArgumentException(s"$a: this key is gone; every engine " +
+            "memory gate derives from B = spark.driver.maxResultSize / 2, " +
             "a context conf read at session build (pass it as the JVM system property " +
             "-Dspark.driver.maxResultSize=<size>), and `Probe annjoin` takes " +
             "force:<decision>=<value> args")

@@ -3,6 +3,8 @@ package graft.engine
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 
+import graft.core.MemoryBudget
+
 import graft.engine.LopqSearcher.satMul
 
 /** The physical plan of one [[LopqSearcher.annJoin]] call: its six regime
@@ -29,27 +31,11 @@ final case class AnnJoinPlan(
     .collect { case (k, v) if k != "broadcasts" => k -> v.toString }.toMap
 }
 
-/** One planner over one memory budget. Every memory gate of the batch join
-  * is a fixed multiple of the budget `B` = half of
-  * `spark.driver.maxResultSize`, read per call: each gated payload is either
-  * collected to the driver before it broadcasts or rides a broadcast
-  * exchange, so the task-result cap is the bound they all share. With
-  * `maxResultSize = 0` (Spark's cap off) `B` is 512 MiB, its value at the
-  * 1g default. At the default every derived gate equals the constant it
-  * replaced:
-  *
-  * | gate                                   | derived      | at 1g        |
-  * |----------------------------------------|--------------|--------------|
-  * | ship ADC tables                        | B/8          | 64 MiB       |
-  * | halves dictionary                      | B/2          | 256 MiB      |
-  * | probe-matrix broadcast, chunk size     | B            | 512 MiB      |
-  * | wide-pair floor                        | B/2          | 256 MiB      |
-  * | query-side broadcast                   | 2B           | 1 GiB        |
-  * | broadcast candidates                   | B / 128 B    | 4 Mi rows    |
-  * | handle slice memo                      | 2B           | 1 GiB        |
-  *
-  * The two gates that bound no memory are constants:
-  * [[BalanceMinFanOutRows]] and [[MaxLookupIds]]. */
+/** One planner over the engine's one memory budget `B`
+  * ([[graft.core.MemoryBudget]], read per call). Every memory gate of the
+  * batch join is a fixed multiple of `B`; the table of them is
+  * [[graft.core.MemoryBudget]]'s. The two gates that bound no memory are
+  * constants: [[BalanceMinFanOutRows]] and [[MaxLookupIds]]. */
 object AnnJoinPlan {
 
   /** What the fan-out join ships per (query, visited cell) pair. */
@@ -69,30 +55,6 @@ object AnnJoinPlan {
   type Ship = Ship.Value
   type Rerank = Rerank.Value
   type Exact = Exact.Value
-
-  /** `B` for a session: half the live `spark.driver.maxResultSize`, or
-    * [[UnboundedBudget]] when that cap is off (0). */
-  def budgetOf(spark: SparkSession): Long = {
-    val maxResultBytes = spark.sparkContext.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    if (maxResultBytes > 0L) maxResultBytes / 2 else UnboundedBudget
-  }
-
-  /** `B` with `spark.driver.maxResultSize = 0`: the value at the 1g
-    * default, so an unbounded cap plans like the default. */
-  val UnboundedBudget: Long = 512L << 20
-
-  /** Estimated bytes of one candidate row in the broadcast-candidate
-    * rerank (id, q_id, adc_dist, framing). */
-  val CandRowBytes = 128L
-
-  def shipTablesMaxBytes(budget: Long): Long = budget / 8
-  def halvesDictMaxBytes(budget: Long): Long = budget / 2
-  def qvecMaxBytes(budget: Long): Long = budget
-  def fatShuffleFloorBytes(budget: Long): Long = budget / 2
-  def qsideBroadcastMaxBytes(budget: Long): Long = satMul(2L, budget)
-  def broadcastCandMaxRows(budget: Long): Long = budget / CandRowBytes
-  def sliceMemoBytes(budget: Long): Long = satMul(2L, budget)
 
   /** Past this many distinct visited cells the codes scan skips the pushed
     * cell IN-list: a plan with millions of literals is itself the
@@ -146,9 +108,9 @@ object AnnJoinPlan {
     // only the rest pay the exact distinct-halves count. Past both gates the
     // cell-local projection (D floats per pair) keeps the shuffle O(pairs·D).
     val tableBytes = satMul(in.nPairs, in.m.toLong * in.subClusters * 8L)
-    val dictMax = halvesDictMaxBytes(budget)
+    val dictMax = MemoryBudget.halvesDictMaxBytes(budget)
     val (shipMode, dictBytes) =
-      if (tableBytes <= shipTablesMaxBytes(budget)) (Ship.Tables, -1L)
+      if (tableBytes <= MemoryBudget.shipTablesMaxBytes(budget)) (Ship.Tables, -1L)
       else if (!in.qIdIntegral || dictMax <= 0L) (Ship.Projection, -1L)
       else {
         val entryBytes = in.halfDim * 4L + 56L // float payload + framing
@@ -175,10 +137,10 @@ object AnnJoinPlan {
       case Ship.Projection => in.halfDim.toLong * 2L * 4L
     }
     val qsidePayloadBytes = satMul(in.nPairs, pairBytes + 24L)
-    val qsideBroadcast = qsidePayloadBytes <= qsideBroadcastMaxBytes(budget)
+    val qsideBroadcast = qsidePayloadBytes <= MemoryBudget.qsideBroadcastMaxBytes(budget)
 
-    val maxCand = broadcastCandMaxRows(budget)
-    val fatFloor = fatShuffleFloorBytes(budget)
+    val maxCand = MemoryBudget.broadcastCandMaxRows(budget)
+    val fatFloor = MemoryBudget.fatShuffleFloorBytes(budget)
     val pairVecRowBytes = 4L * in.dim + 24L
     val candBound = satMul(in.nProbes, in.rerankK.toLong)
 
@@ -203,7 +165,7 @@ object AnnJoinPlan {
     val exactShape =
       if (in.qIdIntegral && in.dim > 0 && {
         val matrixBytes = satMul(in.nProbes, 4L * in.dim + 96L)
-        matrixBytes <= qvecMaxBytes(budget) &&
+        matrixBytes <= MemoryBudget.qvecMaxBytes(budget) &&
           (candBound > maxCand ||
             satMul(candBound, pairVecRowBytes) > math.max(matrixBytes, fatFloor))
       }) Exact.BroadcastQvec
@@ -211,7 +173,7 @@ object AnnJoinPlan {
 
     AnnJoinPlan(shipMode, cellsPushed, balanced, qsideBroadcast, rerankMode, exactShape,
       in.nPairs, in.fanOutRows, math.round(in.scanKeepFraction * 1000.0) / 1000.0, qsidePayloadBytes,
-      candBound, qvecMaxBytes(budget), dictBytes)
+      candBound, MemoryBudget.qvecMaxBytes(budget), dictBytes)
   }
 
   /** Fails on a plan the batch cannot run: the halves dictionary and the

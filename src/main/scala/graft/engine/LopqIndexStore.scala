@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, ShortType, 
   StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{CellHistogram, UpdateLog}
+import graft.core.{CellHistogram, MemoryBudget, UpdateLog}
 
 /** One parquet row per model vector; `part` selects the component.
   * Top-level (not nested/private) so Spark's encoder codegen can reach the
@@ -83,7 +83,7 @@ final case class LopqSlimIndex(
     * slices and re-broadcasts the union, unpersisting the old broadcast.
     * Driver memory is O(batch-touched tensor) — inherent to the batch op,
     * which broadcasts exactly this map anyway — and BOUNDED: if the union
-    * would exceed `maxBytes` (the annJoin budget's [[AnnJoinPlan.sliceMemoBytes]])
+    * would exceed `maxBytes` (the annJoin budget's [[MemoryBudget.sliceMemoBytes]])
     * the memo resets to just the current batch's keys, so a long-lived handle
     * serving shifting probe distributions cannot accrete the full tensor
     * (the no-accretion guarantee slim serve exists for; a single batch
@@ -194,10 +194,10 @@ object LopqIndexStore {
 
   /** Evict cache entries keyed by a stopped SparkSession — run on every
     * insert path so a long-lived JVM cycling sessions can't accumulate a
-    * model copy plus up to 64 MB of slice cache per dead (session, dir)
-    * pair. A dead session's broadcasts died with its context, so they are
-    * dropped, not destroyed. The liveness predicate is injectable for the
-    * unit test. */
+    * model copy plus up to B/8 (64 MiB at the 1g default) of slice cache
+    * per dead (session, dir) pair. A dead session's broadcasts died with
+    * its context, so they are dropped, not destroyed. The liveness
+    * predicate is injectable for the unit test. */
   private[graft] def sweepStoppedSessions(isStopped: SparkSession => Boolean =
       s => s.sparkContext.isStopped): Unit = {
     slimModelCache.filterInPlace { case ((s, _), _) => !isStopped(s) }
@@ -357,9 +357,6 @@ object LopqIndexStore {
       .select("split", "a", "b", "vec")
   }
 
-  val SliceCacheBytesConf = "spark.graft.slim.sliceCacheBytes"
-  val DefaultSliceCacheBytes: Long = 64L << 20
-
   /** One (session, dir)'s rotation slices, and the `model` relation
     * [[loadModelSlim]] and every slice miss read: held, so its listing and
     * schema-inference job run once, at load, and a miss runs just its one
@@ -390,8 +387,8 @@ object LopqIndexStore {
   private def sliceCacheOf(spark: SparkSession, dir: String): SliceCache = {
     sweepStoppedSessions()
     sliceCaches.getOrElseUpdate((spark, dir), {
-      val max = spark.conf.get(SliceCacheBytesConf, DefaultSliceCacheBytes.toString).toLong
-      new SliceCache(max, () => spark.read.parquet(s"$dir/model"))
+      new SliceCache(MemoryBudget.sliceLruBytes(MemoryBudget.budgetOf(spark)),
+        () => spark.read.parquet(s"$dir/model"))
     })
   }
 
@@ -414,10 +411,10 @@ object LopqIndexStore {
     * reference memoizing its subquantizer distance tables per coarse pair,
     * `lopq/lopq/search.py:151-164`): repeat queries against the same hot
     * clusters skip the fetch job entirely, while the bound
-    * (`spark.graft.slim.sliceCacheBytes`, default 64 MB) keeps the driver
-    * O(1) in V — the cache can never grow back into the tensor. Evicted,
-    * with its held `model` relation, alongside the model caches on
-    * [[evictModel]]. Callers read slices through
+    * ([[MemoryBudget.sliceLruBytes]], B/8: 64 MiB at the 1g default) keeps
+    * the driver O(1) in V — the cache can never grow back into the
+    * tensor. Evicted, with its held `model` relation, alongside the model
+    * caches on [[evictModel]]. Callers read slices through
     * [[RotationSource.Fetched]]. */
   def rotationSlices(spark: SparkSession, dir: String,
       keys: Seq[(Int, Int)]): Map[(Int, Int), Array[Array[Float]]] = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.core.{CellHistogram, CellMath}
+import graft.core.{CellHistogram, CellMath, MemoryBudget}
 import graft.functions.VectorFunctions
 
 /** Encode + query path of the LOPQ index, Spark-first. Both run on
@@ -303,7 +303,7 @@ object LopqSearcher {
       qVecCol: String, vectors: DataFrame, idCol: String, vecCol: String,
       quota: Int, k: Int, rerankK: Int): DataFrame =
     annJoinPlanned(index, queries, qIdCol, qVecCol, vectors, idCol, vecCol,
-      quota, k, rerankK, AnnJoinPlan.budgetOf(index.codes.sparkSession))._1
+      quota, k, rerankK, MemoryBudget.budgetOf(index.codes.sparkSession))._1
 
   /** [[annJoin]] under an explicit memory `budget` ([[AnnJoinPlan]]), with
     * `force` applied to the chosen plan before the frame is built — the
@@ -361,7 +361,7 @@ object LopqSearcher {
     // memoized on the handle: repeat batches against one index reuse the
     // broadcast instead of re-fetching ~O(touched tensor) slices per call
     val rotB = index.sliceBroadcastFor(RotationSource.keysOf(unionCells, vCoarse),
-      AnnJoinPlan.sliceMemoBytes(budget))
+      MemoryBudget.sliceMemoBytes(budget))
     val rowsInUnion = cellRows.map { case (c, _) => index.cellCounts.countOf(c) }.sum
     val totalRows = index.cellCounts.total
     val qIdIntegral = Seq(org.apache.spark.sql.types.LongType,
@@ -524,7 +524,7 @@ object LopqSearcher {
     * fat-row-shuffle scale-killer; ref `updater/extraction_checker.py:
     * 225-258` runs the same pass id-batched). With `chunkRows = 0` (auto)
     * each chunk is sized so ITS probe matrix clears the budget's matrix
-    * gate ([[AnnJoinPlan.qvecMaxBytes]]) with headroom, so every chunk runs
+    * gate ([[MemoryBudget.qvecMaxBytes]]) with headroom, so every chunk runs
     * the broadcastQvec exact stage: candidate rows are joined to their probe
     * vector map-side and never shuffle a second time.
     *
@@ -554,7 +554,7 @@ object LopqSearcher {
       quota: Int, k: Int, rerankK: Int, chunkRows: Long = 0L)
       (sink: (DataFrame, Int) => Unit): Int =
     annJoinChunkedPlanned(index, queries, qIdCol, qVecCol, vectors, idCol, vecCol,
-      quota, k, rerankK, chunkRows, AnnJoinPlan.budgetOf(index.codes.sparkSession))(sink)
+      quota, k, rerankK, chunkRows, MemoryBudget.budgetOf(index.codes.sparkSession))(sink)
 
   /** [[annJoinChunked]] with every chunk planned by [[annJoinPlanned]]
     * under `budget` and `force`. */
@@ -569,7 +569,7 @@ object LopqSearcher {
     // exact-sized, but the byte estimate itself is approximate)
     val rows =
       if (chunkRows > 0L) chunkRows
-      else math.max(1L, AnnJoinPlan.qvecMaxBytes(budget) * 4 / 5 / (4L * dim + 96L))
+      else math.max(1L, MemoryBudget.qvecMaxBytes(budget) * 4 / 5 / (4L * dim + 96L))
     // one skinny agg sizes the chunks AND enforces the chunking contract
     // directly (ADVICE r12: the old boundary-count require was purely
     // positional and could not detect duplicates; null ids would silently

@@ -3,6 +3,8 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.MemoryBudget
+
 /** One release-scale proof corpus + index parameterization. */
 final case class ReleaseShapeDef(
     name: String,
@@ -292,7 +294,7 @@ object ReleaseShape {
       .toDF("q_id", "q_vec")
     LopqSearcher.annJoinPlanned(idx, queries, "q_id", "q_vec",
       vectors(spark, idx.dir), "vec_id", "embedding", Quota, TopK, RerankK,
-      AnnJoinPlan.budgetOf(spark), force)._1
+      MemoryBudget.budgetOf(spark), force)._1
   }
 
   // ------------------------------------------- release-WIDTH rerank proof

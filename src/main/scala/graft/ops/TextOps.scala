@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.MemoryBudget
 import graft.functions.TextFunctions._
 
 /** Text-analysis + deduplication operators over the `documents` table —
@@ -269,10 +270,10 @@ object TextOps {
     * raw table against the candidate list shuffle-writes the whole
     * corpus' shingles TWICE (~2 × corpus bytes of scratch at any size) —
     * for a candidate set that is orders of magnitude smaller. The
-    * candidate id list is skinny and its count driver-known (same gate
-    * as [[antiJoinIds]]): under the bound it broadcasts and the fat side
-    * is scanned map-side, never shuffled; past it the plain shuffle join
-    * is the cluster-regime fallback. */
+    * candidate id list is skinny and its count driver-known (the id-list
+    * gate of [[antiJoinIds]]): under the cap it broadcasts and the fat
+    * side is scanned map-side, never shuffled; past it the plain shuffle
+    * join is the cluster-regime fallback. */
   private[graft] def lshPairsOf(d: org.apache.spark.sql.DataFrame) = {
     // ONE corpus scan computes shingles → hashes → all numHashes
     // permutations FUSED, and only the skinny (id, sig) rows are
@@ -315,10 +316,12 @@ object TextOps {
       .distinct().localCheckpoint(false)
     // shingles of CANDIDATE docs only: the skinny id list prunes the
     // input map-side (broadcast under the driver-known-count gate, the
-    // antiJoinIds bound), shingling runs on the surviving slice, and the
+    // antiJoinIds cap), shingling runs on the surviving slice, and the
     // O(candidates) result is pinned because both verification sides
     // scan it
-    val shSlice = shingleSliceOf(d, candIds).localCheckpoint() // EAGER:
+    val idSide = buildSide(candIds,
+      MemoryBudget.idListMaxRows(MemoryBudget.budgetOf(d.sparkSession)))._1
+    val shSlice = shingleSliceOf(d, idSide).localCheckpoint() // EAGER:
     // both verification sides scan it in the final job
     val j = graft.functions.TextFunctions.jaccard(col("sa"), col("sb"))
     cand
@@ -356,16 +359,25 @@ object TextOps {
   }
 
   /** Distinct 3-shingle arrays of the docs named by the skinny `ids`
-    * frame only — `ids` prunes the fat text scan map-side (broadcast
-    * under the driver-known-count byte gate, the antiJoinIds bound), so
-    * the result is O(|ids|) regardless of corpus size. */
+    * frame only — `ids`, already gated by the caller ([[buildSide]] at
+    * the id-list cap, so a caller slicing two frames counts it once),
+    * prunes the fat text scan map-side, so the result is O(|ids|)
+    * regardless of corpus size. */
   private[graft] def shingleSliceOf(d: org.apache.spark.sql.DataFrame,
-      ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val side = if (ids.count() <=
-        ccBroadcastRowCap(d.sparkSession, CcBroadcastBytesPerIdRow))
-      broadcast(ids) else ids
-    d.join(side, "doc_id")
+      ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    d.join(ids, "doc_id")
       .select(col("doc_id"), array_distinct(shingles(col("text"), 3)).as("sh"))
+
+  /** `side` as the build side of a join: broadcast when its driver-known
+    * row count (one count job) is at most `maxRows`, else left to the
+    * shuffle join; and whether it was broadcast. A skinny side's count is
+    * exact where Catalyst's plan stats are not (they mis-size checkpointed
+    * frames), so the hint is forced from the count and bypasses
+    * `spark.sql.autoBroadcastJoinThreshold`. */
+  private[graft] def buildSide(side: org.apache.spark.sql.DataFrame, maxRows: Long)
+      : (org.apache.spark.sql.DataFrame, Boolean) = {
+    val fits = side.count() <= maxRows
+    (if (fits) broadcast(side) else side, fits)
   }
 
   /** Verified near-dup EDGES for the COMPONENT consumers (q63's
@@ -536,9 +548,10 @@ object TextOps {
     * the component diameter (tiny for near-dup clusters), and at 100 TB
     * this is the standard large/small-star CC schedule on a pair graph
     * orders of magnitude smaller than the corpus. Returns `(id, comp)` with
-    * `comp` = the component's minimum member id. */
-  private[graft] def minLabelComponents(edges: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+    * `comp` = the component's minimum member id. The node map broadcasts
+    * under the map cap of `budget` ([[MemoryBudget.mapMaxRows]]). */
+  private[graft] def minLabelComponents(edges: org.apache.spark.sql.DataFrame,
+      budget: Long = MemoryBudget.current): org.apache.spark.sql.DataFrame = {
     // CONTRACT, then propagate. The duplicate graphs this operator feeds
     // are near-cliques (a near-dup cluster pairs all-to-all: the full v4
     // sweep emits 523M pair rows over 2M nodes), and running label
@@ -571,15 +584,14 @@ object TextOps {
       .select(col("id"), least(col("id"), col("_m")).as("l0"))
       .localCheckpoint()
     // map the ORIGINAL edges (half of und) onto their l0 images; when the
-    // node map is driver-known small, broadcast it so the edge list is
-    // scanned map-side and never shuffle-written — the distinct() after
-    // the mapping also combines map-side, so a clique's edges vanish
-    // before they reach the wire
-    val nNodes = l0.count()
-    val maxBcast = ccBroadcastRowCap(edges.sparkSession)
+    // node map's driver-known count fits the map cap, broadcast it so the
+    // edge list is scanned map-side and never shuffle-written — the
+    // distinct() after the mapping also combines map-side, so a clique's
+    // edges vanish before they reach the wire
+    val fits = l0.count() <= MemoryBudget.mapMaxRows(budget)
     def side(idCol: String, out: String) = {
       val m = l0.select(col("id").as(idCol), col("l0").as(out))
-      if (nNodes <= maxBcast) broadcast(m) else m
+      if (fits) broadcast(m) else m
     }
     val contracted = edges.select("id_a", "id_b")
       .join(side("id_a", "_la"), "id_a")
@@ -594,70 +606,6 @@ object TextOps {
       .select(col("id"), coalesce(col("comp"), col("l0")).as("comp"))
   }
 
-  /** Conf: max ESTIMATED broadcast size in BYTES for shipping a skinny
-    * id-keyed map (the CC node→l0 map, an anti-join id list) into a
-    * fat-side scan as a forced `broadcast()` hint. The estimate charges
-    * [[CcBroadcastBytesPerRow]] per row — the payload is 16 B but a
-    * BroadcastHashJoin materializes a `HashedRelation` (key index +
-    * row pages + open-addressing slack) costing several × payload, so
-    * gating on raw row count at 16 B/row under-prices the executor-side
-    * footprint (ADVICE r13). Default 256 MB of estimated relation → a
-    * 4M-row cap.
-    *
-    * NOTE: the hint deliberately BYPASSES
-    * `spark.sql.autoBroadcastJoinThreshold` — including an explicit -1 —
-    * because Catalyst's plan stats mis-size exactly the checkpointed
-    * skinny frames this gate covers (the r13 curatepipe sort-merge flip
-    * came from that). On a memory-constrained driver/executor, set THIS
-    * conf to 0 to disable the forced hint entirely; above the cap the
-    * mapping falls back to shuffle joins, the multi-hundred-TB regime
-    * where executors outnumber the savings. */
-  private[graft] val CcBroadcastMaxBytesConf = "spark.graft.cc.broadcastMaxBytes"
-  private[graft] val DefaultCcBroadcastMaxBytes: Long = 256L << 20
-
-  /** Estimated HashedRelation cost per (long, long) row — 16 B payload
-    * plus hash-table overhead measured in whole multiples of it. */
-  private[graft] val CcBroadcastBytesPerRow = 64L
-
-  /** Estimated HashedRelation cost per single-column 8-byte-id row (the
-    * anti-join / candidate-prune id lists): half the (long, long) map
-    * row's payload, same whole-multiple overhead model — pricing these at
-    * 64 B/row halved the usable broadcast budget for no reason (ADVICE
-    * r14). */
-  private[graft] val CcBroadcastBytesPerIdRow = 32L
-
-  /** r13's row-cap conf, superseded by [[CcBroadcastMaxBytesConf]] in r14.
-    * Still honored as a fallback when the byte conf is unset — a
-    * deployment pinning the old key must not silently revert to defaults
-    * (ADVICE r14); setting it logs a one-time deprecation pointer. */
-  private[graft] val LegacyCcBroadcastMaxRowsConf =
-    "spark.graft.cc.broadcastNodesMaxRows"
-  @volatile private var warnedLegacyRowCap = false
-
-  /** Row cap implied by [[CcBroadcastMaxBytesConf]] (0 disables) at the
-    * given estimated relation cost per row. The legacy ROW-cap conf, when
-    * set and the byte conf is not, applies directly (it already is a row
-    * count — per-row pricing does not rescale it). */
-  private[graft] def ccBroadcastRowCap(
-      spark: org.apache.spark.sql.SparkSession,
-      bytesPerRow: Long = CcBroadcastBytesPerRow): Long = {
-    val explicit = spark.conf.getOption(CcBroadcastMaxBytesConf)
-    val legacy = spark.conf.getOption(LegacyCcBroadcastMaxRowsConf)
-    if (legacy.isDefined && !warnedLegacyRowCap) {
-      warnedLegacyRowCap = true
-      System.err.println(s"[graft] $LegacyCcBroadcastMaxRowsConf is " +
-        s"deprecated — set $CcBroadcastMaxBytesConf (estimated relation " +
-        "bytes; 0 disables the forced hint) instead" +
-        (if (explicit.isDefined) s"; both are set, $CcBroadcastMaxBytesConf wins"
-         else ""))
-    }
-    (explicit, legacy) match {
-      case (Some(b), _) => b.toLong / bytesPerRow
-      case (None, Some(rows)) => rows.toLong
-      case (None, None) => DefaultCcBroadcastMaxBytes / bytesPerRow
-    }
-  }
-
   /** Anti-join an id set out of a FAT corpus without shuffling the corpus:
     * Catalyst only broadcasts under its 10 MB plan-stats threshold, so a
     * loser set a few MB past it silently flips the anti-join to a
@@ -666,17 +614,17 @@ object TextOps {
     * id list (the r13 curatepipe probe measured exactly that flip:
     * ~2M loser ids → ENOSPC in the survivors stage). The id count here is
     * driver-known (one count of a checkpointed single-column frame), so
-    * the broadcast decision is exact, reusing the CC node-map bound
-    * ([[CcBroadcastMaxBytesConf]] — same 8-byte-id shape). Above the
-    * bound the plain join runs (the cluster regime where the corpus is
+    * the broadcast decision is exact: the id-list cap of `budget`
+    * ([[MemoryBudget.idListMaxRows]], 8 Mi rows at the 1g default). Above
+    * the cap the plain join runs (the cluster regime where the corpus is
     * partitioned wide enough to absorb the shuffle).
     *
     * `ids` must be a single-column frame, or carry `idCol` by name — a
     * multi-column frame whose first column merely happens to sit leftmost
     * would otherwise anti-join on the wrong values silently (ADVICE r13). */
   private[graft] def antiJoinIds(corpus: org.apache.spark.sql.DataFrame,
-      idCol: String, ids: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+      idCol: String, ids: org.apache.spark.sql.DataFrame,
+      budget: Long = MemoryBudget.current): org.apache.spark.sql.DataFrame = {
     val srcCol =
       if (ids.columns.contains(idCol)) idCol
       else {
@@ -686,10 +634,7 @@ object TextOps {
         ids.columns.head
       }
     val l = ids.select(col(srcCol).as(idCol)).localCheckpoint()
-    val side = if (l.count() <=
-        ccBroadcastRowCap(corpus.sparkSession, CcBroadcastBytesPerIdRow))
-      broadcast(l) else l
-    corpus.join(side, Seq(idCol), "left_anti")
+    corpus.join(buildSide(l, MemoryBudget.idListMaxRows(budget))._1, Seq(idCol), "left_anti")
   }
 
   /** Iterative min-label propagation over an undirected-izable edge list —

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.UpdateLog
+import graft.core.{MemoryBudget, UpdateLog}
 import graft.functions.TextFunctions
 
 /** INCREMENTAL / SCREENED TEXT DEDUP (VERDICT r14 "what's missing #1") —
@@ -338,29 +338,21 @@ object TextScreen {
     * signatures/bands are one bounded scan over representatives; the
     * (batch × corpus) candidate join BROADCASTS the batch's band rows
     * so the corpus' skinny signature table streams through map-side
-    * (nothing corpus-sized shuffles — past the byte gate it falls back to
-    * the shuffle join, the cluster regime); verification recomputes
-    * shingles on the candidate-pruned slices only (one map-side pass of
-    * the corpus text, the lshPairsOf r14 discipline). */
+    * (nothing corpus-sized shuffles — past the map cap of `budget` it
+    * falls back to the shuffle join, the cluster regime); verification
+    * recomputes shingles on the candidate-pruned slices only (one map-side
+    * pass of the corpus text, the lshPairsOf r14 discipline). */
   def screenPairs(corpus: DataFrame, corpusSigs: DataFrame,
-      batch: DataFrame): DataFrame =
-    screenImpl(corpus, corpusSigs, batch)._1
+      batch: DataFrame, budget: Long = MemoryBudget.current): DataFrame =
+    screenImpl(corpus, corpusSigs, batch, budget = budget).pairs
 
-  /** Post-run regime note: which physical shape the MinHash tier's
-    * byte-gated band join took — `broadcast` (batch bands map-side against
-    * the streaming corpus table) or `shuffle` (the cluster regime past the
-    * cap). Written per screen so specs read the decision the run actually
-    * made instead of re-deriving the arithmetic. */
-  val LastBandJoinNote = "spark.graft.screen.last.bandJoin"
-
-  /** The batch band rows as a band join's build side, and whether they
-    * were broadcast: they are when their driver-known count fits the CC
-    * broadcast row cap. */
-  private def gated(spark: org.apache.spark.sql.SparkSession,
-      bands: DataFrame): (DataFrame, Boolean) = {
-    val fits = bands.count() <= TextOps.ccBroadcastRowCap(spark)
-    (if (fits) broadcast(bands) else bands, fits)
-  }
+  /** One screen: the MinHash tier's verified pairs, the batch's MinHash
+    * signatures, the simhash tier's pairs and batch signatures when the
+    * store has that tier, and which shape the band join took —
+    * `bandsBroadcast` (the batch's band rows map-side against the
+    * streaming corpus table) or not (the shuffle join past the map cap). */
+  private[graft] final case class Screened(pairs: DataFrame, batchSigs: DataFrame,
+      sims: Option[(DataFrame, DataFrame)], bandsBroadcast: Boolean)
 
   /** The simhash TIER's verified pairs (r16): batch simhashes banded
     * against the store's `simsigs/` side and against themselves, the
@@ -370,14 +362,14 @@ object TextScreen {
     * the cost of a skinny long scan — no shingle recompute, no text
     * touched — and the pairs this tier verifies are anti-joined out of
     * the MinHash candidate set before its (text-touching) jaccard
-    * verification. Same broadcast byte gate and same shape as the
-    * MinHash band join. */
+    * verification. Same broadcast gate and same shape as the MinHash band
+    * join. */
   private def simTierPairs(corpusSims: DataFrame, batchSims: DataFrame,
-      bits: Int): DataFrame = {
+      bits: Int, budget: Long): DataFrame = {
     val spark = batchSims.sparkSession
     val maxH = TextOps.simMaxHamming(spark) // store-validated by requireParams
     // lazy pin is safe DESPITE the newNew self-join below (ADVICE r18 #1):
-    // the first materializing action is `gated`'s count() — a single full
+    // the first materializing action is `buildSide`'s count() — a single full
     // scan (the checkpoint blocks column pruning below itself), run
     // eagerly at plan-build time — so the checkpoint is already
     // materialized before either join side reads it; the self-join never
@@ -385,7 +377,7 @@ object TextScreen {
     val batchBands = TextOps.simhashBandRowsOf(batchSims, bits)
       .localCheckpoint(false)
     val corpusBands = TextOps.simhashBandRowsOf(corpusSims, bits)
-    val (bSide, _) = gated(spark, batchBands)
+    val (bSide, _) = TextOps.buildSide(batchBands, MemoryBudget.mapMaxRows(budget))
     val hamNO = graft.functions.TextFunctions
       .hammingDistance(col("c.sh"), col("b.sh"))
     val newOld = corpusBands.as("c")
@@ -405,14 +397,14 @@ object TextScreen {
     newOld.unionAll(newNew).distinct()
   }
 
-  private def screenImpl(corpus: DataFrame, corpusSigs: DataFrame,
-      batch: DataFrame, tier: Option[(DataFrame, Int)] = None)
-      : (DataFrame, DataFrame, Option[(DataFrame, DataFrame)]) = {
+  private[graft] def screenImpl(corpus: DataFrame, corpusSigs: DataFrame,
+      batch: DataFrame, tier: Option[(DataFrame, Int)] = None,
+      budget: Long = MemoryBudget.current): Screened = {
     val spark = batch.sparkSession
     val p = TextOps.lshParams(spark)
     val (reps, stars) = TextOps.exactRepsOf(batch)
     // both lazy pins are safe despite batchBands' newNew SELF-join below
-    // (ADVICE r18 #1): their first materializing action is `gated`'s
+    // (ADVICE r18 #1): their first materializing action is `buildSide`'s
     // count() on batchBands — ONE full scan (computing batchSigs inside
     // it), run eagerly at plan-build time below — so both checkpoints are
     // materialized before any join scans them twice; the dual-scan race
@@ -424,13 +416,13 @@ object TextScreen {
     // and they prune the jaccard verification below
     val sims = tier.map { case (corpusSims, bits) =>
       val batchSims = TextOps.simhashSigsOf(reps, bits).localCheckpoint(false)
-      (simTierPairs(corpusSims, batchSims, bits).localCheckpoint(false), batchSims)
+      (simTierPairs(corpusSims, batchSims, bits, budget).localCheckpoint(false), batchSims)
     }
     // bounded-batch contract: band rows are |batch|·bands skinny rows
     // with a driver-known count, so the broadcast decision is exact
-    // (same byte gate as the CC node map — ~(long, long-ish-string) rows)
-    val (bSide, fits) = gated(spark, batchBands)
-    spark.conf.set(LastBandJoinNote, if (fits) "broadcast" else "shuffle")
+    // (the map cap of the CC node map — ~(long, long-ish-string) rows)
+    val (bSide, bandsBroadcast) =
+      TextOps.buildSide(batchBands, MemoryBudget.mapMaxRows(budget))
     val newOld = corpusBands.as("c")
       .join(bSide.as("b"),
         col("c.band") === col("b.band") && col("c.bsig") === col("b.bsig"))
@@ -446,12 +438,10 @@ object TextScreen {
     // for the conservative-prefix drop rule only pair EXISTENCE matters,
     // and the tier's hamming verdict is final — anti-joining it out here
     // is what makes near-exact batches cheap (the tier pair set is
-    // O(batch·collisions), broadcast under the same byte gate)
+    // O(batch·collisions), broadcast under the same map cap)
     val cand = (sims match {
       case Some((tierPairs, _)) =>
-        val tSide =
-          if (tierPairs.count() <= TextOps.ccBroadcastRowCap(spark))
-            broadcast(tierPairs) else tierPairs
+        val tSide = TextOps.buildSide(tierPairs, MemoryBudget.mapMaxRows(budget))._1
         cand0.join(tSide, Seq("id_a", "id_b"), "left_anti")
       case None => cand0
     }).localCheckpoint() // EAGER: candIds' union legs scan it twice first
@@ -459,9 +449,11 @@ object TextScreen {
       .unionAll(cand.select(col("id_b").as("doc_id")))
       .distinct().localCheckpoint(false)
     // shingles of candidate docs only: corpus slice map-side-pruned
-    // (ids disjoint, so the union has one row per candidate id)
-    val sh = TextOps.shingleSliceOf(corpus, candIds)
-      .unionAll(TextOps.shingleSliceOf(batch, candIds))
+    // (ids disjoint, so the union has one row per candidate id); the id
+    // side is gated once for both slices
+    val idSide = TextOps.buildSide(candIds, MemoryBudget.idListMaxRows(budget))._1
+    val sh = TextOps.shingleSliceOf(corpus, idSide)
+      .unionAll(TextOps.shingleSliceOf(batch, idSide))
       .localCheckpoint() // EAGER: both verification sides scan it first
     val j = TextFunctions.jaccard(col("sa"), col("sb"))
     val verified = cand
@@ -474,7 +466,7 @@ object TextScreen {
     // verdict; id order is already representative < member
     val pairs = verified.unionAll(
       stars.select(col("id_a"), col("id_b"), lit(1.0).as("jaccard")))
-    (pairs, batchSigs, sims)
+    Screened(pairs, batchSigs, sims, bandsBroadcast)
   }
 
   /** Fault-injection seam for the crash-window spec (the
@@ -527,7 +519,7 @@ object TextScreen {
       if (TextSigStore.hasSimhashTier(spark, dir))
         Some((TextSigStore.simsigs(spark, dir), TextOps.simhashBits(spark)))
       else None
-    val (minhashPairs, batchSigs, sims) =
+    val Screened(minhashPairs, batchSigs, sims, _) =
       screenImpl(corpus, TextSigStore.sigs(spark, dir), batch, tier)
     // the drop rule needs pair EXISTENCE only: tier-verified pairs join
     // the jaccard-verified ones (they were anti-joined out of the

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.MemoryBudget
 import graft.functions.VectorFunctions._
 
 /** Embedding-similarity operators over the `embeddings` table: norms,
@@ -58,38 +59,33 @@ object VectorQueries {
     * Skew shape: within-cell work is quadratic, so one giant cell would
     * otherwise land its whole |cell|² sweep in a single join task (AQE's
     * skew split spreads the probes but still buffers the full matching
-    * cell per task). Members of a cell with more than
-    * `spark.graft.semdedup.cellBlockRows` (default 4096) rows are
-    * hash-assigned to ⌈n/B⌉ blocks and the sweep runs per block PAIR
-    * (i ≤ j) — each unordered pair lands in exactly one block pair, task
-    * memory is bounded by 2B vectors, and the quadratic work spreads over
-    * ⌈n/B⌉² tasks. Cells at or under the block size keep ⌈n/B⌉ = 1, where
-    * the decomposition degenerates to the plain cell self-join (one key,
-    * no extra fan-out). */
+    * cell per task). Members of a cell with more than `blockRows`
+    * ([[CellBlockRows]] = 4096) rows are hash-assigned to ⌈n/B⌉ blocks and
+    * the sweep runs per block PAIR (i ≤ j) — each unordered pair lands in
+    * exactly one block pair, task memory is bounded by 2B vectors, and the
+    * quadratic work spreads over ⌈n/B⌉² tasks. Cells at or under the block
+    * size keep ⌈n/B⌉ = 1, where the decomposition degenerates to the plain
+    * cell self-join (one key, no extra fan-out). */
   def semDedupPairs(cells: DataFrame, vectors: DataFrame, idCol: String,
-      vecCol: String, simThreshold: Double = NearDupSimThreshold): DataFrame = {
+      vecCol: String, simThreshold: Double = NearDupSimThreshold,
+      blockRows: Int = CellBlockRows): DataFrame = {
     val asg = cells.select(col("id"), col("cell_id"))
-    val multi = multiCellBlocks(asg, cellBlockRows(cells))
+    val multi = multiCellBlocks(asg, blockRows)
     val m = attachBlockedVectors(asg.join(multi, "cell_id"), vectors,
       idCol, vecCol, broadcastAsg = false)
     sweepBlockPairs(m, simThreshold)
   }
 
-  private def cellBlockRows(df: DataFrame): Int = {
-    val blockRows = df.sparkSession.conf
-      .get(SemDedupCellBlockRowsConf, "4096").toInt
-    require(blockRows >= 1, s"$SemDedupCellBlockRowsConf must be >= 1")
-    blockRows
-  }
-
   /** Multi-member cells of a skinny `(id, cell_id)` assignment with their
     * block count `⌈n/blockRows⌉` — the candidate-cell set both sweep
     * drivers start from. */
-  private def multiCellBlocks(asg: DataFrame, blockRows: Int): DataFrame =
+  private def multiCellBlocks(asg: DataFrame, blockRows: Int): DataFrame = {
+    require(blockRows >= 1, s"blockRows must be >= 1, got $blockRows")
     asg.groupBy("cell_id").agg(count(lit(1)).as("_n"))
       .where(col("_n") >= 2)
       .select(col("cell_id"),
         ((col("_n") + (blockRows - 1)) / blockRows).cast("int").as("_nblk"))
+  }
 
   /** Attach each surviving member's vector + norm and its block id.
     * `broadcastAsg` flips which side of the id join ships: the one-shot
@@ -161,15 +157,14 @@ object VectorQueries {
     * fires on a 30 min cadence — longer than a whole chunk). Returns
     * `nChunks`. */
   def semDedupPairsChunked(cells: DataFrame, vectors: DataFrame,
-      idCol: String, vecCol: String, simThreshold: Double, nChunks: Int)
-      (sink: (DataFrame, Int) => Unit): Int = {
+      idCol: String, vecCol: String, simThreshold: Double, nChunks: Int,
+      blockRows: Int = CellBlockRows)(sink: (DataFrame, Int) => Unit): Int = {
     require(nChunks >= 1, s"nChunks must be >= 1, got $nChunks")
     if (nChunks == 1) {
-      sink(semDedupPairs(cells, vectors, idCol, vecCol, simThreshold), 0)
+      sink(semDedupPairs(cells, vectors, idCol, vecCol, simThreshold, blockRows), 0)
       return 1
     }
     val asg = cells.select(col("id"), col("cell_id"))
-    val blockRows = cellBlockRows(cells)
     (0 until nChunks).foreach { c =>
       // the multi-cell agg reruns per chunk: it is a skinny-table scan
       // (O(corpus) longs), noise next to the chunk's quadratic sweep, and
@@ -187,19 +182,24 @@ object VectorQueries {
   /** Chunk count for [[semDedupPairsChunked]]: enough chunks that one
     * chunk's self-join shuffle (members/nChunks × row width × both sides
     * with explode headroom, ×3) fits [[SemDedupChunkShuffleMaxBytesConf]],
-    * AND one chunk's skinny broadcast stays under
-    * [[SemDedupBroadcastAsgMaxRows]] rows. Both inputs are
-    * driver-known (`memberRows` from the skinny multi-cell count the
-    * caller already pays, `dim` from the model/shape) — no plan-stats
-    * guessing (the r9 byte-stats lesson). */
+    * AND one chunk's skinny broadcast assignment stays under the id-list
+    * cap of `budget` ([[MemoryBudget.idListMaxRows]], 8 Mi rows at the 1g
+    * default; a cap of 0 counts as 1 row, one member per chunk). The cap
+    * matters at NARROW widths, where the byte bound alone would allow a
+    * chunk whose member count (≈ bytes/width) is itself too many rows to
+    * broadcast (26M at 64-d × 8 GB). Both inputs are driver-known
+    * (`memberRows` from the skinny multi-cell count the caller already
+    * pays, `dim` from the model/shape) — no plan-stats guessing (the r9
+    * byte-stats lesson). */
   def semDedupChunkCount(memberRows: Long, dim: Int,
-      spark: org.apache.spark.sql.SparkSession): Int = {
+      spark: org.apache.spark.sql.SparkSession, budget: Long = MemoryBudget.current): Int = {
     val maxBytes = spark.conf.get(SemDedupChunkShuffleMaxBytesConf,
       DefaultSemDedupChunkShuffleMaxBytes.toString).toLong
     require(maxBytes > 0, s"$SemDedupChunkShuffleMaxBytesConf must be > 0")
     val sliceBytes = graft.engine.LopqSearcher.satMul(memberRows, (4L * dim + 48L) * 3L)
     val byBytes = (sliceBytes + maxBytes - 1) / maxBytes
-    val byAsg = (memberRows + SemDedupBroadcastAsgMaxRows - 1) / SemDedupBroadcastAsgMaxRows
+    val asgMax = math.max(1L, MemoryBudget.idListMaxRows(budget))
+    val byAsg = (memberRows + asgMax - 1) / asgMax
     math.max(1L, math.max(byBytes, byAsg)).min(1 << 20).toInt
   }
 
@@ -534,7 +534,7 @@ object VectorQueries {
   }
 
   /** Block size for [[semDedupPairs]]' skewed-cell decomposition. */
-  val SemDedupCellBlockRowsConf = "spark.graft.semdedup.cellBlockRows"
+  val CellBlockRows = 4096
 
   /** Conf: target bound on ONE chunk's shuffled bytes in
     * [[semDedupPairsChunked]] — size to the cluster's (machine's) shuffle
@@ -542,11 +542,6 @@ object VectorQueries {
   val SemDedupChunkShuffleMaxBytesConf = "spark.graft.semdedup.chunkShuffleMaxBytes"
   val DefaultSemDedupChunkShuffleMaxBytes: Long = 8L << 30
 
-  /** Cap on the rows of one chunk's broadcast skinny assignment —
-    * matters at NARROW widths, where the byte bound alone would allow a
-    * chunk whose member count (≈ bytes/width) is itself too many rows to
-    * broadcast (26M at 64-d × 8 GB). */
-  val SemDedupBroadcastAsgMaxRows: Long = 8L << 20
   private val NumTables = 4  // LSH: L hash tables ...
   private val BitsPerTable = 4 // ... of k sign bits each
 

@@ -3,6 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.MemoryBudget
 import graft.engine.AnnJoinPlan
 import graft.engine.AnnJoinPlan.{Exact, Rerank, Ship}
 
@@ -80,14 +81,14 @@ class AnnJoinPlanSpec extends AnyFunSuite {
       val exactOk = a.exactShape != Exact.BroadcastQvec || b.exactShape == Exact.BroadcastQvec || {
         val rowBytes = 4L * in.dim + 24L
         val matrix = in.nProbes * (4L * in.dim + 96L)
-        b.candBound <= AnnJoinPlan.broadcastCandMaxRows(hi) &&
-          b.candBound * rowBytes <= math.max(matrix, AnnJoinPlan.fatShuffleFloorBytes(hi))
+        b.candBound <= MemoryBudget.broadcastCandMaxRows(hi) &&
+          b.candBound * rowBytes <= math.max(matrix, MemoryBudget.fatShuffleFloorBytes(hi))
       }
       Prop(shipRank(b.shipMode) <= shipRank(a.shipMode) &&
         (!a.qsideBroadcast || b.qsideBroadcast) &&
         rerankRank(b.rerankMode) <= rerankRank(a.rerankMode) &&
         exactOk && a.cellsPushed == b.cellsPushed && a.balanced == b.balanced &&
-        AnnJoinPlan.sliceMemoBytes(lo) <= AnnJoinPlan.sliceMemoBytes(hi)) :|
+        MemoryBudget.sliceMemoBytes(lo) <= MemoryBudget.sliceMemoBytes(hi)) :|
         s"budget $lo → $hi: $a → $b"
     }
     val res = Test.check(params(400, 13L), prop)

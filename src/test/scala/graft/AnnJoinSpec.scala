@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.MemoryBudget
 import graft.engine.{AnnJoinPlan, LopqIndexStore, LopqParams, LopqSearcher, LopqTrainer}
 import graft.engine.AnnJoinPlan.{Exact, Rerank, Ship}
 import graft.ops.Tables
@@ -361,7 +362,7 @@ class AnnJoinSpec extends SparkSpec {
   }
 
   /** r9: the slice memo is BOUNDED — past the budget's
-    * [[AnnJoinPlan.sliceMemoBytes]] it resets to the current batch's keys
+    * [[MemoryBudget.sliceMemoBytes]] it resets to the current batch's keys
     * instead of accreting toward the full tensor. At a zero budget every
     * call resets; results must be unchanged (the cap is a memory bound,
     * never a correctness knob). */
@@ -501,7 +502,7 @@ class AnnJoinSpec extends SparkSpec {
     def run(force: AnnJoinPlan => AnnJoinPlan): (Rows, AnnJoinPlan) = {
       val (df, plan) = LopqSearcher.annJoinPlanned(built, queriesOf(nProbes), "q_id",
         "embedding", e, "vec_id", "embedding", Quota, k = 1, rerankK = RerankK,
-        AnnJoinPlan.budgetOf(spark), force.andThen(_.copy(qsideBroadcast = false)))
+        MemoryBudget.budgetOf(spark), force.andThen(_.copy(qsideBroadcast = false)))
       (rowsOf(df), plan)
     }
     val sc = spark.sparkContext
@@ -527,7 +528,7 @@ class AnnJoinSpec extends SparkSpec {
       }
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-    assert(AnnJoinPlan.budgetOf(spark) === DefaultBudget)
+    assert(MemoryBudget.budgetOf(spark) === DefaultBudget)
   }
 
   /** r12 (VERDICT r11 "What's wrong #1b" + #2): a repeated q_id must fail

@@ -130,21 +130,18 @@ class CatalogSpec extends SparkSpec {
     * blocks, so every emitted pair crosses a block boundary) has to
     * reproduce the plain sweep's pair set, cosines included. */
   test("semDedupPairs blocked ≡ plain at a forced 1-row cell block size") {
-    val key = graft.ops.VectorQueries.SemDedupCellBlockRowsConf
     val h = graft.ops.EngineOps.index(spark, sf)
     val cells = h.codes.select(col("id"),
       (col("coarse0").cast("long") * h.model.v + col("coarse1")).as("cell_id"))
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    def run(): Set[(Long, Long, Long, Double)] =
-      graft.ops.VectorQueries.semDedupPairs(cells, emb, "vec_id", "embedding")
+    def run(blockRows: Int): Set[(Long, Long, Long, Double)] =
+      graft.ops.VectorQueries.semDedupPairs(cells, emb, "vec_id", "embedding",
+        blockRows = blockRows)
         .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
           r.getAs[Long]("cell_id"), r.getAs[Double]("cos_sim"))).toSet
-    val plain = run()
-    spark.conf.set(key, "1")
-    try {
-      val blocked = run()
-      assert(blocked === plain)
-    } finally spark.conf.unset(key)
+    val plain = run(graft.ops.VectorQueries.CellBlockRows)
+    val blocked = run(1)
+    assert(blocked === plain)
   }
 
   /** Randomized brute-force model check for the whole semdedup family:
@@ -162,16 +159,15 @@ class CatalogSpec extends SparkSpec {
     * has ~zero mass). */
   test("semdedup family matches a brute-force model on random corpora") {
     graft.functions.GraftFunctions.register(spark)
-    val key = graft.ops.VectorQueries.SemDedupCellBlockRowsConf
     val rnd = new scala.util.Random(4242L)
     import spark.implicits._
     var multiTrials = 0
-    try (1 to 5).foreach { trial =>
+    (1 to 5).foreach { trial =>
       val n = 40 + rnd.nextInt(60)
       val dim = 4 + rnd.nextInt(5)
       val nCells = 1 + rnd.nextInt(6)
       val th = 0.3 + rnd.nextDouble() * 0.5
-      spark.conf.set(key, (1 + rnd.nextInt(8)).toString)
+      val blockRows = 1 + rnd.nextInt(8)
       val rows = (0 until n).map { i =>
         (i.toLong, rnd.nextInt(nCells).toLong,
           Array.fill(dim)(rnd.nextGaussian().toFloat))
@@ -197,7 +193,7 @@ class CatalogSpec extends SparkSpec {
       def pairsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
       val full = graft.ops.VectorQueries.semDedupPairs(
-        cells, vecs, "vec_id", "embedding", th)
+        cells, vecs, "vec_id", "embedding", th, blockRows)
       assert(pairsOf(full) === brute, s"full sweep, trial $trial")
       // cosines agree with the double model to rounding
       full.collect().foreach { r =>
@@ -241,7 +237,7 @@ class CatalogSpec extends SparkSpec {
           assert(math.abs(r.getAs[Double]("cos_sim") - cos(rows(a)._3, rows(b)._3)) < 1e-5)
         }
       }
-    } finally spark.conf.unset(key)
+    }
     assert(multiTrials > 0, "no trial exercised the multi-probe batch side")
   }
 
@@ -315,15 +311,12 @@ class CatalogSpec extends SparkSpec {
         }
         val want = edges.flatMap(p => Seq(p._1, p._2)).distinct
           .map(v => (v, find(v))).toSet
-        val key = graft.ops.TextOps.CcBroadcastMaxBytesConf
         val forceShuffle = trial % 2 == 0
-        if (forceShuffle) spark.conf.set(key, "1")
-        try {
-          val got = graft.ops.TextOps
-            .minLabelComponents(edges.toSeq.toDF("id_a", "id_b"))
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-          assert(got === want, s"trial $trial (forceShuffle=$forceShuffle)")
-        } finally spark.conf.unset(key)
+        val budget = if (forceShuffle) 0L else graft.core.MemoryBudget.budgetOf(spark)
+        val got = graft.ops.TextOps
+          .minLabelComponents(edges.toSeq.toDF("id_a", "id_b"), budget)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(got === want, s"trial $trial (forceShuffle=$forceShuffle)")
       }
     }
   }

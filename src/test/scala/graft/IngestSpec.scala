@@ -825,6 +825,41 @@ class IngestSpec extends SparkSpec {
     assert(oneJobs <= 20 && oneJobs < refJobs, s"one pass ran $oneJobs jobs, the earlier form $refJobs")
   }
 
+  test("one screened text append counts its candidate ids once") {
+    // the screen gates each build side on one count: the batch band rows,
+    // then the candidate ids, once for both shingle slices (the corpus
+    // slice and the batch slice each counted them before)
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import graft.ops.{TextScreen, TextSigStore}
+    val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    val corpus = docs.where(col("doc_id") % 5 =!= 0)
+    val batch = docs.where(col("doc_id") % 5 === 0).localCheckpoint()
+    val dir = s"$root/text_jobs"
+    del(dir)
+    TextSigStore.build(spark, dir, corpus)
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.description.startsWith("count at") =>
+          counts.add(x.description)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (report, t) = try Probe.tally(spark, "text-append-jobs", quiet = true)(
+      TextScreen.screenAndAppend(spark, dir, corpus, batch, "u001"))
+    finally spark.sparkContext.removeSparkListener(listener)
+    del(dir)
+    assert(report.applied)
+    import scala.jdk.CollectionConverters._
+    assert(counts.size === 2, s"gate counts: ${counts.asScala.mkString(", ")}")
+    info(s"text append: ${t.jobs.size} jobs")
+    // measured at sf0.001 on 4 cores: 24 jobs; 27 (three count actions)
+    // while each shingle slice counted the candidate ids
+    assert(t.jobs.size <= 25, s"a text append ran ${t.jobs.size} jobs")
+  }
+
   /** Each append and each screen reads the slim model and the PCA front
     * through the dir's ONE cached broadcast pair, and each append
     * broadcasts the batch's rotation slices per call; a streaming session

@@ -38,6 +38,11 @@ class ProbeHarnessSpec extends SparkSpec {
     Seq("ProbeRelease", "ProbeTextDedup", "MaintainRelease").foreach(main =>
       assert(!ex.getMessage.contains(main), ex.getMessage))
     assert(spark.conf.getOption(key).isEmpty, "a rejected arg sets no conf at all")
+    // the removed CC broadcast and slice-LRU keys derive from the same budget
+    val cc = intercept[IllegalArgumentException](Probe.confArgs(spark,
+      Seq(s"conf:$key=1", "conf:spark.graft.cc.broadcastMaxBytes=0")))
+    assert(cc.getMessage.contains("spark.driver.maxResultSize"), cc.getMessage)
+    assert(spark.conf.getOption(key).isEmpty, "a rejected arg sets no conf at all")
     val force = intercept[IllegalArgumentException](
       Probe.run(spark, Array("annjoin", "v1", "1", "1", "force:shipMode=px")))
     assert(force.getMessage.contains("tables|halvesDict|projection"), force.getMessage)

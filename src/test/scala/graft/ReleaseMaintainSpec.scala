@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.TestSparkConf
 import org.apache.spark.sql.functions._
 
 import graft.engine.{LopqIndexStore, ReleaseShape}
@@ -24,9 +25,13 @@ class ReleaseMaintainSpec extends SparkSpec {
     val workDir = shape.dir + "_maintain_spec"
     LopqIndexStore.cloneEmpty(spark, shape.dir, workDir)
     // give the LRU the v2 ingest working set (a 2048-row release batch
-    // touches most of the 2×1024 clusters; the default 64 MB cap would
-    // thrash at exactly this cadence — the conf exists for this)
-    spark.conf.set(LopqIndexStore.SliceCacheBytesConf, (512L << 20).toString)
+    // touches most of the 2×1024 clusters; the 64 MiB LRU of the 1g
+    // default would thrash at exactly this cadence): the LRU is B/8, so an
+    // 8g maxResultSize gives it 512 MiB. The clone's LRU is sized when its
+    // first append reads a slice, below.
+    val sc = spark.sparkContext
+    val saved = TestSparkConf.get(sc, "spark.driver.maxResultSize")
+    TestSparkConf.set(sc, "spark.driver.maxResultSize", "8g")
     try {
       import spark.implicits._
       val sh = shape // local copy: the row lambda must not capture the suite
@@ -64,7 +69,10 @@ class ReleaseMaintainSpec extends SparkSpec {
       assert(hitRate >= 0.6,
         f"slice LRU ineffective at steady state: hit rate ${hitRate * 100}%.1f%%")
     } finally {
-      spark.conf.unset(LopqIndexStore.SliceCacheBytesConf)
+      saved match {
+        case Some(v) => TestSparkConf.set(sc, "spark.driver.maxResultSize", v)
+        case None => TestSparkConf.remove(sc, "spark.driver.maxResultSize")
+      }
       val p = new org.apache.hadoop.fs.Path(workDir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       ()

@@ -482,23 +482,21 @@ class TextScreenSpec extends SparkSpec {
   test("screenPairs past the broadcast byte gate: the shuffle-join fallback " +
       "is pair-identical (the cluster regime, forced)") {
     // VERDICT r15 next-round #7: the screen's batch band rows broadcast
-    // under the byte gate; past it (a cluster-regime batch, or a tiny
-    // forced cap) every join falls back to shuffles — same pairs, only
-    // the physical shape moves
+    // under the map cap; past it (a cluster-regime batch, or a budget of
+    // 0) every join falls back to shuffles — same pairs, only the physical
+    // shape moves
     val all = corpusOf(400).localCheckpoint()
     val (corpus, batch) = splitOf(all)
     val p = TextOps.lshParams(spark)
     val sigs = TextOps.minhashSigsOf(corpus, p).localCheckpoint()
-    val byDefault = pairSet(TextScreen.screenPairs(corpus, sigs, batch))
-    // the screen self-reports which physical shape the gated band join
-    // took (the annjoin last.* regime-note discipline)
-    assert(spark.conf.get(TextScreen.LastBandJoinNote) === "broadcast")
-    spark.conf.set(TextOps.CcBroadcastMaxBytesConf, "0")
-    try {
-      val byShuffle = pairSet(TextScreen.screenPairs(corpus, sigs, batch))
-      assert(byShuffle === byDefault)
-      assert(spark.conf.get(TextScreen.LastBandJoinNote) === "shuffle")
-    } finally spark.conf.unset(TextOps.CcBroadcastMaxBytesConf)
+    // the screen returns which physical shape the gated band join took
+    val byDefault = TextScreen.screenImpl(corpus, sigs, batch)
+    assert(byDefault.bandsBroadcast, "the default budget broadcasts the band rows")
+    val byShuffle = TextScreen.screenImpl(corpus, sigs, batch, budget = 0L)
+    assert(pairSet(byShuffle.pairs) === pairSet(byDefault.pairs))
+    assert(!byShuffle.bandsBroadcast, "a budget of 0 shuffles the band join")
+    assert(pairSet(TextScreen.screenPairs(corpus, sigs, batch, budget = 0L))
+      === pairSet(byDefault.pairs))
   }
 
   test("simhash-tier store: survivors by the UNION drop rule (jaccard OR " +
@@ -707,25 +705,5 @@ class TextScreenSpec extends SparkSpec {
     TextSigStore.compact(spark, dir)
     assert(content() === c0, "heal must discard, never promote, a partial tier")
     assert(!content().exists(_._1 == 999999L))
-  }
-
-  test("legacy CC broadcast row-cap conf still honored when the byte conf is unset") {
-    assert(TextOps.ccBroadcastRowCap(spark) ===
-      TextOps.DefaultCcBroadcastMaxBytes / TextOps.CcBroadcastBytesPerRow)
-    assert(TextOps.ccBroadcastRowCap(spark, TextOps.CcBroadcastBytesPerIdRow) ===
-      TextOps.DefaultCcBroadcastMaxBytes / TextOps.CcBroadcastBytesPerIdRow)
-    spark.conf.set(TextOps.LegacyCcBroadcastMaxRowsConf, "12345")
-    try {
-      // the legacy value is already a ROW count: applied at any per-row price
-      assert(TextOps.ccBroadcastRowCap(spark) === 12345L)
-      assert(TextOps.ccBroadcastRowCap(spark,
-        TextOps.CcBroadcastBytesPerIdRow) === 12345L)
-      // the byte conf, when set, wins over the legacy key
-      spark.conf.set(TextOps.CcBroadcastMaxBytesConf, "6400")
-      assert(TextOps.ccBroadcastRowCap(spark) === 100L)
-    } finally {
-      spark.conf.unset(TextOps.LegacyCcBroadcastMaxRowsConf)
-      spark.conf.unset(TextOps.CcBroadcastMaxBytesConf)
-    }
   }
 }
