@@ -26,15 +26,13 @@ final class GraftApi(spark: SparkSession, sfDir: String,
   private def vectors: DataFrame = Tables(spark, sfDir, "embeddings")
 
   /** Conf-driven searcher selection, like the reference's `get_searcher`
-    * registry dispatch. `lopq` and `lopq_slim` run the same serve plan over
-    * the SAME persisted index; `lopq_slim` reads rotation slices per query
-    * instead of holding the tensor (the release-magnitude path). */
+    * registry dispatch. `lopq` and `lopq_slim` are one searcher: the
+    * session's handle over the persisted index, reading rotation slices per
+    * query instead of holding the tensor (the release-magnitude path); both
+    * names stay accepted. */
   private def searcher: AnnIndex = searcherName match {
-    case "lopq" =>
-      AnnIndexes.lopq(EngineOps.index(spark, sfDir), vectors, "vec_id", "embedding")
-    case "lopq_slim" =>
-      EngineOps.index(spark, sfDir) // ensure built + persisted
-      AnnIndexes.lopqSlim(EngineOps.slimIndex(spark, sfDir), vectors, "vec_id", "embedding")
+    case "lopq" | "lopq_slim" =>
+      AnnIndexes.lopqSlim(EngineOps.index(spark, sfDir), vectors, "vec_id", "embedding")
     case "brute" => AnnIndexes.brute(vectors, "vec_id", "embedding")
     case other => throw new IllegalArgumentException(s"unknown searcher: $other")
   }
@@ -69,8 +67,7 @@ final class GraftApi(spark: SparkSession, sfDir: String,
     * shape vs ~0.35 s/query looped (`annjoin_release_v2` bench row). */
   def searchBulk(queries: DataFrame, qIdCol: String, vecCol: String, k: Int,
       quota: Int = 200, rerankK: Int = 50): DataFrame = {
-    EngineOps.index(spark, sfDir) // ensure built + persisted
-    graft.engine.LopqSearcher.annJoin(EngineOps.slimIndex(spark, sfDir), queries, qIdCol, vecCol,
+    graft.engine.LopqSearcher.annJoin(EngineOps.index(spark, sfDir), queries, qIdCol, vecCol,
         vectors, "vec_id", "embedding", quota, k, rerankK)
       .select(col("q_id"), col("rank"), col("id").as("n_id"),
         floor(col("exact_dist") * 1e6 + lit(0.5)).cast("long").as("micro"))
@@ -172,8 +169,7 @@ final class GraftApi(spark: SparkSession, sfDir: String,
       rerankK: Int = 128,
       simThreshold: Double = graft.ops.VectorQueries.NearDupSimThreshold,
       chunkRows: Long = 0L): DataFrame = {
-    EngineOps.index(spark, sfDir) // ensure built + persisted
-    val slim = EngineOps.slimIndex(spark, sfDir)
+    val slim = EngineOps.index(spark, sfDir)
     val e = vectors
     val queries = e.select(col("vec_id").as("q_id"), col("embedding"))
     graft.engine.LopqSearcher.annJoinChunked(slim, queries, "q_id", "embedding",
@@ -230,9 +226,9 @@ final class GraftApi(spark: SparkSession, sfDir: String,
     if (multiProbe)
       requireOneShotFits(
         e.count() * graft.engine.LopqIndexStore.multiProbeCells(spark),
-        h.model.dim)
+        h.slim.dim)
     val cells = dedupCells(h, multiProbe, e)
-    if (!multiProbe) requireOneShotFits(cells.count(), h.model.dim)
+    if (!multiProbe) requireOneShotFits(cells.count(), h.slim.dim)
     val edges = graft.ops.VectorQueries
       .semDedupPairs(cells, e, "vec_id", "embedding", simThreshold)
       .select("id_a", "id_b").localCheckpoint()
@@ -256,7 +252,7 @@ final class GraftApi(spark: SparkSession, sfDir: String,
 
   /** The sweep's skinny assignment: the persisted codes (single-cell, the
     * published SemDeDup trade) or the model's top-P probe cells. */
-  private def dedupCells(h: graft.engine.LopqIndex, multiProbe: Boolean,
+  private def dedupCells(h: graft.engine.LopqSlimIndex, multiProbe: Boolean,
       e: DataFrame): DataFrame = {
     if (multiProbe)
       // pin the encoded assignment: unlike the persisted codes this is a
@@ -268,7 +264,7 @@ final class GraftApi(spark: SparkSession, sfDir: String,
         "vec_id", "embedding").localCheckpoint()
     else
       h.codes.select(col("id"),
-        (col("coarse0").cast("long") * h.model.v + col("coarse1")).as("cell_id"))
+        (col("coarse0").cast("long") * h.slim.v + col("coarse1")).as("cell_id"))
   }
 
   /** [[semDedupCorpus]] with the sweep CHUNKED by cell group
@@ -351,7 +347,7 @@ final class GraftApi(spark: SparkSession, sfDir: String,
       val cells = dedupCells(h, multiProbe, e)
       val n = if (nChunks > 0) nChunks
         else graft.ops.VectorQueries.semDedupChunkCount(
-          cells.count(), h.model.dim, spark)
+          cells.count(), h.slim.dim, spark)
       if (fs.exists(drained)) fs.delete(drained, false) // stale: re-draining
       graft.ops.VectorQueries.semDedupPairsChunked(cells, e, "vec_id",
           "embedding", simThreshold, n) { (df, c) =>
@@ -470,7 +466,7 @@ final class GraftApi(spark: SparkSession, sfDir: String,
     }
     val h = EngineOps.index(spark, sfDir)
     val kept = graft.ops.VectorQueries.protoPrune(surv, "vec_id",
-        "embedding", h.model.slim, keepFrac, h.pca)
+        "embedding", h.slim, keepFrac, h.pca)
       .where(col("keep"))
       .select(col("id"), col("cell_id"), col("proto_dist"))
       .localCheckpoint()
@@ -491,6 +487,6 @@ final class GraftApi(spark: SparkSession, sfDir: String,
     // pca=None today, so this is armor, not a behavior change)
     val h = EngineOps.index(spark, sfDir)
     graft.ops.VectorQueries.protoPrune(vectors, "vec_id", "embedding",
-      h.model.slim, keepFrac, h.pca)
+      h.slim, keepFrac, h.pca)
   }
 }

@@ -264,7 +264,7 @@ object Bench {
     val releaseResults = Seq(
       releaseRow("release_ann", () => {
         val h = ReleaseShape.ensure(spark)
-        qid => ReleaseShape.search(spark, h, qid)
+        qid => ReleaseShape.searchSlim(spark, ReleaseShape.V1, h, qid)
       }),
       releaseRow("release_ann_v2", () => {
         val idx = ReleaseShape.ensureSlim(spark, ReleaseShape.V2)

@@ -17,6 +17,10 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // a whole-stage codegen compile failure throws instead of falling
+      // back to interpreted evaluation: the query's output goes missing and
+      // the oracle count drops below the catalog size
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

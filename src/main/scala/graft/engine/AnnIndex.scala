@@ -43,14 +43,14 @@ final class BruteForceIndex(vectors: DataFrame, idCol: String, vecCol: String)
 
 /** The LOPQ ANN engine behind the plugin trait: persisted partition-pruned
   * codes + ADC + exact rerank (ref `searcher_lopqhbase.py:862-912`) through
-  * [[LopqSearcher.searchSlim]]. Registered as `lopq` over a full-model
-  * handle ([[LopqIndex.serving]], resident rotation tensor) and as
-  * `lopq_slim` over a [[LopqIndexStore.loadSlim]] handle (the
-  * release-MAGNITUDE shape: per-query slice fetch, see [[SlimLopqModel]]).
-  * A facade user switches searchers by name, exactly like flipping the
-  * reference's searcher conf. */
-final class LopqSlimAnnIndex(val name: String, index: LopqSlimIndex, vectors: DataFrame,
+  * [[LopqSearcher.searchSlim]], over a [[LopqSlimIndex]] handle — as
+  * [[LopqIndexStore.loadSlim]] gives it, the release-MAGNITUDE shape
+  * (per-query slice fetch, see [[SlimLopqModel]]). A facade user switches
+  * searchers by name, exactly like flipping the reference's searcher
+  * conf. */
+final class LopqSlimAnnIndex(index: LopqSlimIndex, vectors: DataFrame,
     idCol: String, vecCol: String, quota: Int, rerankK: Int) extends AnnIndex {
+  val name = "lopq_slim"
   def count: Long = index.cellCounts.total
   def search(query: Array[Float], k: Int): DataFrame =
     LopqSearcher.searchSlim(index, vectors, idCol, vecCol, query, quota, k, rerankK)
@@ -62,10 +62,7 @@ final class LopqSlimAnnIndex(val name: String, index: LopqSlimIndex, vectors: Da
 object AnnIndexes {
   def brute(vectors: DataFrame, idCol: String, vecCol: String): AnnIndex =
     new BruteForceIndex(vectors, idCol, vecCol)
-  def lopq(index: LopqIndex, vectors: DataFrame, idCol: String, vecCol: String,
-      quota: Int = 200, rerankK: Int = 50): AnnIndex =
-    new LopqSlimAnnIndex("lopq", index.serving, vectors, idCol, vecCol, quota, rerankK)
   def lopqSlim(index: LopqSlimIndex, vectors: DataFrame, idCol: String,
       vecCol: String, quota: Int = 200, rerankK: Int = 50): AnnIndex =
-    new LopqSlimAnnIndex("lopq_slim", index, vectors, idCol, vecCol, quota, rerankK)
+    new LopqSlimAnnIndex(index, vectors, idCol, vecCol, quota, rerankK)
 }

@@ -16,12 +16,16 @@ import graft.core.{CellHistogram, MemoryBudget, UpdateLog}
   * accessors instead of falling back to interpreted mode. */
 private[engine] case class ModelRow(part: String, split: Int, a: Int, b: Int, vec: Seq[Double])
 
-/** A loaded LOPQ index holding the FULL model (+ optional PCA front-end),
-  * the codes table READ FROM DISK (partitioned so every query's
-  * visited-cell filter becomes on-disk partition pruning), and the per-cell
-  * histogram that drives the multisequence quota walk. It serves through
-  * [[serving]]: the same handle as a [[LopqSlimIndex]], reading its
-  * rotation slices from the resident tensor.
+/** The loaded LOPQ index handle — the one serve/annJoin input: the model
+  * without its rotation tensor (+ optional PCA front-end), the codes table
+  * READ FROM DISK (partitioned so every query's visited-cell filter becomes
+  * on-disk partition pruning), and the per-cell histogram that drives the
+  * multisequence quota walk. `rotations` says where the two rotation slices
+  * of each visited cell come from: [[RotationSource.Fetched]] (what
+  * [[LopqIndexStore.loadSlim]] gives — the release-magnitude shape,
+  * O(visited clusters) per query instead of O(V·(D/2)²) resident, see
+  * [[SlimLopqModel]]) or [[RotationSource.Resident]] (a copy of the handle
+  * over the tensor [[LopqIndexStore.loadModel]] reads).
   *
   * `cellBuckets` = 0: codes are `partitionBy("cell_id")` — one directory
   * per populated cell, right while V² is small. At the release shape
@@ -30,28 +34,6 @@ private[engine] case class ModelRow(part: String, split: Int, a: Int, b: Int, ve
   * ~B directories, each holding many cells, pruned by the bucket filter at
   * the directory level and by parquet min/max row-group stats + the pushed
   * `cell_id` IN-filter within. */
-final case class LopqIndex(
-    model: LopqModel,
-    pca: Option[LopqPca],
-    codes: DataFrame,
-    cellCounts: CellHistogram,
-    dir: String,
-    cellBuckets: Int = 0) {
-  def codesPath: String = s"$dir/codes"
-
-  /** The serve handle over this index: same codes, histogram, PCA, dir and
-    * layout, slices from the resident tensor (no I/O). Lazy, so its
-    * broadcasts and slice memo live as long as this handle. */
-  @transient lazy val serving: LopqSlimIndex = LopqSlimIndex(model.slim, pca, codes,
-    cellCounts, dir, cellBuckets, RotationSource.Resident(model.rotations))
-}
-
-/** A servable index handle — the one serve/annJoin input. `rotations` says
-  * where the two rotation slices of each visited cell come from:
-  * [[RotationSource.Fetched]] (what [[LopqIndexStore.loadSlim]] gives — the
-  * release-magnitude shape, O(visited clusters) per query instead of
-  * O(V·(D/2)²) resident, see [[SlimLopqModel]]) or
-  * [[RotationSource.Resident]] ([[LopqIndex.serving]]). */
 final case class LopqSlimIndex(
     slim: SlimLopqModel,
     pca: Option[LopqPca],
@@ -528,7 +510,7 @@ object LopqIndexStore {
   def build(spark: SparkSession, dir: String, model: LopqModel, pca: Option[LopqPca],
       codes: DataFrame, params: LopqParams, n: Long, dim: Int,
       initialUpdateId: String = "0000-00-00_full_build", // sorts below any real (timestamp-prefixed) update id
-      cellBuckets: Int = 0): LopqIndex = {
+      cellBuckets: Int = 0): LopqSlimIndex = {
     import spark.implicits._
     writeCodes(dir, codes, cellBuckets, SaveMode.Overwrite)
     saveModel(spark, dir, model, pca)
@@ -537,7 +519,7 @@ object LopqIndexStore {
     Seq((initialUpdateId, n)).toDF("update_id", "n_rows")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/manifest")
     writeMeta(dir, metaFor(params, n, dim, pca, cellBuckets))
-    load(spark, dir).get
+    loadSlim(spark, dir).get
   }
 
   /** Initialize an EMPTY index at `dir` (model + empty manifest, no codes
@@ -719,23 +701,20 @@ object LopqIndexStore {
         bucketsOf(meta), RotationSource.Fetched(spark, dir))
     }
 
-  /** [[loadSlim]] plus the rotation tensor: the full-model handle. */
-  def load(spark: SparkSession, dir: String): Option[LopqIndex] =
-    loadSlim(spark, dir).map(full(spark, _))
-
-  /** `h` with the rotation tensor, read from the `part = 'rot'` files alone
-    * and assembled over `h.slim`'s arrays. */
-  private def full(spark: SparkSession, h: LopqSlimIndex): LopqIndex = {
-    val rotM = spark.read.parquet(s"${h.dir}/model")
+  /** The full model of the index at `dir`: [[loadModelSlim]]'s arrays plus
+    * the rotation tensor, read from the `part = 'rot'` files alone. The one
+    * full-model read — for the callers that need the whole tensor (the
+    * oracle dump, a resident-tensor handle); serving never calls it. */
+  def loadModel(spark: SparkSession, dir: String): LopqModel = {
+    val m = loadModelSlim(spark, dir)._1
+    val rotM = spark.read.parquet(s"$dir/model")
       .where(col("part") === "rot")
       .select("split", "a", "b", "vec").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) ->
         r.getSeq[Double](3).toArray.map(_.toFloat))
       .toMap
-    val m = h.slim
-    val model = LopqModel(m.coarse,
+    LopqModel(m.coarse,
       Array.tabulate(2, m.v, m.halfDim)((s, c, k) => rotM((s, c, k))), m.mus, m.subquantizers)
-    LopqIndex(model, h.pca, h.codes, h.cellCounts, h.dir, h.cellBuckets)
   }
 
   private def healedCounts(spark: SparkSession, dir: String,
@@ -766,11 +745,6 @@ object LopqIndexStore {
   def loadSlimIfValid(spark: SparkSession, dir: String, params: LopqParams, n: Long,
       expectPcaDims: Int = 0): Option[LopqSlimIndex] =
     if (fingerprintOk(dir, params, n, expectPcaDims)) loadSlim(spark, dir) else None
-
-  /** [[loadSlimIfValid]] plus the rotation tensor. */
-  def loadIfValid(spark: SparkSession, dir: String, params: LopqParams, n: Long,
-      expectPcaDims: Int = 0): Option[LopqIndex] =
-    loadSlimIfValid(spark, dir, params, n, expectPcaDims).map(full(spark, _))
 
   // ------------------------------------------- incremental maintenance
 

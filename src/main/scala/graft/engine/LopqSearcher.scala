@@ -208,8 +208,8 @@ object LopqSearcher {
     * the tensor — the only O(V·(D/2)²) model component, 536 MB at the
     * reference's release constants — is NEVER resident, and each query
     * fetches O(distinct visited clusters · (D/2)²) bytes, independent of V;
-    * on [[LopqIndex.serving]] they index the resident tensor. Same plan,
-    * same doubles either way.
+    * on a handle whose source is [[RotationSource.Resident]] they index the
+    * resident tensor. Same plan, same doubles either way.
     *
     * With `pca` set (the release `lopq_pca` shape), the approximate stage
     * runs in PCA space — `apply_PCA` on the query, ref

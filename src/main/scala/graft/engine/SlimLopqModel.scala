@@ -30,6 +30,7 @@ final case class SlimLopqModel(
   val numCoarseSplits: Int = coarse.length // always 2
   val v: Int = coarse(0).length
   val halfDim: Int = coarse(0)(0).length
+  val dim: Int = halfDim * numCoarseSplits
   val numFineSplits: Int = subquantizers(0).length // M/2
   val m: Int = numFineSplits * numCoarseSplits
 

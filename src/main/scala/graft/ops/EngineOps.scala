@@ -7,7 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{CellMath, VectorOps}
-import graft.engine.{LopqIndex, LopqIndexStore, LopqParams, LopqPca, LopqSearcher, LopqSlimIndex, LopqTrainer}
+import graft.engine.{LopqIndexStore, LopqModel, LopqParams, LopqPca, LopqSearcher, LopqSlimIndex,
+  LopqTrainer, RotationSource}
 import graft.functions.VectorFunctions._
 
 /** The LOPQ ANN engine surface as catalog queries: train → encode →
@@ -59,38 +60,33 @@ object EngineOps {
 
   // ------------------------------------------------------------ index
 
-  /** One persisted index per sfDir: load-if-valid else train+build, exactly
-    * the reference's "load pickled model else train" startup
-    * (`searcher_lopqhbase.py:104-223`). A fresh session SERVES WITHOUT
-    * RETRAINING — round 2 retrained per session (58 s at sf0.1). */
-  private val indexCache = TrieMap.empty[(SparkSession, String), LopqIndex]
-
-  /** The slim serve HANDLE for the per-sfDir index, session-cached like
-    * [[indexCache]] — the q69/q70/q71/q73 serve paths previously re-ran
-    * `loadSlim` per call, paying the histogram-heal `codes.count()` +
-    * counts-collect jobs each time and (worse) discarding the slice/ADC
-    * broadcasts [[graft.engine.LopqSearcher.annJoin]] memoizes ON the
-    * handle — a resident bulk service holds one handle, so the bench was
-    * measuring handle churn, not the join (~0.4 s/call at sf0.1). Safe to
-    * cache: this dir is only mutated through [[refreshIndex]] (which
-    * evicts) — the incremental/stream queries append to their own `_incr`/
-    * `_stream` clones, never this one. */
-  private val slimCache = TrieMap.empty[(SparkSession, String), LopqSlimIndex]
-
-  private[graft] def slimIndex(s: SparkSession, d: String): LopqSlimIndex =
-    slimCache.getOrElseUpdate((s, d), LopqIndexStore.loadSlim(s, indexDir(d)).get)
+  /** One persisted index per sfDir and ONE handle per (session, dir):
+    * load-if-valid else train+build, exactly the reference's "load pickled
+    * model else train" startup (`searcher_lopqhbase.py:104-223`), which
+    * then answers every query from that one searcher. A fresh session
+    * SERVES WITHOUT RETRAINING — round 2 retrained per session (58 s at
+    * sf0.1) — and every serve, annJoin and catalog query of the session
+    * shares the handle, so the histogram-heal `codes.count()` +
+    * counts-collect jobs run once and the slice/ADC broadcasts
+    * [[graft.engine.LopqSearcher.annJoin]] memoizes ON the handle survive
+    * across calls (a per-call `loadSlim` was ~0.4 s/call of handle churn at
+    * sf0.1). The handle reads its rotation slices per query
+    * ([[RotationSource.Fetched]]). Safe to cache: this dir is only mutated
+    * through [[refreshIndex]] (which evicts) — the incremental/stream
+    * queries append to their own `_incr`/`_stream` clones, never this
+    * one. */
+  private val indexCache = TrieMap.empty[(SparkSession, String), LopqSlimIndex]
 
   /** Force a reload from disk on next access — the API `refresh` endpoint
     * (ref `api/api.py:307-384`: re-scan updates since the high-watermark).
     * Also the eviction path for ALL per-(session, dir) caches — index
     * handle, trained PCA, oracle-artifact memo — so a superseded index dir
     * doesn't pin DataFrames or stale projections forever (VERDICT r4:
-    * pcaCache/oracleReady previously had no eviction path). */
-  def refreshIndex(s: SparkSession, d: String): LopqIndex = {
+    * the PCA and oracle memos previously had no eviction path). */
+  def refreshIndex(s: SparkSession, d: String): LopqSlimIndex = {
     indexCache.remove((s, d))
-    slimCache.remove((s, d))
     pcaCache.remove((s, d))
-    oracleReady.remove((s, d))
+    oracleModel.remove((s, d))
     // the store's own model cache too: an index dir rebuilt OUT of this JVM
     // would otherwise keep appendUpdate encoding with the superseded model
     // (wrong cells, dedup defeated) while searches serve the new one
@@ -98,12 +94,12 @@ object EngineOps {
     index(s, d)
   }
 
-  def index(s: SparkSession, d: String): LopqIndex =
+  def index(s: SparkSession, d: String): LopqSlimIndex =
     indexCache.getOrElseUpdate((s, d), {
       val dir = indexDir(d)
       val e = t(s, d, "embeddings")
       val n = e.count()
-      LopqIndexStore.loadIfValid(s, dir, P, n)
+      LopqIndexStore.loadSlimIfValid(s, dir, P, n)
         .filter(_ => fmtOk(dir))
         .getOrElse {
           val dim = e.select(size(col("embedding"))).head().getInt(0)
@@ -213,22 +209,26 @@ object EngineOps {
   /** Dump visited-cell lists + per-cell ADC tables + projected subvectors
     * for the fixed query set, and stash the oracle SQL that recomputes
     * q34/q35/q43/q44/q45 from them in DuckDB. Memoized per (session, dir);
-    * everything after the trained model is plain relational algebra. */
-  private val oracleReady = TrieMap.empty[(SparkSession, String), Unit]
+    * everything after the trained model is plain relational algebra.
+    * Returns the full model the artifacts were computed from — the one
+    * full-model read of the session ([[LopqIndexStore.loadModel]]), whose
+    * resident tensor q34/q35 serve from. */
+  private val oracleModel = TrieMap.empty[(SparkSession, String), LopqModel]
 
-  private def ensureOracle(s: SparkSession, d: String): Unit =
-    oracleReady.getOrElseUpdate((s, d), {
+  private def ensureOracle(s: SparkSession, d: String): LopqModel =
+    oracleModel.getOrElseUpdate((s, d), {
       import s.implicits._
       val h = index(s, d)
       val dir = h.dir
       val odir = s"$dir/oracle"
+      val model = LopqIndexStore.loadModel(s, dir)
 
       // visited cells + ADC tables per query (driver-side model math — the
       // same values the serve broadcasts to executors), dumped for the
       // fixed per-query set AND the larger batched-join set (q70)
       def dumpQuerySet(qs: Array[(Long, Array[Float])], visitedDir: String,
           tabDir: String): Unit = {
-        val slim = h.model.slim
+        val slim = model.slim
         def cellsOf(vec: Array[Float]): Seq[Int] = {
           val (d0, d1) = slim.coarseDistances(vec)
           LopqSearcher.selectCellsFrom(slim.v, d0, d1, Quota, h.cellCounts)
@@ -237,7 +237,7 @@ object EngineOps {
         val adctab = qs.flatMap { case (qid, vec) =>
           cellsOf(vec).flatMap { cell =>
             val tabs = slim.adcTables(vec, CellMath.unpackCell(cell, slim.v),
-              h.model.rotations(_)(_))
+              model.rotations(_)(_))
             for (m <- tabs.indices; sc <- tabs(m).indices)
               yield (qid, cell, m, sc, tabs(m)(sc))
           }
@@ -251,7 +251,7 @@ object EngineOps {
       dumpQuerySet(joinQueryVectors(s, d), "visited_join", "adctab_join")
 
       // projected subvectors + subquantizer centroids (for q45 distortion)
-      val modelB = s.sparkContext.broadcast(h.model)
+      val modelB = s.sparkContext.broadcast(model)
       t(s, d, "embeddings").select("vec_id", "embedding")
         .as[(Long, Seq[Float])]
         .flatMap { case (id, emb) =>
@@ -271,20 +271,20 @@ object EngineOps {
         .toDF("id", "split", "fidx", "subvec", "code").repartition(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$odir/proj")
       val cent = for {
-        split <- 0 until h.model.numCoarseSplits
-        f <- 0 until h.model.numFineSplits
-        sc <- h.model.subquantizers(split)(f).indices
-      } yield (split, f, sc, h.model.subquantizers(split)(f)(sc).map(_.toDouble).toSeq)
+        split <- 0 until model.numCoarseSplits
+        f <- 0 until model.numFineSplits
+        sc <- model.subquantizers(split)(f).indices
+      } yield (split, f, sc, model.subquantizers(split)(f)(sc).map(_.toDouble).toSeq)
       cent.toDF("split", "fidx", "code", "centroid").repartition(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$odir/subq")
 
       // coarse codebooks + per-cluster mean residuals (for q101's
       // distance-to-refined-mean score)
       val coarseDump = for {
-        split <- 0 until h.model.numCoarseSplits
-        c <- 0 until h.model.v
-      } yield (split, c, h.model.coarse(split)(c).map(_.toDouble).toSeq,
-        h.model.mus(split)(c).map(_.toDouble).toSeq)
+        split <- 0 until model.numCoarseSplits
+        c <- 0 until model.v
+      } yield (split, c, model.coarse(split)(c).map(_.toDouble).toSeq,
+        model.mus(split)(c).map(_.toDouble).toSeq)
       coarseDump.toDF("split", "cidx", "centroid", "mu").repartition(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$odir/coarse")
 
@@ -298,7 +298,7 @@ object EngineOps {
         .write.mode(SaveMode.Overwrite).parquet(s"$odir/cells2")
 
       val codesGlob = s"$dir/codes/*/*.parquet"
-      val v = h.model.v
+      val v = model.v
 
       // shared CTE prefix: candidates → ADC (explicit 4-term sum = the
       // fold order of adcDistance) → rerank prefix → exact-L2 ranking;
@@ -605,7 +605,7 @@ object EngineOps {
       // per split over the same dumped doubles ((z1 − z2) − z3 matches
       // the engine's (x − C) − mu left-assoc order, split sums added
       // 0 + 1), and re-derives ranking + ceil(frac·n) keep in plain SQL
-      val half = h.model.halfDim
+      val half = model.halfDim
       def resSql(xs: String, cb: String) = {
         val diff = s"list_transform(list_zip($xs, $cb.centroid, $cb.mu), z -> z[1] - z[2] - z[3])"
         s"list_dot_product($diff, $diff)"
@@ -694,6 +694,7 @@ object EngineOps {
            |       sum(micro)::BIGINT AS sum_micro,
            |       round((sum(micro)::DOUBLE / 1000000.0) / count(*), 6) AS avg_distortion
            |FROM d GROUP BY 1, 2 ORDER BY split, fidx""".stripMargin
+      model
     })
 
   // ----------------------------------------------------------------- PCA
@@ -722,9 +723,9 @@ object EngineOps {
   // ------------------------------------------------------------- queries
 
   /** The fixed query set's per-query serves, ranked: `(q_id, rank, n_id,
-    * adc_dist, exact_dist)`. q34/q35 run it on the full-model handle
-    * (resident rotation slices), q69 on the fetched one — one plan, one
-    * oracle. */
+    * adc_dist, exact_dist)`. q34/q35 run it over the session's handle with
+    * the oracle's resident tensor as the rotation source ([[residentIndex]]),
+    * q69 over the handle itself (fetched slices) — one plan, one oracle. */
   private def annPerQuery(s: SparkSession, d: String, h: LopqSlimIndex): DataFrame = {
     val e = t(s, d, "embeddings")
     val perQuery = queryVectors(s, d).map { case (qid, vec) =>
@@ -740,6 +741,11 @@ object EngineOps {
       .orderBy("q_id", "rank")
   }
 
+  /** The session's handle reading its rotation slices from the resident
+    * tensor of the model the oracle was dumped from. */
+  private def residentIndex(s: SparkSession, d: String): LopqSlimIndex =
+    index(s, d).copy(rotations = RotationSource.Resident(ensureOracle(s, d).rotations))
+
   /** A `def`, not a `val`: the engine oracles are GENERATED when the
     * queries run, so the catalog must re-read the stash on every access
     * (Verify builds `oracleSql` after running all queries). */
@@ -747,19 +753,16 @@ object EngineOps {
     // §3.3/§3.1 full ANN path against the PERSISTED index: load-or-build →
     // per-query multisequence cell selection → partition-pruned ADC scan
     // (broadcast tables) → exact rerank, rotation slices from the RESIDENT
-    // tensor of the full-model handle. Oracle: generated at runtime over
-    // the dumped artifacts (see ensureOracle).
+    // tensor of the oracle's model. Oracle: generated at runtime over the
+    // dumped artifacts (see ensureOracle).
     QueryDef(
       "q34_lopq_ann",
-      (s, d) => {
-        ensureOracle(s, d)
-        annPerQuery(s, d, index(s, d).serving)
-      },
+      (s, d) => annPerQuery(s, d, residentIndex(s, d)),
       stashed("q34_lopq_ann"),
       bench = true,
       dependsOnIndex = true),
 
-    // The same ANN queries through the release-MAGNITUDE serve handle
+    // The same ANN queries through the session's handle as loaded
     // (rotation slices FETCHED per query, tensor never resident) —
     // hash-gated against the SAME generated oracle as q34: one plan, both
     // rotation sources, both in the driver's correctness gate.
@@ -767,8 +770,7 @@ object EngineOps {
       "q69_lopq_ann_slim",
       (s, d) => {
         ensureOracle(s, d)
-        index(s, d) // build/persist the index before loading it slim
-        annPerQuery(s, d, slimIndex(s, d))
+        annPerQuery(s, d, index(s, d))
       },
       stashed("q69_lopq_ann_slim"),
       dependsOnIndex = true),
@@ -783,8 +785,7 @@ object EngineOps {
       "q70_ann_join",
       (s, d) => {
         ensureOracle(s, d)
-        index(s, d) // build/persist before loading slim
-        val slim = slimIndex(s, d)
+        val slim = index(s, d)
         val e = t(s, d, "embeddings")
         val queries = e.where(col("vec_id") < NumJoinQueries)
           .select(col("vec_id").as("q_id"), col("embedding"))
@@ -812,8 +813,7 @@ object EngineOps {
       "q71_stream_ann",
       (s, d) => {
         ensureOracle(s, d)
-        index(s, d) // build/persist before loading slim
-        val slim = slimIndex(s, d)
+        val slim = index(s, d)
         val e = t(s, d, "embeddings")
         val staged = indexDir(d) + "_annstream_src"
         val outDir = indexDir(d) + "_annstream_out"
@@ -860,7 +860,6 @@ object EngineOps {
       "q74_api_bulk",
       (s, d) => {
         ensureOracle(s, d)
-        index(s, d) // build/persist before loading slim
         val e = t(s, d, "embeddings")
         val queries = e.where(col("vec_id") < NumJoinQueries)
           .select(col("vec_id").as("q_id"), col("embedding"))
@@ -886,8 +885,7 @@ object EngineOps {
       "q73_anndedup_pairs",
       (s, d) => {
         ensureOracle(s, d)
-        index(s, d) // build/persist before loading slim
-        val slim = slimIndex(s, d)
+        val slim = index(s, d)
         val e = t(s, d, "embeddings")
         val queries = e.select(col("vec_id").as("q_id"), col("embedding"))
         verifiedDedupPairs(e,
@@ -912,8 +910,7 @@ object EngineOps {
       "q93_anndedup_chunked",
       (s, d) => {
         ensureOracle(s, d)
-        index(s, d) // build/persist before loading slim
-        val slim = slimIndex(s, d)
+        val slim = index(s, d)
         val e = t(s, d, "embeddings")
         val queries = e.select(col("vec_id").as("q_id"), col("embedding"))
         // each chunk is collected in its sink: the chunk's cache and
@@ -952,7 +949,7 @@ object EngineOps {
         ensureOracle(s, d)
         val h = index(s, d)
         val cells = h.codes.select(col("id"),
-          (col("coarse0") * h.model.v + col("coarse1")).cast("long").as("cell_id"))
+          (col("coarse0") * h.slim.v + col("coarse1")).cast("long").as("cell_id"))
         VectorQueries.semDedupPairs(cells, t(s, d, "embeddings"),
             "vec_id", "embedding")
           .orderBy("id_a", "id_b")
@@ -999,7 +996,7 @@ object EngineOps {
         ensureOracle(s, d)
         val h = index(s, d)
         val cells = h.codes.select(col("id"),
-          (col("coarse0") * h.model.v + col("coarse1")).cast("long").as("cell_id"))
+          (col("coarse0") * h.slim.v + col("coarse1")).cast("long").as("cell_id"))
         val e = t(s, d, "embeddings")
         val edges = VectorQueries.semDedupPairs(cells, e, "vec_id", "embedding")
           .select("id_a", "id_b").localCheckpoint()
@@ -1027,7 +1024,7 @@ object EngineOps {
         ensureOracle(s, d)
         val h = index(s, d)
         val cells = h.codes.select(col("id"),
-          (col("coarse0") * h.model.v + col("coarse1")).cast("long").as("cell_id"))
+          (col("coarse0") * h.slim.v + col("coarse1")).cast("long").as("cell_id"))
         val chunks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
         VectorQueries.semDedupPairsChunked(cells, t(s, d, "embeddings"),
           "vec_id", "embedding", VectorQueries.NearDupSimThreshold,
@@ -1051,7 +1048,7 @@ object EngineOps {
         ensureOracle(s, d)
         val h = index(s, d)
         val cells = h.codes.select(col("id"),
-          (col("coarse0") * h.model.v + col("coarse1")).cast("long").as("cell_id"))
+          (col("coarse0") * h.slim.v + col("coarse1")).cast("long").as("cell_id"))
         val e = t(s, d, "embeddings")
         val isNew = pmod(col("id"), lit(2)) === 0
         VectorQueries.semDedupPairsIncremental(
@@ -1077,10 +1074,8 @@ object EngineOps {
       "q98_ingest_screened_index",
       (s, d) => {
         ensureOracle(s, d)
-        val h = index(s, d)
         val ingDir = indexDir(d) + "_ingest"
-        deleteDir(s, ingDir)
-        LopqIndexStore.initEmpty(s, ingDir, h.model, None, P, h.model.dim)
+        LopqIndexStore.cloneEmpty(s, indexDir(d), ingDir)
         val e = t(s, d, "embeddings")
         val isNew = pmod(col("vec_id"), lit(2)) === 0
         val corpus = e.where(!isNew).select("vec_id", "embedding")
@@ -1117,12 +1112,11 @@ object EngineOps {
       "q99_stream_screened_ingest",
       (s, d) => {
         ensureOracle(s, d)
-        val h = index(s, d)
         val sDir = indexDir(d) + "_screened"
         val staged = sDir + "_src"
         val ckpt = sDir + "/_ckpt"
-        deleteDir(s, sDir); deleteDir(s, staged)
-        LopqIndexStore.initEmpty(s, sDir, h.model, None, P, h.model.dim)
+        deleteDir(s, staged)
+        LopqIndexStore.cloneEmpty(s, indexDir(d), sDir)
         val e = t(s, d, "embeddings").select("vec_id", "embedding")
         val isNew = pmod(col("vec_id"), lit(2)) === 0
         val corpus = e.where(!isNew)
@@ -1171,7 +1165,7 @@ object EngineOps {
       (s, d) => {
         ensureOracle(s, d)
         val e = t(s, d, "embeddings")
-        val ann = annPerQuery(s, d, index(s, d).serving).select("q_id", "n_id")
+        val ann = annPerQuery(s, d, residentIndex(s, d)).select("q_id", "n_id")
         val q = e.where(col("vec_id") < NumQueries)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
         val w = Window.partitionBy("q_id").orderBy(col("exact_dist"), col("vec_id"))
@@ -1216,10 +1210,8 @@ object EngineOps {
       "q43_incremental_index",
       (s, d) => {
         ensureOracle(s, d)
-        val h = index(s, d)
         val incrDir = indexDir(d) + "_incr"
-        deleteDir(s, incrDir)
-        LopqIndexStore.initEmpty(s, incrDir, h.model, None, P, h.model.dim)
+        LopqIndexStore.cloneEmpty(s, indexDir(d), incrDir)
         val e = t(s, d, "embeddings")
         val n = e.count()
         val half = n / 2
@@ -1254,7 +1246,6 @@ object EngineOps {
       "q65_stream_maintained_index",
       (s, d) => {
         ensureOracle(s, d)
-        val h = index(s, d)
         val sDir = indexDir(d) + "_stream"
         val staged = sDir + "_src"
         // checkpoints live INSIDE sDir: a stale checkpoint surviving the
@@ -1262,8 +1253,8 @@ object EngineOps {
         // extra batch ids (caught at sf0.001 — the watermark drifted while
         // row-level dedup kept the codes identical)
         val ckpt = sDir + "/_ckpt"
-        deleteDir(s, sDir); deleteDir(s, staged)
-        LopqIndexStore.initEmpty(s, sDir, h.model, None, P, h.model.dim)
+        deleteDir(s, staged)
+        LopqIndexStore.cloneEmpty(s, indexDir(d), sDir)
         val e = t(s, d, "embeddings").select("vec_id", "embedding")
         val half = e.count() / 2
         // two staged files + maxFilesPerTrigger=1 → two real micro-batches
@@ -1378,7 +1369,7 @@ object EngineOps {
         ensureOracle(s, d)
         val h = index(s, d)
         VectorQueries.protoPrune(t(s, d, "embeddings"), "vec_id",
-            "embedding", h.model.slim, ProtoKeepFrac)
+            "embedding", h.slim, ProtoKeepFrac)
           .orderBy("cell_id", "rk")
       },
       stashed("q101_proto_prune"),
@@ -1401,7 +1392,7 @@ object EngineOps {
         ensureOracle(s, d)
         val h = index(s, d)
         val cells = h.codes.select(col("id"),
-          (col("coarse0") * h.model.v + col("coarse1")).cast("long").as("cell_id"))
+          (col("coarse0") * h.slim.v + col("coarse1")).cast("long").as("cell_id"))
         val e = t(s, d, "embeddings")
         val edges = VectorQueries.semDedupPairs(cells, e, "vec_id", "embedding")
           .select("id_a", "id_b").localCheckpoint()
@@ -1409,7 +1400,7 @@ object EngineOps {
           .where(col("id") =!= col("comp")).select(col("id").as("vec_id"))
         val surv = TextOps.antiJoinIds(e, "vec_id", losers)
         val kept = VectorQueries.protoPrune(surv, "vec_id", "embedding",
-            h.model.slim, ProtoKeepFrac)
+            h.slim, ProtoKeepFrac)
           .where(col("keep"))
           .select(col("id"), col("cell_id"), col("proto_dist"))
           .localCheckpoint()

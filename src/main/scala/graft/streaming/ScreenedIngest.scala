@@ -58,21 +58,22 @@ object ScreenedIngest {
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         val uid = f"${updatePrefix}_$batchId%019d"
         if (!UpdateLog.covers(LopqIndexStore.watermark(spark, indexDir), uid)) {
-          import org.apache.spark.sql.functions.col
           IngestOps.screened(spark, indexDir,
               IngestOps.vectorStore(spark, indexDir, idCol, vecCol),
               df, idCol, vecCol, simThreshold) { s =>
             IngestOps.writeVectors(spark, indexDir, s.survivors, "id", "vec", uid)
             if (spark.conf.get(CrashAfterWriteVectorsConf, "false").toBoolean)
               throw new IllegalStateException(
-                "injected crash: after writeVectors, before appendUpdate")
-            // append reads BACK the committed vector rows, so the codes
-            // table and the side-store can never disagree on a survivor
+                "injected crash: after writeVectors, before the codes append")
+            // append only the survivors whose vector rows read BACK from
+            // the committed dir, so the codes table and the side-store can
+            // never disagree on a survivor; the rows keep the screen's one
+            // projection and assignment
             val stored = spark.read
-              .parquet(s"${IngestOps.vectorsDir(indexDir)}/$uid")
-              .select(col("id").as(idCol), col("vec").as(vecCol))
-            LopqIndexStore.appendUpdate(spark, indexDir, stored,
-              idCol, vecCol, uid)
+              .parquet(s"${IngestOps.vectorsDir(indexDir)}/$uid").select("id")
+            val kept = s.survivors.select("id", "pvec", "cell_id").dropDuplicates("id")
+              .join(stored, Seq("id"), "left_semi")
+            LopqIndexStore.appendAssigned(spark, indexDir, kept, s.touched, uid)
           }
           // fold the per-update vector dirs once enough pile up (the
           // side-store's LSM promote) — AFTER the batch commits, so a

@@ -87,7 +87,7 @@ class CatalogSpec extends SparkSpec {
     * of both query plans. */
   test("q94 semdedup ≡ q32 exact pairs restricted to same-cell endpoints") {
     val h = graft.ops.EngineOps.index(spark, sf)
-    val v = h.model.v
+    val v = h.slim.v
     val cell = h.codes.select("id", "coarse0", "coarse1").collect()
       .map(r => r.getAs[Long]("id") ->
         (r.getAs[Int]("coarse0").toLong * v + r.getAs[Int]("coarse1"))).toMap
@@ -132,7 +132,7 @@ class CatalogSpec extends SparkSpec {
   test("semDedupPairs blocked ≡ plain at a forced 1-row cell block size") {
     val h = graft.ops.EngineOps.index(spark, sf)
     val cells = h.codes.select(col("id"),
-      (col("coarse0").cast("long") * h.model.v + col("coarse1")).as("cell_id"))
+      (col("coarse0").cast("long") * h.slim.v + col("coarse1")).as("cell_id"))
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     def run(blockRows: Int): Set[(Long, Long, Long, Double)] =
       graft.ops.VectorQueries.semDedupPairs(cells, emb, "vec_id", "embedding",

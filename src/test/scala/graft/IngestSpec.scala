@@ -28,15 +28,16 @@ class IngestSpec extends SparkSpec {
     val slim = LopqIndexStore
       .assignCells(spark, EngineOps.indexDir(sf), e, "vec_id", "embedding")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val classic = LopqSearcher.encode(e, "vec_id", "embedding", h.model)
+    val model = LopqIndexStore.loadModel(spark, h.dir)
+    val classic = LopqSearcher.encode(e, "vec_id", "embedding", model)
       .select(col("id"), col("cell_id").cast("long"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(slim === classic)
     // both equal the reference's coarse predict
-    val ref = new LopqReference(h.model)
+    val ref = new LopqReference(model)
     val want = e.collect().map { r =>
       val (c0, c1) = ref.predictCoarse(r.getSeq[Float](1).toArray)
-      r.getLong(0) -> (c0.toLong * h.model.v + c1)
+      r.getLong(0) -> (c0.toLong * h.slim.v + c1)
     }.toMap
     assert(classic === want)
   }
@@ -323,8 +324,7 @@ class IngestSpec extends SparkSpec {
 
   test("predictCoarseTop2 rank-0 ≡ predictCoarse; assignCellsMulti covers assignCells") {
     val h = EngineOps.index(spark, sf)
-    val slim = graft.engine.SlimLopqModel(
-      h.model.coarse, h.model.mus, h.model.subquantizers)
+    val slim = h.slim
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select("vec_id", "embedding")
     e.limit(200).collect().foreach { r =>
@@ -348,8 +348,7 @@ class IngestSpec extends SparkSpec {
 
   test("predictCoarseTopP: P=2 ≡ predictCoarseTop2, prefix property, best-first distinct") {
     val h = EngineOps.index(spark, sf)
-    val slim = graft.engine.SlimLopqModel(
-      h.model.coarse, h.model.mus, h.model.subquantizers)
+    val slim = h.slim
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select("vec_id", "embedding")
     e.limit(200).collect().foreach { r =>
@@ -448,8 +447,7 @@ class IngestSpec extends SparkSpec {
   test("multiProbe screen flags a superset, incl. a boundary-straddling near-dup") {
     import graft.ops.VectorQueries
     val h = EngineOps.index(spark, sf)
-    val slim = graft.engine.SlimLopqModel(
-      h.model.coarse, h.model.mus, h.model.subquantizers)
+    val slim = h.slim
     val rows = spark.read.parquet(s"$sf/embeddings.parquet")
       .select("vec_id", "embedding").limit(80)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -509,8 +507,7 @@ class IngestSpec extends SparkSpec {
     // miss it, the P=3 screen must flag it
     import graft.ops.VectorQueries
     val h = EngineOps.index(spark, sf)
-    val slim = graft.engine.SlimLopqModel(
-      h.model.coarse, h.model.mus, h.model.subquantizers)
+    val slim = h.slim
     val rows = spark.read.parquet(s"$sf/embeddings.parquet")
       .select("vec_id", "embedding").limit(120)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -779,7 +776,8 @@ class IngestSpec extends SparkSpec {
           "the batch must keep some rows and drop the planted copies")
         // the survivors' codes are the build encoder's, bit for bit
         val apiSurvivors = batch.where(col("vec_id").isin(viaApi: _*))
-        val encoded = LopqSearcher.encode(apiSurvivors, "vec_id", "embedding", h.model)
+        val encoded = LopqSearcher.encode(apiSurvivors, "vec_id", "embedding",
+            LopqIndexStore.loadModel(spark, h.dir))
           .select("id", "coarse0", "coarse1", "fine", "cell_id").collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
             r.getSeq[Short](3).toSeq, r.getInt(4))).sortBy(_._1).toSeq
@@ -787,6 +785,65 @@ class IngestSpec extends SparkSpec {
       } finally spark.conf.unset(VectorQueries.ScreenMultiProbeConf)
       Seq(dirA, dirB, staged, ckpt).foreach(del)
     }
+  }
+
+  test("a screened stream micro-batch is projected and assigned once") {
+    // the twin appends the survivors of the frame its screen assigned
+    // (appendAssigned), as the batch cycle does. A micro-batch's actions
+    // all carry the stream's start call site, so the pin counts the frames
+    // it persists: the screen's assigned frame and the append's deduped
+    // rows, as screenAndAppend does; appendUpdate's own re-projected,
+    // re-assigned frame would be a third
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
+    import org.apache.spark.sql.graft.GraftBridge
+    import org.apache.spark.storage.RDDBlockId
+    val dirA = s"$root/twin_batch"; val dirB = s"$root/twin_stream"
+    val staged = s"$root/twin_src"; val ckpt = s"$root/twin_ckpt"
+    Seq(dirA, dirB, staged, ckpt).foreach(del)
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val seed = e.where(col("vec_id") % 3 === 0)
+    val batch = e.where(col("vec_id") % 3 === 1)
+    Seq(dirA, dirB).foreach { d =>
+      LopqIndexStore.cloneEmpty(spark, EngineOps.indexDir(sf), d)
+      IngestOps.writeVectors(spark, d, seed, "vec_id", "embedding",
+        "seed_0000000000000000000")
+      assert(LopqIndexStore.appendUpdate(spark, d, seed, "vec_id", "embedding",
+        "seed_0000000000000000000"))
+    }
+    batch.repartition(1).write.parquet(staged)
+    val cached = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onBlockUpdated(ev: SparkListenerBlockUpdated): Unit =
+        ev.blockUpdatedInfo.blockId match {
+          case b: RDDBlockId => cached.add(b.rddId); ()
+          case _ =>
+        }
+    }
+    def persisted(body: => Unit): Int = {
+      cached.clear()
+      body
+      GraftBridge.drainListenerBus(spark.sparkContext)
+      cached.size
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (viaBatch, viaStream) = try {
+      (persisted(assert(IngestOps.screenAndAppend(spark, dirA,
+        IngestOps.vectorStore(spark, dirA, "vec_id", "embedding"),
+        batch, "vec_id", "embedding", f"stream_${0L}%019d").applied)),
+       persisted(graft.streaming.ScreenedIngest
+        .maintain(spark, dirB, spark.readStream.schema(e.schema).parquet(staged),
+          "vec_id", "embedding", ckpt)
+        .awaitTermination()))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(viaBatch > 0 && viaStream === viaBatch,
+      s"the micro-batch persisted $viaStream frames, the batch cycle $viaBatch")
+    def codeIds(d: String) = LopqIndexStore.readCodes(spark, d)
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(codeIds(dirB) === codeIds(dirA) && codeIds(dirB).exists(_ % 3 == 1))
+    assert(codeIds(dirB).subsetOf(IngestOps.vectorStore(spark, dirB, "vec_id", "embedding")
+      .select("vec_id").collect().map(_.getLong(0)).toSet), "codes ⊆ side-store")
+    Seq(dirA, dirB, staged, ckpt).foreach(del)
   }
 
   test("GraftApi.screenBatch keeps nothing from an all-copies batch") {

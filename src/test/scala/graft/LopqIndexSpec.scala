@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.UpdateLog
-import graft.engine.{LopqIndexStore, LopqParams, LopqSearcher, LopqTrainer}
+import graft.engine.{LopqIndexStore, LopqParams, LopqSearcher, LopqTrainer, RotationSource}
 import graft.ops.{Tables, TextScreen, TextSigStore}
 
 /** Durable-index semantics: model save/load round-trip, on-disk partition
@@ -23,19 +23,20 @@ class LopqIndexSpec extends SparkSpec {
     if (fs.exists(path)) fs.delete(path, true)
   }
 
-  private lazy val built = {
+  /** The trained model and the handle of the index built from it. */
+  private lazy val (trained, built) = {
     graft.functions.GraftFunctions.register(spark)
     deleteDir(dir)
     val e = Tables(spark, sf, "embeddings")
     val model = LopqTrainer.train(e, "embedding", p)
     val codes = LopqSearcher.encode(e, "vec_id", "embedding", model)
-    LopqIndexStore.build(spark, dir, model, None, codes, p, n = 500, dim = 64)
+    (model, LopqIndexStore.build(spark, dir, model, None, codes, p, n = 500, dim = 64))
   }
 
   test("model round-trips through parquet bit-exactly") {
-    val m0 = built.model
-    val loaded = LopqIndexStore.load(spark, dir).get
-    val (m1, pca1) = (loaded.model, loaded.pca)
+    val m0 = trained
+    val m1 = LopqIndexStore.loadModel(spark, dir)
+    val pca1 = LopqIndexStore.loadSlim(spark, dir).get.pca
     assert(pca1.isEmpty)
     assert(m1.v === m0.v && m1.m === m0.m && m1.dim === m0.dim)
     for (s <- 0 until 2; c <- 0 until m0.v) {
@@ -50,21 +51,21 @@ class LopqIndexSpec extends SparkSpec {
 
   test("a fresh load serves the same search results without retraining") {
     val h = built
-    val loaded = LopqIndexStore.load(spark, dir).get
+    val loaded = LopqIndexStore.loadSlim(spark, dir).get
     val e = Tables(spark, sf, "embeddings")
     val qv = e.where(col("vec_id") === 3).select("embedding")
       .head().getSeq[Float](0).toArray
     def run(index: graft.engine.LopqSlimIndex) =
       LopqSearcher.searchSlim(index, e, "vec_id", "embedding", qv, 200, 10, 50)
         .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    assert(run(loaded.serving) === run(h.serving))
+    assert(run(loaded) === run(h.copy(rotations = RotationSource.Resident(trained.rotations))))
   }
 
   test("visited-cell filter prunes partitions on disk") {
     val h = built
     val qv = Tables(spark, sf, "embeddings").where(col("vec_id") === 1)
       .select("embedding").head().getSeq[Float](0).toArray
-    val df = LopqSearcher.approxStage(h.serving, qv, 200, 10)._1
+    val df = LopqSearcher.approxStage(h, qv, 200, 10)._1
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), plan.take(2000))
     // the IN-list over cell_id must land in PartitionFilters, not a
@@ -83,15 +84,14 @@ class LopqIndexSpec extends SparkSpec {
 
   test("loadIfValid rejects a changed fingerprint") {
     built
-    assert(LopqIndexStore.loadIfValid(spark, dir, p, n = 500).isDefined)
-    assert(LopqIndexStore.loadIfValid(spark, dir, p, n = 501).isEmpty)
-    assert(LopqIndexStore.loadIfValid(spark, dir, p.copy(v = 16), n = 500).isEmpty)
+    assert(LopqIndexStore.loadSlimIfValid(spark, dir, p, n = 500).isDefined)
+    assert(LopqIndexStore.loadSlimIfValid(spark, dir, p, n = 501).isEmpty)
+    assert(LopqIndexStore.loadSlimIfValid(spark, dir, p.copy(v = 16), n = 500).isEmpty)
   }
 
   test("incremental appends reproduce the one-shot encode, replay is a no-op") {
-    val h = built
     deleteDir(incrDir)
-    LopqIndexStore.initEmpty(spark, incrDir, h.model, None, p, 64)
+    LopqIndexStore.initEmpty(spark, incrDir, trained, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
     val b1 = e.where(col("vec_id") < 250)
     val b2 = e.where(col("vec_id") >= 250)
@@ -161,7 +161,7 @@ class LopqIndexSpec extends SparkSpec {
     LopqIndexStore.initEmpty(spark, pdir, model, Some(pca), p, dim = 64)
     // append RAW 64-d vectors; the store projects them to 32-d internally
     assert(LopqIndexStore.appendUpdate(spark, pdir, e, "vec_id", "embedding", "u000"))
-    val loaded = LopqIndexStore.load(spark, pdir).get
+    val loaded = LopqIndexStore.loadSlim(spark, pdir).get
     assert(loaded.pca.isDefined && loaded.pca.get.pcaDims === 32)
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "coarse0", "coarse1", "fine").collect()
@@ -173,7 +173,7 @@ class LopqIndexSpec extends SparkSpec {
     // and the loaded index searches raw-dim queries through the PCA front
     val qv = e.where(col("vec_id") === 7).select("embedding")
       .head().getSeq[Float](0).toArray
-    val hits = LopqSearcher.searchSlim(loaded.serving, e, "vec_id", "embedding",
+    val hits = LopqSearcher.searchSlim(loaded, e, "vec_id", "embedding",
       qv, 200, 10, 50).collect()
     assert(hits.length === 10)
     assert(hits.map(_.getAs[Long]("id")).contains(7L),
@@ -184,7 +184,7 @@ class LopqIndexSpec extends SparkSpec {
     val h = built
     val sdir = incrDir + "_slimenc"
     deleteDir(sdir)
-    LopqIndexStore.initEmpty(spark, sdir, h.model, None, p, 64)
+    LopqIndexStore.initEmpty(spark, sdir, trained, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
     assert(LopqIndexStore.appendUpdate(spark, sdir,
       e.where(col("vec_id") < 250), "vec_id", "embedding", "u000"))
@@ -198,19 +198,18 @@ class LopqIndexSpec extends SparkSpec {
       "slim-encoded appends must equal the one-shot full-model encode")
     // the one encoder, under both rotation sources (the build's resident
     // tensor, the appends' fetched slices), equals the reference's predict
-    val ref = new LopqReference(h.model)
+    val ref = new LopqReference(trained)
     val want = e.select("vec_id", "embedding").collect().map { r =>
       val ((c0, c1), fine) = ref.predict(r.getSeq[Float](1).toArray)
-      (r.getLong(0), c0, c1, fine.toSeq, c0 * h.model.v + c1)
+      (r.getLong(0), c0, c1, fine.toSeq, c0 * h.slim.v + c1)
     }.sortBy(_._1).toSeq
     assert(snap(dir) === want, "encode diverged from the reference predict")
   }
 
   test("append adds an O(batch) counts delta file, never a histogram rewrite") {
-    val h = built
     val ddir = incrDir + "_delta"
     deleteDir(ddir)
-    LopqIndexStore.initEmpty(spark, ddir, h.model, None, p, 64)
+    LopqIndexStore.initEmpty(spark, ddir, trained, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
     def countsFiles: Int = {
       val cp = new org.apache.hadoop.fs.Path(s"$ddir/cell_counts")
@@ -226,7 +225,7 @@ class LopqIndexSpec extends SparkSpec {
     // one delta file per append: the histogram is a log, not a rewrite
     // (r5 read + rewrote the WHOLE histogram through the driver per batch)
     assert(countsFiles === afterFirst + 1)
-    val loaded = LopqIndexStore.load(spark, ddir).get
+    val loaded = LopqIndexStore.loadSlim(spark, ddir).get
     val recount = loaded.codes.groupBy("cell_id").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(loaded.cellCounts.toMap === recount, "summed deltas must equal a recount")
@@ -237,10 +236,9 @@ class LopqIndexSpec extends SparkSpec {
     // TOUCHED PARTITION (~1000 at V=1024) and append latency grew with the
     // table's file count (measured via graft.Probe maintain) — the delta
     // log writes ONE file per append and promotes in bulk
-    val h = built
     val ldir = incrDir + "_lsm"
     deleteDir(ldir)
-    LopqIndexStore.initEmpty(spark, ldir, h.model, None, p, 64)
+    LopqIndexStore.initEmpty(spark, ldir, trained, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
     def files(sub: String): Int = {
       val cp = new org.apache.hadoop.fs.Path(s"$ldir/$sub")
@@ -280,7 +278,7 @@ class LopqIndexSpec extends SparkSpec {
         "replayed promotion must not duplicate rows")
       assert(files("codes_delta_compacting") === 0, "recovery must consume the dir")
       // and the healed histogram agrees with a recount
-      val loaded = LopqIndexStore.load(spark, ldir).get
+      val loaded = LopqIndexStore.loadSlim(spark, ldir).get
       val recount = loaded.codes.groupBy("cell_id").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       assert(loaded.cellCounts.toMap === recount)
@@ -288,10 +286,9 @@ class LopqIndexSpec extends SparkSpec {
   }
 
   test("counts-log compaction is a distributed job — no histogram through the driver") {
-    val h = built
     val cdir = incrDir + "_compact"
     deleteDir(cdir)
-    LopqIndexStore.initEmpty(spark, cdir, h.model, None, p, 64)
+    LopqIndexStore.initEmpty(spark, cdir, trained, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
     def countsFiles: Int = {
       val cp = new org.apache.hadoop.fs.Path(s"$cdir/cell_counts")
@@ -317,7 +314,7 @@ class LopqIndexSpec extends SparkSpec {
       assert(LopqIndexStore.histogramRowsCollected.get() === collectedBefore,
         "compaction pulled histogram rows through the driver")
       // delta-log semantics unchanged: post-compaction totals still heal
-      val loaded = LopqIndexStore.load(spark, cdir).get
+      val loaded = LopqIndexStore.loadSlim(spark, cdir).get
       val recount = loaded.codes.groupBy("cell_id").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       assert(loaded.cellCounts.toMap === recount)
@@ -338,10 +335,9 @@ class LopqIndexSpec extends SparkSpec {
     // 'stream_000001', which sorts ABOVE every new-format id — without
     // normalization isApplied would refuse every future append: silent,
     // permanent data loss on any pre-existing streaming index
-    val h = built
     val ldir = incrDir + "_legacy"
     deleteDir(ldir)
-    LopqIndexStore.initEmpty(spark, ldir, h.model, None, p, 64)
+    LopqIndexStore.initEmpty(spark, ldir, trained, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
     assert(LopqIndexStore.appendUpdate(spark, ldir,
       e.where(col("vec_id") < 100), "vec_id", "embedding", "stream_000001"))
@@ -406,9 +402,8 @@ class LopqIndexSpec extends SparkSpec {
   }
 
   test("a refused replay is decided from the tip alone — zero Spark jobs") {
-    val h = built
     deleteDir(incrDir + "_tip")
-    LopqIndexStore.initEmpty(spark, incrDir + "_tip", h.model, None, p, 64)
+    LopqIndexStore.initEmpty(spark, incrDir + "_tip", trained, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
     assert(LopqIndexStore.appendUpdate(spark, incrDir + "_tip", e, "vec_id",
       "embedding", "u000"))
@@ -433,10 +428,9 @@ class LopqIndexSpec extends SparkSpec {
 
   test("load self-heals a cell histogram skewed by a crashed append") {
     import org.apache.spark.sql.functions.{col => c, lit}
-    val h = built
     val cdir = incrDir + "_crash"
     deleteDir(cdir)
-    LopqIndexStore.initEmpty(spark, cdir, h.model, None, p, 64)
+    LopqIndexStore.initEmpty(spark, cdir, trained, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
     assert(LopqIndexStore.appendUpdate(spark, cdir, e, "vec_id", "embedding", "u000"))
     // simulate the crash window between the codes append and the counts
@@ -447,17 +441,16 @@ class LopqIndexSpec extends SparkSpec {
     import spark.implicits._
     skewed.toDF("cell_id", "cnt").repartition(1)
       .write.mode("overwrite").parquet(s"$cdir/cell_counts")
-    val loaded = LopqIndexStore.load(spark, cdir).get
+    val loaded = LopqIndexStore.loadSlim(spark, cdir).get
     val recount = loaded.codes.groupBy("cell_id").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(loaded.cellCounts.toMap === recount, "load must rebuild a skewed histogram")
   }
 
   test("evictModel makes appends see an out-of-process model swap") {
-    val h = built
     val adir = incrDir + "_swap"
     deleteDir(adir)
-    LopqIndexStore.initEmpty(spark, adir, h.model, None, p, 64)
+    LopqIndexStore.initEmpty(spark, adir, trained, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
     // populate the model cache for adir
     assert(LopqIndexStore.appendUpdate(spark, adir,
@@ -493,10 +486,9 @@ class LopqIndexSpec extends SparkSpec {
   }
 
   test("a streaming query maintains the persisted index incrementally") {
-    val h = built
     val streamDir = "/root/repo/target/graft-index-test/stream"
     deleteDir(streamDir)
-    LopqIndexStore.initEmpty(spark, streamDir, h.model, None, p, 64)
+    LopqIndexStore.initEmpty(spark, streamDir, trained, None, p, 64)
     val e = Tables(spark, sf, "embeddings")
     // first half arrives as a batch seed; second half streams in two
     // micro-batches through foreachBatch → appendUpdate

@@ -24,7 +24,8 @@ class LopqSpec extends SparkSpec {
 
   /** An in-memory serve handle: the encoded codes, resident rotations. */
   private lazy val serving =
-    graft.engine.LopqIndex(model, None, codes, counts, dir = "").serving
+    graft.engine.LopqSlimIndex(model.slim, None, codes, counts, dir = "", cellBuckets = 0,
+      graft.engine.RotationSource.Resident(model.rotations))
 
   test("model shapes match the parameterization") {
     assert(model.v === 8)

@@ -118,11 +118,11 @@ class MemoryBudgetSpec extends SparkSpec {
       // the chunked semdedup, one chunk vs as many as a small budget asks for
       val h = EngineOps.index(spark, sf)
       val cells = h.codes.select(col("id"),
-        (col("coarse0").cast("long") * h.model.v + col("coarse1")).as("cell_id"))
+        (col("coarse0").cast("long") * h.slim.v + col("coarse1")).as("cell_id"))
       val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      val n = VectorQueries.semDedupChunkCount(cells.count(), h.model.dim, spark, budget = 64L * 200)
+      val n = VectorQueries.semDedupChunkCount(cells.count(), h.slim.dim, spark, budget = 64L * 200)
       assert(n > 1, s"a 200-row assignment cap must take more than one chunk, got $n")
-      assert(VectorQueries.semDedupChunkCount(cells.count(), h.model.dim, spark) === 1)
+      assert(VectorQueries.semDedupChunkCount(cells.count(), h.slim.dim, spark) === 1)
       assert(chunked(cells, emb, VectorQueries.NearDupSimThreshold, n) ===
         chunked(cells, emb, VectorQueries.NearDupSimThreshold, 1))
     }

@@ -93,7 +93,8 @@ class PcaSpec extends SparkSpec {
       val brute = all.map { case (id, v) => (id, VectorOps.l2(qv, v)) }
         .sortBy { case (id, dist) => (dist, id) }.take(10).map(_._1).toSet
       val ann = LopqSearcher.searchSlim(
-          graft.engine.LopqIndex(model, Some(pca), codes, counts, dir = "").serving,
+          graft.engine.LopqSlimIndex(model.slim, Some(pca), codes, counts, dir = "",
+            cellBuckets = 0, graft.engine.RotationSource.Resident(model.rotations)),
           e, "vec_id", "embedding", qv, quota = 200, k = 10, rerankK = 50)
         .collect().map(_.getAs[Long]("id")).toSet
       brute.intersect(ann).size / 10.0

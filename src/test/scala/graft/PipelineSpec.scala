@@ -140,7 +140,7 @@ class PipelineSpec extends SparkSpec {
     // and both (resident vs fetched rotation slices) are the reference's
     // serve semantics, shaped like the API response
     val h = graft.ops.EngineOps.index(spark, sf)
-    val ref = new LopqReference(h.model)
+    val ref = new LopqReference(graft.engine.LopqIndexStore.loadModel(spark, h.dir))
     val codes = h.codes.select("id", "cell_id", "fine").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Short](2).toArray)).toSeq
     val vecs = graft.ops.Tables(spark, sf, "embeddings").select("vec_id", "embedding")
@@ -152,6 +152,54 @@ class PipelineSpec extends SparkSpec {
         s""""distancesMicro":[${hits.map(_._1).mkString(",")}]}"""
     }
     assert(full === want)
+  }
+
+  /** The catalog serves (q34 resident, q69 fetched, q70 batch join) and the
+    * API searchers share ONE handle per (session, dir): the index is loaded
+    * once — one histogram-heal count — and `refreshIndex` replaces the
+    * handle and evicts the dir's cached model. */
+  test("one index handle per (session, dir) across the catalog serves and the API") {
+    import graft.engine.LopqIndexStore
+    import graft.ops.EngineOps
+    val e = graft.ops.Tables(spark, sf, "embeddings")
+    val queries = e.where(col("vec_id") < 20).select(col("vec_id").as("q_id"), col("embedding"))
+    val probe = e.where(col("vec_id") === 3).select("embedding")
+      .head().getSeq[Float](0).toArray
+    // SQL executions by call site: AQE runs one count as two jobs
+    val heals = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(ev: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        ev match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if x.description.startsWith("count at LopqIndexStore.scala") =>
+            heals.incrementAndGet(); ()
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val handles = try {
+      val h0 = EngineOps.refreshIndex(spark, sf)
+      h0 +: Seq[() => Unit](
+        () => SparkEntry.queries("q34_lopq_ann")(spark, sf).collect(),
+        () => SparkEntry.queries("q69_lopq_ann_slim")(spark, sf).collect(),
+        () => SparkEntry.queries("q70_ann_join")(spark, sf).collect(),
+        () => new GraftApi(spark, sf).searchBulk(queries, "q_id", "embedding", 5).collect(),
+        () => new GraftApi(spark, sf, "lopq").searchByVectors(Seq(3L -> probe), 5).collect()
+      ).map { run => run(); EngineOps.index(spark, sf) }
+    } finally {
+      org.apache.spark.sql.graft.GraftBridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(handles.forall(_ eq handles.head), "a serve path loaded its own handle")
+    assert(heals.get === 1, "the histogram heal must run once, at the one load")
+    LopqIndexStore.sweepStoppedSessions()
+    val before = LopqIndexStore.sessionCacheEntries
+    val h1 = EngineOps.refreshIndex(spark, sf)
+    assert(!(h1 eq handles.head), "refreshIndex must hand back a fresh handle")
+    assert(EngineOps.index(spark, sf) eq h1)
+    // the dir's cached model pair and slice cache are evicted; the reload
+    // re-opens only its slice cache
+    assert(LopqIndexStore.sessionCacheEntries === before - 1)
   }
 
   /** The one-call self-dedup facade must reproduce q73's oracle-gated pair

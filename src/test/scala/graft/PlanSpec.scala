@@ -202,7 +202,7 @@ class PlanSpec extends SparkSpec {
     val q = spark.read.parquet(s"$sf/embeddings.parquet")
       .where(col("vec_id") === 0).select("embedding")
       .head().getSeq[Float](0).toArray
-    val approx = LopqSearcher.approxStage(h.serving, q, 200, 10)._1
+    val approx = LopqSearcher.approxStage(h, q, 200, 10)._1
     val p = approx.queryExecution.executedPlan.toString
     // visited-cell filter must reach the partitioned codes table as
     // PartitionFilters (directory pruning), not a post-scan Filter
@@ -275,7 +275,7 @@ class PlanSpec extends SparkSpec {
     // measured scale-killer (PROBES.md r12)
     val h = EngineOps.index(spark, sf)
     val cells = h.codes.select(col("id"),
-      (col("coarse0") * h.model.v + col("coarse1")).cast("long").as("cell_id"))
+      (col("coarse0") * h.slim.v + col("coarse1")).cast("long").as("cell_id"))
     val plans = scala.collection.mutable.ArrayBuffer.empty[String]
     graft.ops.VectorQueries.semDedupPairsChunked(cells,
         spark.read.parquet(s"$sf/embeddings.parquet"), "vec_id", "embedding",
